@@ -810,30 +810,6 @@ object Scale {
           Dedup.minHashDedupAgainst(fresh, spark.read.parquet(textP),
             "text", "doc_id"))
       }
-      // r17: the touched-bucket ref prune in ITS regime — a 1k-doc
-      // ingest against a ×64 (320k-doc) artifact, where the saved
-      // ref-banding exchange (5.1M id-only rows at 16 bands) dwarfs
-      // the batch-bucket broadcast. The floor conf is pinned low so
-      // the router engages at this artifact size; the paired row pins
-      // the full-exchange shape on the SAME inputs.
-      if (only.forall(o => Seq("mhref_serve_pruned", "mhref_serve_fullx")
-          .exists(o.contains))) {
-        val batch1k = fresh.filter(col("doc_id") < 900001000L)
-          .localCheckpoint(true)
-        for (pk <- Seq(64, 256)) {
-          val sigP = matPath(pk, "sig")
-          spark.conf.set(Dedup.MinHashPruneMinRefDocsConf, "1")
-          try
-            timed("mhref_serve_pruned", "scale" -> pk.toLong)(() =>
-              Dedup.minHashDedupAgainstRef(batch1k, sigP, "text", "doc_id"))
-          finally spark.conf.unset(Dedup.MinHashPruneMinRefDocsConf)
-          spark.conf.set(Dedup.MinHashSmallBatchDocsConf, "0")
-          try
-            timed("mhref_serve_fullx", "scale" -> pk.toLong)(() =>
-              Dedup.minHashDedupAgainstRef(batch1k, sigP, "text", "doc_id"))
-          finally spark.conf.unset(Dedup.MinHashSmallBatchDocsConf)
-        }
-      }
     }
 
     // --- interval-overlap join in its own regime (r14): the bench

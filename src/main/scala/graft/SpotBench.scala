@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, LinkOption, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -56,15 +56,22 @@ object SpotBench {
     Scale.scaledDocs(spark, sfDir, k)
       .repartition(spark.sparkContext.defaultParallelism)
       .write.mode("overwrite").parquet(s"$stageDir/documents.parquet")
-    // symlink every other input so any declared query resolves
+    // symlink every other input so any declared query resolves; links
+    // are recreated each run so a changed SPARK_GRAFT_SF_DIR never
+    // leaves stale (or dangling) links beside the rebuilt documents
     val src = Paths.get(sfDir)
-    Files.list(src).forEach { p =>
+    val inputs = Files.list(src)
+    try inputs.forEach { p =>
       val name = p.getFileName.toString
       if (name != "documents.parquet") {
         val link = Paths.get(stageDir, name)
-        if (!Files.exists(link)) Files.createSymbolicLink(link, p.toAbsolutePath)
+        if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && !Files.isSymbolicLink(link))
+          throw new IllegalStateException(s"SpotBench: $link exists and is not a symlink")
+        Files.deleteIfExists(link)
+        Files.createSymbolicLink(link, p.toAbsolutePath)
       }
     }
+    finally inputs.close()
     val stageSecs = (System.nanoTime() - t0s) / 1e9
 
     // untimed warm-up (Bench's recipe): exercise scan/shuffle/window

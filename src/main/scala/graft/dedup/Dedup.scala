@@ -223,40 +223,45 @@ object Dedup {
   private def bandBuckets(sig: Column, bands: Int, rows: Int): Column =
     graft.functions.HashFunctions.bandBucketsNative(sig, bands, rows)
 
+  /** Rows per band of a `numHashes`-wide signature cut into `bands`
+    * bands — the one banding check every MinHash-family operator
+    * shares (solve `bands` with [[bandingFor]] / [[bandingForBudget]]
+    * to state a recall target instead). */
+  private def rowsPerBand(numHashes: Int, bands: Int): Int = {
+    require(bands >= 1 && numHashes % bands == 0,
+      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
+    numHashes / bands
+  }
+
   /** (band, bucket) exploded view carrying ONLY the id — the shuffle and
     * self-join payload stays tiny no matter how large the documents are. */
   private def banded(withSig: DataFrame, bands: Int, rows: Int): DataFrame =
     withSig.select(col("id"),
       posexplode(bandBuckets(col("sig"), bands, rows)).as(Seq("band", "bucket")))
 
-  /** Same-bucket candidate id pairs (id_a < id_b, distinct), with hot
-    * buckets capped at `maxBucketSize` members.
-    *
-    * The cap is an OVER-cap broadcast anti-join (r20 optimization
-    * round, guide §2.5/§2.3): a map-side-combined (band, bucket) count
-    * keeps only the buckets EXCEEDING the cap — tiny by construction
-    * (they are the degenerate hot buckets the cap exists to kill) —
-    * and broadcast-anti-joins them against the banded rows, so a hot
-    * bucket's rows are filtered MAP-SIDE and never cross the network.
-    * The r19 window-count form shared the self-join's exchange but
-    * forced EVERY row of a degenerate bucket (corpus-wide boilerplate)
-    * through a single window task's sort + buffer before the filter
-    * dropped it — the one-giant-key straggler AQE skew handling cannot
-    * split. The count aggregate's own exchange moves only per-task
-    * distinct (band, bucket) rows after the partial agg, and the
-    * self-join still plans one banded exchange per side off the same
-    * capped subtree. */
+  /** The hot-bucket cap every LSH pairing goes through: a (band,
+    * bucket) row survives iff its bucket has at most `maxBucketSize`
+    * members; `maxBucketSize <= 0` disables the cap. A map-side-
+    * combined (band, bucket) count finds the over-cap buckets (its
+    * exchange moves only per-task distinct keys after the partial agg)
+    * and a left-anti join removes their rows, so a degenerate bucket
+    * (corpus-wide boilerplate) never passes through a single window
+    * task's sort. The anti join carries NO broadcast hint: the over-cap
+    * set is tiny for a sane cap but grows as bandedRows / maxBucketSize
+    * for a small one, so size estimation and AQE pick the strategy. */
+  private def capBuckets(bandedIds: DataFrame, maxBucketSize: Int): DataFrame =
+    if (maxBucketSize <= 0) bandedIds
+    else bandedIds.join(
+      bandedIds.groupBy(col("band"), col("bucket"))
+        .agg(count(lit(1)).as("__bucket_n"))
+        .filter(col("__bucket_n") > maxBucketSize)
+        .select(col("band"), col("bucket")),
+      Seq("band", "bucket"), "left_anti")
+
+  /** Same-bucket candidate id pairs (id_a < id_b, distinct) within one
+    * banded corpus, hot buckets capped by [[capBuckets]]. */
   private def candidatePairs(bandedIds: DataFrame, maxBucketSize: Int): DataFrame = {
-    val capped: DataFrame =
-      if (maxBucketSize <= 0) bandedIds
-      else {
-        val overCap = bandedIds
-          .groupBy(col("band"), col("bucket"))
-          .agg(count(lit(1)).as("__bucket_n"))
-          .filter(col("__bucket_n") > maxBucketSize)
-          .select(col("band"), col("bucket"))
-        bandedIds.join(broadcast(overCap), Seq("band", "bucket"), "left_anti")
-      }
+    val capped = capBuckets(bandedIds, maxBucketSize)
     capped.as("l")
       .join(capped.as("r"),
         col("l.band") === col("r.band") &&
@@ -267,23 +272,28 @@ object Dedup {
   }
 
   /** Join verification payload back onto candidate pairs by id — runs
-    * only on the (small) candidate set, not through the LSH shuffle. */
+    * only on the (small) candidate set, not through the LSH shuffle.
+    * `aSide` supplies `id_a`'s payload, `bSide` `id_b`'s (the same
+    * frame for within-corpus pairs). */
   private def attachPayload(
-      pairs: DataFrame, payload: DataFrame, payloadCol: String): DataFrame =
+      pairs: DataFrame, aSide: DataFrame, bSide: DataFrame,
+      payloadCol: String): DataFrame =
     pairs
-      .join(payload.select(col("id").as("id_a"), col(payloadCol).as(s"${payloadCol}_a")), "id_a")
-      .join(payload.select(col("id").as("id_b"), col(payloadCol).as(s"${payloadCol}_b")), "id_b")
+      .join(aSide.select(col("id").as("id_a"), col(payloadCol).as(s"${payloadCol}_a")), "id_a")
+      .join(bSide.select(col("id").as("id_b"), col(payloadCol).as(s"${payloadCol}_b")), "id_b")
 
-  /** MinHash-LSH near-duplicate pairs.
-    *
-    * Pipeline: shingle → signature (narrow) → explode ids into `bands`
-    * buckets → shuffle once on (band, bucket) with id-only payload →
-    * same-bucket id pairs → distinct → re-join shingle sets by id →
-    * exact Jaccard verification. With b bands of r rows the effective
-    * candidate threshold is ≈ (1/b)^(1/r).
-    *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
-    */
+  /** Exact hash-set Jaccard verification of candidate pairs —
+    * equal to the string-set Jaccard up to (negligible) 64-bit
+    * collisions. `(id_a, id_b, jaccard)` with jaccard ≥ threshold. */
+  private def jaccardVerified(
+      pairs: DataFrame, aSide: DataFrame, bSide: DataFrame,
+      payloadCol: String, threshold: Double): DataFrame =
+    attachPayload(pairs, aSide, bSide, payloadCol)
+      .select(col("id_a"), col("id_b"),
+        graft.functions.HashFunctions.hashJaccard(
+          col(s"${payloadCol}_a"), col(s"${payloadCol}_b")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
   /** Staged signature pipeline shared by the self- and cross-corpus
     * MinHash operators: tokens → shingles → hashes → signature, each
     * landed as a real column so no regex split / string hash is
@@ -307,6 +317,17 @@ object Dedup {
     .select("id", "hs", "sig")
     .repartition(df.sparkSession.sparkContext.defaultParallelism)
 
+  /** MinHash-LSH near-duplicate pairs.
+    *
+    * Pipeline: shingle → signature (narrow) → explode ids into `bands`
+    * buckets → shuffle once on (band, bucket) with id-only payload →
+    * same-bucket id pairs → distinct → re-join shingle sets by id →
+    * exact Jaccard verification. With b bands of r rows the effective
+    * candidate threshold is ≈ (1/b)^(1/r); [[bandingFor]] solves
+    * `bands` from a recall target at `threshold`.
+    *
+    * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
+    */
   def minHashNearDuplicates(
       df: DataFrame,
       textCol: String,
@@ -316,51 +337,49 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.7,
       maxBucketSize: Int = 1000): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
-    val rows = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     verifiedPairsFromBase(
       minHashBase(df, textCol, idCol, numHashes, shingleSize),
       bands, rows, threshold, maxBucketSize)
   }
 
-  /** [[minHashNearDuplicates]] with the banding SOLVED from the
-    * caller's stated intent — "recall ≥ `minRecallAtThreshold` at
-    * Jaccard `threshold`" — via [[bandingFor]], instead of hand-pinned
-    * banding trivia (r16 verdict item 5). At the library defaults
-    * (0.7, 64, 0.95) the solver returns exactly the hand-tuned 16×4,
-    * so this is bit-identical to the default call (spec-pinned). */
-  def minHashNearDuplicatesAuto(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      threshold: Double = 0.7,
-      minRecallAtThreshold: Double = 0.95,
-      numHashes: Int = 64,
-      shingleSize: Int = 3,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val (bands, _) = bandingFor(threshold, numHashes, minRecallAtThreshold)
-    minHashNearDuplicates(df, textCol, idCol, numHashes, bands,
-      shingleSize, threshold, maxBucketSize)
-  }
-
   /** Within-corpus verified pairs from a minhash base: banded
     * candidates (hot-bucket capped), exact hash-set Jaccard
-    * verification — equal to the string-set Jaccard up to (negligible)
-    * 64-bit collisions. `(id_a < id_b, jaccard)`. */
+    * verification. `(id_a < id_b, jaccard)`. */
   private def verifiedPairsFromBase(
       base: DataFrame,
       bands: Int,
       rows: Int,
       threshold: Double,
+      maxBucketSize: Int): DataFrame =
+    jaccardVerified(candidatePairs(banded(base, bands, rows), maxBucketSize),
+      base, base, "hs", threshold)
+
+  /** Verified cross-corpus pairs from two minhash bases: band both
+    * sides to (id, band, bucket), hot-bucket-cap the REFERENCE side
+    * ([[capBuckets]] — a batch cannot make a reference bucket hot),
+    * equi-join on (band, bucket), verify by exact hash-set Jaccard.
+    * `id_a` is the new-batch side, `id_b` the reference side. */
+  private def crossVerifiedPairs(
+      newBase: DataFrame,
+      refBase: DataFrame,
+      bands: Int,
+      rows: Int,
+      threshold: Double,
       maxBucketSize: Int): DataFrame = {
-    val pairs = candidatePairs(banded(base, bands, rows), maxBucketSize)
-    attachPayload(pairs, base.select("id", "hs"), "hs")
-      .withColumn("jaccard",
-        graft.functions.HashFunctions.hashJaccard(col("hs_a"), col("hs_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    val refBanded = capBuckets(banded(refBase, bands, rows), maxBucketSize)
+    val pairs = banded(newBase, bands, rows).as("n")
+      .join(refBanded.as("r"),
+        col("n.band") === col("r.band") && col("n.bucket") === col("r.bucket"))
+      .select(col("n.id").as("id_a"), col("r.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    jaccardVerified(pairs, newBase, refBase, "hs", threshold)
   }
+
+  /** `df` without every row that is the batch side (`id_a`) of a
+    * cross-corpus pair — the dedup forms of the cross pairings. */
+  private def withoutMatched(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    df.join(pairs.select(col("id_a").as(idCol)).distinct(), Seq(idCol), "left_anti")
 
   /** Load + validate a [[saveMinHashRef]] artifact: schema and
     * signature width checked loudly before any work. */
@@ -392,11 +411,10 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.7,
       maxBucketSize: Int = 1000): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
+    val rows = rowsPerBand(numHashes, bands)
     verifiedPairsFromBase(
       loadMinHashRefBase(spark, refPath, numHashes, "minHashPairsFromRef"),
-      bands, numHashes / bands, threshold, maxBucketSize)
+      bands, rows, threshold, maxBucketSize)
   }
 
   /** The COMPLETE new-edge feed for incremental cluster maintenance in
@@ -420,33 +438,14 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.7,
       maxBucketSize: Int = 1000): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
-    val rows = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     val refBase = loadMinHashRefBase(df.sparkSession, refPath, numHashes,
       "minHashIncrementalEdges")
     val base = minHashBase(df, textCol, idCol, numHashes, shingleSize)
       .localCheckpoint(true) // consumed by both pair passes
     verifiedPairsFromBase(base, bands, rows, threshold, maxBucketSize)
       .unionByName(crossVerifiedPairs(base, refBase, bands, rows,
-        threshold, maxBucketSize, pruneRefToTouched(df, refBase)))
-  }
-
-  /** [[minHashIncrementalEdges]] with the banding solved from stated
-    * intent via [[bandingFor]] — see [[minHashNearDuplicatesAuto]]. */
-  def minHashIncrementalEdgesAuto(
-      df: DataFrame,
-      refPath: String,
-      textCol: String,
-      idCol: String,
-      threshold: Double = 0.7,
-      minRecallAtThreshold: Double = 0.95,
-      numHashes: Int = 64,
-      shingleSize: Int = 3,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val (bands, _) = bandingFor(threshold, numHashes, minRecallAtThreshold)
-    minHashIncrementalEdges(df, refPath, textCol, idCol, numHashes, bands,
-      shingleSize, threshold, maxBucketSize)
+        threshold, maxBucketSize))
   }
 
   /** Cross-corpus near-dedup — the incremental-ingest shape: remove
@@ -457,15 +456,10 @@ object Dedup {
     * both sides band to (id, band, bucket) — id-only payloads — and
     * only same-bucket cross pairs verify by exact hash-set Jaccard.
     * At 100 TB the ref side's banding can be computed once and reused
-    * across ingests (it is a deterministic function of the text);
+    * across ingests ([[saveMinHashRef]] / [[minHashDedupAgainstRef]]);
     * the per-batch cost is the NEW side's narrow signature pass plus
-    * a bucket join whose ref side is prunable to the buckets the
-    * batch actually touches — implemented as the opt-in
-    * [[MinHashPruneMinRefDocsConf]] route (map-side broadcast semi of
-    * the batch's bucket set; off by default because the saved
-    * exchange only dominates on network-shuffle clusters — see the
-    * conf scaladoc and SCALE.md's measured rows). Hot ref buckets are
-    * capped at `maxBucketSize` like the self-join path.
+    * the bucket join. Hot ref buckets are capped at `maxBucketSize`
+    * like the self-join path.
     *
     * Returns the surviving rows of `df`, schema unchanged.
     */
@@ -478,163 +472,9 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 3,
       threshold: Double = 0.7,
-      maxBucketSize: Int = 1000): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
-    val rows = numHashes / bands
-    val newBase = minHashBase(df, textCol, idCol, numHashes, shingleSize)
-    val refBase = minHashBase(ref, textCol, idCol, numHashes, shingleSize)
-    val dropped = crossVerifiedPairs(newBase, refBase, bands, rows,
-      threshold, maxBucketSize, pruneRefToTouched(df, ref))
-      .select(col("id_a").as(idCol))
-      .distinct()
-    df.join(dropped, Seq(idCol), "left_anti")
-  }
-
-  /** [[minHashDedupAgainst]] with the banding solved from stated
-    * intent via [[bandingFor]] — see [[minHashNearDuplicatesAuto]].
-    * Bit-identical to the hand-pinned default call at the library
-    * defaults (the solver recovers 16×4). */
-  def minHashDedupAgainstAuto(
-      df: DataFrame,
-      ref: DataFrame,
-      textCol: String,
-      idCol: String,
-      threshold: Double = 0.7,
-      minRecallAtThreshold: Double = 0.95,
-      numHashes: Int = 64,
-      shingleSize: Int = 3,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val (bands, _) = bandingFor(threshold, numHashes, minRecallAtThreshold)
-    minHashDedupAgainst(df, ref, textCol, idCol, numHashes, bands,
-      shingleSize, threshold, maxBucketSize)
-  }
-
-  /** Session conf key for the cross-corpus REF-side prune's BATCH
-    * ceiling (effective only once [[MinHashPruneMinRefDocsConf]] opts
-    * the prune in): a batch within this many input rows has a
-    * broadcastable (band, bucket) set, so the reference banding can be
-    * pruned MAP-SIDE to the batch-touched buckets via a broadcast LEFT
-    * SEMI join — the reference then streams with no exchange. Above
-    * the ceiling the full-exchange shape runs: a corpus-sized "batch"
-    * would blow the touched-set broadcast (~bands × batch-rows
-    * entries). The router's two counts are narrow raw-frame passes
-    * (see the derived-input caveat on [[graft.core.Quantiles]]);
-    * 0 pins the full-exchange shape with no counts. Default sized so
-    * the broadcast stays tens of MB. */
-  val MinHashSmallBatchDocsConf = "graft.minhash.smallBatchDocs"
-
-  private[graft] val DefaultMinHashSmallBatchDocs = 100000L
-
-  /** Session conf key for the prune's REFERENCE-size floor — OPT-IN:
-    * the prune trades the ref-banding exchange (refDocs × bands rows)
-    * for a batch-bucket distinct + broadcast + map-side semi. On a
-    * SINGLE NODE that trade never pays: local shuffle writes are
-    * disk-sequential and the serve cost is dominated by the artifact
-    * scan + banding kernel, which BOTH routes pay — measured slower or
-    * parity at every local shape up to a 1.28M-doc ref with a 1k-doc
-    * batch (SCALE.md mhref_serve_pruned/fullx rows: 12.4 s vs 9.9 s at
-    * ×256), so the default floor of Long.MaxValue keeps the prune OFF.
-    * On a NETWORK-shuffle cluster the removed exchange is an all-node
-    * transfer of the full reference banding per ingest (TB-scale for a
-    * 100 TB corpus) while the prune's cost stays batch-shaped — set
-    * the floor to the ref size where your network exchange hurts
-    * (e.g. 10_000_000) to enable it there. Output is identical on
-    * both routes (spec-pinned across hot-bucket cap settings).
-    *
-    * COST OF OPTING IN: the router then pays up to TWO count jobs per
-    * call (`batch.count()`, short-circuited before `ref.count()` when
-    * the batch is over the [[MinHashSmallBatchDocsConf]] bound) on the
-    * frames AS PASSED — cheap narrow passes over raw parquet reads,
-    * but a full recompute each for expensively DERIVED inputs (the
-    * [[graft.core.Quantiles]] caveat). For derived frames either
-    * checkpoint/cache before calling, or pin
-    * [[MinHashSmallBatchDocsConf]] to 0 — that routes full-exchange
-    * with ZERO count jobs even while this floor is set. */
-  val MinHashPruneMinRefDocsConf = "graft.minhash.pruneMinRefDocs"
-
-  private[graft] val DefaultMinHashPruneMinRefDocs = Long.MaxValue
-
-  /** True when the batch/ref shape profits from the touched-bucket ref
-    * prune, by the session crossover confs: batch small enough that
-    * its bucket set broadcasts ([[MinHashSmallBatchDocsConf]]), AND
-    * ref past the [[MinHashPruneMinRefDocsConf]] floor where the saved
-    * exchange outweighs the added touched-set job. Both counts are
-    * narrow raw-frame passes (for the artifact-serving forms the ref
-    * count is parquet-metadata cheap); smallBatchDocs = 0 skips both
-    * counts and pins the full-exchange shape. */
-  private def pruneRefToTouched(batch: DataFrame, refRaw: DataFrame): Boolean = {
-    val conf = batch.sparkSession.conf
-    val floor = conf
-      .get(MinHashPruneMinRefDocsConf, DefaultMinHashPruneMinRefDocs.toString)
-      .toLong
-    if (floor == Long.MaxValue || floor <= 0) return false // default: off, no count jobs
-    val thr = conf
-      .get(MinHashSmallBatchDocsConf, DefaultMinHashSmallBatchDocs.toString)
-      .toLong
-    thr > 0 && batch.count() <= thr && refRaw.count() >= floor
-  }
-
-  /** Verified cross-corpus pairs from two minhash bases: band both
-    * sides to (id, band, bucket), hot-bucket-cap the REFERENCE side,
-    * equi-join on (band, bucket), verify by exact hash-set Jaccard.
-    * `id_a` is the new-batch side, `id_b` the reference side.
-    * `pruneTouched` (the [[MinHashSmallBatchDocsConf]] router) prunes
-    * the ref banding to batch-touched buckets map-side before any
-    * exchange — the batch's banded exchange is reused for the touched
-    * set (same subtree, one ReusedExchange), so the prune adds no
-    * extra pass over the batch. */
-  private def crossVerifiedPairs(
-      newBase: DataFrame,
-      refBase: DataFrame,
-      bands: Int,
-      rows: Int,
-      threshold: Double,
-      maxBucketSize: Int,
-      pruneTouched: Boolean): DataFrame = {
-    val newBanded = banded(newBase, bands, rows)
-    val refSource = {
-      val b = banded(refBase, bands, rows)
-      if (!pruneTouched) b
-      else {
-        val pruned = b.join(
-          broadcast(newBanded.select(col("band"), col("bucket")).distinct()),
-          Seq("band", "bucket"), "left_semi")
-        // checkpoint the pruned slice ONLY when no cap follows: its
-        // size is touched buckets × ref-bucket occupancy, so a hot
-        // reference bucket touched by the batch materialises ALL its
-        // members — worst case approaching the full reference banding
-        // (ADVICE r17). With a cap, the checkpoint moves AFTER the cap
-        // filter below, bounding it by cap × touched buckets; the cap
-        // machinery's two passes over this subtree stay map-side
-        // (broadcast semi over the reference banding scan).
-        if (maxBucketSize <= 0) pruned.localCheckpoint(true) else pruned
-      }
-    }
-    val refBanded = {
-      if (maxBucketSize <= 0) refSource
-      else {
-        val ok = refSource.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("__bucket_n"))
-          .filter(col("__bucket_n") <= maxBucketSize)
-          .drop("__bucket_n")
-        val capped = refSource.join(ok, Seq("band", "bucket"), "left_semi")
-        // cap-bounded — safe to materialise for the main bucket join
-        if (pruneTouched) capped.localCheckpoint(true) else capped
-      }
-    }
-    newBanded.as("n")
-      .join(refBanded.as("r"),
-        col("n.band") === col("r.band") && col("n.bucket") === col("r.bucket"))
-      .select(col("n.id").as("id_a"), col("r.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .join(newBase.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(refBase.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-      .withColumn("jaccard",
-        graft.functions.HashFunctions.hashJaccard(col("hs_a"), col("hs_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+      maxBucketSize: Int = 1000): DataFrame =
+    withoutMatched(df, idCol, minHashCrossPairs(df, ref, textCol, idCol,
+      numHashes, bands, shingleSize, threshold, maxBucketSize))
 
   /** Verified NEAR-DUPLICATE PAIRS of a new batch against an existing
     * corpus — [[minHashDedupAgainst]]'s candidate machinery exposed at
@@ -659,13 +499,11 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.7,
       maxBucketSize: Int = 1000): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
+    val rows = rowsPerBand(numHashes, bands)
     crossVerifiedPairs(
       minHashBase(df, textCol, idCol, numHashes, shingleSize),
       minHashBase(ref, textCol, idCol, numHashes, shingleSize),
-      bands, numHashes / bands, threshold, maxBucketSize,
-      pruneRefToTouched(df, ref))
+      bands, rows, threshold, maxBucketSize)
   }
 
   /** Persist a reference corpus as a TEXT-FREE minhash artifact —
@@ -704,36 +542,12 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.7,
       maxBucketSize: Int = 1000): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
-    val rows = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     val refBase = loadMinHashRefBase(df.sparkSession, refPath, numHashes,
       "minHashDedupAgainstRef")
-    val newBase = minHashBase(df, textCol, idCol, numHashes, shingleSize)
-    val dropped = crossVerifiedPairs(newBase, refBase, bands, rows,
-      threshold, maxBucketSize, pruneRefToTouched(df, refBase))
-      .select(col("id_a").as(idCol))
-      .distinct()
-    df.join(dropped, Seq(idCol), "left_anti")
-  }
-
-  /** [[minHashDedupAgainstRef]] with the banding solved from stated
-    * intent via [[bandingFor]] — see [[minHashNearDuplicatesAuto]].
-    * numHashes must still match the artifact's training width (the
-    * load check enforces it loudly). */
-  def minHashDedupAgainstRefAuto(
-      df: DataFrame,
-      refPath: String,
-      textCol: String,
-      idCol: String,
-      threshold: Double = 0.7,
-      minRecallAtThreshold: Double = 0.95,
-      numHashes: Int = 64,
-      shingleSize: Int = 3,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val (bands, _) = bandingFor(threshold, numHashes, minRecallAtThreshold)
-    minHashDedupAgainstRef(df, refPath, textCol, idCol, numHashes, bands,
-      shingleSize, threshold, maxBucketSize)
+    withoutMatched(df, idCol, crossVerifiedPairs(
+      minHashBase(df, textCol, idCol, numHashes, shingleSize),
+      refBase, bands, rows, threshold, maxBucketSize))
   }
 
   /** [[minHashCrossPairs]] where the reference side is a persisted
@@ -750,14 +564,12 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.7,
       maxBucketSize: Int = 1000): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
+    val rows = rowsPerBand(numHashes, bands)
     val refBase = loadMinHashRefBase(df.sparkSession, refPath, numHashes,
       "minHashCrossPairsRef")
     crossVerifiedPairs(
       minHashBase(df, textCol, idCol, numHashes, shingleSize),
-      refBase, bands, numHashes / bands, threshold, maxBucketSize,
-      pruneRefToTouched(df, refBase))
+      refBase, bands, rows, threshold, maxBucketSize)
   }
 
   /** 64-bit SimHash of a text column: per-token xxhash64, each bit votes
@@ -821,18 +633,25 @@ object Dedup {
       textCol: String,
       idCol: String,
       maxHamming: Int = 3,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val base = df
-      .select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("toks", TextFunctions.tokens(TextFunctions.normalizeText(col("text"))))
-      .withColumn("th", graft.functions.HashFunctions.tokenHashesNative(col("toks")))
-      .withColumn("sim", graft.functions.HashFunctions.simHashNative(col("th")))
-      // materialisation fence — see minHashNearDuplicates
-      .select("id", "sim")
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    simHashPairs(base, maxHamming, maxBucketSize)
-  }
+      maxBucketSize: Int = 1000): DataFrame =
+    simHashPairs(
+      simHashBase(df, textCol, idCol, graft.functions.HashFunctions.simHashNative),
+      maxHamming, maxBucketSize)
+
+  /** (id, sim) fingerprints of a text corpus under `fingerprint` (a
+    * token-hash-array kernel), landed behind a repartition fence like
+    * [[minHashBase]] so banding and the payload re-join share one
+    * fingerprint pass. */
+  private def simHashBase(
+      df: DataFrame, textCol: String, idCol: String,
+      fingerprint: Column => Column): DataFrame = df
+    .select(col(idCol).as("id"), col(textCol).as("text"))
+    .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    .withColumn("toks", TextFunctions.tokens(TextFunctions.normalizeText(col("text"))))
+    .withColumn("th", graft.functions.HashFunctions.tokenHashesNative(col("toks")))
+    .withColumn("sim", fingerprint(col("th")))
+    .select("id", "sim")
+    .repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Band-bucket array for a 64-bit SimHash fingerprint under the
     * block-combination index of [[simHashPairs]]: element i is band i's
@@ -850,7 +669,7 @@ object Dedup {
       s"simHashBandBuckets: the block-combination index guarantees " +
         s"recall only for maxHamming <= 6 (got $maxHamming) — use the " +
         "128-bit fingerprint ([[simHash128NearDuplicates]]) for larger radii")
-    val (nBlocks, comboSize) = if (maxHamming <= 3) (4, 1) else (8, 2)
+    val (nBlocks, comboSize) = simHashRung(maxHamming)
     val blockBits = 64 / nBlocks
     def block(i: Int): Column =
       shiftright(sim, i * blockBits).bitwiseAND(lit((1L << blockBits) - 1L))
@@ -876,7 +695,7 @@ object Dedup {
       posexplode(simHashBandBuckets(col("sim"), maxHamming))
         .as(Seq("band", "bucket")))
     val pairs = candidatePairs(bandedIds, maxBucketSize)
-    attachPayload(pairs, base.select("id", "sim"), "sim")
+    attachPayload(pairs, base, base, "sim")
       .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
       .filter(col("hamming") <= lit(maxHamming))
       .select("id_a", "id_b", "hamming")
@@ -923,18 +742,10 @@ object Dedup {
       textCol: String,
       idCol: String,
       maxHamming: Int = 7,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val base = df
-      .select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("toks", TextFunctions.tokens(TextFunctions.normalizeText(col("text"))))
-      .withColumn("th", graft.functions.HashFunctions.tokenHashesNative(col("toks")))
-      .withColumn("sim", graft.functions.HashFunctions.simHash128Native(col("th")))
-      // materialisation fence — see minHashNearDuplicates
-      .select("id", "sim")
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    simHash128Pairs(base, maxHamming, maxBucketSize)
-  }
+      maxBucketSize: Int = 1000): DataFrame =
+    simHash128Pairs(
+      simHashBase(df, textCol, idCol, graft.functions.HashFunctions.simHash128Native),
+      maxHamming, maxBucketSize)
 
   /** Near-duplicate pairs from PRECOMPUTED 128-bit fingerprints —
     * input must carry (`id`, `sim` array<long>(2)) columns. The
@@ -994,7 +805,7 @@ object Dedup {
     val bandedIds = guarded.select(col("id"),
       posexplode(array(bucketExprs: _*)).as(Seq("band", "bucket")))
     val pairs = candidatePairs(bandedIds, maxBucketSize)
-    attachPayload(pairs, base.select("id", "sim"), "sim")
+    attachPayload(pairs, base, base, "sim")
       .withColumn("hamming",
         bit_count(element_at(col("sim_a"), 1).bitwiseXOR(element_at(col("sim_b"), 1))) +
           bit_count(element_at(col("sim_a"), 2).bitwiseXOR(element_at(col("sim_b"), 2))))
@@ -1012,6 +823,21 @@ object Dedup {
   /** Number of bands (bucket expressions) a radius costs. */
   private[graft] def simHash128BandCount(maxHamming: Int): Int = {
     val (n, k) = simHash128Rung(maxHamming)
+    (0 until n).combinations(k).size
+  }
+
+  /** Banding rung for a 64-bit fingerprint radius: (blocks, blocks per
+    * bucket) of [[simHashBandBuckets]]' block-combination index —
+    * maxHamming ≤ 3 → 4 single 16-bit blocks; 4–6 → C(8,2) pairs of
+    * 8-bit blocks. */
+  private def simHashRung(maxHamming: Int): (Int, Int) =
+    if (maxHamming <= 3) (4, 1) else (8, 2)
+
+  /** Number of bands [[simHashBandBuckets]] emits for a radius — the
+    * one source for consumers that size work by band count (the
+    * streaming store probe's broadcast guard). */
+  private[graft] def simHashBandCount(maxHamming: Int): Int = {
+    val (n, k) = simHashRung(maxHamming)
     (0 until n).combinations(k).size
   }
 
@@ -1054,9 +880,7 @@ object Dedup {
       numHashes: Int = 72,
       bands: Int = 12,
       maxBucketSize: Int = 1000): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands)")
-    val rows = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     val base = df
       .select(col(idCol).as("id"),
         TextFunctions.normalizeText(col(textCol)).as("norm"))
@@ -1066,35 +890,13 @@ object Dedup {
       .filter(size(col("gh")) > 0)
       .withColumn("sig",
         graft.functions.HashFunctions.minHashSignatureNative(col("gh"), numHashes))
-      // materialisation fence — see minHashNearDuplicates
+      // materialisation fence — see minHashBase
       .select("id", "gh", "sig")
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-    val pairs = candidatePairs(banded(base, bands, rows), maxBucketSize)
     // hash-set Jaccard == n-gram-set Jaccard up to 64-bit collisions
-    attachPayload(pairs, base.select("id", "gh"), "gh")
-      .select(col("id_a"), col("id_b"),
-        graft.functions.HashFunctions.hashJaccard(col("gh_a"), col("gh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** [[ngramJaccardNearDuplicates]] with the banding solved from
-    * stated intent via [[bandingFor]] — see
-    * [[minHashNearDuplicatesAuto]]. The hand-tuned 12×6 default is
-    * exactly `bandingFor(0.8, 72)` (spec-pinned), so this is
-    * bit-identical to the default call at the library defaults. */
-  def ngramJaccardNearDuplicatesAuto(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8,
-      minRecallAtThreshold: Double = 0.95,
-      numHashes: Int = 72,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val (bands, _) = bandingFor(threshold, numHashes, minRecallAtThreshold)
-    ngramJaccardNearDuplicates(df, textCol, idCol, n, threshold,
-      numHashes, bands, maxBucketSize)
+    jaccardVerified(candidatePairs(banded(base, bands, rows), maxBucketSize),
+      base, base, "gh", threshold)
   }
 
   /** Train/eval decontamination: remove from `train` every document

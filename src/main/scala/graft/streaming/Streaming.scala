@@ -840,8 +840,7 @@ object Streaming {
     def banded(df: DataFrame): DataFrame = df.select(col("id"), col("sim"),
       posexplode(graft.dedup.Dedup.simHashBandBuckets(col("sim"), maxHamming))
         .as(Seq("band", "bucket")))
-    // band count mirrors simHashBandBuckets' block-combination index
-    val nBands = if (maxHamming <= 3) 4L else 28L
+    val nBands = graft.dedup.Dedup.simHashBandCount(maxHamming).toLong
     val probe = banded(withinBatch).select(col("band"), col("bucket"),
       col("id").as("n_id"), col("sim").as("n_sim"))
     val guarded =

@@ -59,9 +59,13 @@ object Relevance {
       textCol: String,
       minDf: Long = 1L): DataFrame = {
     require(minDf >= 1, s"tfIdf: minDf must be >= 1, got $minDf")
+    require(!df.columns.contains("__graft_n_docs"),
+      "tfIdf: column name __graft_n_docs is reserved")
     // count(1) cast double ≡ the old nDocs.toDouble (counts are exact
-    // in double far beyond any corpus size); the count-star subtree is
-    // column-pruned to a metadata-level scan
+    // in double far beyond any corpus size). The count-star subtree
+    // re-runs `df`'s upstream plan inside this job: a column-pruned
+    // scan for a bare parquet read, the full derivation for a derived
+    // frame (checkpoint an expensive `df` before calling)
     val nDocs = df.agg(count(lit(1)).cast("double").as("__graft_n_docs"))
     val tf = docTermFrequencies(df, idCol, textCol)
     val docFreqAll = tf.groupBy("word").agg(count(lit(1)).as("df_docs"))
@@ -152,6 +156,8 @@ object Relevance {
       maxDfFrac: Double = 1.0): DataFrame = {
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"invertedIndex: maxDfFrac must be in (0, 1], got $maxDfFrac")
+    require(!df.columns.contains("__graft_max_df"),
+      "invertedIndex: column name __graft_max_df is reserved")
     val postings = df
       .select(col(idCol), explode(normTokens(col(textCol))).as("word"))
       .distinct()

@@ -26,6 +26,27 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  test("LSH hot-bucket cap forces no broadcast: the planner picks the anti join") {
+    // with automatic broadcasts off, a BroadcastHashJoin LeftAnti could
+    // only come from a hint — the over-cap bucket set grows as
+    // bandedRows / maxBucketSize, so it must never be forced to broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val ref = docs.filter(col("doc_id") < 100)
+      for ((name, out) <- Seq(
+          "minHashNearDuplicates" -> dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id"),
+          "minHashDedupAgainst" -> dedup.Dedup.minHashDedupAgainst(
+            docs.filter(col("doc_id") >= 100), ref, "text", "doc_id"))) {
+        val plan = out.queryExecution.executedPlan.toString
+        val antiJoins = plan.linesIterator.filter(_.contains("LeftAnti")).toSeq
+        assert(antiJoins.nonEmpty, s"$name: expected the cap's anti join in:\n$plan")
+        assert(!antiJoins.exists(_.contains("BroadcastHashJoin")),
+          s"$name: hot-bucket cap forced a broadcast:\n$plan")
+        out.collect() // the planner-chosen shape still runs
+      }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   test("SimHash C(8,2) banding exchange carries only id/band/bucket — no text/fingerprint payload") {
     val plan = dedup.Dedup.simHashNearDuplicates(docs, "text", "doc_id", maxHamming = 6)
       .queryExecution.executedPlan.toString

@@ -431,46 +431,52 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
-  test("touched-bucket prune route ≡ full exchange on random corpora, splits, caps") {
-    import spark.implicits._
-    import graft.dedup.Dedup
-    // r17 verdict task 4: the fixture spec pins the conf'd route on
-    // one hot-bucket shape; here random corpora are randomly split
-    // into batch/ref (including EMPTY sides) and minHashCrossPairs
-    // must return identical pair sets with the prune ON (floor=1),
-    // pinned full-exchange (smallBatchDocs=0), and default routing —
-    // across hot-bucket caps (off / tight / loose). A 5-word alphabet
-    // makes near-dup pairs and shared buckets common.
+  // random corpora randomly split into batch/ref (EMPTY sides
+  // included) with a random hot-bucket cap (off / tight / loose); a
+  // 5-word alphabet makes near-dup pairs and shared buckets common
+  private val crossCorpora = {
     val doc = Gen.choose(3, 12).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf("alpha", "beta", "gamma", "delta", "eps"))
         .map(_.mkString(" ")))
-    val gen = for {
+    for {
       docs <- Gen.listOf(doc)
       mask <- Gen.listOfN(docs.size, Gen.oneOf(true, false))
       cap <- Gen.oneOf(0, 2, 1000)
-    } yield (docs, mask, cap)
-    for (((docs, mask, cap), i) <- samples(gen, 6).zipWithIndex) {
-      val rows = docs.zipWithIndex.map { case (t, j) => (j.toLong, t) }
-      val batch = rows.zip(mask).collect { case (r, true) => r }
-        .toDF("id", "text")
-      val ref = rows.zip(mask).collect { case (r, false) => r }
-        .toDF("id", "text")
-      def run(): Set[(Long, Long)] =
-        Dedup.minHashCrossPairs(batch, ref, "text", "id",
-            threshold = 0.4, maxBucketSize = cap)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.conf.set(Dedup.MinHashPruneMinRefDocsConf, "1")
-      val pruned =
-        try run()
-        finally spark.conf.unset(Dedup.MinHashPruneMinRefDocsConf)
-      spark.conf.set(Dedup.MinHashSmallBatchDocsConf, "0")
-      val full =
-        try run()
-        finally spark.conf.unset(Dedup.MinHashSmallBatchDocsConf)
-      assert(pruned == full,
-        s"i=$i cap=$cap batch=${mask.count(identity)} " +
-          s"ref=${mask.count(!_)}: pruned route diverged from full exchange")
-      assert(run() == full, s"i=$i cap=$cap: default route diverged")
+    } yield (docs.zipWithIndex.map { case (t, j) => (j.toLong, t) }, mask, cap)
+  }
+
+  private def crossPairs(
+      rows: Seq[(Long, String)], mask: Seq[Boolean], cap: Int): Seq[(Long, Long, Double)] = {
+    import spark.implicits._
+    val batch = rows.zip(mask).collect { case (r, true) => r }.toDF("id", "text")
+    val ref = rows.zip(mask).collect { case (r, false) => r }.toDF("id", "text")
+    graft.dedup.Dedup.minHashCrossPairs(batch, ref, "text", "id",
+        threshold = 0.4, maxBucketSize = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+  }
+
+  test("minHashCrossPairs soundness: batch-ref pairs at shingle Jaccard >= threshold") {
+    for (((rows, mask, cap), i) <- samples(crossCorpora, 6).zipWithIndex) {
+      val text = rows.toMap
+      val inBatch = rows.map(_._1).zip(mask).toMap
+      def shingles(id: Long): Set[String] =
+        text(id).split(" ").sliding(3).map(_.mkString(" ")).toSet
+      for ((a, b, j) <- crossPairs(rows, mask, cap)) {
+        assert(inBatch(a) && !inBatch(b), s"i=$i ($a, $b) is not batch↔ref")
+        val (sa, sb) = (shingles(a), shingles(b))
+        val exact = (sa & sb).size.toDouble / (sa | sb).size
+        assert(exact >= 0.4 && math.abs(exact - j) < 1e-9,
+          s"i=$i cap=$cap ($a, $b): reported $j, exact $exact")
+      }
+    }
+  }
+
+  test("minHashCrossPairs cap monotonicity: cap 2 ⊆ cap 1000 ⊆ uncapped") {
+    for (((rows, mask, _), i) <- samples(crossCorpora, 6).zipWithIndex) {
+      val Seq(tight, loose, uncapped) =
+        Seq(2, 1000, 0).map(c => crossPairs(rows, mask, c).toSet)
+      assert(tight.subsetOf(loose), s"i=$i: cap 2 kept a pair cap 1000 dropped")
+      assert(loose.subsetOf(uncapped), s"i=$i: cap 1000 kept a pair the uncapped run lacks")
     }
   }
 

@@ -172,6 +172,14 @@ class DedupSpec extends SparkTestBase {
     assert(Dedup.simHash128BandCount(14) == 120)
   }
 
+  test("simHashBandCount equals the simHashBandBuckets array size for every radius") {
+    // the streaming store probe sizes its broadcast guard by this count
+    val sizes = Seq(0L).toDF("sim").select(
+      (0 to 6).map(h => size(Dedup.simHashBandBuckets(col("sim"), h))): _*).head()
+    for (h <- 0 to 6)
+      assert(Dedup.simHashBandCount(h) == sizes.getInt(h), s"h=$h")
+  }
+
   test("simHash128Pairs fails loudly on malformed fingerprint input") {
     // wrong column type: static error, not silently-null buckets
     val wrongType = df("id BIGINT, sim BIGINT", Seq(1L, 0L))
@@ -418,27 +426,17 @@ class DedupSpec extends SparkTestBase {
       (11L, "entirely novel content about bloom filters and bin packing methods"),
       (12L, "")  // no grams -> can never match, must survive
     ).toDF("id", "text")
-    // BOTH router routes must agree bitwise. Since the prune became
-    // opt-in (default ref-size floor = Long.MaxValue), the first arm
-    // must LOWER the floor to genuinely take the pruned route — the
-    // bare default would test the full-exchange shape twice (ADVICE
-    // r17). Second arm: defaults, the full-exchange shape.
-    for (pruneFloor <- Seq(Some("1"), None)) {
-      pruneFloor.foreach(spark.conf.set(Dedup.MinHashPruneMinRefDocsConf, _))
-      try {
-        val out = Dedup.minHashDedupAgainst(fresh, ref, "text", "id",
-            threshold = 0.6)
-          .select("id").as[Long].collect().toSet
-        assert(out == Set(11L, 12L), s"pruneFloor=$pruneFloor")
-      } finally pruneFloor.foreach(_ =>
-        spark.conf.unset(Dedup.MinHashPruneMinRefDocsConf))
-    }
+    val out = Dedup.minHashDedupAgainst(fresh, ref, "text", "id", threshold = 0.6)
+      .select("id").as[Long].collect().toSet
+    assert(out == Set(11L, 12L))
   }
 
-  test("touched-bucket ref prune: pairs identical across routes, incl. hot-bucket cap") {
-    // a hot ref bucket (many identical ref docs) must be capped the
-    // SAME way on both routes — the prune keeps every ref member of a
-    // touched bucket, so per-bucket counts are unchanged
+  test("cross-path cap drops a pair whose shared buckets are all over the cap") {
+    // 30 identical ref docs form hot buckets; batch doc 11 is a TRUE
+    // near-duplicate of all of them. The cap applies to the reference
+    // side, so the output is identical-UP-TO-CAP: doc 11's pairs are
+    // present uncapped and gone at cap=5, while doc 10's pair (ordinary
+    // buckets) survives every cap
     val hot = (0 until 30).map(i => (100L + i, "same hot text repeated " +
       "across the reference corpus many times over and over"))
     val ref = (hot :+ ((1L, "the quick brown fox jumps over the lazy dog " +
@@ -450,30 +448,32 @@ class DedupSpec extends SparkTestBase {
     def run(cap: Int) = Dedup.minHashCrossPairs(batch, ref, "text", "id",
         threshold = 0.6, maxBucketSize = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (cap <- Seq(1000, 5, 0)) {
-      // force the prune route (the ref-size floor would route this
-      // tiny fixture to the full-exchange shape)
-      spark.conf.set(Dedup.MinHashPruneMinRefDocsConf, "1")
-      val pruned = try run(cap)
-        finally spark.conf.unset(Dedup.MinHashPruneMinRefDocsConf)
-      spark.conf.set(Dedup.MinHashSmallBatchDocsConf, "0")
-      val full = try run(cap)
-        finally spark.conf.unset(Dedup.MinHashSmallBatchDocsConf)
-      assert(pruned == full, s"cap=$cap: routes diverged")
-      assert(run(cap) == full, s"cap=$cap: default route diverged")
-    }
-    // the cap's semantic contract made explicit (r18 verdict 6c): the
-    // output is identical-UP-TO-CAP, not identical — batch doc 11 is a
-    // TRUE near-duplicate of the 30 hot ref docs, present uncapped and
-    // dropped at cap=5 because its every shared bucket is over the cap
-    // (the checkpoint-after-cap plan changes where the pruned slice
-    // materialises, never which pairs the cap keeps — the route
-    // equalities above hold at every cap)
-    assert(run(0).exists(_._1 == 11L),
-      "uncapped: the hot-bucket true pair must be present")
+    assert(run(0).count(_._1 == 11L) == 30,
+      "uncapped: the hot-bucket true pairs must be present")
+    assert(run(1000) == run(0), "a cap above every bucket is no cap")
     assert(!run(5).exists(_._1 == 11L),
       "capped: a true pair whose only shared buckets exceed the cap is " +
         "dropped by contract")
+    for (cap <- Seq(1000, 5, 0))
+      assert(run(cap).contains((10L, 1L)), s"cap=$cap dropped an ordinary pair")
+  }
+
+  test("cap boundary: maxBucketSize members keep pairs, maxBucketSize + 1 do not") {
+    val text = "one identical document text shared by every member here"
+    def same(n: Int, from: Long) =
+      (0 until n).map(i => (from + i, text)).toDF("id", "text")
+    val cap = 4
+    // self path: n identical docs share every bucket, each bucket has n members
+    def selfPairs(n: Int) = Dedup.minHashNearDuplicates(same(n, 0L), "text", "id",
+      maxBucketSize = cap).count()
+    assert(selfPairs(cap) == cap.toLong * (cap - 1) / 2)
+    assert(selfPairs(cap + 1) == 0L)
+    // cross path: the cap counts reference members only
+    val batch = same(1, 1000L)
+    def crossPairs(n: Int) = Dedup.minHashCrossPairs(batch, same(n, 0L), "text", "id",
+      maxBucketSize = cap).count()
+    assert(crossPairs(cap) == cap.toLong)
+    assert(crossPairs(cap + 1) == 0L)
   }
 
   test("minHashDedupAgainst never drops when ref is disjoint; schema passes through") {
@@ -651,40 +651,30 @@ class DedupSpec extends SparkTestBase {
     assertThrows[IllegalArgumentException](Dedup.bandingForBudget(1.0, 64))
   }
 
-  test("Auto overloads: solved banding == hand-pinned defaults, bit-for-bit results") {
+  test("bandingFor-solved bands reproduce the hand-pinned default calls") {
     val docs = df("id BIGINT, text STRING",
       Seq(1L, "the quick brown fox jumps over the lazy dog again and again"),
       Seq(2L, "the quick brown fox jumps over the lazy dog again and again!"),
       Seq(3L, "completely different content about distributed query engines"),
       Seq(4L, "the quick brown fox jumps over the lazy dog once more today"))
-    val ref = df("id BIGINT, text STRING",
-      Seq(10L, "the quick brown fox jumps over the lazy dog again and again"),
-      Seq(11L, "unrelated reference corpus document about parquet files"))
-    // the solver recovers 16x4 at the defaults, so Auto == hand-pinned
+    // the solver recovers 16x4 at the MinHash defaults, so a call with
+    // solved bands is the default call
+    val (bands, _) = Dedup.bandingFor(0.7, 64)
     assertDfEqual(
-      Dedup.minHashNearDuplicatesAuto(docs, "text", "id"),
+      Dedup.minHashNearDuplicates(docs, "text", "id", bands = bands),
       Dedup.minHashNearDuplicates(docs, "text", "id"))
-    assertDfEqual(
-      Dedup.minHashDedupAgainstAuto(docs, ref, "text", "id"),
-      Dedup.minHashDedupAgainst(docs, ref, "text", "id"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_auto_ref").toString
-    Dedup.saveMinHashRef(ref, "text", "id", s"$dir/mh")
-    assertDfEqual(
-      Dedup.minHashDedupAgainstRefAuto(docs, s"$dir/mh", "text", "id"),
-      Dedup.minHashDedupAgainstRef(docs, s"$dir/mh", "text", "id"))
-    assertDfEqual(
-      Dedup.minHashIncrementalEdgesAuto(docs, s"$dir/mh", "text", "id"),
-      Dedup.minHashIncrementalEdges(docs, s"$dir/mh", "text", "id"))
     // a stricter recall target routes to a different rung (32x2) and
     // still meets the semantics contract (near-dup pair 1-2 found)
-    val strict = Dedup.minHashNearDuplicatesAuto(docs, "text", "id",
-      minRecallAtThreshold = 0.999)
+    val (strictBands, _) = Dedup.bandingFor(0.7, 64, minRecallAtThreshold = 0.999)
+    assert(strictBands == 32)
+    val strict = Dedup.minHashNearDuplicates(docs, "text", "id", bands = strictBands)
     assert(strict.collect().exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
     // the ngram family's hand-tuned 12x6 is ALSO the solver's answer
-    // at its own defaults, so its Auto overload is bit-identical too
-    assert(Dedup.bandingFor(0.8, 72) == (12, 6))
+    // at its own defaults
+    val (ngramBands, _) = Dedup.bandingFor(0.8, 72)
+    assert(ngramBands == 12)
     assertDfEqual(
-      Dedup.ngramJaccardNearDuplicatesAuto(docs, "text", "id"),
+      Dedup.ngramJaccardNearDuplicates(docs, "text", "id", bands = ngramBands),
       Dedup.ngramJaccardNearDuplicates(docs, "text", "id"))
   }
 

@@ -40,6 +40,16 @@ class RelevanceSpec extends SparkTestBase {
     assert(!out.select("word").as[String].collect().contains("zzz_unique"))
   }
 
+  test("tfIdf and invertedIndex reject inputs carrying their reserved columns") {
+    // a caller column named like the internal N / df-cap column would
+    // otherwise be silently shadowed or collide in the cross join
+    val clash = docs.withColumn("__graft_n_docs", lit(1.0))
+    assertThrows[IllegalArgumentException](Relevance.tfIdf(clash, "doc_id", "text"))
+    val clashMax = docs.withColumn("__graft_max_df", lit(1L))
+    assertThrows[IllegalArgumentException](
+      Relevance.invertedIndex(clashMax, "doc_id", "text", maxDfFrac = 0.5))
+  }
+
   test("bm25TopK ranks the term-dense short doc first and respects k") {
     val top = Relevance.bm25TopK(docs, "doc_id", "text", Seq("spark"), k = 2)
     val rows = top.collect()
