@@ -250,13 +250,21 @@ object Dedup {
     * set is tiny for a sane cap but grows as bandedRows / maxBucketSize
     * for a small one, so size estimation and AQE pick the strategy. */
   private def capBuckets(bandedIds: DataFrame, maxBucketSize: Int): DataFrame =
-    if (maxBucketSize <= 0) bandedIds
-    else bandedIds.join(
-      bandedIds.groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("__bucket_n"))
-        .filter(col("__bucket_n") > maxBucketSize)
-        .select(col("band"), col("bucket")),
-      Seq("band", "bucket"), "left_anti")
+    hotBuckets(bandedIds, maxBucketSize).fold(bandedIds)(
+      hot => bandedIds.join(hot, Seq("band", "bucket"), "left_anti"))
+
+  /** The over-cap `(band, bucket)` keys of a banded frame — the ONE
+    * count rule behind [[capBuckets]] and the streaming full-recall
+    * fence ([[graft.streaming.Streaming.dedupBatchAgainstStore]]),
+    * which flags these buckets instead of dropping them. `None` when
+    * `maxBucketSize <= 0` (cap disabled). */
+  private[graft] def hotBuckets(
+      bandedIds: DataFrame, maxBucketSize: Int): Option[DataFrame] =
+    if (maxBucketSize <= 0) None
+    else Some(bandedIds.groupBy(col("band"), col("bucket"))
+      .agg(count(lit(1)).as("__bucket_n"))
+      .filter(col("__bucket_n") > maxBucketSize)
+      .select(col("band"), col("bucket")))
 
   /** Same-bucket candidate id pairs (id_a < id_b, distinct) within one
     * banded corpus, hot buckets capped by [[capBuckets]]. */

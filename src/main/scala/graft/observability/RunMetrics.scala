@@ -2,17 +2,20 @@ package graft.observability
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Measured execution profile of one action: the numbers that decide
   * whether a plan survives a 100× scale-up. `shuffleWriteBytes` is THE
   * scale predictor — input scans parallelise for free, exchanges
   * don't — and watching it per pipeline stage is how the SCALE.md
-  * exchange-volume arguments were produced. */
+  * exchange-volume arguments were produced. `jobs` counts every Spark
+  * job started in the window — eager fences and counts included — the
+  * number a per-batch fixed cost is made of. */
 case class RunMetrics(
     rows: Long,
     wallMs: Long,
+    jobs: Int,
     stages: Int,
     tasks: Int,
     inputBytes: Long,
@@ -48,16 +51,27 @@ object RunMetricsProbe {
     * `localCheckpoint` fence) that a strict argument would execute
     * before the listener attaches — measured to hide a 9.8 MB ranged
     * exchange entirely (SCALE.md ks_path). */
-  def measureLazy(
-      spark: org.apache.spark.sql.SparkSession,
-      mk: () => DataFrame): RunMetrics = {
+  def measureLazy(spark: SparkSession, mk: () => DataFrame): RunMetrics =
+    probe(spark)(mk().count())
+
+  /** Run an eager `Unit` body (an append, a compaction) under the
+    * listener and report what it executed; `rows` is 0 — the body
+    * returns nothing to count, and counting its output would add a
+    * job. */
+  def measureEager(spark: SparkSession)(body: => Unit): RunMetrics =
+    probe(spark) { body; 0L }
+
+  private def probe(spark: SparkSession)(action: => Long): RunMetrics = {
     val sc = spark.sparkContext
+    val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val input = new AtomicLong
     val sw = new AtomicLong
     val sr = new AtomicLong
     val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
         val m = ev.stageInfo.taskMetrics
         if (m != null) {
@@ -72,18 +86,18 @@ object RunMetricsProbe {
     sc.addSparkListener(listener)
     try {
       val t0 = System.nanoTime()
-      val rows = mk().count()
+      val rows = action
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      // drain: listener events arrive async — wait until the stage
-      // counter is stable across two consecutive polls (max ~2 s)
+      // drain: listener events arrive async — wait until the job and
+      // stage counters are stable across two consecutive polls (max ~2 s)
       var last = -1
       var i = 0
-      while (i < 40 && stages.get() != last) {
-        last = stages.get()
+      while (i < 40 && jobs.get() + stages.get() != last) {
+        last = jobs.get() + stages.get()
         Thread.sleep(50)
         i += 1
       }
-      RunMetrics(rows, wallMs, stages.get(), tasks.get(),
+      RunMetrics(rows, wallMs, jobs.get(), stages.get(), tasks.get(),
         input.get(), sw.get(), sr.get())
     } finally sc.removeSparkListener(listener)
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -720,13 +721,19 @@ object Streaming {
     org.apache.spark.sql.types.StructField("sim", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.LongType)))
 
+  /** The filesystem holding `path` when `path` exists on it — the one
+    * existence check behind every store and checkpoint-log read here. */
+  private def existingFs(spark: SparkSession, path: Path): Option[FileSystem] = {
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(path)) Some(fs) else None
+  }
+
   /** The survivors store as a DataFrame — empty-with-schema when the
     * stream has not written yet (first micro-batch), so the first
     * batch's plan is the same shape as every later one. */
   def readFullRecallStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path)) spark.read.schema(fullRecallStoreSchema).parquet(storeDir)
+    if (existingFs(spark, new Path(storeDir)).isDefined)
+      spark.read.schema(fullRecallStoreSchema).parquet(storeDir)
     else spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       fullRecallStoreSchema)
@@ -760,15 +767,33 @@ object Streaming {
     * boundary placement, and a replay of the same batch sequence is
     * deterministic (see [[nearDedupStreamFullRecall]]).
     *
-    * Scale shape: the within-batch half is the batch operator's
-    * id-only banded exchange. The store join BROADCASTS the banded
-    * micro-batch (micro-batches are small by construction; bands
-    * multiply it by 4 at h<=3, 28 at h<=6) and streams the store
-    * through map-side — a columnar scan of two long columns with NO
-    * store-side shuffle and no store-side state: the store is plain
-    * parquet, not state-store memory, so state size never bounds the
-    * stream. The scan is the design cost, linear per batch in
-    * survivors-so-far; compact the store as it grows
+    * Scale shape: ONE fence and ONE probe join per micro-batch, since
+    * the per-batch fixed cost (jobs, not data) sets a small batch's
+    * latency. The fence is the banded batch — `(id, sim)` exploded
+    * over [[graft.dedup.Dedup.simHashBandBuckets]] — checkpointed
+    * once, each row flagged when its `(band, bucket)` is over
+    * `maxBucketSize` (the batch operator's cap rule,
+    * [[graft.dedup.Dedup.hotBuckets]]; only a batch of more than
+    * `maxBucketSize` docs can have such a bucket, and only such a
+    * batch pays a second checkpoint for the flag). The probe join
+    * hashes on `(band, bucket)` with the fence as its build side and,
+    * as its probe side, the fence's cold rows plus the store (a hot row
+    * never probes, so an over-cap bucket joins nothing): a batch row
+    * loses to a lower id in a shared cold bucket within `maxHamming`
+    * (the within-batch pairing, capped exactly as the batch operator
+    * caps it), and to any store row within `maxHamming` (uncapped — a
+    * store hit is never skipped). Survivors are the fence's band-0
+    * rows minus the losers, so the input is read once. Equal to
+    * deduping within the batch first and then probing the within-batch
+    * survivors: the two anti-joins commute.
+    *
+    * The join BROADCASTS the fence (micro-batches are small by
+    * construction; bands multiply it by 4 at h<=3, 28 at h<=6) and
+    * streams the store through map-side — a columnar scan of two long
+    * columns with NO store-side shuffle and no store-side state: the
+    * store is plain parquet, not state-store memory, so state size
+    * never bounds the stream. The scan is the design cost, linear per
+    * batch in survivors-so-far; compact the store as it grows
     * ([[compactFullRecallStore]] folds committed-batch partitions
     * into one, bounding FILE count), and prefer larger micro-batches
     * once the store dwarfs them — per-survivor cost amortises with
@@ -777,16 +802,16 @@ object Streaming {
     * That last advice is why the broadcast is size-GUARDED, not
     * unconditional: a backfill-sized micro-batch (the very thing the
     * amortisation argument recommends) times the band multiplier can
-    * exceed what a driver comfortably broadcasts. When the banded
-    * batch tops `maxBroadcastBandedRows` (counted exactly — the
-    * within-batch survivors are already materialised, so the count is
-    * a cached-partition sweep, times the derived band count), the
-    * probe switches to a shuffle-hash join on (band, bucket): both
-    * sides exchange once, the batch side stays the build side, and
-    * the plan remains skew-tolerant where a giant batch would
-    * otherwise OOM the driver. The default (2M banded rows ≈ 500k
-    * docs at h<=3, ~100 MB serialised) keeps every normal micro-batch
-    * on the broadcast fast path. */
+    * exceed what a driver comfortably broadcasts. When the fence holds
+    * more than `maxBroadcastBandedRows` rows (counted exactly, by one
+    * job over the checkpointed fence's partitions), the probe
+    * switches to a shuffle-hash join on (band, bucket) and the loser
+    * anti-join is left to the planner: both sides of the probe
+    * exchange once, the fence stays the build side, and the plan
+    * remains skew-tolerant where a giant batch would otherwise OOM
+    * the driver. The default (2M banded rows ≈ 500k docs at h<=3,
+    * ~100 MB serialised) keeps every normal micro-batch on the
+    * broadcast fast path. */
   def dedupBatchAgainstStore(
       batch: DataFrame,
       storeDir: String,
@@ -812,45 +837,64 @@ object Streaming {
       maxBroadcastBandedRows: Long,
       storeExists: Option[Boolean]): DataFrame = {
     val spark = batch.sparkSession
-    val fps = batch.select(col("id").cast("long").as("id"),
-      col("sim").cast("long").as("sim"))
-    val pairs = graft.dedup.Dedup.simHashPairs(fps, maxHamming, maxBucketSize)
-    // fenced: the within-batch survivors feed BOTH the store probe and
-    // the final anti-join — unfenced, each consumer would re-run the
-    // banded self-join (milliseconds of checkpoint for a halved pass)
-    val withinBatch = graft.dedup.Dedup.dropNearDuplicates(fps, pairs, "id")
-      .localCheckpoint(true)
+    def banded(df: DataFrame): DataFrame = df.select(col("id"), col("sim"),
+      posexplode(graft.dedup.Dedup.simHashBandBuckets(col("sim"), maxHamming))
+        .as(Seq("band", "bucket")))
+    // ONE fence per micro-batch: the banded batch, checkpointed, then
+    // counted by one job over its partitions for the broadcast guard
+    val bandedBatch = banded(batch.select(col("id").cast("long").as("id"),
+      col("sim").cast("long").as("sim"))).localCheckpoint(true)
+    val bandedRows = bandedBatch.queryExecution.toRdd.count()
+    // hot buckets are flagged, not dropped: the store probe must still
+    // see every row. A bucket holds at most one row per batch doc, so a
+    // batch of at most `maxBucketSize` docs has none; a larger one is
+    // flagged by the batch operator's cap rule and fenced again
+    val nBands = graft.dedup.Dedup.simHashBandCount(maxHamming).toLong
+    val fence = graft.dedup.Dedup.hotBuckets(bandedBatch, maxBucketSize)
+      .filter(_ => bandedRows > maxBucketSize * nBands)
+      .fold(bandedBatch.withColumn("hot", lit(false)))(hot =>
+        bandedBatch.join(hot.withColumn("hot", lit(true)),
+          Seq("band", "bucket"), "left").na.fill(false, Seq("hot"))
+          .localCheckpoint(true))
     // the stream's first batch has no store to probe: the path's
-    // nonexistence proves hitIds empty, so skip the broadcast-guard
-    // count job and the whole probe subtree (r18 verdict task 8 — the
-    // per-batch fixed cost should not bill batch 0 for joins against a
-    // provably empty store)
-    val exists = storeExists.getOrElse {
-      val storePath = new org.apache.hadoop.fs.Path(storeDir)
-      storePath
-        .getFileSystem(spark.sessionState.newHadoopConf()).exists(storePath)
-    }
-    if (!exists) return withinBatch
+    // nonexistence proves the store side empty, so the probe side is
+    // the fence alone (the per-batch fixed cost should not bill batch 0
+    // for a scan of a provably empty store)
+    val exists = storeExists.getOrElse(
+      existingFs(spark, new Path(storeDir)).isDefined)
+    // the cap applies BEFORE the join: a hot row never probes, so a
+    // bucket of k equal fingerprints costs no k² joined rows. Bucket-mates
+    // share the flag, so a cold probe row only ever meets cold build rows
+    val batchSide = fence.filter(!col("hot")).drop("hot")
+      .withColumn("from_store", lit(false))
     // replay safety: a crashed attempt of THIS batch may have written
     // its partition already — excluding it re-creates the store state
     // the first attempt saw (deterministic re-run), instead of the
     // batch deduping against its own partial output and emitting nothing
-    val store = readFullRecallStore(spark, storeDir)
-      .filter(col("batch_id") =!= lit(batchId))
-    def banded(df: DataFrame): DataFrame = df.select(col("id"), col("sim"),
-      posexplode(graft.dedup.Dedup.simHashBandBuckets(col("sim"), maxHamming))
-        .as(Seq("band", "bucket")))
-    val nBands = graft.dedup.Dedup.simHashBandCount(maxHamming).toLong
-    val probe = banded(withinBatch).select(col("band"), col("bucket"),
-      col("id").as("n_id"), col("sim").as("n_sim"))
-    val guarded =
-      if (withinBatch.count() * nBands <= maxBroadcastBandedRows) broadcast(probe)
-      else probe.hint("shuffle_hash") // build side stays the batch
-    val hitIds = banded(store)
-      .join(guarded, Seq("band", "bucket"))
-      .filter(bit_count(col("sim").bitwiseXOR(col("n_sim"))) <= maxHamming)
+    val probeSide =
+      if (!exists) batchSide
+      else batchSide.unionByName(
+        banded(readFullRecallStore(spark, storeDir)
+            .filter(col("batch_id") =!= lit(batchId)))
+          .withColumn("from_store", lit(true)))
+    val broadcastable = bandedRows <= maxBroadcastBandedRows
+    val build = fence.select(col("band"), col("bucket"), col("id").as("n_id"),
+      col("sim").as("n_sim"))
+    // ONE probe join: a batch row loses to a lower id sharing a cold
+    // bucket and to any store row, each within maxHamming
+    val losers = probeSide
+      .join(if (broadcastable) broadcast(build)
+        else build.hint("shuffle_hash"), // build side stays the batch
+        Seq("band", "bucket"))
+      .filter(bit_count(col("sim").bitwiseXOR(col("n_sim"))) <= maxHamming &&
+        (col("from_store") || col("id") < col("n_id")))
       .select(col("n_id").as("id")).distinct()
-    withinBatch.join(hitIds, Seq("id"), "left_anti")
+    // the losers are distinct batch ids — fewer rows than the fence, so
+    // the guard bounds their broadcast too
+    val survivors = fence.filter(col("band") === 0).select("id", "sim")
+      .join(if (broadcastable) broadcast(losers) else losers,
+        Seq("id"), "left_anti")
+    if (exists) survivors else survivors.localCheckpoint(true)
   }
 
   /** [[dedupBatchAgainstStore]] + idempotent store append: survivors
@@ -871,22 +915,19 @@ object Streaming {
       maxBucketSize: Int = 1000,
       maxBroadcastBandedRows: Long = 2000000L): Unit = {
     // the stream's FIRST batch needs no fence of its own:
-    // dedupBatchAgainstStore's no-store fast path returns the
-    // already-checkpointed within-batch survivors, whose write plan
-    // cannot read storeDir — re-checkpointing them was a pure second
-    // materialisation job per stream (r19 optimization round). Later
-    // batches keep the fence: their survivor plan READS the store the
-    // write overwrites.
+    // dedupBatchAgainstStore's no-store path returns checkpointed
+    // survivors, whose write plan cannot read storeDir — re-checkpointing
+    // them was a pure second materialisation job per stream (r19
+    // optimization round). Later batches keep the fence: their survivor
+    // plan READS the store the write overwrites.
     // ONE existence observation feeds BOTH the probe decision (inside
     // the impl) and the fence decision below — independently re-checking
     // let the two diverge if the store appeared in between (two streams
     // sharing a store): the survivor plan would read the store with no
     // fence while the overwrite clobbered files the lazy plan still
     // reads (ADVICE r19)
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val storeExisted = storePath
-      .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      .exists(storePath)
+    val storeExisted =
+      existingFs(batch.sparkSession, new Path(storeDir)).isDefined
     val raw =
       dedupBatchAgainstStoreImpl(batch, storeDir, batchId, maxHamming,
           maxBucketSize, maxBroadcastBandedRows, Some(storeExisted))
@@ -991,13 +1032,11 @@ object Streaming {
     * commit-log file names (plain batch numbers, `N.compact` after log
     * compaction) directly so it works on a stopped stream. */
   def lastCommittedBatchId(spark: SparkSession, checkpointDir: String): Option[Long] = {
-    val path = new org.apache.hadoop.fs.Path(checkpointDir, "commits")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).iterator
+    val path = new Path(checkpointDir, "commits")
+    existingFs(spark, path).flatMap(_.listStatus(path).iterator
       .map(_.getPath.getName.stripSuffix(".compact"))
       .filter(_.forall(_.isDigit)).map(_.toLong)
-      .maxOption
+      .maxOption)
   }
 
   /** Compact the survivors store: fold every `batch_id <= upToBatchId`
@@ -1034,9 +1073,11 @@ object Streaming {
       spark: SparkSession, storeDir: String, upToBatchId: Long): Unit = {
     require(upToBatchId >= 0,
       s"compactFullRecallStore: upToBatchId must be >= 0, got $upToBatchId")
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(storePath)) return
+    val storePath = new Path(storeDir)
+    val fs = existingFs(spark, storePath) match {
+      case Some(fs) => fs
+      case None => return
+    }
     val toDelete = fs.listStatus(storePath).iterator
       .filter(_.isDirectory)
       .filter { st =>
@@ -1087,9 +1128,8 @@ object Streaming {
   /** The window-key store as a DataFrame — empty-with-schema before
     * the first write, so every batch's plan has one shape. */
   def readSubstringStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path)) spark.read.schema(substringStoreSchema).parquet(storeDir)
+    if (existingFs(spark, new Path(storeDir)).isDefined)
+      spark.read.schema(substringStoreSchema).parquet(storeDir)
     else spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       substringStoreSchema)
@@ -1173,9 +1213,11 @@ object Streaming {
       spark: SparkSession, storeDir: String, upToBatchId: Long): Unit = {
     require(upToBatchId >= 0,
       s"compactSubstringStore: upToBatchId must be >= 0, got $upToBatchId")
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(storePath)) return
+    val storePath = new Path(storeDir)
+    val fs = existingFs(spark, storePath) match {
+      case Some(fs) => fs
+      case None => return
+    }
     val toDelete = fs.listStatus(storePath).iterator
       .filter(_.isDirectory)
       .filter { st =>

@@ -38,4 +38,11 @@ class RunMetricsSpec extends SparkTestBase {
     assert(second.shuffleWriteBytes < first.shuffleWriteBytes * 2 + 1,
       s"counters leaked across measurements: $first vs $second")
   }
+
+  test("jobs counts every job started; measureEager runs Unit bodies") {
+    val rdd = spark.sparkContext.parallelize(1 to 100, 2)
+    val m = RunMetricsProbe.measureEager(spark) { rdd.count(); rdd.count() }
+    assert(m.jobs == 2 && m.rows == 0L, s"two RDD actions = two jobs: $m")
+    assert(RunMetricsProbe.measureEager(spark)(()).jobs == 0)
+  }
 }

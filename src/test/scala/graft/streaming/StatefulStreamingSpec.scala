@@ -1,6 +1,14 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.joins.HashJoin
+import org.apache.spark.sql.functions._
+
 import graft.SparkTestBase
+import graft.dedup.Dedup
 import graft.streaming.Streaming.{KeyedDoc, dedupStream}
 
 class StatefulStreamingSpec extends SparkTestBase {
@@ -706,6 +714,138 @@ class StatefulStreamingSpec extends SparkTestBase {
         assert(hit, s"trial $trial: dropped doc $id has no survivor in its closure")
       }
     }
+  }
+
+  /** The two-step formulation of one full-recall micro-batch, kept as
+    * the equivalence reference: the batch operator's within-batch dedup
+    * (simHashPairs → dropNearDuplicates), checkpointed, then an
+    * anti-join of the survivors that lie within `maxHamming` of a store
+    * row (uncapped). No broadcast guard — it never changes results. */
+  private def twoStepBatchAgainstStore(
+      batch: DataFrame, storeDir: String, batchId: Long,
+      maxHamming: Int, maxBucketSize: Int): DataFrame = {
+    val fps = batch.select(col("id").cast("long").as("id"),
+      col("sim").cast("long").as("sim"))
+    val within = Dedup.dropNearDuplicates(
+      fps, Dedup.simHashPairs(fps, maxHamming, maxBucketSize), "id")
+      .localCheckpoint(true)
+    if (!new java.io.File(storeDir).exists()) return within
+    def banded(df: DataFrame): DataFrame = df.select(col("id"), col("sim"),
+      posexplode(Dedup.simHashBandBuckets(col("sim"), maxHamming))
+        .as(Seq("band", "bucket")))
+    val store = Streaming.readFullRecallStore(spark, storeDir)
+      .filter(col("batch_id") =!= lit(batchId))
+    val hits = banded(store)
+      .join(banded(within).select(col("band"), col("bucket"),
+        col("id").as("n_id"), col("sim").as("n_sim")), Seq("band", "bucket"))
+      .filter(bit_count(col("sim").bitwiseXOR(col("n_sim"))) <= maxHamming)
+      .select(col("n_id").as("id")).distinct()
+    within.join(hits, Seq("id"), "left_anti")
+  }
+
+  test("dedupBatchAgainstStore ≡ two-step reference, random corpora") {
+    val rnd = new scala.util.Random(20261017L)
+    for (cap <- Seq(0, 2, 1000); guard <- Seq(1L, 2000000L)) {
+      // few bases, few flips: 16-bit blocks collide, so cap 2 bites
+      val base = Vector.fill(6)(rnd.nextLong())
+      val docs = (0 until 60).map { i =>
+        val b = base(rnd.nextInt(base.size))
+        (i.toLong, (0 until rnd.nextInt(5)).foldLeft(b)(
+          (s, _) => s ^ (1L << rnd.nextInt(64))))
+      }
+      val store = java.nio.file.Files
+        .createTempDirectory("graft_fullrecall_equiv").toString + "/store"
+      val batches = docs.groupBy(_ => rnd.nextInt(3)).toSeq.sortBy(_._1).map(_._2)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        val batch = b.toDF("id", "sim")
+        val want = twoStepBatchAgainstStore(batch, store, i.toLong, 3, cap)
+          .select("id").as[Long].collect().sorted.toSeq
+        val got = Streaming.dedupBatchAgainstStore(batch, store, i.toLong, 3,
+          maxBucketSize = cap, maxBroadcastBandedRows = guard)
+          .select("id").as[Long].collect().sorted.toSeq
+        assert(got == want, s"cap $cap guard $guard batch $i")
+        Streaming.appendBatchToFullRecallStore(batch, store, i.toLong, 3,
+          maxBucketSize = cap, maxBroadcastBandedRows = guard)
+      }
+    }
+  }
+
+  test("dedupBatchAgainstStore: cap spares the batch, not the store") {
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_fullrecall_cap").toString + "/store"
+    val sim = 0x123456789ABCDEFL
+    val three = Seq((1L, sim), (2L, sim), (3L, sim)).toDF("id", "sim")
+    // every bucket of the three equal fingerprints holds 3 > 2 members:
+    // all capped, so no within-batch pair and all three survive
+    val alone = Streaming.dedupBatchAgainstStore(three, store, 1L, 3, maxBucketSize = 2)
+    assert(alone.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    // an earlier store entry one bit away drops all three: the probe
+    // against the store ignores the cap
+    Streaming.appendBatchToFullRecallStore(
+      Seq((0L, sim ^ 1L)).toDF("id", "sim"), store, 0L, 3, maxBucketSize = 2)
+    val probed = Streaming.dedupBatchAgainstStore(three, store, 1L, 3, maxBucketSize = 2)
+    assert(probed.count() == 0L)
+    assert(twoStepBatchAgainstStore(three, store, 1L, 3, 2).count() == 0L)
+  }
+
+  test("dedupBatchAgainstStore: hot-bucket rows never reach the probe side") {
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_fullrecall_hot").toString + "/store"
+    // the store row shares no 16-bit block with either batch fingerprint
+    Streaming.appendBatchToFullRecallStore(
+      Seq((0L, 0L)).toDF("id", "sim"), store, 0L, 3)
+    // 2,000 equal fingerprints: every bucket holds 2,000 > 1,000 members,
+    // so the cap must keep them out of the probe join — joined first and
+    // filtered after, they would be 2,000² rows per band. Two more equal
+    // docs share cold buckets, so one of them loses
+    val hot = (1L to 2000L).map((_, 0x123456789ABCDEFL))
+    val cold = Seq((5001L, 0x1111222233334444L), (5002L, 0x1111222233334444L))
+    val batch = (hot ++ cold).toDF("id", "sim")
+    // rows entering a plan: down each branch, the first node that counts
+    // its output rows (exchanges, unions and projections do not)
+    def rowsIn(p: SparkPlan): Long = p match {
+      case s: QueryStageExec => rowsIn(s.plan)
+      case _ => p.metrics.get("numOutputRows").map(_.value)
+        .getOrElse(p.children.map(rowsIn).sum)
+    }
+    val plans = new AdaptiveSparkPlanHelper {}
+    for (guard <- Seq(1L, 2000000L)) {
+      val out = Streaming.dedupBatchAgainstStore(batch, store, 1L, 3,
+        maxBucketSize = 1000, maxBroadcastBandedRows = guard)
+      val ids = out.collect().map(_.getLong(0)).toSet
+      assert(ids.size == 2001 && !ids.contains(5002L), s"guard $guard")
+      // the probe side holds the two cold docs and the store row, once
+      // per band (4 at h = 3); each hot row would meet 2,000 build rows
+      val probed = plans.collect(out.queryExecution.executedPlan) {
+        case j: HashJoin if j.joinType == Inner => rowsIn(j.left) // fence builds
+      }
+      assert(probed == Seq(12L), s"guard $guard: probe-side rows $probed")
+    }
+  }
+
+  test("full-recall append job counts per 500-row batch are pinned") {
+    val rnd = new scala.util.Random(500L)
+    val sims = Vector.fill(1000)(rnd.nextLong())
+    // every 10th doc is a 2-bit variant of the one before; batch 1 also
+    // repeats a few of batch 0's fingerprints, so both halves have hits
+    def batch(from: Int): DataFrame = (from until from + 500).map { i =>
+      val s = if (i % 10 == 9) sims(i - 1) ^ 5L
+        else if (from > 0 && i % 50 == 0) sims(i - 500) else sims(i)
+      (i.toLong, s)
+    }.toDF("id", "sim")
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_fullrecall_jobs").toString + "/store"
+    val first = graft.observability.RunMetricsProbe.measureEager(spark)(
+      Streaming.appendBatchToFullRecallStore(batch(0), store, 0L, 3))
+    val backed = graft.observability.RunMetricsProbe.measureEager(spark)(
+      Streaming.appendBatchToFullRecallStore(batch(500), store, 1L, 3))
+    info(s"jobs: store-less ${first.jobs}, store-backed ${backed.jobs}")
+    assert(Streaming.readFullRecallStore(spark, store).count() == 450L + 440L)
+    // one fence + its count, one probe (broadcast build, loser
+    // shuffle, loser broadcast, survivors), one write: 7 jobs measured
+    // on either path, one of slack for AQE stage ordering
+    assert(first.jobs <= 8, s"store-less batch: $first")
+    assert(backed.jobs <= 8, s"store-backed batch: $backed")
   }
 
   test("substringDedupStream span-cleans micro-batches through the window store") {
