@@ -302,16 +302,14 @@ object Dedup {
           col(s"${payloadCol}_a"), col(s"${payloadCol}_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
 
-  /** Staged signature pipeline shared by the self- and cross-corpus
-    * MinHash operators: tokens → shingles → hashes → signature, each
-    * landed as a real column so no regex split / string hash is
-    * re-evaluated inside a downstream lambda. repartition() spreads
-    * the CPU-heavy narrow pass across all cores even when the source
-    * is a single small file (and acts as a projection fence); the
-    * trailing exchange holds the computed hs/sig columns so every
-    * consumer (banding + verification payload joins) hits
-    * ReusedExchange instead of re-running tokenisation + hashing. */
-  private def minHashBase(
+  /** Staged signature pipeline shared by the MinHash operators:
+    * tokens → shingle hashes `hs` → signature `sig`, each landed as a
+    * real column so no regex split / string hash is re-evaluated
+    * inside a downstream lambda. repartition() spreads the CPU-heavy
+    * narrow pass across all cores even when the source is a single
+    * small file. UNFENCED — for a single consumer ([[saveMinHashRef]]'s
+    * write); pairings read it through [[minHashBase]]. */
+  private def minHashKernels(
       df: DataFrame, textCol: String, idCol: String,
       numHashes: Int, shingleSize: Int): DataFrame = df
     .select(col(idCol).as("id"), col(textCol).as("text"))
@@ -323,7 +321,21 @@ object Dedup {
     .withColumn("sig",
       graft.functions.HashFunctions.minHashSignatureNative(col("hs"), numHashes))
     .select("id", "hs", "sig")
-    .repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  /** [[minHashKernels]] behind the materialisation fence every
+    * text-computed LSH base shares: an eager `localCheckpoint` — ONE
+    * eager action (under AQE two Spark jobs: the repartition's shuffle
+    * stage, then the checkpoint itself) that runs the kernels once per
+    * document. Each pairing reads a base many times — banding, the
+    * hot-bucket count and anti-join on both self-join sides, both
+    * payload joins — and an exchange is no fence: column pruning hands
+    * banding (id, sig) and the payload joins (id, hs), so no exchange
+    * is reused, and `size(hs) > 0` is pushed below the repartition —
+    * an exchange-fenced plan re-runs tokenise → shingle-hash in every
+    * consumer. */
+  private def minHashBase(df: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, shingleSize: Int): DataFrame =
+    minHashKernels(df, textCol, idCol, numHashes, shingleSize).localCheckpoint(eager = true)
 
   /** MinHash-LSH near-duplicate pairs.
     *
@@ -333,6 +345,10 @@ object Dedup {
     * exact Jaccard verification. With b bands of r rows the effective
     * candidate threshold is ≈ (1/b)^(1/r); [[bandingFor]] solves
     * `bands` from a recall target at `threshold`.
+    *
+    * Construction runs ONE eager action, the kernel fence of
+    * [[minHashBase]]; the returned frame's plan evaluates no text or
+    * hash kernel.
     *
     * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
     */
@@ -351,10 +367,10 @@ object Dedup {
       bands, rows, threshold, maxBucketSize)
   }
 
-  /** Within-corpus verified pairs from a minhash base: banded
-    * candidates (hot-bucket capped), exact hash-set Jaccard
-    * verification. `(id_a < id_b, jaccard)`. */
-  private def verifiedPairsFromBase(
+  /** Within-corpus verified pairs from a minhash base (`id`, hash set
+    * `hs`, `sig`): banded candidates (hot-bucket capped), exact
+    * hash-set Jaccard verification. `(id_a < id_b, jaccard)`. */
+  private[graft] def verifiedPairsFromBase(
       base: DataFrame,
       bands: Int,
       rows: Int,
@@ -368,7 +384,7 @@ object Dedup {
     * ([[capBuckets]] — a batch cannot make a reference bucket hot),
     * equi-join on (band, bucket), verify by exact hash-set Jaccard.
     * `id_a` is the new-batch side, `id_b` the reference side. */
-  private def crossVerifiedPairs(
+  private[graft] def crossVerifiedPairs(
       newBase: DataFrame,
       refBase: DataFrame,
       bands: Int,
@@ -429,10 +445,11 @@ object Dedup {
     * ONE batch kernel pass: every near-dup pair the union corpus gains
     * from `df` — batch↔batch ([[minHashNearDuplicates]] semantics)
     * plus batch↔artifact ([[minHashCrossPairsRef]] semantics) — with
-    * the batch's minhash base computed once (checkpoint-fenced for the
-    * two pair passes) and the reference side served from the
-    * [[saveMinHashRef]] artifact, its text never touched and its
-    * kernels never recomputed. Feed the result (with the prior
+    * the batch's minhash base computed once (the [[minHashBase]]
+    * fence serves both pair passes) and the reference side served from
+    * the [[saveMinHashRef]] artifact, its text never touched and its
+    * kernels never recomputed. Construction runs the artifact's width
+    * check and ONE kernel fence. Feed the result (with the prior
     * labeling) to [[graft.operators.Graph.connectedComponentsAgainst]].
     * `(id_a, id_b, jaccard)`; batch↔batch pairs have id_a < id_b,
     * cross pairs have id_a from the batch. */
@@ -450,7 +467,6 @@ object Dedup {
     val refBase = loadMinHashRefBase(df.sparkSession, refPath, numHashes,
       "minHashIncrementalEdges")
     val base = minHashBase(df, textCol, idCol, numHashes, shingleSize)
-      .localCheckpoint(true) // consumed by both pair passes
     verifiedPairsFromBase(base, bands, rows, threshold, maxBucketSize)
       .unionByName(crossVerifiedPairs(base, refBase, bands, rows,
         threshold, maxBucketSize))
@@ -467,7 +483,8 @@ object Dedup {
     * across ingests ([[saveMinHashRef]] / [[minHashDedupAgainstRef]]);
     * the per-batch cost is the NEW side's narrow signature pass plus
     * the bucket join. Hot ref buckets are capped at `maxBucketSize`
-    * like the self-join path.
+    * like the self-join path. Construction runs one eager
+    * [[minHashBase]] fence per corpus.
     *
     * Returns the surviving rows of `df`, schema unchanged.
     */
@@ -496,7 +513,8 @@ object Dedup {
     * artifact), ready for
     * [[graft.operators.Graph.connectedComponentsAgainst]]. Same scale
     * shape as the dedup form: id-only banded exchange, ref-side
-    * hot-bucket cap, payloads re-joined per candidate. */
+    * hot-bucket cap, payloads re-joined per candidate. Construction
+    * runs one eager [[minHashBase]] fence per corpus. */
   def minHashCrossPairs(
       df: DataFrame,
       ref: DataFrame,
@@ -523,7 +541,9 @@ object Dedup {
     * ([[minHashDedupAgainstRef]]) without the reference TEXT ever
     * being stored or rescanned — the raw corpus can be retired while
     * ingest keeps its dedup guarantee. Parameters are part of the
-    * artifact contract: serve with the same numHashes/shingleSize. */
+    * artifact contract: serve with the same numHashes/shingleSize.
+    * One job, unfenced: the write is the base's only consumer, and
+    * the artifact read back needs no fence (it holds no kernel). */
   def saveMinHashRef(
       ref: DataFrame,
       textCol: String,
@@ -531,7 +551,7 @@ object Dedup {
       path: String,
       numHashes: Int = 64,
       shingleSize: Int = 3): Unit =
-    minHashBase(ref, textCol, idCol, numHashes, shingleSize)
+    minHashKernels(ref, textCol, idCol, numHashes, shingleSize)
       .write.mode("overwrite").parquet(path)
 
   /** [[minHashDedupAgainst]] where the reference side is a persisted
@@ -539,7 +559,8 @@ object Dedup {
     * candidates, exact hash-set Jaccard verification, same
     * `maxBucketSize` guard) with the reference's text never touched.
     * Validates the artifact schema and signature width LOUDLY before
-    * any work. */
+    * any work; construction then runs ONE kernel fence (the batch's
+    * [[minHashBase]]). */
   def minHashDedupAgainstRef(
       df: DataFrame,
       refPath: String,
@@ -561,7 +582,8 @@ object Dedup {
   /** [[minHashCrossPairs]] where the reference side is a persisted
     * [[saveMinHashRef]] artifact — pair-grain serving with the
     * reference text never touched; schema and signature width
-    * validated loudly like [[minHashDedupAgainstRef]]. */
+    * validated loudly like [[minHashDedupAgainstRef]], then ONE kernel
+    * fence (the batch's [[minHashBase]]). */
   def minHashCrossPairsRef(
       df: DataFrame,
       refPath: String,
@@ -635,6 +657,9 @@ object Dedup {
     * the cap is the one path that can drop a guaranteed pair, and it is
     * an explicit scale/recall dial, not a silent property of the
     * banding.
+    *
+    * Construction runs ONE eager action, the fingerprint pass behind
+    * the [[simHashBase]] fence; the returned plan evaluates no kernel.
     */
   def simHashNearDuplicates(
       df: DataFrame,
@@ -647,9 +672,10 @@ object Dedup {
       maxHamming, maxBucketSize)
 
   /** (id, sim) fingerprints of a text corpus under `fingerprint` (a
-    * token-hash-array kernel), landed behind a repartition fence like
-    * [[minHashBase]] so banding and the payload re-join share one
-    * fingerprint pass. */
+    * token-hash-array kernel), behind the eager-checkpoint fence of
+    * [[minHashBase]]: ONE action fingerprints each document once, and
+    * banding, the hot-bucket count and anti-join and both payload
+    * re-joins read the checkpoint. */
   private def simHashBase(
       df: DataFrame, textCol: String, idCol: String,
       fingerprint: Column => Column): DataFrame = df
@@ -659,7 +685,7 @@ object Dedup {
     .withColumn("th", graft.functions.HashFunctions.tokenHashesNative(col("toks")))
     .withColumn("sim", fingerprint(col("th")))
     .select("id", "sim")
-    .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    .localCheckpoint(eager = true)
 
   /** Band-bucket array for a 64-bit SimHash fingerprint under the
     * block-combination index of [[simHashPairs]]: element i is band i's
@@ -744,6 +770,9 @@ object Dedup {
     * going straight to 14: pick 7 unless the use case really needs
     * the wider radius, and then pick the radius the recall contract
     * needs, not 8 by habit.
+    *
+    * Construction runs ONE eager action, the fingerprint pass behind
+    * the [[simHashBase]] fence.
     */
   def simHash128NearDuplicates(
       df: DataFrame,
@@ -788,10 +817,10 @@ object Dedup {
     // Evaluated ONCE per row in its OWN projection — two wrong shapes,
     // both measured: wrapping each word() access re-evaluates the size
     // check per band expression (8× per row default rung, 240× on
-    // C(16,2)); a Filter form gets predicate-pushed below the
-    // repartition fence, inlining the full fingerprint KERNEL into the
-    // scan-side filter condition and evaluating it twice per row on the
-    // text path. A guarded projection does neither: CollapseProject
+    // C(16,2)); a Filter form gets predicate-pushed into the input's
+    // plan, and over an unmaterialised fingerprint column that inlines
+    // the full fingerprint KERNEL into the scan-side filter condition,
+    // twice per row. A guarded projection does neither: CollapseProject
     // keeps it separate (non-cheap expression referenced by every
     // band), and Projects aren't subject to predicate pushdown. The
     // payload re-join reads unguarded `base` — every row passes the
@@ -874,6 +903,9 @@ object Dedup {
     * all-pairs join). Verification re-joins the n-gram sets by id and
     * computes exact Jaccard, so the output is exact over the candidate
     * set; recall follows the (bands, rows) S-curve.
+    *
+    * Construction runs ONE eager action: the n-gram hashes and
+    * signatures behind the [[minHashBase]] fence.
     */
   def ngramJaccardNearDuplicates(
       df: DataFrame,
@@ -893,18 +925,15 @@ object Dedup {
       .select(col(idCol).as("id"),
         TextFunctions.normalizeText(col(textCol)).as("norm"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("gh",
+      .withColumn("hs",
         graft.functions.HashFunctions.ngramHashesNative(col("norm"), n))
-      .filter(size(col("gh")) > 0)
+      .filter(size(col("hs")) > 0)
       .withColumn("sig",
-        graft.functions.HashFunctions.minHashSignatureNative(col("gh"), numHashes))
-      // materialisation fence — see minHashBase
-      .select("id", "gh", "sig")
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-
+        graft.functions.HashFunctions.minHashSignatureNative(col("hs"), numHashes))
+      .select("id", "hs", "sig")
+      .localCheckpoint(eager = true) // the kernel fence — see minHashBase
     // hash-set Jaccard == n-gram-set Jaccard up to 64-bit collisions
-    jaccardVerified(candidatePairs(banded(base, bands, rows), maxBucketSize),
-      base, base, "gh", threshold)
+    verifiedPairsFromBase(base, bands, rows, threshold, maxBucketSize)
   }
 
   /** Train/eval decontamination: remove from `train` every document
@@ -1308,39 +1337,37 @@ object Dedup {
     * localCheckpoint. The pair graph is usually TINY relative to the
     * corpus (it only holds near-duplicate ids), so — like a join
     * picking broadcast under a size threshold — graphs of at most
-    * `localMaxEdges` edges are collected and union-found driver-side
-    * in one pass instead of paying several Spark jobs per contraction
-    * round; both paths produce identical labels.
+    * `localMaxEdges` distinct edges are union-found driver-side instead
+    * of paying several Spark jobs per contraction round: ONE collect of
+    * at most `localMaxEdges + 1` canonical edges decides the path and,
+    * when it fits, is the whole input (a small graph costs the collect's
+    * jobs and nothing else). Both paths produce identical labels.
     */
   def duplicateClusters(
       pairs: DataFrame,
       maxIter: Int = 20,
       localMaxEdges: Long = 1000000L): DataFrame = {
     // canonical undirected edges (u > v), self-loops dropped
-    var edges = pairs.select(
+    val canon = pairs.select(
         greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
         least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(eager = true)
-    // consumed exactly ONCE (the final label join, either path), off the
-    // checkpointed edge set — an eager checkpoint here was a pure extra
-    // materialisation job per call (r19 optimization round)
+    val probe =
+      canon.limit(math.min(math.max(localMaxEdges, 0L), Int.MaxValue - 1L).toInt + 1).collect()
+    if (probe.length <= localMaxEdges) {
+      // the labels cover exactly the edge endpoints, so they are the
+      // answer; an RDD-backed frame (not a LocalRelation) keeps the
+      // optimizer from folding a consumer's guards against it
+      val spark = pairs.sparkSession
+      return spark.createDataFrame(spark.sparkContext.parallelize(localComponents(
+        probe.map(r => (r.getLong(0), r.getLong(1)))).toSeq)).toDF("id", "cluster_id")
+    }
+    var edges = canon.localCheckpoint(eager = true)
     val allIds = edges.select(col("u").as("id"))
       .union(edges.select(col("v").as("id")))
       .distinct()
-
     var edgeCount = edges.count()
-    if (edgeCount <= localMaxEdges) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val labels = localComponents(
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))))
-      return allIds.join(
-        labels.toSeq.toDF("id", "cluster_id"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-    }
-
     var converged = edgeCount == 0
     var iter = 0
     // both star contractions need "the minimum of each centre's closed

@@ -26,6 +26,39 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  /** Each LSH pair operator with the number of text corpora it fences. */
+  private def lshOperators: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
+    ("minHashNearDuplicates", 1,
+      () => dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id")),
+    ("ngramJaccardNearDuplicates", 1,
+      () => dedup.Dedup.ngramJaccardNearDuplicates(docs, "text", "doc_id")),
+    ("simHashNearDuplicates", 1,
+      () => dedup.Dedup.simHashNearDuplicates(docs, "text", "doc_id", maxHamming = 6)),
+    ("simHash128NearDuplicates", 1,
+      () => dedup.Dedup.simHash128NearDuplicates(docs, "text", "doc_id")),
+    ("minHashCrossPairs", 2, () => dedup.Dedup.minHashCrossPairs(
+      docs.filter(col("doc_id") >= 100), docs.filter(col("doc_id") < 100),
+      "text", "doc_id")))
+
+  test("LSH pair plans evaluate no text or hash kernel: the base is fenced") {
+    val kernels = Seq("shingle_hashes", "ngram_hashes", "token_hashes",
+      "minhash_signature", "simhash64", "simhash128")
+    for ((name, _, build) <- lshOperators) {
+      val plan = build().queryExecution.executedPlan.toString
+      val found = kernels.filter(plan.contains)
+      assert(found.isEmpty, s"$name: plan evaluates ${found.mkString(", ")}:\n$plan")
+    }
+  }
+
+  test("building an LSH pair operator runs one checkpoint action per text corpus") {
+    // one eager localCheckpoint per corpus; under AQE it is two jobs —
+    // the leading repartition's shuffle stage, then the checkpoint
+    for ((name, corpora, build) <- lshOperators) {
+      val m = observability.RunMetricsProbe.measureEager(spark)(build())
+      assert(m.jobs == 2 * corpora, s"$name: construction ran ${m.jobs} jobs")
+    }
+  }
+
   test("LSH hot-bucket cap forces no broadcast: the planner picks the anti join") {
     // with automatic broadcasts off, a BroadcastHashJoin LeftAnti could
     // only come from a hint — the over-cap bucket set grows as

@@ -480,6 +480,48 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("LSH kernel fence ≡ unfenced reference: pair sets on random corpora, caps 0/2/1000") {
+    import spark.implicits._
+    import graft.dedup.{Dedup, LshReference => Ref}
+    import org.apache.spark.sql.DataFrame
+    def set(d: DataFrame): Set[Seq[Any]] = d.collect().map(_.toSeq).toSet
+    var pairsSeen = 0
+    for (((rows, mask, _), i) <- samples(crossCorpora, 3).zipWithIndex) {
+      val all = rows.toDF("id", "text")
+      val batch = rows.zip(mask).collect { case (r, true) => r }.toDF("id", "text")
+      val ref = rows.zip(mask).collect { case (r, false) => r }.toDF("id", "text")
+      val refPath = java.nio.file.Files.createTempDirectory("lsh_fence").toString + "/ref"
+      Dedup.saveMinHashRef(ref, "text", "id", refPath)
+      for (cap <- Seq(0, 2, 1000)) {
+        val cases = Seq(
+          "minHash self" -> (Dedup.minHashNearDuplicates(all, "text", "id",
+            threshold = 0.4, maxBucketSize = cap),
+            Ref.minHashNearDuplicates(all, "text", "id", 0.4, cap)),
+          "minHashCrossPairs" -> (Dedup.minHashCrossPairs(batch, ref, "text", "id",
+            threshold = 0.4, maxBucketSize = cap),
+            Ref.minHashCrossPairs(batch, ref, "text", "id", 0.4, cap)),
+          "minHashIncrementalEdges" -> (Dedup.minHashIncrementalEdges(batch, refPath,
+            "text", "id", threshold = 0.4, maxBucketSize = cap),
+            Ref.minHashIncrementalEdges(batch, refPath, "text", "id", 0.4, cap)),
+          "n-gram" -> (Dedup.ngramJaccardNearDuplicates(all, "text", "id",
+            threshold = 0.5, maxBucketSize = cap),
+            Ref.ngramJaccardNearDuplicates(all, "text", "id", 0.5, cap)),
+          "simHash" -> (Dedup.simHashNearDuplicates(all, "text", "id",
+            maxHamming = 6, maxBucketSize = cap),
+            Ref.simHashNearDuplicates(all, "text", "id", 6, cap)),
+          "simHash128" -> (Dedup.simHash128NearDuplicates(all, "text", "id",
+            maxHamming = 7, maxBucketSize = cap),
+            Ref.simHash128NearDuplicates(all, "text", "id", 7, cap)))
+        for ((name, (fenced, reference)) <- cases) {
+          val got = set(fenced)
+          assert(got == set(reference), s"i=$i cap=$cap $name: fenced ≠ reference")
+          pairsSeen += got.size
+        }
+      }
+    }
+    assert(pairsSeen > 0, "every corpus paired nothing — the comparison is vacuous")
+  }
+
   test("bloom joins: both routes agree on random corpora with nulls and duplicates") {
     import spark.implicits._
     import graft.core.DataFrameOps

@@ -327,6 +327,35 @@ class DedupSpec extends SparkTestBase {
       toMap(Dedup.duplicateClusters(pairs, localMaxEdges = 0)))
   }
 
+  test("duplicateClusters on a small graph runs at most 3 jobs, collect included") {
+    val pairs = df("id_a BIGINT, id_b BIGINT",
+      Seq(1L, 2L), Seq(2L, 3L), Seq(10L, 11L), Seq(5L, 3L))
+    var labels = Map.empty[Long, Long]
+    val m = graft.observability.RunMetricsProbe.measureEager(spark) {
+      labels = Dedup.duplicateClusters(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 1L, 10L -> 10L, 11L -> 10L))
+    assert(m.jobs <= 3, s"small-graph clustering ran ${m.jobs} jobs")
+  }
+
+  test("duplicateClusters: reversed and repeated pairs count once toward localMaxEdges") {
+    // 8 input rows, 3 distinct undirected edges once canonicalised
+    val pairs = df("id_a BIGINT, id_b BIGINT",
+      Seq(1L, 2L), Seq(2L, 1L), Seq(1L, 2L), Seq(3L, 2L), Seq(2L, 3L),
+      Seq(4L, 4L), Seq(10L, 11L), Seq(11L, 10L))
+    def hasJoin(d: org.apache.spark.sql.DataFrame) = d.queryExecution.optimizedPlan
+      .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join])
+    def toMap(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val local = Dedup.duplicateClusters(pairs, localMaxEdges = 3)
+    val distributed = Dedup.duplicateClusters(pairs, localMaxEdges = 2)
+    assert(!hasJoin(local), "3 distinct edges within localMaxEdges = 3 must stay local")
+    assert(hasJoin(distributed), "3 distinct edges over localMaxEdges = 2 must distribute")
+    assert(toMap(local) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    assert(toMap(local) == toMap(distributed))
+  }
+
   test("keepClusterRepresentatives keeps the best-scoring member per cluster") {
     val corpus = df("id BIGINT, text STRING, score INT",
       Seq(1L, "aa", 5), Seq(2L, "bb", 9), Seq(3L, "cc", 9), // chain 1-2-3: 2 wins (score tie → lowest id)
