@@ -1749,38 +1749,6 @@ object Scale {
               .unset(graft.operators.Graph.CanonicalProbeLabelsConf)
           }
         }
-        // r19 (r18 verdict task 5): the probe's artifact-proportional
-        // component priced on a COLD artifact — the r18 x1/x8
-        // comparison read the chain fixture out of the OS page cache,
-        // so "the IN-filtered count is one pushed-filter scan" was
-        // asserted, not measured. `sync; drop_caches` before EVERY
-        // timed call (both probe arms, both scales) makes each read a
-        // fresh parquet scan; the probe DELTA at x1 vs x8 is the
-        // artifact-proportionality verdict.
-        if (only.exists(_.exists(_.contains("cc_probe_cold")))) {
-          def dropOsCache(): Unit =
-            try {
-              new ProcessBuilder("sh", "-c",
-                "sync; echo 3 > /proc/sys/vm/drop_caches")
-                .start().waitFor(): Unit
-            } catch { case _: Throwable => () }
-          def newBatch(bs: Long) = spark.range(bs)
-            .select((lit(nNodes) + col("id") * 2).as("a"),
-              (lit(nNodes) + col("id") * 2 + 1).as("b"))
-          for (probeOn <- Seq(true, false)) {
-            if (!probeOn) spark.conf
-              .set(graft.operators.Graph.CanonicalProbeLabelsConf, "0")
-            try {
-              dropOsCache()
-              timed("cc_probe_cold", "scale" -> mult.toLong,
-                  "probe" -> (if (probeOn) 1L else 0L))(() =>
-                graft.operators.Graph.connectedComponentsAgainstRef(
-                  newBatch(1000L), s"$ccDir/cc", "a", "b",
-                  localMaxEdges = 0L))
-            } finally if (!probeOn) spark.conf
-              .unset(graft.operators.Graph.CanonicalProbeLabelsConf)
-          }
-        }
       }
     }
 

@@ -254,9 +254,11 @@ object Dedup {
       hot => bandedIds.join(hot, Seq("band", "bucket"), "left_anti"))
 
   /** The over-cap `(band, bucket)` keys of a banded frame — the ONE
-    * count rule behind [[capBuckets]] and the streaming full-recall
-    * fence ([[graft.streaming.Streaming.dedupBatchAgainstStore]]),
-    * which flags these buckets instead of dropping them. `None` when
+    * count rule behind [[capBuckets]] and the over-guard streaming
+    * full-recall fence ([[graft.streaming.Streaming.dedupBatchAgainstStore]]),
+    * which flags these buckets instead of dropping them; its under-guard
+    * route applies the same rule to the batch held on the driver
+    * ([[graft.streaming.Streaming.withinBatchLosers]]). `None` when
     * `maxBucketSize <= 0` (cap disabled). */
   private[graft] def hotBuckets(
       bandedIds: DataFrame, maxBucketSize: Int): Option[DataFrame] =
@@ -666,10 +668,13 @@ object Dedup {
       textCol: String,
       idCol: String,
       maxHamming: Int = 3,
-      maxBucketSize: Int = 1000): DataFrame =
+      maxBucketSize: Int = 1000): DataFrame = {
+    // before the fence: a radius the index cannot serve runs no job
+    requireSimHashRadius("simHashNearDuplicates", maxHamming)
     simHashPairs(
       simHashBase(df, textCol, idCol, graft.functions.HashFunctions.simHashNative),
       maxHamming, maxBucketSize)
+  }
 
   /** (id, sim) fingerprints of a text corpus under `fingerprint` (a
     * token-hash-array kernel), behind the eager-checkpoint fence of
@@ -699,10 +704,7 @@ object Dedup {
     * definition, so the banding scheme cannot diverge between the
     * batch and streaming contracts. */
   def simHashBandBuckets(sim: Column, maxHamming: Int): Column = {
-    require(maxHamming >= 0 && maxHamming <= 6,
-      s"simHashBandBuckets: the block-combination index guarantees " +
-        s"recall only for maxHamming <= 6 (got $maxHamming) — use the " +
-        "128-bit fingerprint ([[simHash128NearDuplicates]]) for larger radii")
+    requireSimHashRadius("simHashBandBuckets", maxHamming)
     val (nBlocks, comboSize) = simHashRung(maxHamming)
     val blockBits = 64 / nBlocks
     def block(i: Int): Column =
@@ -713,6 +715,12 @@ object Dedup {
         shiftleft(acc, blockBits).bitwiseOR(b))
     }: _*)
   }
+
+  private def requireSimHashRadius(op: String, maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= 6,
+      s"$op: the block-combination index guarantees " +
+        s"recall only for maxHamming <= 6 (got $maxHamming) — use the " +
+        "128-bit fingerprint ([[simHash128NearDuplicates]]) for larger radii")
 
   /** Near-duplicate pairs from PRECOMPUTED 64-bit fingerprints — input
     * must carry (`id`, `sim`) columns. The fingerprint-level half of
@@ -779,10 +787,13 @@ object Dedup {
       textCol: String,
       idCol: String,
       maxHamming: Int = 7,
-      maxBucketSize: Int = 1000): DataFrame =
+      maxBucketSize: Int = 1000): DataFrame = {
+    // before the fence: a radius the index cannot serve runs no job
+    requireSimHash128Radius("simHash128NearDuplicates", maxHamming)
     simHash128Pairs(
       simHashBase(df, textCol, idCol, graft.functions.HashFunctions.simHash128Native),
       maxHamming, maxBucketSize)
+  }
 
   /** Near-duplicate pairs from PRECOMPUTED 128-bit fingerprints —
     * input must carry (`id`, `sim` array<long>(2)) columns. The
@@ -793,10 +804,7 @@ object Dedup {
       fingerprints: DataFrame,
       maxHamming: Int,
       maxBucketSize: Int = 1000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 14,
-      s"simHash128Pairs: the C(16,2) block-pair index guarantees recall " +
-        s"only for maxHamming <= 14 (got $maxHamming) — no wider rung " +
-        "keeps a usable bucket keyspace at 128 bits")
+    requireSimHash128Radius("simHash128Pairs", maxHamming)
     // shape guard: a malformed fingerprint column would otherwise band
     // to null buckets and silently drop recall (or throw under ANSI)
     fingerprints.schema.find(_.name == "sim") match {
@@ -849,6 +857,12 @@ object Dedup {
       .filter(col("hamming") <= lit(maxHamming))
       .select("id_a", "id_b", "hamming")
   }
+
+  private def requireSimHash128Radius(op: String, maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= 14,
+      s"$op: the C(16,2) block-pair index guarantees recall " +
+        s"only for maxHamming <= 14 (got $maxHamming) — no wider rung " +
+        "keeps a usable bucket keyspace at 128 bits")
 
   /** Banding rung for a 128-bit fingerprint radius: (blocks, blocks
     * per bucket). maxHamming ≤ 7 → single blocks of 16 bits (8 bands);

@@ -1,10 +1,13 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
+
+import scala.collection.mutable
 
 /** Structured Streaming surface (SURVEY.md §2.11 — an extension beyond
   * the reference, which has no streaming).
@@ -765,53 +768,62 @@ object Streaming {
     * the INVARIANTS (emitted docs pairwise > maxHamming, every drop
     * within the pair-graph closure of a survivor) hold for every
     * boundary placement, and a replay of the same batch sequence is
-    * deterministic (see [[nearDedupStreamFullRecall]]).
+    * deterministic (see [[nearDedupStreamFullRecall]]). A row with a
+    * null `sim` pairs with nothing and survives; a row with a null
+    * `id` neither loses nor beats another row.
     *
-    * Scale shape: ONE fence and ONE probe join per micro-batch, since
-    * the per-batch fixed cost (jobs, not data) sets a small batch's
-    * latency. The fence is the banded batch — `(id, sim)` exploded
-    * over [[graft.dedup.Dedup.simHashBandBuckets]] — checkpointed
-    * once, each row flagged when its `(band, bucket)` is over
-    * `maxBucketSize` (the batch operator's cap rule,
-    * [[graft.dedup.Dedup.hotBuckets]]; only a batch of more than
-    * `maxBucketSize` docs can have such a bucket, and only such a
-    * batch pays a second checkpoint for the flag). The probe join
-    * hashes on `(band, bucket)` with the fence as its build side and,
-    * as its probe side, the fence's cold rows plus the store (a hot row
-    * never probes, so an over-cap bucket joins nothing): a batch row
-    * loses to a lower id in a shared cold bucket within `maxHamming`
-    * (the within-batch pairing, capped exactly as the batch operator
-    * caps it), and to any store row within `maxHamming` (uncapped — a
-    * store hit is never skipped). Survivors are the fence's band-0
-    * rows minus the losers, so the input is read once. Equal to
-    * deduping within the batch first and then probing the within-batch
-    * survivors: the two anti-joins commute.
+    * Scale shape: the per-batch fixed cost (jobs, not data) sets a
+    * small batch's latency, so a batch under the guard below runs TWO
+    * eager jobs and plans no join. (1) ONE bounded collect brings the
+    * banded batch — `(id, sim)` exploded over
+    * [[graft.dedup.Dedup.simHashBandBuckets]] — to the driver: each
+    * partition returns its row count, and its rows only while it holds
+    * at most its share of the guard. (2) The driver pairs the batch
+    * within itself ([[withinBatchLosers]]): a row loses to any lower id
+    * within `maxHamming` in a shared `(band, bucket)` of at most
+    * `maxBucketSize` members (the batch operator's cap rule,
+    * [[graft.dedup.Dedup.hotBuckets]]). (3) When the store exists, the
+    * within-batch survivors' `(band, bucket)` map is broadcast and ONE
+    * map-side pass over the banded store ([[fullRecallStoreProbe]]: the
+    * `sim` column, no exchange, no store-side state) returns its
+    * distinct losers — every survivor within `maxHamming` of a store
+    * row, uncapped: a store hit is never skipped. The survivors are the
+    * band-0 rows minus both loser sets, returned as a local frame whose
+    * plan reads neither the batch nor the store. The stream's first
+    * batch (no store path) skips job 2. Equal to deduping within the
+    * batch first and then probing its survivors: the two anti-joins
+    * commute.
     *
-    * The join BROADCASTS the fence (micro-batches are small by
-    * construction; bands multiply it by 4 at h<=3, 28 at h<=6) and
-    * streams the store through map-side — a columnar scan of two long
-    * columns with NO store-side shuffle and no store-side state: the
-    * store is plain parquet, not state-store memory, so state size
-    * never bounds the stream. The scan is the design cost, linear per
+    * The store is plain parquet, not state-store memory, so state size
+    * never bounds the stream. Its scan is the design cost, linear per
     * batch in survivors-so-far; compact the store as it grows
-    * ([[compactFullRecallStore]] folds committed-batch partitions
-    * into one, bounding FILE count), and prefer larger micro-batches
-    * once the store dwarfs them — per-survivor cost amortises with
-    * batch size.
+    * ([[compactFullRecallStore]] folds committed-batch partitions into
+    * one, bounding FILE count), and prefer larger micro-batches once the
+    * store dwarfs them — per-survivor cost amortises with batch size.
     *
-    * That last advice is why the broadcast is size-GUARDED, not
-    * unconditional: a backfill-sized micro-batch (the very thing the
-    * amortisation argument recommends) times the band multiplier can
-    * exceed what a driver comfortably broadcasts. When the fence holds
-    * more than `maxBroadcastBandedRows` rows (counted exactly, by one
-    * job over the checkpointed fence's partitions), the probe
-    * switches to a shuffle-hash join on (band, bucket) and the loser
-    * anti-join is left to the planner: both sides of the probe
-    * exchange once, the fence stays the build side, and the plan
-    * remains skew-tolerant where a giant batch would otherwise OOM
-    * the driver. The default (2M banded rows ≈ 500k docs at h<=3,
-    * ~100 MB serialised) keeps every normal micro-batch on the
-    * broadcast fast path. */
+    * That last advice is why the driver route is size-GUARDED: a
+    * backfill-sized micro-batch times the band multiplier (4 at h<=3,
+    * 28 at h<=6) can exceed what a driver comfortably holds.
+    * `maxBroadcastBandedRows` is the most banded rows the driver takes
+    * in, and each of the batch's partitions ships rows only while it
+    * holds at most `ceil(maxBroadcastBandedRows / partitions)`. Over the
+    * guard, or when one partition exceeds its share (skew), the collect
+    * returns counts only and the batch takes the distributed route: the
+    * banded batch is checkpointed once (a batch of more than
+    * `maxBucketSize` docs pays a second checkpoint that flags its hot
+    * buckets), and ONE shuffle-hash join on `(band, bucket)` — the fence
+    * as build side, its cold rows plus the banded store as probe side —
+    * finds the losers, anti-joined from the fence's band-0 rows. Both
+    * sides exchange once and the plan stays skew-tolerant where a giant
+    * batch would otherwise OOM the driver. The collect's total serves as
+    * the fence's count, so this route runs no more jobs than a counted
+    * fence would. The default (2M banded rows ≈ 500k docs at h<=3, ~60
+    * MB of driver arrays) keeps every normal micro-batch on the driver.
+    *
+    * Eager work: under the guard, 2 jobs (the collect and the store
+    * probe; 1 without a store), and the returned frame is local. Over
+    * it, the collect and the fence's checkpoint; the returned frame
+    * reads the store lazily (checkpointed when there is no store). */
   def dedupBatchAgainstStore(
       batch: DataFrame,
       storeDir: String,
@@ -820,14 +832,17 @@ object Streaming {
       maxBucketSize: Int = 1000,
       maxBroadcastBandedRows: Long = 2000000L): DataFrame =
     dedupBatchAgainstStoreImpl(batch, storeDir, batchId, maxHamming,
-      maxBucketSize, maxBroadcastBandedRows, storeExists = None)
+      maxBucketSize, maxBroadcastBandedRows, storeExists = None)._1
 
   /** [[dedupBatchAgainstStore]] with the store-existence observation
     * optionally supplied by the caller: [[appendBatchToFullRecallStore]]
     * decides its write fence from the SAME check, so the fence decision
     * and the probe decision cannot diverge if the store appears between
     * two independent checks (e.g. two streams sharing a store —
-    * ADVICE r19). `None` = check here (the standalone entry point). */
+    * ADVICE r19). `None` = check here (the standalone entry point).
+    * Also returns whether the survivors' plan reads the store (the
+    * distributed route with a store): only such a plan must be fenced
+    * before a write into `storeDir`. */
   private[graft] def dedupBatchAgainstStoreImpl(
       batch: DataFrame,
       storeDir: String,
@@ -835,78 +850,218 @@ object Streaming {
       maxHamming: Int,
       maxBucketSize: Int,
       maxBroadcastBandedRows: Long,
-      storeExists: Option[Boolean]): DataFrame = {
+      storeExists: Option[Boolean]): (DataFrame, Boolean) = {
     val spark = batch.sparkSession
-    def banded(df: DataFrame): DataFrame = df.select(col("id"), col("sim"),
+    val bandedBatch = bandedFingerprints(batch.select(
+      col("id").cast("long").as("id"), col("sim").cast("long").as("sim")), maxHamming)
+    // the stream's first batch has no store to probe: the path's
+    // nonexistence proves the store side empty, so batch 0 pays no scan
+    val exists = storeExists.getOrElse(
+      existingFs(spark, new Path(storeDir)).isDefined)
+    collectBanded(bandedBatch, maxBroadcastBandedRows) match {
+      case Right(rows) =>
+        (driverSurvivors(spark, rows, storeDir, batchId, maxHamming,
+          maxBucketSize, exists), false)
+      case Left(bandedRows) =>
+        val survivors = distributedSurvivors(bandedBatch, bandedRows, storeDir,
+          batchId, maxHamming, maxBucketSize, exists)
+        if (exists) (survivors, true) else (survivors.localCheckpoint(true), false)
+    }
+  }
+
+  /** The under-guard route of [[dedupBatchAgainstStore]] over the
+    * collected banded batch: driver pairing, at most one store-probe
+    * job, and the survivors as a local frame. */
+  private def driverSurvivors(
+      spark: SparkSession, rows: BandedRows, storeDir: String, batchId: Long,
+      maxHamming: Int, maxBucketSize: Int, exists: Boolean): DataFrame = {
+    val within = withinBatchLosers(rows, maxHamming, maxBucketSize)._1
+    def kept(i: Int): Boolean = rows.idNull(i) || !within(rows.id(i))
+    // a null-id row cannot lose by id, and a null-sim row bands to null
+    // buckets: neither can meet a store row
+    val probe = (0 until rows.size)
+      .filter(i => kept(i) && !rows.idNull(i) && !rows.simNull(i))
+      .groupBy(i => (rows.band(i), rows.bucket(i)))
+      .map { case (k, is) => k -> is.map(i => (rows.id(i), rows.sim(i))).toArray }
+    val fromStore =
+      if (exists && probe.nonEmpty)
+        storeLosers(spark, probe, storeDir, batchId, maxHamming)
+      else Set.empty[Long]
+    val survivors = (0 until rows.size)
+      .filter(i => rows.band(i) == 0 && kept(i) &&
+        (rows.idNull(i) || !fromStore(rows.id(i))))
+      .map(i => Row(if (rows.idNull(i)) null else rows.id(i),
+        if (rows.simNull(i)) null else rows.sim(i)))
+    spark.createDataFrame(java.util.Arrays.asList(survivors: _*),
+      StructType(fullRecallStoreSchema.filter(_.name != "batch_id")))
+  }
+
+  /** `(id, sim)` exploded over [[graft.dedup.Dedup.simHashBandBuckets]]
+    * into `(id, sim, band, bucket)` — the one banding of both the batch
+    * and the store. A null `sim` bands to null buckets. */
+  private[graft] def bandedFingerprints(df: DataFrame, maxHamming: Int): DataFrame =
+    df.select(col("id"), col("sim"),
       posexplode(graft.dedup.Dedup.simHashBandBuckets(col("sim"), maxHamming))
         .as(Seq("band", "bucket")))
-    // ONE fence per micro-batch: the banded batch, checkpointed, then
-    // counted by one job over its partitions for the broadcast guard
-    val bandedBatch = banded(batch.select(col("id").cast("long").as("id"),
-      col("sim").cast("long").as("sim"))).localCheckpoint(true)
-    val bandedRows = bandedBatch.queryExecution.toRdd.count()
+
+  /** A micro-batch's banded rows `(id, sim, band, bucket)` held
+    * column-wise on the driver. A null `id` or `sim` is flagged in
+    * `idNull`/`simNull` and its slot holds 0; a null-sim row's
+    * `bucket` slot is never read (its buckets are null). */
+  private[graft] final class BandedRows(
+      val id: Array[Long], val idNull: Array[Boolean],
+      val sim: Array[Long], val simNull: Array[Boolean],
+      val band: Array[Int], val bucket: Array[Long]) extends Serializable {
+    def size: Int = id.length
+  }
+
+  /** ONE job over `banded` (`bandedFingerprints` output): `Right` of
+    * all its rows when it holds at most `maxRows` and no partition
+    * holds more than `ceil(maxRows / partitions)`, else `Left` of its
+    * row count. A partition past its share ships its count alone, so
+    * the driver never takes in more than `maxRows` rows. */
+  private[graft] def collectBanded(
+      banded: DataFrame, maxRows: Long): Either[Long, BandedRows] = {
+    val rdd = banded.queryExecution.toRdd
+    val parts = math.max(rdd.getNumPartitions, 1)
+    val share = maxRows / parts + (if (maxRows % parts > 0) 1 else 0)
+    val counted = rdd.mapPartitions { it =>
+      val kept = mutable.ArrayBuffer.empty[InternalRow]
+      var n = 0L
+      it.foreach { r =>
+        n += 1
+        if (n <= share) kept += r.copy() else kept.clear()
+      }
+      Iterator.single((n, if (n <= share) Some(new BandedRows(
+        kept.map(_.getLong(0)).toArray, kept.map(_.isNullAt(0)).toArray,
+        kept.map(_.getLong(1)).toArray, kept.map(_.isNullAt(1)).toArray,
+        kept.map(_.getInt(2)).toArray, kept.map(_.getLong(3)).toArray))
+        else None))
+    }.collect()
+    val total = counted.map(_._1).sum
+    if (total > maxRows || counted.exists(_._2.isEmpty)) Left(total)
+    else {
+      val all = counted.flatMap(_._2)
+      Right(new BandedRows(
+        all.flatMap(_.id), all.flatMap(_.idNull), all.flatMap(_.sim),
+        all.flatMap(_.simNull), all.flatMap(_.band), all.flatMap(_.bucket)))
+    }
+  }
+
+  /** Within-batch pairing on the driver: the ids that lose, and the
+    * number of row pairs compared. Rows sharing a `(band, bucket)` are
+    * compared unless the bucket holds more than `maxBucketSize` rows
+    * (the batch operator's cap, [[graft.dedup.Dedup.hotBuckets]];
+    * `<= 0` disables it); a row loses to any lower id within
+    * `maxHamming`. No transitivity: a loser still beats higher ids. */
+  private[graft] def withinBatchLosers(
+      rows: BandedRows, maxHamming: Int, maxBucketSize: Int): (Set[Long], Long) = {
+    val losers = mutable.HashSet.empty[Long]
+    var comparisons = 0L
+    val buckets = (0 until rows.size).filterNot(rows.simNull)
+      .groupBy(i => (rows.band(i), rows.bucket(i))).valuesIterator
+    for (m <- buckets if maxBucketSize <= 0 || m.size <= maxBucketSize;
+         x <- m.indices; y <- x + 1 until m.size) {
+      val (i, j) = (m(x), m(y))
+      comparisons += 1
+      if (!rows.idNull(i) && !rows.idNull(j) &&
+          java.lang.Long.bitCount(rows.sim(i) ^ rows.sim(j)) <= maxHamming) {
+        if (rows.id(i) < rows.id(j)) losers += rows.id(j)
+        else if (rows.id(j) < rows.id(i)) losers += rows.id(i)
+      }
+    }
+    (losers.toSet, comparisons)
+  }
+
+  /** The store side of the probe: every survivor the store holds
+    * outside partition `batchId`, banded, as `(sim, band, bucket)`.
+    * Replay safety: a crashed attempt of THIS batch may have written its
+    * partition already — excluding it re-creates the store state the
+    * first attempt saw (deterministic re-run), instead of the batch
+    * deduping against its own partial output and emitting nothing. */
+  private[graft] def fullRecallStoreProbe(
+      spark: SparkSession, storeDir: String, batchId: Long,
+      maxHamming: Int): DataFrame =
+    bandedFingerprints(readFullRecallStore(spark, storeDir)
+        .filter(col("batch_id") =!= lit(batchId)), maxHamming)
+      .select("sim", "band", "bucket")
+
+  /** ONE job: the ids in `probe` (`(band, bucket)` → batch `(id, sim)`)
+    * within `maxHamming` of a store row sharing their bucket. The map is
+    * broadcast, the store is streamed map-side, and each partition
+    * returns its distinct losers — at most the batch's ids. */
+  private def storeLosers(
+      spark: SparkSession, probe: Map[(Int, Long), Array[(Long, Long)]],
+      storeDir: String, batchId: Long, maxHamming: Int): Set[Long] = {
+    val shared = spark.sparkContext.broadcast(probe)
+    try fullRecallStoreProbe(spark, storeDir, batchId, maxHamming)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val byBucket = shared.value
+        val lost = mutable.HashSet.empty[Long]
+        it.foreach { r =>
+          if (!r.isNullAt(0)) byBucket.get((r.getInt(1), r.getLong(2))).foreach(
+            _.foreach { case (id, sim) =>
+              if (java.lang.Long.bitCount(sim ^ r.getLong(0)) <= maxHamming) lost += id
+            })
+        }
+        Iterator.single(lost.toArray)
+      }.collect().iterator.flatten.toSet
+    finally shared.destroy()
+  }
+
+  /** The over-guard route of [[dedupBatchAgainstStore]]: the banded
+    * batch (`bandedRows` rows) fenced once, then ONE shuffle-hash join
+    * on `(band, bucket)` finds both loser kinds. */
+  private def distributedSurvivors(
+      bandedBatch: DataFrame, bandedRows: Long, storeDir: String,
+      batchId: Long, maxHamming: Int, maxBucketSize: Int,
+      exists: Boolean): DataFrame = {
+    val fenced = bandedBatch.localCheckpoint(true)
     // hot buckets are flagged, not dropped: the store probe must still
     // see every row. A bucket holds at most one row per batch doc, so a
     // batch of at most `maxBucketSize` docs has none; a larger one is
     // flagged by the batch operator's cap rule and fenced again
     val nBands = graft.dedup.Dedup.simHashBandCount(maxHamming).toLong
-    val fence = graft.dedup.Dedup.hotBuckets(bandedBatch, maxBucketSize)
+    val fence = graft.dedup.Dedup.hotBuckets(fenced, maxBucketSize)
       .filter(_ => bandedRows > maxBucketSize * nBands)
-      .fold(bandedBatch.withColumn("hot", lit(false)))(hot =>
-        bandedBatch.join(hot.withColumn("hot", lit(true)),
+      .fold(fenced.withColumn("hot", lit(false)))(hot =>
+        fenced.join(hot.withColumn("hot", lit(true)),
           Seq("band", "bucket"), "left").na.fill(false, Seq("hot"))
           .localCheckpoint(true))
-    // the stream's first batch has no store to probe: the path's
-    // nonexistence proves the store side empty, so the probe side is
-    // the fence alone (the per-batch fixed cost should not bill batch 0
-    // for a scan of a provably empty store)
-    val exists = storeExists.getOrElse(
-      existingFs(spark, new Path(storeDir)).isDefined)
     // the cap applies BEFORE the join: a hot row never probes, so a
     // bucket of k equal fingerprints costs no k² joined rows. Bucket-mates
     // share the flag, so a cold probe row only ever meets cold build rows
     val batchSide = fence.filter(!col("hot")).drop("hot")
       .withColumn("from_store", lit(false))
-    // replay safety: a crashed attempt of THIS batch may have written
-    // its partition already — excluding it re-creates the store state
-    // the first attempt saw (deterministic re-run), instead of the
-    // batch deduping against its own partial output and emitting nothing
     val probeSide =
       if (!exists) batchSide
       else batchSide.unionByName(
-        banded(readFullRecallStore(spark, storeDir)
-            .filter(col("batch_id") =!= lit(batchId)))
-          .withColumn("from_store", lit(true)))
-    val broadcastable = bandedRows <= maxBroadcastBandedRows
+        fullRecallStoreProbe(bandedBatch.sparkSession, storeDir, batchId, maxHamming)
+          .withColumn("from_store", lit(true)), allowMissingColumns = true)
     val build = fence.select(col("band"), col("bucket"), col("id").as("n_id"),
       col("sim").as("n_sim"))
-    // ONE probe join: a batch row loses to a lower id sharing a cold
-    // bucket and to any store row, each within maxHamming
+    // ONE probe join, the batch as build side: a batch row loses to a
+    // lower id sharing a cold bucket and to any store row, each within
+    // maxHamming
     val losers = probeSide
-      .join(if (broadcastable) broadcast(build)
-        else build.hint("shuffle_hash"), // build side stays the batch
-        Seq("band", "bucket"))
+      .join(build.hint("shuffle_hash"), Seq("band", "bucket"))
       .filter(bit_count(col("sim").bitwiseXOR(col("n_sim"))) <= maxHamming &&
         (col("from_store") || col("id") < col("n_id")))
       .select(col("n_id").as("id")).distinct()
-    // the losers are distinct batch ids — fewer rows than the fence, so
-    // the guard bounds their broadcast too
-    val survivors = fence.filter(col("band") === 0).select("id", "sim")
-      .join(if (broadcastable) broadcast(losers) else losers,
-        Seq("id"), "left_anti")
-    if (exists) survivors else survivors.localCheckpoint(true)
+    fence.filter(col("band") === 0).select("id", "sim")
+      .join(losers, Seq("id"), "left_anti")
   }
 
   /** [[dedupBatchAgainstStore]] + idempotent store append: survivors
     * land in partition `batch_id=<batchId>` via dynamic partition
     * overwrite, so a foreachBatch replay of the same micro-batch
-    * OVERWRITES its own partition instead of doubling it. The
-    * survivors are materialised (localCheckpoint) before the write so
-    * the write plan no longer reads the path it overwrites, and
-    * because [[dedupBatchAgainstStore]] is deterministic given the
-    * prior-batch store, a replay rewrites the identical row set over
-    * any partial files a crashed attempt left (dynamic overwrite
-    * replaces the whole partition directory). */
+    * OVERWRITES its own partition instead of doubling it. Because
+    * [[dedupBatchAgainstStore]] is deterministic given the prior-batch
+    * store, a replay rewrites the identical row set over any partial
+    * files a crashed attempt left (dynamic overwrite replaces the whole
+    * partition directory). Under the broadcast guard an append runs 3
+    * jobs (collect, store probe, write), 2 for the stream's first
+    * batch. */
   def appendBatchToFullRecallStore(
       batch: DataFrame,
       storeDir: String,
@@ -914,12 +1069,6 @@ object Streaming {
       maxHamming: Int,
       maxBucketSize: Int = 1000,
       maxBroadcastBandedRows: Long = 2000000L): Unit = {
-    // the stream's FIRST batch needs no fence of its own:
-    // dedupBatchAgainstStore's no-store path returns checkpointed
-    // survivors, whose write plan cannot read storeDir — re-checkpointing
-    // them was a pure second materialisation job per stream (r19
-    // optimization round). Later batches keep the fence: their survivor
-    // plan READS the store the write overwrites.
     // ONE existence observation feeds BOTH the probe decision (inside
     // the impl) and the fence decision below — independently re-checking
     // let the two diverge if the store appeared in between (two streams
@@ -928,13 +1077,15 @@ object Streaming {
     // reads (ADVICE r19)
     val storeExisted =
       existingFs(batch.sparkSession, new Path(storeDir)).isDefined
-    val raw =
+    val (survivors, readsStore) =
       dedupBatchAgainstStoreImpl(batch, storeDir, batchId, maxHamming,
-          maxBucketSize, maxBroadcastBandedRows, Some(storeExisted))
-        .select(col("id"), col("sim"))
-    val survivors =
-      if (storeExisted) raw.localCheckpoint(eager = true) else raw
-    graft.core.DataFrameOps.smartCoalesce(survivors)
+        maxBucketSize, maxBroadcastBandedRows, Some(storeExisted))
+    // only the over-guard route's survivor plan reads the store the
+    // write overwrites, so only it is materialised first; the driver
+    // route's survivors are a local frame, and a store-less batch's
+    // are checkpointed already
+    graft.core.DataFrameOps.smartCoalesce(
+        if (readsStore) survivors.localCheckpoint(eager = true) else survivors)
       .withColumn("batch_id", lit(batchId))
       .write.partitionBy("batch_id")
       .option("partitionOverwriteMode", "dynamic")

@@ -142,14 +142,12 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("full-recall store probe broadcasts the micro-batch; the store never shuffles") {
-    // dedupBatchAgainstStore's scale contract: the survivors store is
-    // scanned map-side into a broadcast hash join on (band, bucket) —
-    // the STORE side (the big side, survivors-so-far) must reach the
-    // join with no exchange, and the within-batch banding must be
-    // checkpoint-fenced out of this plan entirely, so NO banded
-    // exchange may appear (a banded hashpartitioning here would mean
-    // the store shuffles once per micro-batch — the accidental
-    // quadratic a refactor could reintroduce)
+    // dedupBatchAgainstStore's scale contract under the guard: the
+    // micro-batch's survivor map is broadcast and the survivors store
+    // (the big side, survivors-so-far) is streamed through ONE map-side
+    // pass — any Exchange in the store-probe plan would mean the store
+    // shuffles once per micro-batch, the accidental quadratic a
+    // refactor could reintroduce
     val root = java.nio.file.Files
       .createTempDirectory("graft_fullrecall_plan").toString
     val store = s"$root/store"
@@ -157,16 +155,17 @@ class PlanShapeSpec extends SparkTestBase {
       (col("id") * 2654435761L).as("sim"))
     streaming.Streaming.appendBatchToFullRecallStore(
       fps.filter(col("id") < 50), store, 0L, maxHamming = 3)
+    val plan = streaming.Streaming.fullRecallStoreProbe(spark, store, 1L, maxHamming = 3)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"store probe must not exchange:\n$plan")
+    assert(plan.linesIterator.count(_.contains("FileScan")) == 1,
+      s"store probe must scan the store once:\n$plan")
+    // the returned survivors are local: their plan reads no store
     val out = streaming.Streaming.dedupBatchAgainstStore(
       fps.filter(col("id") >= 50), store, 1L, maxHamming = 3)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"store probe must be a broadcast hash join:\n$plan")
-    val bandedExchanges = plan.linesIterator
-      .filter(_.contains("Exchange hashpartitioning"))
-      .filter(l => l.contains("band") || l.contains("bucket")).toSeq
-    assert(bandedExchanges.isEmpty,
-      s"store side must not shuffle on bands:\n${bandedExchanges.mkString("\n")}\nin:\n$plan")
+    val outPlan = out.queryExecution.executedPlan.toString
+    assert(outPlan.contains("LocalTableScan") && !outPlan.contains("FileScan"),
+      s"under-guard survivors must be a local frame:\n$outPlan")
     // over the broadcast guard, the probe must degrade to a
     // shuffle-hash join on (band, bucket) — both sides exchange once —
     // instead of force-broadcasting a backfill-sized banded batch

@@ -107,6 +107,19 @@ class DedupSpec extends SparkTestBase {
       Dedup.simHashNearDuplicates(docs, "text", "id", maxHamming = 7))
   }
 
+  test("SimHash radius is rejected before the fingerprint fence runs a job") {
+    for ((name, build) <- Seq[(String, () => Any)](
+        "simHashNearDuplicates" ->
+          (() => Dedup.simHashNearDuplicates(docs, "text", "id", maxHamming = 7)),
+        "simHash128NearDuplicates" ->
+          (() => Dedup.simHash128NearDuplicates(docs, "text", "id", maxHamming = 15)))) {
+      val m = graft.observability.RunMetricsProbe.measureEager(spark) {
+        assertThrows[IllegalArgumentException](build()); ()
+      }
+      assert(m.jobs == 0, s"$name ran ${m.jobs} jobs before rejecting the radius")
+    }
+  }
+
   test("simHash128: word 0 equals the 64-bit simHash; identical texts collide") {
     val rows = docs.select($"id", Dedup.simHash($"text").as("h64"),
       Dedup.simHash128($"text").as("h128"))

@@ -743,31 +743,69 @@ class StatefulStreamingSpec extends SparkTestBase {
     within.join(hits, Seq("id"), "left_anti")
   }
 
+  /** A frame's `(id, sim)` rows, nulls as `None`, sorted. */
+  private def fingerprintRows(df: DataFrame): Seq[(Option[Long], Option[Long])] =
+    df.select("id", "sim").collect().toSeq.map(r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        Option(r.get(1)).map(_.asInstanceOf[Long]))).sorted
+
+  /** Replays `batches` through both entry points under one cap and
+    * guard: each batch's returned survivors AND the partition its append
+    * wrote must equal the two-step reference's survivors. */
+  private def assertReferenceParity(
+      batches: Seq[DataFrame], cap: Int, guard: Long, label: String): Unit = {
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_fullrecall_equiv").toString + "/store"
+    batches.zipWithIndex.foreach { case (batch, i) =>
+      val want = fingerprintRows(twoStepBatchAgainstStore(batch, store, i.toLong, 3, cap))
+      val got = fingerprintRows(Streaming.dedupBatchAgainstStore(batch, store, i.toLong, 3,
+        maxBucketSize = cap, maxBroadcastBandedRows = guard))
+      assert(got == want, s"$label batch $i: returned survivors")
+      Streaming.appendBatchToFullRecallStore(batch, store, i.toLong, 3,
+        maxBucketSize = cap, maxBroadcastBandedRows = guard)
+      val written = fingerprintRows(Streaming.readFullRecallStore(spark, store)
+        .filter(col("batch_id") === i.toLong))
+      assert(written == want, s"$label batch $i: written partition")
+    }
+  }
+
   test("dedupBatchAgainstStore ≡ two-step reference, random corpora") {
     val rnd = new scala.util.Random(20261017L)
     for (cap <- Seq(0, 2, 1000); guard <- Seq(1L, 2000000L)) {
-      // few bases, few flips: 16-bit blocks collide, so cap 2 bites
-      val base = Vector.fill(6)(rnd.nextLong())
-      val docs = (0 until 60).map { i =>
-        val b = base(rnd.nextInt(base.size))
-        (i.toLong, (0 until rnd.nextInt(5)).foldLeft(b)(
-          (s, _) => s ^ (1L << rnd.nextInt(64))))
-      }
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_fullrecall_equiv").toString + "/store"
-      val batches = docs.groupBy(_ => rnd.nextInt(3)).toSeq.sortBy(_._1).map(_._2)
-      batches.zipWithIndex.foreach { case (b, i) =>
-        val batch = b.toDF("id", "sim")
-        val want = twoStepBatchAgainstStore(batch, store, i.toLong, 3, cap)
-          .select("id").as[Long].collect().sorted.toSeq
-        val got = Streaming.dedupBatchAgainstStore(batch, store, i.toLong, 3,
-          maxBucketSize = cap, maxBroadcastBandedRows = guard)
-          .select("id").as[Long].collect().sorted.toSeq
-        assert(got == want, s"cap $cap guard $guard batch $i")
-        Streaming.appendBatchToFullRecallStore(batch, store, i.toLong, 3,
-          maxBucketSize = cap, maxBroadcastBandedRows = guard)
-      }
+      // few bases, few flips: 16-bit blocks collide, so cap 2 bites; the
+      // all-ones and sign-bit-only fingerprints are bases too
+      val base = Vector.fill(6)(rnd.nextLong()) ++ Vector(-1L, Long.MinValue)
+      def variant(): Long = (0 until rnd.nextInt(5)).foldLeft(
+        base(rnd.nextInt(base.size)))((s, _) => s ^ (1L << rnd.nextInt(64)))
+      val plain = (0 until 60).map(i => (Option(i.toLong), Option(variant())))
+      // hostile rows: null fingerprints, null ids carrying live
+      // fingerprints, re-delivered rows, the extreme fingerprints exactly
+      val hostile = Seq((Option(60L), None), (Option(61L), None), (None, None),
+          (Option(62L), Option(-1L)), (Option(63L), Option(Long.MinValue))) ++
+        Seq.fill(3)((None, Option(variant()))) ++
+        Seq.fill(3)(plain(rnd.nextInt(plain.size)))
+      val batches = (plain ++ hostile).groupBy(_ => rnd.nextInt(3)).toSeq
+        .sortBy(_._1).map(_._2.toDF("id", "sim"))
+      assertReferenceParity(batches, cap, guard, s"cap $cap guard $guard")
     }
+    // a skewed multi-partition batch under the guard's total but over
+    // one partition's share (25 of 100 banded rows) takes the
+    // distributed route
+    val skewed = spark.sparkContext.parallelize(Seq(
+        (100L until 120L).map(i => (i, 0x0F0F0F0F0F0F0F0FL ^ (i & 3L))),
+        Seq((120L, -1L)), Seq((121L, Long.MinValue)), Seq((122L, 0L))), 4)
+      .flatMap(identity).toDF("id", "sim")
+    // doc 1 shares the skewed docs' three upper blocks at hamming 16;
+    // doc 2 is one bit from doc 122
+    val first = Seq((1L, 0x0F0F0F0F0F0FF0F0L), (2L, 1L)).toDF("id", "sim")
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_fullrecall_skew").toString + "/store"
+    Streaming.appendBatchToFullRecallStore(first, store, 0L, 3)
+    val plan = Streaming.dedupBatchAgainstStore(skewed, store, 1L, 3,
+      maxBroadcastBandedRows = 100L).queryExecution.executedPlan.toString
+    assert(plan.contains("ShuffledHashJoin"), s"skewed batch must fall back:\n$plan")
+    for (cap <- Seq(0, 2, 1000))
+      assertReferenceParity(Seq(first, skewed), cap, 100L, s"skewed cap $cap")
   }
 
   test("dedupBatchAgainstStore: cap spares the batch, not the store") {
@@ -814,13 +852,23 @@ class StatefulStreamingSpec extends SparkTestBase {
         maxBucketSize = 1000, maxBroadcastBandedRows = guard)
       val ids = out.collect().map(_.getLong(0)).toSet
       assert(ids.size == 2001 && !ids.contains(5002L), s"guard $guard")
-      // the probe side holds the two cold docs and the store row, once
-      // per band (4 at h = 3); each hot row would meet 2,000 build rows
-      val probed = plans.collect(out.queryExecution.executedPlan) {
-        case j: HashJoin if j.joinType == Inner => rowsIn(j.left) // fence builds
+      // over the guard, the probe side holds the two cold docs and the
+      // store row, once per band (4 at h = 3); each hot row would meet
+      // 2,000 build rows
+      if (guard == 1L) {
+        val probed = plans.collect(out.queryExecution.executedPlan) {
+          case j: HashJoin if j.joinType == Inner => rowsIn(j.left) // fence builds
+        }
+        assert(probed == Seq(12L), s"guard $guard: probe-side rows $probed")
       }
-      assert(probed == Seq(12L), s"guard $guard: probe-side rows $probed")
     }
+    // under the guard the batch pairs on the driver: the hot rows make
+    // no comparison, the cold twins one per shared band (4), and without
+    // the cap every hot pair of every band would be compared
+    val rows = Streaming.collectBanded(Streaming.bandedFingerprints(batch, 3), 2000000L)
+      .getOrElse(fail("a 2,002-doc batch fits under the default guard"))
+    assert(Streaming.withinBatchLosers(rows, 3, 1000) == ((Set(5002L), 4L)))
+    assert(Streaming.withinBatchLosers(rows, 3, 0)._2 == 4L * (2000L * 1999L / 2) + 4L)
   }
 
   test("full-recall append job counts per 500-row batch are pinned") {
@@ -841,11 +889,10 @@ class StatefulStreamingSpec extends SparkTestBase {
       Streaming.appendBatchToFullRecallStore(batch(500), store, 1L, 3))
     info(s"jobs: store-less ${first.jobs}, store-backed ${backed.jobs}")
     assert(Streaming.readFullRecallStore(spark, store).count() == 450L + 440L)
-    // one fence + its count, one probe (broadcast build, loser
-    // shuffle, loser broadcast, survivors), one write: 7 jobs measured
-    // on either path, one of slack for AQE stage ordering
-    assert(first.jobs <= 8, s"store-less batch: $first")
-    assert(backed.jobs <= 8, s"store-backed batch: $backed")
+    // one bounded collect, one store probe (store-backed only), one
+    // write that reads no store
+    assert(first.jobs <= 2, s"store-less batch: $first")
+    assert(backed.jobs <= 3, s"store-backed batch: $backed")
   }
 
   test("substringDedupStream span-cleans micro-batches through the window store") {
