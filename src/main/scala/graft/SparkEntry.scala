@@ -164,11 +164,11 @@ object SparkEntry {
   }
 
   /** Derived event time (ms) for the q_stream_dedup_evtime family —
-    * shared with the Scale row so the construction cannot diverge: a
+    * shared with Bench's baseline so the construction cannot diverge: a
     * pure function of the PRE-offset id ((id % 1e6) % 360 minutes).
-    * Planted copies (+1e6) and Scale replicas (+k·1e7) therefore share
-    * their original's timestamp, keeping the planted-drop guarantee at
-    * every scale. */
+    * Planted copies (+1e6) and scaled replicas (+k·1e7,
+    * [[SpotBench.scaledDocs]]) therefore share their original's
+    * timestamp, keeping the planted-drop guarantee at every scale. */
   private[graft] def evtimeDerivedMs: Column =
     pmod(col("id"), lit(1000000L)) % 360 * 60_000L
 
@@ -2265,7 +2265,8 @@ object SparkEntry {
       // the operator's broadcast short-circuit: salting a broadcast
       // join has no reduce side to balance, so saltedJoin defers to the
       // plain join (forcing the salted path on this corpus measures ~2×
-      // for zero benefit — graft.Scale nonskew_* rows, SCALE.md).
+      // for zero benefit — 0.54 vs 0.29 s warm, SCALE.md "two-point
+      // scale growth, round-8 additions").
       val li = t(s, d, "lineitem")
         .select(col("l_orderkey").cast("long").as("l_orderkey"),
           col("l_linenumber").cast("long").as("l_linenumber"), col("l_quantity"))

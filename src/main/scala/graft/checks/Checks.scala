@@ -3,7 +3,7 @@ package graft.checks
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.ColumnNotInDataframeError
+import graft.core.DataFrameOps.requireColumns
 
 /** Validation / probe operators (SURVEY.md §2.1 #22-24, #37-39).
   * The collecting ones are eager by design — they exist to pull small
@@ -11,13 +11,6 @@ import graft.ColumnNotInDataframeError
   * distincts) happens distributed as hash aggregates.
   */
 object Checks {
-
-  private def requireColumns(df: DataFrame, cols: Seq[String], what: String): Unit = {
-    val missing = cols.filterNot(df.columns.contains)
-    if (missing.nonEmpty)
-      throw new ColumnNotInDataframeError(
-        s"$what: column(s) ${missing.mkString(", ")} not in dataframe")
-  }
 
   /** #22 Per-column null counts. One distributed job producing a single
     * row (partial + final hash agg — no shuffle of data rows).

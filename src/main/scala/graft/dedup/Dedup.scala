@@ -1472,9 +1472,8 @@ object Dedup {
       pairs: DataFrame,
       idCol: String,
       scoreCol: String): DataFrame = {
-    val reserved = Seq("__cc_id", "__cluster", "__rep_rn", "cluster_id")
-    require(!df.columns.exists(reserved.contains),
-      s"keepClusterRepresentatives: column names ${reserved.mkString(", ")} are reserved")
+    graft.core.DataFrameOps.requireNoReserved(df,
+      Seq("__cc_id", "__cluster", "__rep_rn", "cluster_id"), "keepClusterRepresentatives")
     val clusters = duplicateClusters(pairs)
       .select(col("id").as("__cc_id"), col("cluster_id"))
     val withCluster = df

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ListenerBridge
 
 /** Measured execution profile of one action: the numbers that decide
   * whether a plan survives a 100× scale-up. `shuffleWriteBytes` is THE
@@ -25,13 +26,14 @@ case class RunMetrics(
 /** Execution-metrics probe: run a frame once and report what the
   * cluster actually did (stages, tasks, input bytes, exchange bytes).
   *
-  * The listener aggregates completed-stage task metrics; listener
-  * delivery is asynchronous, so after the action the probe polls until
-  * the counters go quiet (bounded). Run one measurement at a time per
-  * SparkContext — a concurrent job's stages would land in the same
-  * counters (the listener cannot attribute stages to jobs without the
-  * event-log machinery in [[EventLog]], which is the offline tool for
-  * that).
+  * The listener aggregates completed-stage task metrics. Listener
+  * delivery is asynchronous, so the probe drains the listener bus
+  * before it attaches (no earlier action's events leak in) and again
+  * after the action, before it reads the counters: the counts are
+  * exact. Run one measurement at a time per SparkContext — a
+  * concurrent job's stages would land in the same counters (the
+  * listener cannot attribute stages to jobs without the event-log
+  * machinery in [[EventLog]], which is the offline tool for that).
   */
 object RunMetricsProbe {
 
@@ -44,15 +46,7 @@ object RunMetricsProbe {
     * kilobytes-and-up as plan shuffle, bytes as the action's own
     * reduce. */
   def measure(df: DataFrame): RunMetrics =
-    measureLazy(df.sparkSession, () => df)
-
-  /** [[measure]] with CONSTRUCTION inside the listener window: use for
-    * frames whose builder runs eager work (e.g. an eager
-    * `localCheckpoint` fence) that a strict argument would execute
-    * before the listener attaches — measured to hide a 9.8 MB ranged
-    * exchange entirely (SCALE.md ks_path). */
-  def measureLazy(spark: SparkSession, mk: () => DataFrame): RunMetrics =
-    probe(spark)(mk().count())
+    probe(df.sparkSession)(df.count())
 
   /** Run an eager `Unit` body (an append, a compaction) under the
     * listener and report what it executed; `rows` is 0 — the body
@@ -83,20 +77,13 @@ object RunMetricsProbe {
         }
       }
     }
+    ListenerBridge.drain(sc)
     sc.addSparkListener(listener)
     try {
       val t0 = System.nanoTime()
       val rows = action
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      // drain: listener events arrive async — wait until the job and
-      // stage counters are stable across two consecutive polls (max ~2 s)
-      var last = -1
-      var i = 0
-      while (i < 40 && jobs.get() + stages.get() != last) {
-        last = jobs.get() + stages.get()
-        Thread.sleep(50)
-        i += 1
-      }
+      ListenerBridge.drain(sc)
       RunMetrics(rows, wallMs, jobs.get(), stages.get(), tasks.get(),
         input.get(), sw.get(), sr.get())
     } finally sc.removeSparkListener(listener)

@@ -114,7 +114,7 @@ object Ids {
   }
 
   /** The naive single-partition formulation — kept ONLY as the
-    * measured baseline (Scale `assign_ids` rows) and for tiny frames
+    * measured baseline (SCALE.md `assign_ids` rows) and for tiny frames
     * where one sort task is fine. */
   def assignContiguousIdsNaive(
       df: DataFrame,

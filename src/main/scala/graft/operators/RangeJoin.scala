@@ -35,9 +35,9 @@ object RangeJoin {
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty,
       s"rangeJoin: overlapping column names ${overlap.mkString(", ")}")
-    val reserved = Seq("__row_id", "__bin")
-    require(!(left.columns ++ right.columns).exists(reserved.contains),
-      s"rangeJoin: column names ${reserved.mkString(", ")} are reserved")
+    for (side <- Seq(left, right))
+      graft.core.DataFrameOps.requireNoReserved(
+        side, Seq("__row_id", "__bin"), "rangeJoin")
 
     // synthetic row id keeps left-row multiplicity correct in left mode
     // (value-based except/distinct would conflate identical left rows)
@@ -102,8 +102,8 @@ object RangeJoin {
     val overlapCols = left.columns.toSet.intersect(right.columns.toSet)
     require(overlapCols.isEmpty,
       s"intervalJoin: overlapping column names ${overlapCols.mkString(", ")}")
-    require(!(left.columns ++ right.columns).contains("__bin"),
-      "intervalJoin: column name __bin is reserved")
+    for (side <- Seq(left, right))
+      graft.core.DataFrameOps.requireNoReserved(side, Seq("__bin"), "intervalJoin")
     def binsOf(lo: String, hi: String) = {
       // inverted intervals would silently bin a DESCENDING sequence;
       // raise in-plan (null bounds pass the guard and yield no bins)

@@ -29,7 +29,7 @@ object Quantize {
       scaleCol: String = "scale",
       quantCol: String = "qvec"): DataFrame = {
     val work = "__quant_dv"
-    require(!df.columns.contains(work), s"quantizeInt8: column $work is reserved")
+    graft.core.DataFrameOps.requireNoReserved(df, Seq(work), "quantizeInt8")
     df.withColumn(work, col(vecCol).cast("array<double>"))
       .withColumn(scaleCol,
         coalesce(array_max(transform(col(work), x => abs(x))), lit(0.0)) / 127.0)

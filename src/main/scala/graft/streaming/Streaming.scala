@@ -241,9 +241,9 @@ object Streaming {
       lookaheadSeconds: Long = 0L): DataFrame = {
     require(lookbackSeconds >= 0 && lookaheadSeconds >= 0,
       "streamStreamJoin: lookback/lookahead must be non-negative")
-    val reserved = Seq("__r_key", "__bin")
-    require(!(left.columns ++ right.columns).exists(reserved.contains),
-      s"streamStreamJoin: column names ${reserved.mkString(", ")} are reserved")
+    for (side <- Seq(left, right))
+      graft.core.DataFrameOps.requireNoReserved(
+        side, Seq("__r_key", "__bin"), "streamStreamJoin")
     // fail at build time, not as an OOM hours in: an unwatermarked
     // streaming side makes the join state inevictable
     def watermarked(df: DataFrame): Boolean =
@@ -451,7 +451,7 @@ object Streaming {
     * evaluation instead of leaning on codegen subexpression
     * elimination). Sharding is by the fingerprint's top 16-bit block,
     * so dedup is SHARD-scoped: only same-shard candidates are
-    * compared. Shared by the bench query and the Scale artifact so the
+    * compared. Shared by the streaming near-dedup queries so the
     * sharding scheme cannot diverge between them. */
   def shardedFingerprints(
       df: DataFrame, idCol: String, textCol: String = "text"): Dataset[SimDoc] = {
@@ -949,25 +949,36 @@ object Streaming {
   }
 
   /** Within-batch pairing on the driver: the ids that lose, and the
-    * number of row pairs compared. Rows sharing a `(band, bucket)` are
-    * compared unless the bucket holds more than `maxBucketSize` rows
-    * (the batch operator's cap, [[graft.dedup.Dedup.hotBuckets]];
-    * `<= 0` disables it); a row loses to any lower id within
-    * `maxHamming`. No transitivity: a loser still beats higher ids. */
+    * number of fingerprint pairs compared. Rows sharing a
+    * `(band, bucket)` are paired unless the bucket holds more than
+    * `maxBucketSize` rows (the batch operator's cap,
+    * [[graft.dedup.Dedup.hotBuckets]]; `<= 0` disables it); a row loses
+    * to any lower id within `maxHamming`. No transitivity: a loser still
+    * beats higher ids. Null-id rows never lose and beat nothing.
+    *
+    * Equal fingerprints are collapsed first, so a bucket of k copies
+    * costs k steps, not k²/2 comparisons: within each fingerprint every
+    * id above the minimum loses (distance 0), and equal minima
+    * (re-delivered rows) tie. Only the minima are then paired — a row
+    * that loses to some lower id within `maxHamming` loses to that id's
+    * fingerprint minimum too. */
   private[graft] def withinBatchLosers(
       rows: BandedRows, maxHamming: Int, maxBucketSize: Int): (Set[Long], Long) = {
     val losers = mutable.HashSet.empty[Long]
     var comparisons = 0L
     val buckets = (0 until rows.size).filterNot(rows.simNull)
       .groupBy(i => (rows.band(i), rows.bucket(i))).valuesIterator
-    for (m <- buckets if maxBucketSize <= 0 || m.size <= maxBucketSize;
-         x <- m.indices; y <- x + 1 until m.size) {
-      val (i, j) = (m(x), m(y))
-      comparisons += 1
-      if (!rows.idNull(i) && !rows.idNull(j) &&
-          java.lang.Long.bitCount(rows.sim(i) ^ rows.sim(j)) <= maxHamming) {
-        if (rows.id(i) < rows.id(j)) losers += rows.id(j)
-        else if (rows.id(j) < rows.id(i)) losers += rows.id(i)
+    for (m <- buckets if m.size > 1 && (maxBucketSize <= 0 || m.size <= maxBucketSize)) {
+      val withId = m.filterNot(rows.idNull)
+      val minima = withId.groupMapReduce(rows.sim(_))(rows.id(_))(_ min _)
+      withId.foreach(i => if (rows.id(i) > minima(rows.sim(i))) losers += rows.id(i))
+      val reps = minima.toArray
+      for (x <- reps.indices; y <- x + 1 until reps.length) {
+        val ((si, ii), (sj, ij)) = (reps(x), reps(y))
+        comparisons += 1
+        if (java.lang.Long.bitCount(si ^ sj) <= maxHamming) {
+          if (ii < ij) losers += ij else if (ij < ii) losers += ii
+        }
       }
     }
     (losers.toSet, comparisons)

@@ -67,8 +67,7 @@ object QualityRules {
       maxWords: Int = 100000,
       minStopwords: Int = 2): DataFrame = {
     val reserved = Seq("__gf_sig")
-    require(!df.columns.exists(reserved.contains),
-      s"gopherFlags: column names ${reserved.mkString(", ")} are reserved")
+    graft.core.DataFrameOps.requireNoReserved(df, reserved, "gopherFlags")
     // every rule input comes from ONE codegen'd kernel walk over the
     // document (GopherSignalsExpr) — the HOF formulation dispatched
     // five interpreted higher-order expressions per doc (token-length

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.core.DataFrameOps.requireNoReserved
 import graft.text.TextFunctions.normTokens
 
 /** Term-relevance operators for corpus analytics and retrieval-shaped
@@ -59,8 +60,7 @@ object Relevance {
       textCol: String,
       minDf: Long = 1L): DataFrame = {
     require(minDf >= 1, s"tfIdf: minDf must be >= 1, got $minDf")
-    require(!df.columns.contains("__graft_n_docs"),
-      "tfIdf: column name __graft_n_docs is reserved")
+    requireNoReserved(df, Seq("__graft_n_docs"), "tfIdf")
     // count(1) cast double ≡ the old nDocs.toDouble (counts are exact
     // in double far beyond any corpus size). The count-star subtree
     // re-runs `df`'s upstream plan inside this job: a column-pruned
@@ -156,8 +156,7 @@ object Relevance {
       maxDfFrac: Double = 1.0): DataFrame = {
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"invertedIndex: maxDfFrac must be in (0, 1], got $maxDfFrac")
-    require(!df.columns.contains("__graft_max_df"),
-      "invertedIndex: column name __graft_max_df is reserved")
+    requireNoReserved(df, Seq("__graft_max_df"), "invertedIndex")
     val postings = df
       .select(col(idCol), explode(normTokens(col(textCol))).as("word"))
       .distinct()

@@ -352,4 +352,41 @@ class DataFrameOpsSpec extends SparkTestBase {
     assertDfEqual(latest.select("g", "v"),
       df("g STRING, v STRING", Seq("a", "late"), Seq("b", "only")))
   }
+
+  // ------------------------------------------------- requireNoReserved
+  test("requireNoReserved: every operator rejects each of its reserved columns") {
+    import org.apache.spark.sql.DataFrame
+    import graft.dedup.Dedup
+    import graft.operators.RangeJoin
+    import graft.similarity.Quantize
+    import graft.streaming.Streaming
+    import graft.text.{QualityRules, Relevance}
+    val base = spark.range(3).selectExpr("id AS doc_id", "'a b c' AS text", "id",
+      "1.0D AS score", "id AS k", "timestamp_seconds(id) AS ts", "1.0D AS v",
+      "0.0D AS ls", "1.0D AS le", "array(1.0D, 2.0D) AS vec")
+    val pairs = df("id_a BIGINT, id_b BIGINT", Seq(0L, 1L))
+    val rights = spark.range(3).selectExpr("id AS rk", "timestamp_seconds(id) AS rts")
+    val ranges = spark.range(3).selectExpr("0.0D AS lo", "1.0D AS hi")
+    val intervals = spark.range(3).selectExpr("0.0D AS rs", "1.0D AS re")
+    val table: Seq[(String, Seq[String], DataFrame => Any)] = Seq(
+      ("tfIdf", Seq("__graft_n_docs"), Relevance.tfIdf(_, "doc_id", "text")),
+      ("invertedIndex", Seq("__graft_max_df"),
+        Relevance.invertedIndex(_, "doc_id", "text")),
+      ("keepClusterRepresentatives", Seq("__cc_id", "__cluster", "__rep_rn", "cluster_id"),
+        Dedup.keepClusterRepresentatives(_, pairs, "id", "score")),
+      ("gopherFlags", Seq("__gf_sig"), QualityRules.gopherFlags(_, "text")),
+      ("streamStreamJoin", Seq("__r_key", "__bin"),
+        Streaming.streamStreamJoin(_, rights.withColumnRenamed("rk", "k"),
+          "k", "ts", "rts", 60L)),
+      ("rangeJoin", Seq("__row_id", "__bin"),
+        RangeJoin.rangeJoin(_, "v", ranges, "lo", "hi", 10.0)),
+      ("intervalJoin", Seq("__bin"),
+        RangeJoin.intervalJoin(_, "ls", "le", intervals, "rs", "re", 10.0)),
+      ("quantizeInt8", Seq("__quant_dv"), Quantize.quantizeInt8(_, "vec")))
+    for ((op, names, call) <- table; name <- names) {
+      val e = intercept[IllegalArgumentException](call(base.withColumn(name, lit(1))))
+      assert(e.getMessage.contains(s"$op: column name") &&
+        names.forall(e.getMessage.contains), s"$op / $name: ${e.getMessage}")
+    }
+  }
 }

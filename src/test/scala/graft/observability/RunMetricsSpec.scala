@@ -45,4 +45,18 @@ class RunMetricsSpec extends SparkTestBase {
     assert(m.jobs == 2 && m.rows == 0L, s"two RDD actions = two jobs: $m")
     assert(RunMetricsProbe.measureEager(spark)(()).jobs == 0)
   }
+
+  test("a 20-job body reports exactly 20 jobs and the same stages on every run") {
+    val sc = spark.sparkContext
+    val runs = (1 to 10).map { _ =>
+      RunMetricsProbe.measureEager(spark) {
+        val rdd = sc.parallelize(1 to 1000, 4)
+        (1 to 19).foreach(_ => rdd.count())
+        // one job, two stages: the map side and the reduce side
+        rdd.map(i => (i % 7, 1L)).reduceByKey(_ + _).collect()
+      }
+    }
+    assert(runs.forall(_.jobs == 20), s"jobs per run: ${runs.map(_.jobs)}")
+    assert(runs.forall(_.stages == 21), s"stages per run: ${runs.map(_.stages)}")
+  }
 }

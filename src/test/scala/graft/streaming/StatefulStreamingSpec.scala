@@ -862,13 +862,36 @@ class StatefulStreamingSpec extends SparkTestBase {
         assert(probed == Seq(12L), s"guard $guard: probe-side rows $probed")
       }
     }
-    // under the guard the batch pairs on the driver: the hot rows make
-    // no comparison, the cold twins one per shared band (4), and without
-    // the cap every hot pair of every band would be compared
+    // under the guard the batch pairs on the driver. Equal fingerprints
+    // collapse to their lowest id before any pair is compared, so no
+    // bucket here makes a comparison: the cold twins are one
+    // fingerprint, and so are the 2,000 hot rows once the cap is off
     val rows = Streaming.collectBanded(Streaming.bandedFingerprints(batch, 3), 2000000L)
       .getOrElse(fail("a 2,002-doc batch fits under the default guard"))
-    assert(Streaming.withinBatchLosers(rows, 3, 1000) == ((Set(5002L), 4L)))
-    assert(Streaming.withinBatchLosers(rows, 3, 0)._2 == 4L * (2000L * 1999L / 2) + 4L)
+    assert(Streaming.withinBatchLosers(rows, 3, 1000) == ((Set(5002L), 0L)))
+    assert(Streaming.withinBatchLosers(rows, 3, 0) ==
+      (((2L to 2000L).toSet + 5002L, 0L)))
+  }
+
+  test("withinBatchLosers: equal fingerprints collapse; the cap reads the raw bucket") {
+    val a = 0x0F0F0F0F0F0F0F0FL
+    // (id, sim) in one (band, bucket); None = null
+    val in = Seq[(Option[Long], Option[Long])](
+      (Some(3L), Some(a)), (Some(7L), Some(a)), (Some(7L), Some(a)), // 7 re-delivered
+      (Some(5L), Some(a ^ 1L)), (Some(9L), Some(a ^ 1L)),
+      (Some(1L), Some(a ^ 0xFFL)), // 8 bits from a: beats no one
+      (None, Some(a)), // null id: never loses, beats nothing
+      (Some(2L), None)) // null sim: pairs with nothing, not in the bucket
+    val rows = new Streaming.BandedRows(
+      in.map(_._1.getOrElse(0L)).toArray, in.map(_._1.isEmpty).toArray,
+      in.map(_._2.getOrElse(0L)).toArray, in.map(_._2.isEmpty).toArray,
+      Array.fill(in.size)(0), Array.fill(in.size)(0L))
+    // 7 and 9 lose inside their fingerprint; of the three minima
+    // (3, 5, 1) only 5 is within 3 bits of a lower id: 3 comparisons
+    assert(Streaming.withinBatchLosers(rows, 3, 0) == ((Set(5L, 7L, 9L), 3L)))
+    // 7 rows carry a fingerprint, the null-id row included
+    assert(Streaming.withinBatchLosers(rows, 3, 7) == ((Set(5L, 7L, 9L), 3L)))
+    assert(Streaming.withinBatchLosers(rows, 3, 6) == ((Set.empty[Long], 0L)))
   }
 
   test("full-recall append job counts per 500-row batch are pinned") {
