@@ -40,7 +40,7 @@ object Dsir {
     * `withColumn` it first, as the internal paths here do), not a
     * computed expression: `element_at` inside the lambda re-evaluates
     * a computed argument PER ELEMENT, turning one tokenize per doc
-    * into one per token (the `Dedup.shinglesFromTokens` trap —
+    * into one per token (the HOF shingle trap —
     * measured 22 s vs 0.5 s on the sf0.1 corpus). */
   def ngramFeaturesFromTokens(toks: Column): Column =
     // one codegen'd kernel pass (NgramFeaturesExpr) — the HOF form

@@ -187,16 +187,16 @@ object Preferences {
       .groupBy("lo", "hi")
       .agg(count(lit(1)).as("games"), sum(col("win_lo")).as("wins_lo"),
         sum(col("win_any")).as("wins_any"))
-      .localCheckpoint(true) // models² rows; cut the corpus lineage once
+      .transform(Fence(_, "bradleyTerryScores.pairs").df) // models² rows; cut the corpus lineage once
     // per-model directed view: (model, opp, games, wins)
     val directed = pairStats.select(col("lo").as("model"), col("hi").as("opp"),
         col("games"), col("wins_lo").as("wins"))
       .unionByName(pairStats.select(col("hi").as("model"), col("lo").as("opp"),
         col("games"), (col("wins_any") - col("wins_lo")).as("wins")))
-      .localCheckpoint(true)
+      .transform(Fence(_, "bradleyTerryScores.directed").df)
     val models = directed.groupBy("model")
       .agg(sum(col("games")).as("n_battles"), sum(col("wins")).as("n_wins"))
-      .localCheckpoint(true)
+      .transform(Fence(_, "bradleyTerryScores.models").df)
     var scores = models.select(col("model"), lit(1.0).as("s"))
     for (_ <- 1 to iters) {
       val sOpp = scores.select(col("model").as("opp"), col("s").as("s_opp"))
@@ -225,7 +225,7 @@ object Preferences {
         .select(col("model"),
           when(col("m") > 0.0, col("s_raw") / col("m"))
             .otherwise(col("s_raw")).as("s"))
-        .localCheckpoint(true)
+        .transform(Fence(_, "bradleyTerryScores.step").df)
     }
     models.join(scores, Seq("model"))
       .select(col("model"), col("n_battles"), col("n_wins"),

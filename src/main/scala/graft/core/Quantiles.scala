@@ -30,7 +30,7 @@ import graft.operators.Ids
   * r15 stats_winsorize rows): below a few million rows the
   * value-buffering formulations (one `sort_array(collect_list)` /
   * `percentile` aggregate) beat the rank machinery's fixed costs
-  * (range-exchange sampling job + checkpoint + offsets frame) — the
+  * (range-exchange sampling job + fence) — the
   * aggregate wins at 600 k (~1.1×), the ranks win at 4.8 M (1.9×) and
   * 20 M (2.3×), and only the ranks survive 10^8-value groups at all.
   * Every exact entry point therefore counts its input (a narrow
@@ -88,8 +88,30 @@ object Quantiles {
     else df.limit(thr.toInt + 1).count() <= thr
   }
 
+  /** The non-null values as doubles `__graft_qv` ranked `__graft_qr`,
+    * and their count off the ids fence (the rank plan is narrow). */
+  private def rankedValues(df: DataFrame, valueCol: String): (DataFrame, Long) =
+    Ids.contiguousIds(
+      df.select(col(valueCol).cast("double").as("__graft_qv"))
+        .filter(col("__graft_qv").isNotNull),
+      Seq("__graft_qv"), "__graft_qr")
+
+  /** [[rankedValues]] per group, and the counts `(__graft_g_<g>…, __graft_qn)`. */
+  private def rankedGroups(
+      df: DataFrame, groupCols: Seq[String], valueCol: String): (DataFrame, DataFrame) = {
+    val (ranked, groups) = Ids.groupRanks(
+      df.select((groupCols.map(col) :+
+          col(valueCol).cast("double").as("__graft_qv")): _*)
+        .filter(col("__graft_qv").isNotNull),
+      groupCols, Seq("__graft_qv"), "__graft_qr")
+    (ranked, groups.select(groupCols.map(g => col(s"__graft_o_$g").as(s"__graft_g_$g")) :+
+      col("__graft_gn").as("__graft_qn"): _*))
+  }
+
   /** `(q, value)` — one row per requested quantile of `valueCol`
-    * (nulls excluded; `value` is double). Empty input → empty. */
+    * (nulls excluded; `value` is double). Empty input → empty. Eager
+    * work: the router's bounded count, then the jobs of
+    * [[graft.operators.Ids.assignContiguousIds]] (its fence counts). */
   def exactQuantiles(
       df: DataFrame,
       valueCol: String,
@@ -113,17 +135,10 @@ object Quantiles {
           (least(floor(col("q") * (col("__graft_qn") - 1)),
             col("__graft_qn") - 1) + 1).cast("int")).as("value"))
     }
-    val ranked = Ids.assignContiguousIds(
-      df.select(col(valueCol).cast("double").as("__graft_qv"))
-        .filter(col("__graft_qv").isNotNull),
-      Seq("__graft_qv"), "__graft_qr")
-      .localCheckpoint(true) // two consumers: the count and the rank join
-    val n = ranked.agg(count(lit(1)).as("__graft_qn"))
+    val (ranked, n) = rankedValues(df, valueCol)
     qs.toDF("q")
-      .crossJoin(broadcast(n))
       .withColumn("__graft_qt",
-        least(floor(col("q") * (col("__graft_qn") - 1)),
-          col("__graft_qn") - 1).cast("long"))
+        least(floor(col("q") * (n - 1)), lit(n - 1)).cast("long"))
       .join(ranked, col("__graft_qt") === col("__graft_qr"))
       .select(col("q"), col("__graft_qv").as("value"))
   }
@@ -148,11 +163,13 @@ object Quantiles {
     * `percentile` aggregate buffers each group's values in one buffer
     * and a bare per-group rank window sorts each group through one
     * task; this uses [[graft.operators.Ids.assignGroupRanks]] instead
-    * (range exchange spanning big groups across partitions,
-    * per-(partition, group) local sorts, broadcast per-group offsets),
-    * so a billion-row group never serialises anywhere. Group
-    * cardinality must stay broadcast-sized (the offsets-frame bound —
-    * the language/domain regime this op exists for). */
+    * (range exchange spanning big groups across partitions, local
+    * sorts, broadcast per-group first ids), so a billion-row group
+    * never serialises anywhere. Group
+    * cardinality must stay broadcast-sized (the per-group frame's bound —
+    * the language/domain regime this op exists for). Eager work: the
+    * router's bounded count, then the jobs of
+    * [[graft.operators.Ids.assignGroupRanks]]. */
   def exactQuantilesPerGroup(
       df: DataFrame,
       groupCols: Seq[String],
@@ -182,18 +199,7 @@ object Quantiles {
             (least(floor(col("q") * (col("__graft_qn") - 1)),
               col("__graft_qn") - 1) + 1).cast("int")).as("value")): _*)
     }
-    val ranked = Ids.assignGroupRanks(
-      df.select((groupCols.map(col) :+
-          col(valueCol).cast("double").as("__graft_qv")): _*)
-        .filter(col("__graft_qv").isNotNull),
-      groupCols, Seq("__graft_qv"), "__graft_qr")
-      .localCheckpoint(true) // two consumers: group counts and the rank join
-    // counts derives from ranked — rename its group columns so the
-    // rank join below is not an ambiguous self-join
-    val counts = ranked.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__graft_qn"))
-      .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-        col("__graft_qn")): _*)
+    val (ranked, counts) = rankedGroups(df, groupCols, valueCol)
     val targets = qs.toDF("q")
       .crossJoin(broadcast(counts))
       .withColumn("__graft_qt",
@@ -227,7 +233,7 @@ object Quantiles {
     * [[exactQuantiles]], so no aggregation buffer ever holds a group's
     * values. Returns `(q, value)`; all-null / empty input → empty
     * frame (callers LEFT-join and inherit null bounds, matching the
-    * aggregate's null). */
+    * aggregate's null). Eager work: that of [[exactQuantiles]]. */
   def exactInterpolatedQuantiles(
       df: DataFrame,
       valueCol: String,
@@ -252,17 +258,9 @@ object Quantiles {
         .select(element_at(qArr, col("__graft_i").cast("int") + 1).as("q"),
           col("value"))
     }
-    val ranked = Ids.assignContiguousIds(
-      df.select(col(valueCol).cast("double").as("__graft_qv"))
-        .filter(col("__graft_qv").isNotNull),
-      Seq("__graft_qv"), "__graft_qr")
-      .localCheckpoint(true) // two consumers: the count and the rank join
-    val n = ranked.agg(count(lit(1)).as("__graft_qn"))
-      .filter(col("__graft_qn") > 0)
+    val (ranked, n) = rankedValues(df, valueCol)
     val targets = qs.toDF("q")
-      .crossJoin(broadcast(n))
-      .withColumn("__graft_qh",
-        col("q") * (col("__graft_qn") - 1).cast("double"))
+      .withColumn("__graft_qh", col("q") * (n - 1).toDouble)
       .withColumn("__graft_qlo", floor(col("__graft_qh")).cast("long"))
       .withColumn("__graft_qhi", ceil(col("__graft_qh")).cast("long"))
     val needed = targets.select(col("q"), col("__graft_qh"),
@@ -340,16 +338,7 @@ object Quantiles {
           element_at(qArr, col("__graft_i").cast("int") + 1).as("q") :+
           col("value")): _*)
     }
-    val ranked = Ids.assignGroupRanks(
-      df.select((groupCols.map(col) :+
-          col(valueCol).cast("double").as("__graft_qv")): _*)
-        .filter(col("__graft_qv").isNotNull),
-      groupCols, Seq("__graft_qv"), "__graft_qr")
-      .localCheckpoint(true) // two consumers: group counts and the rank join
-    val counts = ranked.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__graft_qn"))
-      .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-        col("__graft_qn")): _*)
+    val (ranked, counts) = rankedGroups(df, groupCols, valueCol)
     val needed = qs.toDF("q")
       .crossJoin(broadcast(counts))
       .withColumn("__graft_qh",

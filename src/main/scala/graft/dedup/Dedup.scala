@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Fence
 import graft.text.TextFunctions
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -179,43 +180,6 @@ object Dedup {
       .drop(fpCol, rnCol)
   }
 
-  /** k-shingles from an already-materialised token array column. The
-    * token array MUST be a bound column (use `withColumn` first), not a
-    * computed expression: Catalyst re-evaluates a computed argument on
-    * every lambda invocation, turning one regex split per document into
-    * one per shingle. */
-  def shinglesFromTokens(toks: Column, k: Int = 3): Column =
-    array_distinct(
-      filter(
-        transform(sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
-          i => concat_ws(" ", slice(toks, i, lit(k)))),
-        s => length(s) > 0))
-
-  /** Token k-shingles of a NORMALISED text column (lowercase, collapsed
-    * whitespace — near-dup detection should not split on case), k
-    * consecutive tokens re-joined with a single space, distinct.
-    * Convenience form — for bulk pipelines materialise the token array
-    * first and use [[shinglesFromTokens]] (see its scaling note). */
-  def shingles(text: Column, k: Int = 3): Column =
-    shinglesFromTokens(TextFunctions.tokens(TextFunctions.normalizeText(text)), k)
-
-  /** One xxhash64 per shingle — materialise this as a column so the
-    * per-seed MinHash mixing below works on longs, not strings. */
-  def shingleHashes(shingleArr: Column): Column =
-    transform(shingleArr, s => xxhash64(s))
-
-  /** MinHash signature from PRE-HASHED shingles: seed-mixing longs with
-    * xxhash64(seed, h) costs a few ns per element, vs re-hashing the
-    * full shingle string for each of the `numHashes` seeds. */
-  def minHashSignatureFromHashes(hashArr: Column, numHashes: Int = 64): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      seed => array_min(transform(hashArr, h => xxhash64(seed, h))))
-
-  /** MinHash signature of a shingle-string array (convenience form; the
-    * operators below pipeline through [[shingleHashes]] instead). */
-  def minHashSignature(shingleArr: Column, numHashes: Int = 64): Column =
-    minHashSignatureFromHashes(shingleHashes(shingleArr), numHashes)
-
   /** Band a signature array into `bands` bucket hashes (one xxh64 chain
     * per contiguous rows-sized slice) — native codegen'd kernel; the
     * interpreted HOF form (slice → concat_ws → xxhash64) allocated a
@@ -313,21 +277,29 @@ object Dedup {
     * write); pairings read it through [[minHashBase]]. */
   private def minHashKernels(
       df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int, shingleSize: Int): DataFrame = df
-    .select(col(idCol).as("id"), col(textCol).as("text"))
-    .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    .withColumn("toks", TextFunctions.tokens(TextFunctions.normalizeText(col("text"))))
-    .withColumn("hs",
-      graft.functions.HashFunctions.shingleHashesNative(col("toks"), shingleSize))
-    .filter(size(col("hs")) > 0)
-    .withColumn("sig",
-      graft.functions.HashFunctions.minHashSignatureNative(col("hs"), numHashes))
-    .select("id", "hs", "sig")
+      numHashes: Int, shingleSize: Int): DataFrame =
+    signed(df.select(col(idCol).as("id"), col(textCol).as("text")), numHashes,
+      shingled(shingleSize))
+
+  private def shingled(shingleSize: Int)(text: Column): Column =
+    graft.functions.HashFunctions.shingleHashesNative(
+      TextFunctions.tokens(TextFunctions.normalizeText(text)), shingleSize)
+
+  /** A frame of `text` plus key columns signed: the keys, the
+    * non-empty hash set `hs = hashes(text)` and its signature `sig`. */
+  private def signed(keyed: DataFrame, numHashes: Int, hashes: Column => Column): DataFrame =
+    keyed
+      .repartition(keyed.sparkSession.sparkContext.defaultParallelism)
+      .withColumn("hs", hashes(col("text")))
+      .filter(size(col("hs")) > 0)
+      .withColumn("sig",
+        graft.functions.HashFunctions.minHashSignatureNative(col("hs"), numHashes))
+      .select(keyed.columns.filter(_ != "text").map(col) :+ col("hs") :+ col("sig"): _*)
 
   /** [[minHashKernels]] behind the materialisation fence every
-    * text-computed LSH base shares: an eager `localCheckpoint` — ONE
-    * eager action (under AQE two Spark jobs: the repartition's shuffle
-    * stage, then the checkpoint itself) that runs the kernels once per
+    * text-computed LSH base shares, a [[graft.core.Fence]]: ONE eager
+    * action (under AQE two Spark jobs: the repartition's shuffle
+    * stage, then the fence itself) that runs the kernels once per
     * document. Each pairing reads a base many times — banding, the
     * hot-bucket count and anti-join on both self-join sides, both
     * payload joins — and an exchange is no fence: column pruning hands
@@ -337,7 +309,7 @@ object Dedup {
     * consumer. */
   private def minHashBase(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int, shingleSize: Int): DataFrame =
-    minHashKernels(df, textCol, idCol, numHashes, shingleSize).localCheckpoint(eager = true)
+    Fence(minHashKernels(df, textCol, idCol, numHashes, shingleSize), "minHashBase").df
 
   /** MinHash-LSH near-duplicate pairs.
     *
@@ -485,8 +457,8 @@ object Dedup {
     * across ingests ([[saveMinHashRef]] / [[minHashDedupAgainstRef]]);
     * the per-batch cost is the NEW side's narrow signature pass plus
     * the bucket join. Hot ref buckets are capped at `maxBucketSize`
-    * like the self-join path. Construction runs one eager
-    * [[minHashBase]] fence per corpus.
+    * like the self-join path. Construction runs the one fence of
+    * [[minHashCrossPairs]] over both corpora.
     *
     * Returns the surviving rows of `df`, schema unchanged.
     */
@@ -516,7 +488,8 @@ object Dedup {
     * [[graft.operators.Graph.connectedComponentsAgainst]]. Same scale
     * shape as the dedup form: id-only banded exchange, ref-side
     * hot-bucket cap, payloads re-joined per candidate. Construction
-    * runs one eager [[minHashBase]] fence per corpus. */
+    * runs ONE eager action (two jobs under AQE): both corpora's
+    * kernels behind one fence over a side-tagged union. */
   def minHashCrossPairs(
       df: DataFrame,
       ref: DataFrame,
@@ -528,9 +501,19 @@ object Dedup {
       threshold: Double = 0.7,
       maxBucketSize: Int = 1000): DataFrame = {
     val rows = rowsPerBand(numHashes, bands)
-    crossVerifiedPairs(
-      minHashBase(df, textCol, idCol, numHashes, shingleSize),
-      minHashBase(ref, textCol, idCol, numHashes, shingleSize),
+    // each side's id in its own column, so each keeps its own type;
+    // the fence drops the union's constraints, so no filter inferred
+    // from them re-runs a kernel above it
+    def idType(d: DataFrame) = d.select(col(idCol)).schema.head.dataType
+    def tagged(d: DataFrame, isRef: Boolean) = d.select(
+      (if (isRef) lit(null).cast(idType(df)) else col(idCol)).as("id_n"),
+      (if (isRef) col(idCol) else lit(null).cast(idType(ref))).as("id_r"),
+      lit(isRef).as("is_ref"), col(textCol).as("text"))
+    val both = Fence(signed(tagged(df, isRef = false).unionByName(tagged(ref, isRef = true)),
+      numHashes, shingled(shingleSize)), "minHashCrossPairs").df
+    def side(isRef: Boolean, id: String) = both.filter(col("is_ref") === isRef)
+      .select(col(id).as("id"), col("hs"), col("sig"))
+    crossVerifiedPairs(side(isRef = false, "id_n"), side(isRef = true, "id_r"),
       bands, rows, threshold, maxBucketSize)
   }
 
@@ -677,8 +660,8 @@ object Dedup {
   }
 
   /** (id, sim) fingerprints of a text corpus under `fingerprint` (a
-    * token-hash-array kernel), behind the eager-checkpoint fence of
-    * [[minHashBase]]: ONE action fingerprints each document once, and
+    * token-hash-array kernel), behind the fence of [[minHashBase]]:
+    * ONE action fingerprints each document once, and
     * banding, the hot-bucket count and anti-join and both payload
     * re-joins read the checkpoint. */
   private def simHashBase(
@@ -690,7 +673,7 @@ object Dedup {
     .withColumn("th", graft.functions.HashFunctions.tokenHashesNative(col("toks")))
     .withColumn("sim", fingerprint(col("th")))
     .select("id", "sim")
-    .localCheckpoint(eager = true)
+    .transform(Fence(_, "simHashBase").df)
 
   /** Band-bucket array for a 64-bit SimHash fingerprint under the
     * block-combination index of [[simHashPairs]]: element i is band i's
@@ -935,17 +918,9 @@ object Dedup {
       bands: Int = 12,
       maxBucketSize: Int = 1000): DataFrame = {
     val rows = rowsPerBand(numHashes, bands)
-    val base = df
-      .select(col(idCol).as("id"),
-        TextFunctions.normalizeText(col(textCol)).as("norm"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("hs",
-        graft.functions.HashFunctions.ngramHashesNative(col("norm"), n))
-      .filter(size(col("hs")) > 0)
-      .withColumn("sig",
-        graft.functions.HashFunctions.minHashSignatureNative(col("hs"), numHashes))
-      .select("id", "hs", "sig")
-      .localCheckpoint(eager = true) // the kernel fence — see minHashBase
+    val base = Fence(signed(df.select(col(idCol).as("id"), col(textCol).as("text")),
+      numHashes, t => graft.functions.HashFunctions.ngramHashesNative(
+        TextFunctions.normalizeText(t), n)), "ngramJaccardNearDuplicates").df // see minHashBase
     // hash-set Jaccard == n-gram-set Jaccard up to 64-bit collisions
     verifiedPairsFromBase(base, bands, rows, threshold, maxBucketSize)
   }
@@ -1154,6 +1129,10 @@ object Dedup {
     * (bits/key ∝ log(1/fpp)); budget fpp ≈ targetDocRate / L for other
     * corpora.
     *
+    * Eager work: the eval count, the sizing collect; past
+    * `maxDriverGrams` a fence of the eval grams (its rows size the
+    * bloom) and the bloom build. Nothing is left cached.
+    *
     * REGIME RULE — applied AUTOMATICALLY (r16, three rungs; output
     * identical on every route):
     *  1. eval rows ≤ `graft.bloom.smallEvalDocs` (one narrow count):
@@ -1214,8 +1193,8 @@ object Dedup {
     // `maxDriverGrams`, the CollectLimit pattern Ivf.trainSample uses),
     // then a driver-built bloom and a local-relation verify side. An
     // eval corpus that overflows the bound falls back to the fully
-    // distributed build: cache the gram set once, count + bloom + join
-    // from the cache.
+    // distributed build: fence the gram set once (the fence counts it),
+    // then bloom + join from the fence.
     val spark = train.sparkSession
     val probeCollect = evalGramsDist.limit(maxDriverGrams + 1).collect()
     // evalGrams arrives broadcast-hinted on the small route; the
@@ -1258,14 +1237,12 @@ object Dedup {
       // explosion, and the bloom's candidate cut applies to real
       // exchange bytes — build the filter distributed and prefilter
       // each doc with ONE codegen'd in-row any-hit loop (no explode)
-      val cached = evalGramsDist
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nGrams = math.max(cached.count(), 1L)
+      val evalGrams = Fence(evalGramsDist, "bloomDecontaminate")
       val bloomBytes = graft.functions.BloomFunctions
-        .buildBloomBytes(cached, "__graft_g", nGrams, fpp)
+        .buildBloomBytes(evalGrams.df, "__graft_g", math.max(evalGrams.rows, 1L), fpp)
       val candidates = grams.filter(
         graft.functions.BloomFunctions.bloomAnyContain(col("__graft_gs"), bloomBytes))
-      verify(candidates, cached)
+      verify(candidates, evalGrams.df)
     }
   }
 
@@ -1347,8 +1324,9 @@ object Dedup {
     *
     * Scale notes: each round is a constant number of shuffles on node
     * id over the EDGE set only (two longs per edge, monotonically
-    * non-growing), not the whole corpus; lineage is cut per round via
-    * localCheckpoint. The pair graph is usually TINY relative to the
+    * non-growing), not the whole corpus; lineage is cut per round by a
+    * [[graft.core.Fence]], whose row count is the round's edge count.
+    * The pair graph is usually TINY relative to the
     * corpus (it only holds near-duplicate ids), so — like a join
     * picking broadcast under a size threshold — graphs of at most
     * `localMaxEdges` distinct edges are union-found driver-side instead
@@ -1356,6 +1334,8 @@ object Dedup {
     * at most `localMaxEdges + 1` canonical edges decides the path and,
     * when it fits, is the whole input (a small graph costs the collect's
     * jobs and nothing else). Both paths produce identical labels.
+    * Eager work: the probe collect; past `localMaxEdges` a fence of
+    * the edges, then per round a fence and a set-difference job.
     */
   def duplicateClusters(
       pairs: DataFrame,
@@ -1377,11 +1357,12 @@ object Dedup {
       return spark.createDataFrame(spark.sparkContext.parallelize(localComponents(
         probe.map(r => (r.getLong(0), r.getLong(1)))).toSeq)).toDF("id", "cluster_id")
     }
-    var edges = canon.localCheckpoint(eager = true)
+    val fenced = Fence(canon, "duplicateClusters")
+    var edges = fenced.df
     val allIds = edges.select(col("u").as("id"))
       .union(edges.select(col("v").as("id")))
       .distinct()
-    var edgeCount = edges.count()
+    var edgeCount = fenced.rows
     var converged = edgeCount == 0
     var iter = 0
     // both star contractions need "the minimum of each centre's closed
@@ -1409,20 +1390,18 @@ object Dedup {
       // to the minimum of that closed neighbourhood — same single window
       // exchange, both output row kinds emitted in one pass
       val withM = ls.select(col("u"), col("v"), min(col("v")).over(wU).as("m"))
-      val ss = withM.select(explode(array(
+      val ss = Fence(withM.select(explode(array(
           struct(col("v").as("u"), col("m").as("v")),
           struct(col("u").as("u"), col("m").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(eager = true)
+        .distinct(), "duplicateClusters.round")
       // fixpoint = edge set unchanged (both sides are distinct sets, so
       // equal count + empty one-way difference ⇒ equality)
-      val newCount = ss.count()
-      converged = newCount == edgeCount &&
-        ss.except(edges).limit(1).count() == 0
-      edges = ss
-      edgeCount = newCount
+      converged = ss.rows == edgeCount &&
+        ss.df.except(edges).limit(1).count() == 0
+      edges = ss.df
+      edgeCount = ss.rows
       iter += 1
     }
     if (!converged)
@@ -1610,7 +1589,9 @@ object Dedup {
     * over a full corpus is never reachable.
     *
     * Output (one row): n_candidates, n_truth, n_hits,
-    * precision = hits/candidates, recall = hits/truth (round 6). */
+    * precision = hits/candidates, recall = hits/truth (round 6). Eager
+    * work: the size gate's bounded count, a fence each of the truth and
+    * the candidates (their rows are two outputs), a count of the hits. */
   def pairQuality(
       docs: DataFrame,
       candidates: DataFrame,
@@ -1640,13 +1621,13 @@ object Dedup {
       .join(ids.withColumnRenamed("__pq_id", "id_b"), Seq("id_b"), "left_semi")
     val spark = docs.sparkSession
     import spark.implicits._
-    // evaluation frames are sample-sized by contract; pin them so the
-    // three eager counts don't re-run the quadratic truth / the
-    // candidate self-join (each frame has two consumers otherwise)
-    val truthP = truth.localCheckpoint(true)
-    val candP = cand.localCheckpoint(true)
-    val hits = candP.join(truthP, Seq("id_a", "id_b"), "left_semi")
-    val (nc, nt, nh) = (candP.count(), truthP.count(), hits.count())
+    // evaluation frames are sample-sized by contract; fence them so the
+    // hit count doesn't re-run the quadratic truth / the candidate
+    // self-join, and read their sizes off the fences
+    val truthP = Fence(truth, "pairQuality.truth")
+    val candP = Fence(cand, "pairQuality.candidates")
+    val nh = candP.df.join(truthP.df, Seq("id_a", "id_b"), "left_semi").count()
+    val (nc, nt) = (candP.rows, truthP.rows)
     def ratio(num: Long, den: Long): Double =
       if (den == 0L) 1.0
       else BigDecimal(num.toDouble / den)

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fence
 import graft.text.TextFunctions.normTokens
 
 /** Cross-document EXACT substring deduplication — remove duplicated
@@ -230,10 +231,10 @@ object SubstringDedup {
     // per consumer (2×) and the window grain re-runs tokenize+explode
     // per consumer (up to 4×: the key probe, the vs-base semi, the
     // within-batch agg and its rejoin)
-    val newToks = tokFrame(newDocs, idCol, textCol)
-      .localCheckpoint(true) // consumed by the window grain + rebuild join
-    val newWindows = windowRows(newToks, k, hashKeys)
-      .localCheckpoint(true) // consumed by up to 4 subtrees below
+    val newToks = Fence(tokFrame(newDocs, idCol, textCol),
+      "dedupAgainstKeys.tokens").df // the window grain + rebuild join
+    val newWindows = Fence(windowRows(newToks, k, hashKeys),
+      "dedupAgainstKeys.windows").df // up to 4 subtrees below
     val newKeys = newWindows.select(col("__sd_w")).distinct()
     val matched = baseKeys
       .select(col(baseKeys.columns.head).as("__sd_w"))

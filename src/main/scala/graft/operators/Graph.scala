@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fence
+
 /** General graph operators over edge-list DataFrames — the public
   * facade over the large-star/small-star connected-components
   * machinery the dedup family runs internally
@@ -197,16 +199,14 @@ object Graph {
           s"${edges.schema(c).dataType.sql}, need STRING (integral ids " +
           "go straight to connectedComponents)")
     }
-    val mapping = edges.select(col(srcCol).as("id"))
+    val fenced = Fence(edges.select(col(srcCol).as("id"))
       .unionAll(edges.select(col(dstCol).as("id")))
       .filter(col("id").isNotNull)
       .distinct()
-      .select(col("id"), xxhash64(col("id")).as("__graft_h"))
-      .localCheckpoint(true) // consumed by the collision check + 2 joins
-    val counts = mapping.agg(
-      count(lit(1)).as("__graft_nid"),
-      countDistinct(col("__graft_h")).as("__graft_nh")).head()
-    requireNoHashCollision(counts.getLong(0), counts.getLong(1))
+      .select(col("id"), xxhash64(col("id")).as("__graft_h")),
+      "connectedComponentsStringIds") // collision check + 2 joins
+    val mapping = fenced.df
+    requireNoHashCollision(fenced.rows, mapping.select("__graft_h").distinct().count())
     val hashedEdges = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(xxhash64(col(srcCol)).as("__graft_src"),
@@ -277,7 +277,9 @@ object Graph {
     * to at most two keyed artifact exchanges instead of an over-budget
     * broadcast) — no historical-edge rescan either way. Returns the
     * UPDATED full (id, component) labeling, ready to persist as the
-    * next artifact. */
+    * next artifact. Eager work: five fences (both broadcast gates read
+    * a fence's rows), the probe collect and
+    * [[graft.dedup.Dedup.duplicateClusters]] on the label graph. */
   def connectedComponentsAgainst(
       artifact: DataFrame,
       newEdges: DataFrame,
@@ -337,20 +339,18 @@ object Graph {
         least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true) // consumed by the node set + 2 label joins
-    val endpoints = newE.select(col("u").as("id"))
+      .transform(Fence(_, "connectedComponentsAgainst.edges").df) // node set + 2 label joins
+    val fencedEndpoints = Fence(newE.select(col("u").as("id"))
       .unionAll(newE.select(col("v").as("id")))
-      .distinct()
-      .localCheckpoint(true) // consumed by the touched-slice join + lab
+      .distinct(), "connectedComponentsAgainst.endpoints") // touched-slice join + lab
+    val endpoints = fencedEndpoints.df
     // BOTH batch-sized broadcasts (the touched-slice lookup here, the
-    // relabel mapping below) share one crossover bound: mapping rows
-    // are <= endpoint rows, so gating only the relabel (the r16 fix)
-    // left any batch big enough to trip that fallback ALREADY paying
-    // an over-budget endpoints broadcast in this join (ADVICE r17).
-    // The count is metadata-cheap on the checkpointed endpoints.
+    // relabel mapping below) share one crossover bound, each gated on
+    // its own fence's row count (ADVICE r17: gating only the relabel
+    // left a big batch paying an over-budget endpoints broadcast here)
     val smallMapping = newEdges.sparkSession.conf
       .get(SmallMappingRowsConf, DefaultSmallMappingRows.toString).toLong
-    val endpointRows = endpoints.count()
+    val endpointRows = fencedEndpoints.rows
     // the TOUCHED slice of the artifact: a broadcast LEFT SEMI join
     // (endpoints are batch-bounded) — the artifact streams map-side
     // with NO exchange, and the output is batch-bounded. r17 fix: the
@@ -365,7 +365,7 @@ object Graph {
     val artTouched = art.join(
         if (endpointRows <= smallMapping) broadcast(endpoints) else endpoints,
         Seq("id"), "left_semi")
-      .localCheckpoint(true) // batch-bounded; consumed by lab + anti join
+      .transform(Fence(_, "connectedComponentsAgainst.touched").df) // lab + anti join
     // DEFAULT-ON self-row probe (r17 verdict): catches below-every-id
     // labelings the in-scan guard cannot. A canonical label is a
     // member id labeling itself, so the row (id = L, component = L)
@@ -459,34 +459,26 @@ object Graph {
     val lab = endpoints
       .join(artTouched, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("__graft_lab"))
-      .localCheckpoint(true) // consumed by both endpoint joins + new-node pass
+      .transform(Fence(_, "connectedComponentsAgainst.labels").df) // both endpoint joins + new nodes
     // contract each new edge to label grain and run CC on that graph —
     // batch-sized: intra-component edges become dropped self-loops
     val labEdges = newE
       .join(lab.select(col("id").as("u"), col("__graft_lab").as("id_a")), Seq("u"))
       .join(lab.select(col("id").as("v"), col("__graft_lab").as("id_b")), Seq("v"))
       .select(col("id_a"), col("id_b"))
-    val mapping = graft.dedup.Dedup
+    val fencedMapping = Fence(graft.dedup.Dedup
       .duplicateClusters(labEdges, maxIter, localMaxEdges)
-      .select(col("id").as("component"), col("cluster_id").as("__graft_newc"))
-      .localCheckpoint(true) // consumed by the size gate + both relabels
+      .select(col("id").as("component"), col("cluster_id").as("__graft_newc")),
+      "connectedComponentsAgainst.mapping") // both relabels
+    val mapping = fencedMapping.df
     // relabel-join crossover (ADVICE r16: the broadcast was unbounded
     // in principle): the mapping is batch-bounded for normal ingests —
     // broadcast it — but a batch touching more components than the
     // conf'd bound falls back to a shuffle join on `component` instead
-    // of forcing an over-budget broadcast. r19 (r18 verdict 6d): ONE
-    // count serves both gates in the normal regime — mapping rows are
-    // one per distinct node of the label graph, label-graph nodes are
-    // provisional labels of endpoints, and provisional labels are an
-    // image of the endpoint set, so |mapping| <= endpointRows always;
-    // endpointRows within the bound therefore proves the mapping is
-    // too, and the mapping.count() job runs ONLY on the pathological
-    // path (where it can still rescue a small mapping under a huge
-    // batch). conf=0 still forces both shuffle fallbacks.
+    // of forcing an over-budget broadcast. conf=0 still forces both
+    // shuffle fallbacks.
     val joinMapping =
-      if (endpointRows <= smallMapping || mapping.count() <= smallMapping)
-        broadcast(mapping)
-      else mapping
+      if (fencedMapping.rows <= smallMapping) broadcast(mapping) else mapping
     // ONE relabel pass over the artifact: untouched components miss
     // the batch-bounded mapping and keep their label
     val updatedOld = art.join(joinMapping, Seq("component"), "left")

@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fence
+
 /** Product quantization (PQ) for embedding similarity at corpus scales
   * where raw vectors are too wide to scan — the compression half of
   * the FAISS IVF-PQ recipe ([[Ivf]] is the routing half; compose them
@@ -177,7 +179,7 @@ object Pq {
       .select(col(idCol).as(queryIdCol),
         graft.functions.HashFunctions.pqLutNative(
           col(vecCol), codebooks).as("__lut"))
-      .localCheckpoint(true)
+      .transform(Fence(_, "adcTopK.lut").df)
     val scored = broadcast(withLut).crossJoin(encoded)
       .filter(col(queryIdCol) =!= col("id"))
       .select(col(queryIdCol),
@@ -356,7 +358,7 @@ object Pq {
       .select(col(queryIdCol), col("cell"),
         graft.functions.HashFunctions.pqLutNative(col("q_vec"), codebooks)
           .as("__lut"))
-      .localCheckpoint(true)
+      .transform(Fence(_, "ivfPqSearch.probes").df)
     val toScan =
       if (!pruneCells) encoded
       else {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Fence
+
 /** Similarity search over embedding columns (Array[Float]).
   *
   * Vector math is expressed with higher-order Catalyst functions
@@ -149,7 +151,7 @@ object Similarity {
     val cand = candidates.select(col(queryIdCol),
         col("corpus_id").cast("long").as("corpus_id"),
         col("rel").cast("double").as("rel"))
-      .localCheckpoint(true) // consumed by the bound check + every step
+      .transform(Fence(_, "mmrRerank.candidates").df) // the bound check + every step
     // max/sum over an empty frame yield one null cell, not zero rows —
     // read them as Options so an empty candidate set returns an empty
     // result instead of an NPE. The same pass counts null ids/rels:
@@ -233,7 +235,7 @@ object Similarity {
       .select(col(s"a.$queryIdCol").as(queryIdCol),
         col("a.corpus_id").as("id_lo"), col("b.corpus_id").as("id_hi"),
         cosine(col("a.__v"), col("b.__v")).as("psim"))
-      .localCheckpoint(true) // id-grain, consumed by every greedy step
+      .transform(Fence(_, "mmrRerank.pairs").df) // id-grain, read by every greedy step
     val wPick = Window.partitionBy(queryIdCol)
       .orderBy(col("__score").desc, col("corpus_id"))
     var selected = cand
@@ -242,7 +244,7 @@ object Similarity {
       .filter(col("__rn") === 1)
       .select(col(queryIdCol), col("corpus_id"), lit(1).as("rank"),
         col("__score").as("mmr_score"))
-      .localCheckpoint(true)
+      .transform(Fence(_, "mmrRerank.step").df)
     for (step <- 2 to k) {
       val selIds = selected.select(col(queryIdCol), col("corpus_id").as("__sel"))
       val remaining = cand.join(selIds
@@ -267,7 +269,7 @@ object Similarity {
         .filter(col("__rn") === 1)
         .select(col(queryIdCol), col("corpus_id"), lit(step).as("rank"),
           col("__score").as("mmr_score"))
-      selected = selected.unionByName(pick).localCheckpoint(true)
+      selected = Fence(selected.unionByName(pick), "mmrRerank.step").df
     }
     selected
   }
@@ -399,7 +401,7 @@ object Similarity {
     * side table to ship to executors).
     */
   def hyperplaneBucket(vec: Column, dim: Int, numPlanes: Int = 16): Column =
-    hyperplaneBucketSeeded(vec, dim, numPlanes, seed = 0)
+    graft.functions.HashFunctions.hyperplaneBucketNative(vec, dim, numPlanes, seed = 0)
 
   /** ANN near-duplicate / neighbor candidates via hyperplane LSH:
     * vectors sharing a bucket are scored with exact cosine. Multi-probe
@@ -422,7 +424,8 @@ object Similarity {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val tables = (0 until numTables).map { t =>
       base.select(col("id"), lit(t).as("table"),
-        hyperplaneBucketSeeded(col("vec"), dim, numPlanes, seed = t).as("bucket"))
+        graft.functions.HashFunctions.hyperplaneBucketNative(col("vec"), dim, numPlanes, seed = t)
+          .as("bucket"))
     }
     val banded = tables.reduce(_ union _)
     val pairs = banded.as("l")
@@ -570,32 +573,5 @@ object Similarity {
       .select(col(queryIdCol), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col(queryIdCol), col("t.corpusId").as("corpus_id"),
         col("t.sim").as("sim"), (col("pos") + 1).cast("int").as("rank"))
-  }
-
-  /** Native codegen'd kernel; the HOF formulation it replaced is kept
-    * below for the bit-for-bit equivalence test. */
-  private def hyperplaneBucketSeeded(
-      vec: Column, dim: Int, numPlanes: Int, seed: Int): Column =
-    graft.functions.HashFunctions.hyperplaneBucketNative(vec, dim, numPlanes, seed)
-
-  /** Interpreted reference formulation of [[hyperplaneBucketSeeded]] —
-    * do not use in hot paths; exists so tests can pin the native
-    * kernel's derivation. */
-  private[similarity] def hyperplaneBucketSeededHof(
-      vec: Column, dim: Int, numPlanes: Int, seed: Int): Column = {
-    def component(p: Column, d: Column): Column =
-      (xxhash64(lit(seed), p, d).cast("double") / lit(Long.MaxValue.toDouble))
-    val planeIdx = sequence(lit(0), lit(numPlanes - 1))
-    aggregate(
-      planeIdx,
-      lit(0L),
-      (acc, p) => {
-        val d = aggregate(
-          zip_with(vec, sequence(lit(0), lit(dim - 1)),
-            (x, i) => x.cast("double") * component(p, i)),
-          lit(0.0), (a, v) => a + v)
-        call_function("shiftleft", acc, lit(1)) +
-          when(d >= 0, 1L).otherwise(0L)
-      })
   }
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
+import graft.core.Fence
+
 /** Structured Streaming surface (SURVEY.md §2.11 — an extension beyond
   * the reference, which has no streaming).
   *
@@ -865,7 +867,8 @@ object Streaming {
       case Left(bandedRows) =>
         val survivors = distributedSurvivors(bandedBatch, bandedRows, storeDir,
           batchId, maxHamming, maxBucketSize, exists)
-        if (exists) (survivors, true) else (survivors.localCheckpoint(true), false)
+        if (exists) (survivors, true)
+        else (Fence(survivors, "dedupBatchAgainstStore.survivors").df, false)
     }
   }
 
@@ -1027,7 +1030,7 @@ object Streaming {
       bandedBatch: DataFrame, bandedRows: Long, storeDir: String,
       batchId: Long, maxHamming: Int, maxBucketSize: Int,
       exists: Boolean): DataFrame = {
-    val fenced = bandedBatch.localCheckpoint(true)
+    val fenced = Fence(bandedBatch, "dedupBatchAgainstStore.banded").df
     // hot buckets are flagged, not dropped: the store probe must still
     // see every row. A bucket holds at most one row per batch doc, so a
     // batch of at most `maxBucketSize` docs has none; a larger one is
@@ -1038,7 +1041,7 @@ object Streaming {
       .fold(fenced.withColumn("hot", lit(false)))(hot =>
         fenced.join(hot.withColumn("hot", lit(true)),
           Seq("band", "bucket"), "left").na.fill(false, Seq("hot"))
-          .localCheckpoint(true))
+          .transform(Fence(_, "dedupBatchAgainstStore.hot").df))
     // the cap applies BEFORE the join: a hot row never probes, so a
     // bucket of k equal fingerprints costs no k² joined rows. Bucket-mates
     // share the flag, so a cold probe row only ever meets cold build rows
@@ -1095,12 +1098,45 @@ object Streaming {
     // write overwrites, so only it is materialised first; the driver
     // route's survivors are a local frame, and a store-less batch's
     // are checkpointed already
-    graft.core.DataFrameOps.smartCoalesce(
-        if (readsStore) survivors.localCheckpoint(eager = true) else survivors)
+    writeBatchPartition(
+      if (readsStore) Fence(survivors, "appendBatchToFullRecallStore").df else survivors,
+      storeDir, batchId)
+  }
+
+  /** Overwrite `dir`'s `batch_id=<batchId>` partition with `df`. */
+  private def writeBatchPartition(df: DataFrame, dir: String, batchId: Long): Unit =
+    graft.core.DataFrameOps.smartCoalesce(df)
       .withColumn("batch_id", lit(batchId))
       .write.partitionBy("batch_id")
       .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(storeDir)
+      .mode("overwrite").parquet(dir)
+
+  /** The fold both store compactions share: the distinct `cols` of
+    * `store`'s partitions up to `upToBatchId`, fenced (the write must
+    * not read its target), rewritten as partition `upToBatchId`; then
+    * the folded partitions below it are deleted. No-op without one. */
+  private def foldBatches(spark: SparkSession, storeDir: String, upToBatchId: Long,
+      op: String, store: => DataFrame, cols: Seq[String]): Unit = {
+    require(upToBatchId >= 0, s"$op: upToBatchId must be >= 0, got $upToBatchId")
+    val storePath = new Path(storeDir)
+    val fs = existingFs(spark, storePath) match {
+      case Some(fs) => fs
+      case None => return
+    }
+    val toDelete = fs.listStatus(storePath).iterator
+      .filter(_.isDirectory)
+      .filter { st =>
+        val n = st.getPath.getName
+        n.startsWith("batch_id=") && {
+          val v = n.stripPrefix("batch_id=")
+          v.forall(_.isDigit) && v.toLong < upToBatchId
+        }
+      }.toSeq
+    // nothing below the bound: a no-op beats rewriting one partition
+    if (toDelete.isEmpty) return
+    writeBatchPartition(Fence(store.filter(col("batch_id") <= upToBatchId)
+      .select(cols.map(col): _*).distinct(), op).df, storeDir, upToBatchId)
+    toDelete.foreach(st => fs.delete(st.getPath, true))
   }
 
   /** FULL-RECALL streaming near-duplicate dedup: the contractual-recall
@@ -1232,36 +1268,10 @@ object Streaming {
     * crash window degrades survivor COUNTS read from the store, never
     * dedup verdicts. */
   def compactFullRecallStore(
-      spark: SparkSession, storeDir: String, upToBatchId: Long): Unit = {
-    require(upToBatchId >= 0,
-      s"compactFullRecallStore: upToBatchId must be >= 0, got $upToBatchId")
-    val storePath = new Path(storeDir)
-    val fs = existingFs(spark, storePath) match {
-      case Some(fs) => fs
-      case None => return
-    }
-    val toDelete = fs.listStatus(storePath).iterator
-      .filter(_.isDirectory)
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("batch_id=") && {
-          val v = n.stripPrefix("batch_id=")
-          v.forall(_.isDigit) && v.toLong < upToBatchId
-        }
-      }.toSeq
-    // nothing below the bound: a no-op beats rewriting one partition
-    if (toDelete.isEmpty) return
-    val compacted = readFullRecallStore(spark, storeDir)
-      .filter(col("batch_id") <= upToBatchId)
-      .select("id", "sim").distinct() // heals a crashed prior fold's copies
-      .localCheckpoint(eager = true)  // the write must not read its target
-    graft.core.DataFrameOps.smartCoalesce(compacted)
-      .withColumn("batch_id", lit(upToBatchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(storeDir)
-    toDelete.foreach(st => fs.delete(st.getPath, true))
-  }
+      spark: SparkSession, storeDir: String, upToBatchId: Long): Unit =
+    // the distinct heals a crashed prior fold's copies
+    foldBatches(spark, storeDir, upToBatchId, "compactFullRecallStore",
+      readFullRecallStore(spark, storeDir), Seq("id", "sim"))
 
   // ------- streaming EXACT-SUBSTRING (span) dedup -------
   //
@@ -1348,19 +1358,9 @@ object Streaming {
     val (cleanedRaw, batchKeys) = graft.dedup.SubstringDedup
       .dedupAgainstKeysWithBatchKeys(storeKeys, batch, idCol, textCol, k,
         withinBatch = true, hashKeys = true)
-    val cleaned = cleanedRaw
-      .localCheckpoint(eager = true) // the writes must not re-run the clean
-    graft.core.DataFrameOps.smartCoalesce(cleaned)
-      .withColumn("batch_id", lit(batchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(outDir)
-    val keys = batchKeys.localCheckpoint(eager = true)
-    graft.core.DataFrameOps.smartCoalesce(keys)
-      .withColumn("batch_id", lit(batchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(storeDir)
+    // the writes must not re-run the clean
+    writeBatchPartition(Fence(cleanedRaw, "substringDedupBatch.cleaned").df, outDir, batchId)
+    writeBatchPartition(Fence(batchKeys, "substringDedupBatch.keys").df, storeDir, batchId)
   }
 
   /** Fold the window store's committed-batch partitions into one —
@@ -1372,35 +1372,10 @@ object Streaming {
     * (the checkpoint's committed bound — never the running batch) are
     * touched. */
   def compactSubstringStore(
-      spark: SparkSession, storeDir: String, upToBatchId: Long): Unit = {
-    require(upToBatchId >= 0,
-      s"compactSubstringStore: upToBatchId must be >= 0, got $upToBatchId")
-    val storePath = new Path(storeDir)
-    val fs = existingFs(spark, storePath) match {
-      case Some(fs) => fs
-      case None => return
-    }
-    val toDelete = fs.listStatus(storePath).iterator
-      .filter(_.isDirectory)
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("batch_id=") && {
-          val v = n.stripPrefix("batch_id=")
-          v.forall(_.isDigit) && v.toLong < upToBatchId
-        }
-      }.toSeq
-    if (toDelete.isEmpty) return
-    val compacted = readSubstringStore(spark, storeDir)
-      .filter(col("batch_id") <= upToBatchId)
-      .select("w").distinct() // cross-batch duplicate keys fold to one
-      .localCheckpoint(eager = true) // the write must not read its target
-    graft.core.DataFrameOps.smartCoalesce(compacted)
-      .withColumn("batch_id", lit(upToBatchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(storeDir)
-    toDelete.foreach(st => fs.delete(st.getPath, true))
-  }
+      spark: SparkSession, storeDir: String, upToBatchId: Long): Unit =
+    // the distinct folds keys recurring across batches to one
+    foldBatches(spark, storeDir, upToBatchId, "compactSubstringStore",
+      readSubstringStore(spark, storeDir), Seq("w"))
 
   /** Streaming exact-substring dedup: foreachBatch over
     * [[appendSubstringBatch]]. `docs` must carry `idCol` (unique

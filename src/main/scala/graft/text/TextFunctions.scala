@@ -162,8 +162,8 @@ object TextFunctions {
     * n-grams / total n-grams. High values flag boilerplate and looping
     * generation (one of the Gopher repetition rules). 0 for docs with
     * fewer than `n` tokens (they contribute one whole-doc gram) and for
-    * empty docs. `toks` must be a MATERIALISED token-array column (see
-    * [[graft.dedup.Dedup.shinglesFromTokens]] for why).
+    * empty docs. `toks` must be a MATERIALISED token-array column: a
+    * computed argument is re-evaluated on every lambda invocation.
     */
   def dupNgramFrac(toks: Column, n: Int = 3): Column = {
     val total = greatest(size(toks) - (n - 1), lit(1)).cast("double")

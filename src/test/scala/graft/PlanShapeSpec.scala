@@ -26,7 +26,10 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
-  /** Each LSH pair operator with the number of text corpora it fences. */
+  /** Each LSH pair operator with the number of checkpoint actions it
+    * runs: one per text corpus, except cross pairs, which fence both
+    * corpora in one action (a side-tagged union) — 2 before the fence
+    * dropped origin constraints. */
   private def lshOperators: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
     ("minHashNearDuplicates", 1,
       () => dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id")),
@@ -36,7 +39,7 @@ class PlanShapeSpec extends SparkTestBase {
       () => dedup.Dedup.simHashNearDuplicates(docs, "text", "doc_id", maxHamming = 6)),
     ("simHash128NearDuplicates", 1,
       () => dedup.Dedup.simHash128NearDuplicates(docs, "text", "doc_id")),
-    ("minHashCrossPairs", 2, () => dedup.Dedup.minHashCrossPairs(
+    ("minHashCrossPairs", 1, () => dedup.Dedup.minHashCrossPairs(
       docs.filter(col("doc_id") >= 100), docs.filter(col("doc_id") < 100),
       "text", "doc_id")))
 
@@ -53,10 +56,108 @@ class PlanShapeSpec extends SparkTestBase {
   test("building an LSH pair operator runs one checkpoint action per text corpus") {
     // one eager localCheckpoint per corpus; under AQE it is two jobs —
     // the leading repartition's shuffle stage, then the checkpoint
-    for ((name, corpora, build) <- lshOperators) {
+    for ((name, actions, build) <- lshOperators) {
       val m = observability.RunMetricsProbe.measureEager(spark)(build())
-      assert(m.jobs == 2 * corpora, s"$name: construction ran ${m.jobs} jobs")
+      assert(m.jobs == 2 * actions, s"$name: construction ran ${m.jobs} jobs")
     }
+  }
+
+  test("assignContiguousIds plans no exchange above its fence") {
+    // offsets come from the fence's per-partition counts: no shuffle on
+    // the partition id, no offsets aggregate, no broadcast join
+    val plan = operators.Ids.assignContiguousIds(docs, Seq("doc_id"))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"the ids plan must be narrow:\n$plan")
+  }
+
+  test("construction-time jobs of the fencing operators are pinned") {
+    // a fresh session: confs other specs leave set on the shared one
+    // (probe caps, crossover bounds) would move the counts
+    val s = spark.newSession()
+    def withConf[T](k: String, v: String)(body: => T): T = {
+      s.conf.set(k, v)
+      try body finally s.conf.unset(k)
+    }
+    val docs = s.range(200).toDF("doc_id")
+      .withColumn("text",
+        concat_ws(" ", lit("alpha beta gamma delta"), col("doc_id").cast("string")))
+    val chain = s.range(2000).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val chainCandidates = s.range(199).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val artifact = operators.Graph.connectedComponents(
+      s.range(100).select(col("id").as("a"), (col("id") + 1).as("b")), "a", "b")
+    val batchEdges = s.createDataFrame(Seq((100L, 150L), (150L, 151L), (300L, 301L)))
+      .toDF("a", "b")
+    val strEdges = s.createDataFrame(Seq(("a", "b"), ("b", "c"), ("x", "y"))).toDF("s", "d")
+    val evalDocs = docs.filter(col("doc_id") < 5)
+    val byGroup = docs.withColumn("g", col("doc_id") % 3)
+    val battles = s.createDataFrame(Seq(("m1", "m2", "a"), ("m2", "m3", "b"),
+      ("m1", "m3", "a"), ("m3", "m1", "tie"))).toDF("model_a", "model_b", "winner")
+    val rnd = new scala.util.Random(7L)
+    val vecs = s.createDataFrame((0 until 64).map(i =>
+      (i.toLong, Array.fill(4)(rnd.nextGaussian())))).toDF("id", "vec")
+    val candidates = similarity.Similarity.bruteForceTopK(
+        vecs.filter(col("id") >= 2), vecs.filter(col("id") < 2), "id", "vec", k = 5)
+      .select(col("query_id"), col("corpus_id"), col("sim").as("rel"))
+    val codebooks = similarity.Pq.trainCodebooks(vecs, "id", "vec", m = 2, k = 8)
+    val encoded = similarity.Pq.encode(vecs, "id", "vec", codebooks)
+    val baseKeys = dedup.SubstringDedup.windowKeys(docs.filter(col("doc_id") < 100),
+      "doc_id", "text", k = 3)
+    val rankPath = core.Quantiles.SmallInputRowsConf
+    // (operator, jobs, jobs before the one fence where it changed them,
+    // body), measured with AQE off: under AQE each shuffle stage is a
+    // job of its own and a join re-planned when a stage completes can
+    // drop a sibling stage, so counts move with stage timing
+    // (duplicateClusters read 87 and 75 jobs on one tree)
+    val table: Seq[(String, Int, Option[Int], () => Any)] = Seq(
+      ("minHashNearDuplicates", 1, None,
+        () => dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id")),
+      ("minHashCrossPairs", 1, Some(2), () => dedup.Dedup.minHashCrossPairs(
+        docs.filter(col("doc_id") >= 100), docs.filter(col("doc_id") < 100),
+        "text", "doc_id")),
+      ("minHashDedupAgainst", 1, Some(2), () => dedup.Dedup.minHashDedupAgainst(
+        docs.filter(col("doc_id") >= 100), docs.filter(col("doc_id") < 100),
+        "text", "doc_id")),
+      ("duplicateClusters", 38, Some(46),
+        () => dedup.Dedup.duplicateClusters(chain, localMaxEdges = 0)),
+      ("pairQuality", 7, Some(9),
+        () => dedup.Dedup.pairQuality(docs, chainCandidates, "text", "doc_id")),
+      ("bloomDecontaminate", 3, None, () => withConf(dedup.Dedup.BloomSmallEvalDocsConf, "0")(
+        dedup.Dedup.bloomDecontaminate(docs, evalDocs, "text", "doc_id", n = 3,
+          maxDriverGrams = 1))),
+      ("dedupSubstringsAgainstKeys", 2, None, () => dedup.SubstringDedup
+        .dedupSubstringsAgainstKeys(baseKeys, docs.filter(col("doc_id") >= 100),
+          "doc_id", "text", k = 3)),
+      ("assignContiguousIds", 2, None,
+        () => operators.Ids.assignContiguousIds(docs, Seq("doc_id"))),
+      ("assignGroupRanks", 2, None,
+        () => operators.Ids.assignGroupRanks(byGroup, Seq("g"), Seq("doc_id"))),
+      ("exactQuantiles", 2, Some(4), () => withConf(rankPath, "0")(
+        core.Quantiles.exactQuantiles(docs, "doc_id", Seq(0.1, 0.5)))),
+      ("exactInterpolatedQuantiles", 2, Some(4), () => withConf(rankPath, "0")(
+        core.Quantiles.exactInterpolatedQuantiles(docs, "doc_id", Seq(0.1, 0.5)))),
+      ("exactQuantilesPerGroup", 2, Some(4), () => withConf(rankPath, "0")(
+        core.Quantiles.exactQuantilesPerGroup(byGroup, Seq("g"), "doc_id", Seq(0.5)))),
+      ("connectedComponentsAgainst", 11, Some(10), () => operators.Graph
+        .connectedComponentsAgainst(artifact, batchEdges, "a", "b")),
+      ("connectedComponentsStringIds", 3, None,
+        () => operators.Graph.connectedComponentsStringIds(strEdges, "s", "d")),
+      ("mmrRerank", 18, Some(13), () => withConf(similarity.Similarity.MmrSmallPoolRowsConf, "0")(
+        similarity.Similarity.mmrRerank(candidates, vecs, "id", "vec", k = 3))),
+      ("adcTopK", 1, None, () => similarity.Pq.adcTopK(
+        encoded, vecs.filter(col("id") < 2), "id", "vec", codebooks, k = 3)),
+      ("bradleyTerryScores", 35, Some(26),
+        () => core.Preferences.bradleyTerryScores(battles, "model_a", "model_b", "winner")))
+    val measured = withConf("spark.sql.adaptive.enabled", "false") {
+      table.map { case (name, _, _, build) =>
+        name -> observability.RunMetricsProbe.measureEager(s)(build()).jobs
+      }
+    }
+    info(measured.map { case (n, j) => s"$n=$j" }.mkString(", "))
+    val off = table.zip(measured).collect {
+      case ((name, want, parent, _), (_, got)) if got != want =>
+        s"$name: $got jobs, pinned $want" + parent.fold("")(p => s" (before the fence: $p)")
+    }
+    assert(off.isEmpty, off.mkString("\n"))
   }
 
   test("LSH hot-bucket cap forces no broadcast: the planner picks the anti join") {

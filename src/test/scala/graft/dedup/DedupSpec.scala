@@ -28,20 +28,20 @@ class DedupSpec extends SparkTestBase {
 
   test("shingles produces distinct k-token shingles; short docs collapse") {
     val s = Seq("a b c d").toDF("t")
-      .select(Dedup.shingles($"t", 3).as("sh")).as[Seq[String]].head()
+      .select(MinHashHof.shingles($"t", 3).as("sh")).as[Seq[String]].head()
     assert(s.toSet == Set("a b c", "b c d"))
     val short = Seq("a b").toDF("t")
-      .select(Dedup.shingles($"t", 3).as("sh")).as[Seq[String]].head()
+      .select(MinHashHof.shingles($"t", 3).as("sh")).as[Seq[String]].head()
     assert(short == Seq("a b"))
   }
 
   test("minHashSignature has requested length and is deterministic") {
     val sig = Seq("x y z w v").toDF("t")
-      .select(Dedup.minHashSignature(Dedup.shingles($"t", 2), 16).as("s"))
+      .select(MinHashHof.minHashSignature(MinHashHof.shingles($"t", 2), 16).as("s"))
       .as[Seq[Long]].head()
     assert(sig.length == 16)
     val sig2 = Seq("x y z w v").toDF("t")
-      .select(Dedup.minHashSignature(Dedup.shingles($"t", 2), 16).as("s"))
+      .select(MinHashHof.minHashSignature(MinHashHof.shingles($"t", 2), 16).as("s"))
       .as[Seq[Long]].head()
     assert(sig == sig2)
   }

@@ -208,4 +208,23 @@ class BloomExpressionsSpec extends SparkTestBase {
         maxDriverGrams = 1).count() == 40)
     } finally spark.conf.unset(Dedup.BloomSmallEvalDocsConf)
   }
+
+  test("bloomDecontaminate's distributed route leaves no cache entry behind") {
+    val train = Seq.tabulate(40)(i =>
+      (i.toLong, s"clean text piece u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f" +
+        (if (i == 7) " held out passage one two three four" else ""))).toDF("id", "text")
+    val evalDf = Seq((9000L, "the held out passage one two three four five")).toDF("id", "text")
+    val exact = Dedup.decontaminate(train, evalDf, "text", "id", n = 5)
+      .select("id").as[Long].collect().toSet
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    spark.conf.set(Dedup.BloomSmallEvalDocsConf, "0")
+    try {
+      val out = Dedup.bloomDecontaminate(train, evalDf, "text", "id", n = 5,
+        maxDriverGrams = 1).select("id").as[Long].collect().toSet
+      assert(out == exact && !out.contains(7L) && out.size == 39)
+      assert(cache.isEmpty, "a later query with a matching plan would read a stale cache")
+    } finally spark.conf.unset(Dedup.BloomSmallEvalDocsConf)
+  }
 }

@@ -19,7 +19,7 @@ class HashExpressionsSpec extends SparkTestBase {
   test("native MinHash signature equals the HOF formulation bit-for-bit") {
     val both = hashed
       .withColumn("native", HashFunctions.minHashSignatureNative($"th", 16))
-      .withColumn("hof", Dedup.minHashSignatureFromHashes($"th", 16))
+      .withColumn("hof", graft.dedup.MinHashHof.minHashSignatureFromHashes($"th", 16))
       .filter(size($"th") > 0)
     val rows = both.select("id", "native", "hof").collect()
     assert(rows.nonEmpty)

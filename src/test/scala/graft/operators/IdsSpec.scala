@@ -26,7 +26,9 @@ class IdsSpec extends SparkTestBase {
   test("naive and scalable formulations agree") {
     val df = spark.range(500).select((col("id") * 13 % 500).as("k")).distinct()
     val fast = Ids.assignContiguousIds(df, Seq("k"), numPartitions = Some(5))
-    val naive = Ids.assignContiguousIdsNaive(df, Seq("k"))
+    // the single-partition formulation assignContiguousIds replaces
+    val naive = df.withColumn("row_id",
+      row_number().over(org.apache.spark.sql.expressions.Window.orderBy("k")) - 1)
     assertDfEqual(fast.select("k", "row_id"), naive.select("k", "row_id"))
   }
 

@@ -81,7 +81,7 @@ class SimilaritySpec extends SparkTestBase {
       graft.functions.HashFunctions.hyperplaneBucketNative($"embedding", 3, 8, 5).as("b"))
       .as[Long].collect().toSeq
     val hof = vecs.select(
-      Similarity.hyperplaneBucketSeededHof($"embedding", 3, 8, 5).as("b"))
+      HyperplaneReference.hyperplaneBucketSeededHof($"embedding", 3, 8, 5).as("b"))
       .as[Long].collect().toSeq
     assert(native == hof)
   }
@@ -112,7 +112,7 @@ class SimilaritySpec extends SparkTestBase {
       graft.functions.HashFunctions.hyperplaneBucketNative($"v", 5, 8, 5).as("b"))
       .as[Long].head()
     val hb = short.select(
-      Similarity.hyperplaneBucketSeededHof($"v", 5, 8, 5).as("b"))
+      HyperplaneReference.hyperplaneBucketSeededHof($"v", 5, 8, 5).as("b"))
       .as[Long].head()
     assert(nb == 0L && nb == hb)
     // mismatched-length cosine: HOF dot null-poisons → NULL; native too
