@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Round-artifact plan dumper: writes the FULL `explain("formatted")`
   * output of named declared queries to `plans/<tag>/<query>_<suffix>.txt`
-  * so before/after plan claims in OPTIMIZATION_r*.md are checkable
-  * without running Spark.
+  * under the working directory (run it from the checkout root), so
+  * before/after plan claims in OPTIMIZATION_r*.md are checkable without
+  * running Spark.
   *
   * Usage: `sbt "runMain graft.PlanDump r19 before q_a,q_b [sfDir]"`.
   * The session mirrors graft.Bench's (same shuffle partitions rule,
@@ -25,11 +26,11 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/plandump_warehouse")
+      .config("spark.sql.warehouse.dir", "target/plandump_warehouse")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val outDir = Paths.get(s"/root/repo/plans/$tag")
+    val outDir = Paths.get("plans", tag)
     Files.createDirectories(outDir)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -4,10 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan-audit dump: writes `PLANS.md` with `explain("formatted")` output
-  * for the headline queries, with the scale-relevant observations
-  * annotated. Regenerate after operator changes:
-  * `sbt "runMain graft.Plans /root/testdata/sf0.01"`.
+/** Plan-audit dump: writes `PLANS.md` in the working directory with
+  * `explain("formatted")` output for the headline queries, with the
+  * scale-relevant observations annotated. Regenerate after operator
+  * changes from the checkout root: `sbt "runMain graft.Plans <sf0.01 dir>"`.
   */
 object Plans {
 
@@ -65,7 +65,7 @@ object Plans {
     "q_semantic_decontaminate" ->
       "Embedding-grain decontamination: BroadcastNestedLoopJoin LeftAnti with the codegen'd cosine kernel in the join condition — the corpus side is scan -> join with NO exchange anywhere (DedupSpec pins BNLJ-no-SMJ); each row short-circuits on its first contaminated hit.",
     "q_exact_quantile" ->
-      "Exact global quantiles, SCALE regime pinned for this audit (the r16 adaptive router sends inputs <= graft.quantiles.smallInputRows through one sorted-array aggregate — bit-identical values, which is what sf0.01 would take): the frame is projected to the VALUE column before the one RangePartitioning exchange; parallel local sorts + the partition-offset rank join (broadcast offsets frame at partition-count rows); the naive raw pair sorts the corpus through a single-partition Window.",
+      "Exact global quantiles, SCALE regime pinned for this audit (the adaptive router sends inputs <= graft.quantiles.smallInputRows through one sorted-array aggregate — bit-identical values, which is what sf0.01 would take): only the VALUE column is range-partitioned and sorted, inside the one fence job (the Scan ExistingRDD leaf); ids are partition offsets + position in a narrow Project. Each q's two lookup ranks (floor and ceil of q*(n-1), n read off the fence) are a LocalTableScan + Generate subplan that BROADCASTS into a BroadcastHashJoin on the rank, so the corpus side has no exchange; the only exchange above the fence is the q-grain aggregate that takes the lower value. The same body, grouped, serves q_group_quantile; the naive raw pair sorts the corpus through a single-partition Window.",
     "q_chunk" ->
       "Document chunking: scan -> one narrow Project (sequence + slice inside transform) -> Generate(posexplode) -> Project, ZERO exchanges — chunking pipelines with the parquet scan at any corpus size.",
     "q_scd2" ->
@@ -75,7 +75,7 @@ object Plans {
     "q_funnel" ->
       "Ordered-step funnel: ONE ObjectHashAggregate per entity (sorted event list) -> the step fold is a single codegen'd aggregate-HOF projection -> a 1-row global reduce. No per-step joins, no repeated scans of the log.",
     "q_assign_ids" ->
-      "Contiguous ids: range exchange (checkpoint-fenced) + one hashpartitioning(pid) exchange feed the PARALLEL per-partition Sort+Window; the offsets branch partial-aggregates to numPartitions rows before its exchange, and the only Exchange SinglePartition in the plan is the window over that numPartitions-row offsets frame (32 rows) — the corpus itself never passes through one task, which is what the naive global row_number does (measured 3.4x slower at 20M rows, and a straggler/OOM wall at cluster scale — SCALE.md).",
+      "Contiguous ids: the range exchange and the sort within partitions run inside the fence job (the Scan ExistingRDD leaf); each row's id is its partition's offset (a literal array built from the fence's per-partition row counts) plus its position, in ONE narrow Project — zero exchanges above the fence (PlanShapeSpec pins it). The corpus never passes through one task, which is what the naive global row_number does (measured 3.4x slower at 20M rows, and a straggler/OOM wall at cluster scale — SCALE.md).",
     "q_zorder" ->
       "Z-ordered read-back: the 2-D filter sits as PushedFilters on the scan of the Z-clustered files; row-group min/max stats stay tight in BOTH clustered dimensions (measured 34x byte cut vs unsorted, SCALE.md zorder_bytes).",
     "q_expectations" ->
@@ -91,7 +91,7 @@ object Plans {
     "q_join_cardinality" ->
       "Join pre-flight: both corpora reduce to per-key counts (partial/final HashAggregate) BEFORE the diagnosis join — the join operates at key cardinality, and TakeOrderedAndProject bounds the answer; the quadratic join being diagnosed never runs.",
     "q_qcut" ->
-      "Equi-depth bucketing, SCALE regime pinned for this audit (below graft.quantiles.smallInputRows the r16 router swaps the bounds subplan for the grouped Percentile aggregate — safe there because the total row count caps every group's buffer): the exact interior bounds come from the range-exchange rank machinery (no value-buffering percentile aggregate in the plan — a billion-row group would OOM its one buffer), reassembled to a (numBuckets-1)-element array broadcast back over the corpus; bucket assignment is a narrow array-fold Project. No Window over the corpus — the ntile formulation would sort it through one partition per group.",
+      "Equi-depth bucketing, SCALE regime pinned for this audit (below graft.quantiles.smallInputRows the router swaps the bounds subplan for one Percentile aggregate per group — safe there because the total row count caps every group's buffer): the exact interior bounds come from the same rank body as q_exact_quantile — range-partitioned sorted values behind the fence (Scan ExistingRDD), the broadcast lookup ranks in a BroadcastHashJoin, a q-grain aggregate interpolating the two values — with no value-buffering percentile aggregate in the plan (a billion-row group would OOM its one buffer). The bounds reassemble to one (numBuckets-1)-element array (ObjectHashAggregate; no group keys here, so one row) that BROADCASTS back over the corpus scan in a BroadcastNestedLoopJoin LeftOuter; bucket assignment is a narrow array-fold Project. No Window over the corpus — the ntile formulation would sort it through one partition per group.",
     "q_topk_group" ->
       "Per-group top-k rows: a per-partition bounded-heap prune (MapPartitions, O(k x groups) memory) feeds the exact rank window, so the window sorts <= k x partitions x groups rows instead of the corpus — the bare-window formulation serialises each whole group through one task.",
     "q_argmax_group" ->
@@ -157,7 +157,7 @@ object Plans {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/plans_warehouse")
+      .config("spark.sql.warehouse.dir", "target/plans_warehouse")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // pin the adaptive-crossover operators to their SCALE regime:
       // this audit documents the plans that must survive 100x, not the
@@ -187,7 +187,7 @@ object Plans {
       }
       sb.append(s"\n## $name\n\n$note\n\n```\n$cut\n```\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${headline.size} queries)")
     spark.stop()
   }

@@ -1341,19 +1341,19 @@ object SparkEntry {
       // per-group exact quantiles via the group-grain partition-offset
       // pattern (assignGroupRanks): a huge group spans partitions
       // instead of sorting through one task
-      Quantiles.exactQuantilesPerGroup(t(s, d, "lineitem"),
-        Seq("l_returnflag"), "l_extendedprice", Seq(0.5, 0.9))),
+      Quantiles.exactQuantiles(t(s, d, "lineitem"),
+        "l_extendedprice", Seq(0.5, 0.9), groupCols = Seq("l_returnflag"))),
 
     "q_group_quantile_gate" -> ((s, d) =>
       // the stratified curation gate: top 5% by score WITHIN each
       // stratum, so one high-scoring stratum can't crowd out the rest
-      Quantiles.quantileGatePerGroup(
+      Quantiles.quantileGate(
         t(s, d, "lineitem")
           .select(col("l_returnflag"),
             col("l_orderkey").cast("long").as("l_orderkey"),
             col("l_linenumber").cast("long").as("l_linenumber"),
             col("l_extendedprice")),
-        Seq("l_returnflag"), "l_extendedprice", q = 0.95)),
+        "l_extendedprice", q = 0.95, groupCols = Seq("l_returnflag"))),
 
     "q_conv_turns" -> ((s, d) =>
       // chat transcripts as array<struct<role,content>>: flatten to

@@ -51,7 +51,7 @@ object Aggregations {
     * per group, use when groups fit memory) or sketch-based
     * (`percentile_approx`, bounded state — the 100 TB default). For
     * exact values on groups that do NOT fit one aggregation buffer,
-    * use [[Quantiles.exactInterpolatedQuantilesPerGroup]] — identical
+    * use [[Quantiles.exactInterpolatedQuantiles]] — identical
     * interpolation over the range-exchange rank machinery. */
   def percentiles(
       df: DataFrame,

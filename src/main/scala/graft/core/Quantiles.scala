@@ -1,26 +1,39 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ids
 
-/** EXACT global quantiles at 100 TB scale — and the quality gate built
-  * on them ("keep the top 10 % by score").
+/** EXACT quantiles at 100 TB scale, global or per group — and the
+  * quality gate built on them ("keep the top 10 % by score").
   *
   * [[Aggregations.percentiles]]' exact mode uses Spark's `percentile`
   * aggregate, which buffers every value of a group in one aggregation
   * buffer — correct, and the right tool at group grain, but a
-  * corpus-sized global quantile cannot hold the corpus in one buffer
-  * (the approx sketch is the usual fallback, trading exactness). This
-  * operator gets EXACTNESS scale-safely instead: range-repartition on
-  * the value (the only corpus-wide movement — the same exchange any
-  * global sort needs), parallel local sorts, partition-offset rank
-  * arithmetic ([[graft.operators.Ids]]), then pick the value at rank
-  * ⌊q·(n−1)⌋ (type-1 / lower-value semantics, no interpolation). Only
-  * the VALUE column rides the exchange (the frame is projected first),
-  * and results come back as a DataFrame so thresholds compose in-plan
-  * (broadcast 1-row frame) with no driver collect.
+  * corpus-sized quantile cannot hold the corpus in one buffer (the
+  * approx sketch is the usual fallback, trading exactness). These
+  * operators get EXACTNESS scale-safely instead: range-repartition on
+  * (group keys, value) — the only corpus-wide movement, the same
+  * exchange any global sort needs — parallel local sorts and
+  * partition-offset rank arithmetic ([[graft.operators.Ids]]), so a
+  * billion-row group spans partitions instead of serialising anywhere.
+  * Each (group, q) then looks up the values at ranks ⌊h⌋ and ⌈h⌉,
+  * h = q·(n−1): type-1 ([[exactQuantiles]]) takes the lower value,
+  * the interpolated mode ([[exactInterpolatedQuantiles]]) weighs the
+  * two. Only the keys and the VALUE column ride the exchange (the frame
+  * is projected first), and results come back as a DataFrame so
+  * thresholds compose in-plan (broadcast) with no driver collect.
+  *
+  * ONE BODY FOR EVERY GROUPING: `groupCols = Nil` is the zero-key
+  * group — a zero-key `groupBy` is Spark's global aggregate, and the
+  * global rank path reads its one count off the ids fence. Group keys
+  * match NULL-SAFELY (`<=>`): a null key is a group like any other
+  * (`groupBy` keeps it). Values are cast to double and nulls excluded;
+  * groups whose values are all null are absent (empty/all-null input →
+  * empty frame; callers LEFT-join and inherit null bounds). Group
+  * cardinality must stay broadcast-sized — the language/domain regime
+  * the per-group forms exist for.
   *
   * Determinism under ties: duplicate values may receive their ranks in
   * any order, but the VALUE at any given rank is unique regardless —
@@ -29,20 +42,19 @@ import graft.operators.Ids
   * ADAPTIVE CROSSOVER (measured, SCALE.md r13 exact_quantile rows and
   * r15 stats_winsorize rows): below a few million rows the
   * value-buffering formulations (one `sort_array(collect_list)` /
-  * `percentile` aggregate) beat the rank machinery's fixed costs
-  * (range-exchange sampling job + fence) — the
-  * aggregate wins at 600 k (~1.1×), the ranks win at 4.8 M (1.9×) and
-  * 20 M (2.3×), and only the ranks survive 10^8-value groups at all.
-  * Every exact entry point therefore counts its input (a narrow
-  * metadata-cheap pass, the [[Drift.ksStatistic]] pattern) and routes
-  * small inputs through the aggregate — bit-for-bit the same results,
-  * pinned by parity specs, because the rank path deliberately
-  * implements the aggregate's interpolation convention. The
-  * crossover row count is the session conf
-  * `graft.quantiles.smallInputRows` (default 2,000,000; set 0 to
-  * force the rank path, e.g. for scale measurements). Total row
-  * count bounds every group's size, so the per-group routes are safe
-  * under the same threshold.
+  * `percentile` aggregate per group) beat the rank machinery's fixed
+  * costs (range-exchange sampling job + fence) — the aggregate wins at
+  * 600 k (~1.1×), the ranks win at 4.8 M (1.9×) and 20 M (2.3×), and
+  * only the ranks survive 10^8-value groups at all. Every call
+  * therefore counts its input (a narrow metadata-cheap pass, the
+  * [[Drift.ksStatistic]] pattern) and routes small inputs through the
+  * aggregate — bit-for-bit the same results, pinned by parity specs,
+  * because the rank path deliberately implements the aggregate's
+  * interpolation convention. The crossover row count is the session
+  * conf `graft.quantiles.smallInputRows` (default 2,000,000; set 0 to
+  * force the rank path, e.g. for scale measurements). Total row count
+  * bounds every group's size, so grouped calls are safe under the same
+  * threshold.
   */
 object Quantiles {
 
@@ -88,196 +100,97 @@ object Quantiles {
     else df.limit(thr.toInt + 1).count() <= thr
   }
 
-  /** The non-null values as doubles `__graft_qv` ranked `__graft_qr`,
-    * and their count off the ids fence (the rank plan is narrow). */
-  private def rankedValues(df: DataFrame, valueCol: String): (DataFrame, Long) =
-    Ids.contiguousIds(
-      df.select(col(valueCol).cast("double").as("__graft_qv"))
-        .filter(col("__graft_qv").isNotNull),
-      Seq("__graft_qv"), "__graft_qr")
-
-  /** [[rankedValues]] per group, and the counts `(__graft_g_<g>…, __graft_qn)`. */
-  private def rankedGroups(
-      df: DataFrame, groupCols: Seq[String], valueCol: String): (DataFrame, DataFrame) = {
-    val (ranked, groups) = Ids.groupRanks(
-      df.select((groupCols.map(col) :+
-          col(valueCol).cast("double").as("__graft_qv")): _*)
-        .filter(col("__graft_qv").isNotNull),
-      groupCols, Seq("__graft_qv"), "__graft_qr")
-    (ranked, groups.select(groupCols.map(g => col(s"__graft_o_$g").as(s"__graft_g_$g")) :+
-      col("__graft_gn").as("__graft_qn"): _*))
-  }
-
-  /** `(q, value)` — one row per requested quantile of `valueCol`
-    * (nulls excluded; `value` is double). Empty input → empty. Eager
-    * work: the router's bounded count, then the jobs of
+  /** `(groupCols…, q, value)` — exact type-1 (lower-value, no
+    * interpolation) quantiles of `valueCol` per group: the value at
+    * rank ⌊q·(n−1)⌋; `value` is double. Eager work: the router's
+    * bounded count, then the jobs of
     * [[graft.operators.Ids.assignContiguousIds]] (its fence counts). */
   def exactQuantiles(
       df: DataFrame,
       valueCol: String,
-      qs: Seq[Double]): DataFrame = {
-    require(qs.nonEmpty, "exactQuantiles: need at least one quantile")
-    require(qs.forall(q => q >= 0.0 && q <= 1.0),
-      s"exactQuantiles: quantiles must be in [0, 1], got $qs")
-    val spark = df.sparkSession
-    import spark.implicits._
-    if (useAggregatePath(df)) {
-      // small regime: ONE sorted-array aggregate (the buffer is bounded
-      // by the crossover conf), then each q indexes rank ⌊q·(n−1)⌋
-      val arr = df.select(col(valueCol).cast("double").as("__graft_qv"))
-        .filter(col("__graft_qv").isNotNull)
-        .agg(sort_array(collect_list(col("__graft_qv"))).as("__graft_vals"),
-          count(col("__graft_qv")).as("__graft_qn"))
-      return qs.toDF("q")
-        .crossJoin(broadcast(arr))
-        .filter(col("__graft_qn") > 0) // empty/all-null input → empty
-        .select(col("q"), element_at(col("__graft_vals"),
-          (least(floor(col("q") * (col("__graft_qn") - 1)),
-            col("__graft_qn") - 1) + 1).cast("int")).as("value"))
-    }
-    val (ranked, n) = rankedValues(df, valueCol)
-    qs.toDF("q")
-      .withColumn("__graft_qt",
-        least(floor(col("q") * (n - 1)), lit(n - 1)).cast("long"))
-      .join(ranked, col("__graft_qt") === col("__graft_qr"))
-      .select(col("q"), col("__graft_qv").as("value"))
-  }
+      qs: Seq[Double],
+      groupCols: Seq[String] = Nil): DataFrame =
+    quantiles(df, groupCols, valueCol, qs, interpolated = false, "exactQuantiles")
 
-  /** Keep the rows of `df` whose `scoreCol` is at or above the exact
-    * `q`-quantile of `scoreCol` — the "top (1−q) fraction by score"
-    * curation gate, threshold derived in-plan and broadcast (no
-    * collect). Null scores never pass. */
-  def quantileGate(
-      df: DataFrame,
-      scoreCol: String,
-      q: Double): DataFrame = {
-    require(q >= 0.0 && q <= 1.0, s"quantileGate: q must be in [0, 1], got $q")
-    val thr = exactQuantiles(df, scoreCol, Seq(q))
-      .select(col("value").as("__graft_thr"))
-    df.crossJoin(broadcast(thr))
-      .filter(col(scoreCol).cast("double") >= col("__graft_thr"))
-      .drop("__graft_thr")
-  }
-
-  /** Exact per-GROUP type-1 quantiles: `(groupCols…, q, value)`. A
-    * `percentile` aggregate buffers each group's values in one buffer
-    * and a bare per-group rank window sorts each group through one
-    * task; this uses [[graft.operators.Ids.assignGroupRanks]] instead
-    * (range exchange spanning big groups across partitions, local
-    * sorts, broadcast per-group first ids), so a billion-row group
-    * never serialises anywhere. Group
-    * cardinality must stay broadcast-sized (the per-group frame's bound —
-    * the language/domain regime this op exists for). Eager work: the
-    * router's bounded count, then the jobs of
-    * [[graft.operators.Ids.assignGroupRanks]]. */
-  def exactQuantilesPerGroup(
-      df: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      qs: Seq[Double]): DataFrame = {
-    require(qs.nonEmpty, "exactQuantilesPerGroup: need at least one quantile")
-    require(qs.forall(q => q >= 0.0 && q <= 1.0),
-      s"exactQuantilesPerGroup: quantiles must be in [0, 1], got $qs")
-    val spark = df.sparkSession
-    import spark.implicits._
-    if (useAggregatePath(df)) {
-      // small regime: one grouped sorted-array aggregate (the total
-      // input bound caps every group's buffer), then explode the qs —
-      // groupBy keeps null group keys, matching the rank path
-      val qv = col(valueCol).cast("double").as("__graft_qv")
-      val grouped = df.select((groupCols.map(col) :+ qv): _*)
-        .filter(col("__graft_qv").isNotNull) // all-null groups absent
-        .groupBy(groupCols.map(col): _*)
-        .agg(sort_array(collect_list(col("__graft_qv"))).as("__graft_vals"),
-          count(col("__graft_qv")).as("__graft_qn"))
-      return grouped
-        .select((groupCols.map(col) :+ col("__graft_vals") :+
-          col("__graft_qn") :+
-          explode(array(qs.map(lit): _*)).as("q")): _*)
-        .select((groupCols.map(col) :+ col("q") :+
-          element_at(col("__graft_vals"),
-            (least(floor(col("q") * (col("__graft_qn") - 1)),
-              col("__graft_qn") - 1) + 1).cast("int")).as("value")): _*)
-    }
-    val (ranked, counts) = rankedGroups(df, groupCols, valueCol)
-    val targets = qs.toDF("q")
-      .crossJoin(broadcast(counts))
-      .withColumn("__graft_qt",
-        least(floor(col("q") * (col("__graft_qn") - 1)),
-          col("__graft_qn") - 1).cast("long"))
-    // the rank side also derives from ranked — fresh aliases on every
-    // column give it distinct attributes, so the join is unambiguous
-    val rk = ranked.select((groupCols.map(g => col(g).as(s"__graft_r_$g")) :+
-      col("__graft_qr").as("__graft_rr") :+
-      col("__graft_qv").as("__graft_rv")): _*)
-    // null-safe on the group keys: a null group key is a group like
-    // any other (groupBy keeps it); === would silently drop it here
-    val cond = (groupCols.map(g =>
-      col(s"__graft_g_$g") <=> col(s"__graft_r_$g")) :+
-      (col("__graft_qt") === col("__graft_rr"))).reduce(_ && _)
-    targets.join(rk, cond)
-      .select((groupCols.map(g => col(s"__graft_r_$g").as(g)) :+
-        col("q") :+ col("__graft_rv").as("value")): _*)
-  }
-
-  /** Exact INTERPOLATED global quantiles — `percentile`-aggregate
-    * semantics: at h = q·(n−1), value = (⌈h⌉−h)·v_lo + (h−⌊h⌋)·v_hi
-    * (v_lo when h is integral), the two-sided weighted form Spark's
-    * `Percentile` computes — bit-for-bit, so the adaptive small-input
-    * path through the aggregate and this range-exchange path agree
-    * exactly. (DuckDB's `quantile_cont` uses the one-sided lerp
+  /** `(groupCols…, q, value)` — exact INTERPOLATED quantiles,
+    * `percentile`-aggregate semantics: at h = q·(n−1),
+    * value = (⌈h⌉−h)·v_lo + (h−⌊h⌋)·v_hi (v_lo when h is integral), the
+    * two-sided weighted form Spark's `Percentile` computes — bit-for-bit,
+    * so the small-input route through the aggregate and the rank route
+    * agree exactly. (DuckDB's `quantile_cont` uses the one-sided lerp
     * v_lo + (h−⌊h⌋)·(v_hi−v_lo); the two can differ sub-ulp on
     * non-exactly-representable doubles — this library owns the Spark
-    * convention, pinned by an adversarial-doubles parity spec.) Built
-    * over the same range-exchange rank machinery as
-    * [[exactQuantiles]], so no aggregation buffer ever holds a group's
-    * values. Returns `(q, value)`; all-null / empty input → empty
-    * frame (callers LEFT-join and inherit null bounds, matching the
-    * aggregate's null). Eager work: that of [[exactQuantiles]]. */
+    * convention, pinned by an adversarial-doubles parity spec.)
+    * Duplicate quantiles are rejected (callers pivot on `q`). Eager
+    * work: that of [[exactQuantiles]]. */
   def exactInterpolatedQuantiles(
       df: DataFrame,
       valueCol: String,
-      qs: Seq[Double]): DataFrame = {
-    require(qs.nonEmpty, "exactInterpolatedQuantiles: need at least one quantile")
-    require(qs.forall(q => q >= 0.0 && q <= 1.0),
-      s"exactInterpolatedQuantiles: quantiles must be in [0, 1], got $qs")
+      qs: Seq[Double],
+      groupCols: Seq[String] = Nil): DataFrame = {
     require(qs.distinct.size == qs.size,
       s"exactInterpolatedQuantiles: duplicate quantiles would silently merge, got $qs")
+    quantiles(df, groupCols, valueCol, qs, interpolated = true, "exactInterpolatedQuantiles")
+  }
+
+  /** The one body behind both modes and every grouping. */
+  private def quantiles(
+      df: DataFrame,
+      groupCols: Seq[String],
+      valueCol: String,
+      qs: Seq[Double],
+      interpolated: Boolean,
+      op: String): DataFrame = {
+    require(qs.nonEmpty, s"$op: need at least one quantile")
+    require(qs.forall(q => q >= 0.0 && q <= 1.0),
+      s"$op: quantiles must be in [0, 1], got $qs")
     val spark = df.sparkSession
     import spark.implicits._
+    val keys = groupCols.map(col)
+    val values = df.select(keys :+ col(valueCol).cast("double").as("__graft_qv"): _*)
+      .filter(col("__graft_qv").isNotNull)
+    val qArr = array(qs.map(lit): _*)
     if (useAggregatePath(df)) {
-      // small regime: Spark's own Percentile aggregate IS the
-      // convention the rank path implements, so the two routes are
-      // bit-identical by construction (pinned by the parity spec)
-      val qArr = array(qs.map(lit): _*)
-      return df.select(col(valueCol).cast("double").as("__graft_qv"))
-        .filter(col("__graft_qv").isNotNull)
-        .agg(percentile(col("__graft_qv"), qArr).as("__graft_vals"))
-        // empty/all-null input → null array → posexplode emits no rows
-        .select(posexplode(col("__graft_vals")).as(Seq("__graft_i", "value")))
-        .select(element_at(qArr, col("__graft_i").cast("int") + 1).as("q"),
-          col("value"))
+      // small regime: ONE value-buffering aggregate per group (the
+      // crossover bounds the input, so every buffer). Spark's own
+      // Percentile IS the convention the rank route implements; type-1
+      // indexes the sorted values at ⌊q·(n−1)⌋. The zero-key group of
+      // an empty input has no values: a null array, so no rows.
+      val vals = col("__graft_vals")
+      val perQ =
+        if (interpolated) vals
+        else when(size(vals) > 0, transform(qArr, q =>
+          element_at(vals, (floor(q * (size(vals) - 1)) + 1).cast("int"))))
+      return values.groupBy(keys: _*)
+        .agg((if (interpolated) percentile(col("__graft_qv"), qArr)
+          else sort_array(collect_list(col("__graft_qv")))).as("__graft_vals"))
+        .select(keys :+ posexplode(perQ).as(Seq("__graft_i", "value")): _*)
+        .select(keys :+ element_at(qArr, col("__graft_i") + 1).as("q") :+ col("value"): _*)
     }
-    val (ranked, n) = rankedValues(df, valueCol)
-    val targets = qs.toDF("q")
-      .withColumn("__graft_qh", col("q") * (n - 1).toDouble)
-      .withColumn("__graft_qlo", floor(col("__graft_qh")).cast("long"))
-      .withColumn("__graft_qhi", ceil(col("__graft_qh")).cast("long"))
-    val needed = targets.select(col("q"), col("__graft_qh"),
-      explode(array(
-        struct(lit("lo").as("role"), col("__graft_qlo").as("rank")),
-        struct(lit("hi").as("role"), col("__graft_qhi").as("rank"))))
-        .as("__graft_need"))
-      .select(col("q"), col("__graft_qh"),
-        col("__graft_need.role").as("__graft_role"),
-        col("__graft_need.rank").as("__graft_rank"))
-    ranked.join(broadcast(needed), col("__graft_qr") === col("__graft_rank"))
-      .groupBy(col("q"))
-      .agg(first(col("__graft_qh")).as("__graft_qh"),
-        max(when(col("__graft_role") === "lo", col("__graft_qv"))).as("__graft_vlo"),
-        max(when(col("__graft_role") === "hi", col("__graft_qv"))).as("__graft_vhi"))
-      .select(col("q"), interpolate(col("__graft_qh"),
-        col("__graft_vlo"), col("__graft_vhi")).as("value"))
+    // scale regime: ranks 0..n−1 per group and each group's count n
+    // (`__graft_o_<g>…, __graft_gn`); the zero-key group's count is
+    // read off the ids fence
+    val (ranked, counts) =
+      if (groupCols.isEmpty) {
+        val (ids, n) = Ids.contiguousIds(values, Seq("__graft_qv"), "__graft_qr")
+        (ids, Seq(n).toDF("__graft_gn"))
+      } else Ids.groupRanks(values, groupCols, Seq("__graft_qv"), "__graft_qr")
+    val needed = counts
+      .select(col("*"), posexplode(qArr).as(Seq("__graft_i", "q")))
+      .withColumn("__graft_qh", col("q") * (col("__graft_gn") - 1).cast("double"))
+      .withColumn("__graft_need", explode(array(
+        struct(lit("lo").as("role"), floor(col("__graft_qh")).cast("long").as("rank")),
+        struct(lit("hi").as("role"), ceil(col("__graft_qh")).cast("long").as("rank")))))
+    // null-safe on the group keys: === would silently drop a null group
+    val cond = (groupCols.map(g => col(g) <=> col(s"__graft_o_$g")) :+
+      (col("__graft_qr") === col("__graft_need.rank"))).reduce(_ && _)
+    def at(role: String) =
+      max(when(col("__graft_need.role") === role, col("__graft_qv")))
+    ranked.join(broadcast(needed), cond)
+      .groupBy(keys :+ col("__graft_i") :+ col("q") :+ col("__graft_qh"): _*)
+      .agg(at("lo").as("__graft_vlo"), at("hi").as("__graft_vhi"))
+      .select(keys :+ col("q") :+ (if (interpolated) interpolate(col("__graft_qh"),
+        col("__graft_vlo"), col("__graft_vhi")) else col("__graft_vlo")).as("value"): _*)
   }
 
   /** Spark `Percentile`'s exact interpolation at fractional rank `h`:
@@ -290,105 +203,29 @@ object Quantiles {
     * the one-sided lerp (they differ sub-ulp on adversarial doubles;
     * the aggregate's form wins so small-regime and rank-regime paths
     * are bit-identical). */
-  private def interpolate(
-      h: org.apache.spark.sql.Column,
-      vLo: org.apache.spark.sql.Column,
-      vHi: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def interpolate(h: Column, vLo: Column, vHi: Column): Column =
     when(h === floor(h) || vLo === vHi, vLo)
       .otherwise((ceil(h) - h) * vLo + (h - floor(h)) * vHi)
 
-  /** Per-group [[exactInterpolatedQuantiles]]: `(groupCols…, q,
-    * value)` with `percentile`-aggregate interpolation (the same
-    * two-sided weighted form as [[exactInterpolatedQuantiles]]),
-    * built on
-    * [[graft.operators.Ids.assignGroupRanks]] so a billion-row group
-    * spans partitions instead of serialising into one aggregation
-    * buffer. Group joins are NULL-SAFE (`<=>`): a null group key is a
-    * group, not a dropped row. Groups whose values are all null are
-    * absent from the output (callers LEFT-join and inherit null
-    * bounds). Group cardinality must stay broadcast-sized — the
-    * language/domain regime this op exists for. */
-  def exactInterpolatedQuantilesPerGroup(
+  /** Keep the rows of `df` whose `scoreCol` is at or above their
+    * group's exact type-1 `q`-quantile of `scoreCol` — the "top (1−q)
+    * fraction by score" curation gate; with `groupCols` it is the
+    * stratified gate ("top (1−q) per language/domain", so one
+    * high-scoring stratum can't crowd out the rest). Thresholds are
+    * derived in-plan and broadcast (no collect); ties inclusive, null
+    * scores never pass, and rows of a null-keyed group gate against
+    * their OWN group's threshold. */
+  def quantileGate(
       df: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      qs: Seq[Double]): DataFrame = {
-    require(groupCols.nonEmpty,
-      "exactInterpolatedQuantilesPerGroup: need group columns (use exactInterpolatedQuantiles)")
-    require(qs.nonEmpty, "exactInterpolatedQuantilesPerGroup: need at least one quantile")
-    require(qs.forall(q => q >= 0.0 && q <= 1.0),
-      s"exactInterpolatedQuantilesPerGroup: quantiles must be in [0, 1], got $qs")
-    require(qs.distinct.size == qs.size,
-      s"exactInterpolatedQuantilesPerGroup: duplicate quantiles would silently merge, got $qs")
-    val spark = df.sparkSession
-    import spark.implicits._
-    if (useAggregatePath(df)) {
-      // small regime: the grouped Percentile aggregate (the total
-      // input bound caps every group's buffer); null group keys are
-      // groups, all-null groups absent — matching the rank path
-      val qArr = array(qs.map(lit): _*)
-      val qv = col(valueCol).cast("double").as("__graft_qv")
-      return df.select((groupCols.map(col) :+ qv): _*)
-        .filter(col("__graft_qv").isNotNull)
-        .groupBy(groupCols.map(col): _*)
-        .agg(percentile(col("__graft_qv"), qArr).as("__graft_vals"))
-        .select((groupCols.map(col) :+
-          posexplode(col("__graft_vals")).as(Seq("__graft_i", "value"))): _*)
-        .select((groupCols.map(col) :+
-          element_at(qArr, col("__graft_i").cast("int") + 1).as("q") :+
-          col("value")): _*)
-    }
-    val (ranked, counts) = rankedGroups(df, groupCols, valueCol)
-    val needed = qs.toDF("q")
-      .crossJoin(broadcast(counts))
-      .withColumn("__graft_qh",
-        col("q") * (col("__graft_qn") - 1).cast("double"))
-      .select((groupCols.map(g => col(s"__graft_g_$g")) :+
-        col("q") :+ col("__graft_qh") :+
-        explode(array(
-          struct(lit("lo").as("role"),
-            floor(col("__graft_qh")).cast("long").as("rank")),
-          struct(lit("hi").as("role"),
-            ceil(col("__graft_qh")).cast("long").as("rank"))))
-          .as("__graft_need")): _*)
-      .select((groupCols.map(g => col(s"__graft_g_$g")) :+
-        col("q") :+ col("__graft_qh") :+
-        col("__graft_need.role").as("__graft_role") :+
-        col("__graft_need.rank").as("__graft_rank")): _*)
-    val cond = (groupCols.map(g =>
-      col(g) <=> col(s"__graft_g_$g")) :+
-      (col("__graft_qr") === col("__graft_rank"))).reduce(_ && _)
-    ranked.join(broadcast(needed), cond)
-      .groupBy((groupCols.map(col) :+ col("q")): _*)
-      .agg(first(col("__graft_qh")).as("__graft_qh"),
-        max(when(col("__graft_role") === "lo", col("__graft_qv"))).as("__graft_vlo"),
-        max(when(col("__graft_role") === "hi", col("__graft_qv"))).as("__graft_vhi"))
-      .select((groupCols.map(col) :+ col("q") :+
-        interpolate(col("__graft_qh"), col("__graft_vlo"),
-          col("__graft_vhi")).as("value")): _*)
-  }
-
-  /** Per-group [[quantileGate]]: keep rows at or above their OWN
-    * group's exact `q`-quantile of `scoreCol` — "top (1−q) fraction
-    * per language/domain", the stratified curation gate (a global
-    * threshold would let a high-scoring language crowd out the rest).
-    * Thresholds join back at group cardinality; ties inclusive, null
-    * scores never pass. */
-  def quantileGatePerGroup(
-      df: DataFrame,
-      groupCols: Seq[String],
       scoreCol: String,
-      q: Double): DataFrame = {
-    require(q >= 0.0 && q <= 1.0,
-      s"quantileGatePerGroup: q must be in [0, 1], got $q")
-    val thr = exactQuantilesPerGroup(df, groupCols, scoreCol, Seq(q))
-      .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-        col("value").as("__graft_thr")): _*)
-    // null-safe group join: rows in a null-keyed group gate against
-    // their OWN group's threshold instead of being silently dropped
-    val cond = groupCols.map(g => col(g) <=> col(s"__graft_g_$g")).reduce(_ && _)
-    df.join(broadcast(thr), cond, "inner")
+      q: Double,
+      groupCols: Seq[String] = Nil): DataFrame = {
+    require(q >= 0.0 && q <= 1.0, s"quantileGate: q must be in [0, 1], got $q")
+    val thr = exactQuantiles(df, scoreCol, Seq(q), groupCols)
+      .select(groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
+        col("value").as("__graft_thr"): _*)
+    Stats.joinBounds(df, thr, groupCols)
       .filter(col(scoreCol).cast("double") >= col("__graft_thr"))
-      .drop(groupCols.map(g => s"__graft_g_$g") :+ "__graft_thr": _*)
+      .drop("__graft_thr")
   }
 }

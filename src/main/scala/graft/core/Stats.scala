@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Robust-statistics cleanup operators for corpus and metric columns:
@@ -13,13 +13,15 @@ import org.apache.spark.sql.functions._
   * back onto the input (group-count-sized side → AQE broadcasts it),
   * then a narrow projection. No window over the full table, no
   * per-row sort. `exact = true` quantile bounds route through
-  * [[Quantiles.exactInterpolatedQuantilesPerGroup]]'s range-exchange
+  * [[Quantiles.exactInterpolatedQuantiles]]' range-exchange
   * rank machinery — `percentile`-aggregate-identical interpolation
   * WITHOUT the aggregate's per-group value buffer, so a billion-row
   * group spans partitions instead of serialising into one task's
   * memory; `exact = false` swaps the `percentile_approx` sketch.
   * Bounds join back NULL-SAFELY (`<=>`): rows whose group key is null
   * form a group like any other — they are never silently dropped.
+  * `groupCols = Nil` is the zero-key group: every operator computes
+  * against the GLOBAL bounds (one row, broadcast) through the same body.
   */
 object Stats {
 
@@ -29,44 +31,45 @@ object Stats {
     * (`groupCols = Nil`, a one-row frame) left-join on TRUE — a left
     * join, not a crossJoin, so an EMPTY bounds frame (all-null input)
     * yields null bounds instead of dropping every input row. */
-  private def joinBounds(
+  private[core] def joinBounds(
       df: DataFrame,
       bounds: DataFrame,
-      groupCols: Seq[String]): DataFrame = {
-    if (groupCols.isEmpty) df.join(broadcast(bounds), lit(true), "left")
-    else {
-      val cond = groupCols.map(g => col(g) <=> col(s"__graft_g_$g")).reduce(_ && _)
-      df.join(broadcast(bounds), cond, "left")
-        .drop(groupCols.map(g => s"__graft_g_$g"): _*)
-    }
-  }
+      groupCols: Seq[String]): DataFrame =
+    df.join(broadcast(bounds),
+        groupCols.map(g => col(g) <=> col(s"__graft_g_$g")).foldLeft(lit(true))(_ && _),
+        "left")
+      .drop(groupCols.map(g => s"__graft_g_$g"): _*)
 
-  /** (groupCols…, one column per q named by `names`) — exact
-    * interpolated per-group quantiles pivoted wide, keys pre-renamed
-    * for [[joinBounds]]. `groupCols = Nil` routes through the global
-    * [[Quantiles.exactInterpolatedQuantiles]] and pivots to one row
-    * (all-null nulls included: the global pivot aggregates an empty
-    * long frame to one all-null row, which [[joinBounds]] propagates
-    * as null bounds — same convention as an absent group). */
-  private def wideQuantiles(
+  /** ONE grouped aggregate of `aggs` to group cardinality, keys
+    * pre-renamed for [[joinBounds]] (`groupCols = Nil`: one global
+    * row, also over empty input). */
+  private def groupBounds(
+      df: DataFrame,
+      groupCols: Seq[String],
+      aggs: Seq[Column]): DataFrame =
+    df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      .withColumnsRenamed(groupCols.map(g => g -> s"__graft_g_$g").toMap)
+
+  /** (`__graft_g_*` keys…, one column per q named by `qsNames`) — the
+    * per-group quantiles of `valueCol` pivoted wide: exact interpolated
+    * ([[Quantiles.exactInterpolatedQuantiles]]) or the
+    * `percentile_approx` sketch. An all-null group is absent and the
+    * zero-key pivot of an empty frame is one all-null row; either way
+    * [[joinBounds]] hands its rows null bounds. */
+  private def quantileBounds(
       df: DataFrame,
       groupCols: Seq[String],
       valueCol: String,
-      qsNames: Seq[(Double, String)]): DataFrame = {
-    val long =
-      if (groupCols.isEmpty)
-        Quantiles.exactInterpolatedQuantiles(df, valueCol, qsNames.map(_._1))
-      else Quantiles.exactInterpolatedQuantilesPerGroup(
-        df, groupCols, valueCol, qsNames.map(_._1))
-    long.groupBy(groupCols.map(col): _*)
-      .agg(qsNames.head match { case (q, name) =>
-        max(when(col("q") === q, col("value"))).as(name)
-      }, qsNames.tail.map { case (q, name) =>
-        max(when(col("q") === q, col("value"))).as(name)
-      }: _*)
-      .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) ++
-        qsNames.map { case (_, name) => col(name) }): _*)
-  }
+      qsNames: Seq[(Double, String)],
+      exact: Boolean = true,
+      accuracy: Int = 10000): DataFrame =
+    if (exact)
+      groupBounds(
+        Quantiles.exactInterpolatedQuantiles(df, valueCol, qsNames.map(_._1), groupCols),
+        groupCols, qsNames.map { case (q, name) =>
+          max(when(col("q") === q, col("value"))).as(name) })
+    else groupBounds(df, groupCols, qsNames.map { case (q, name) =>
+      percentile_approx(col(valueCol).cast("double"), lit(q), lit(accuracy)).as(name) })
 
   /** Clip `valueCol` to its per-group [lowP, highP] percentile range
     * (new column `<valueCol>_wins`). `groupCols = Nil` clips against
@@ -82,15 +85,8 @@ object Stats {
     require(lowP >= 0 && highP <= 1 && lowP < highP,
       s"winsorize: need 0 <= lowP < highP <= 1, got ($lowP, $highP)")
     val v = col(valueCol).cast("double")
-    val bounds =
-      if (exact)
-        wideQuantiles(df, groupCols, valueCol,
-          Seq(lowP -> "__graft_lo", highP -> "__graft_hi"))
-      else df.groupBy(groupCols.map(col): _*) // Nil keys = one global row
-        .agg(percentile_approx(v, lit(lowP), lit(accuracy)).as("__graft_lo"),
-          percentile_approx(v, lit(highP), lit(accuracy)).as("__graft_hi"))
-        .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-          col("__graft_lo") :+ col("__graft_hi")): _*)
+    val bounds = quantileBounds(df, groupCols, valueCol,
+      Seq(lowP -> "__graft_lo", highP -> "__graft_hi"), exact, accuracy)
     joinBounds(df, bounds, groupCols)
       .withColumn(s"${valueCol}_wins",
         round(least(greatest(v, col("__graft_lo")), col("__graft_hi")), 6))
@@ -109,10 +105,8 @@ object Stats {
       threshold: Double = 3.0): DataFrame = {
     require(threshold > 0, s"zscoreOutliers: threshold must be positive, got $threshold")
     val v = col(valueCol).cast("double")
-    val moments = df.groupBy(groupCols.map(col): _*)
-      .agg(avg(v).as("__graft_mu"), stddev_samp(v).as("__graft_sd"))
-      .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-        col("__graft_mu") :+ col("__graft_sd")): _*)
+    val moments = groupBounds(df, groupCols,
+      Seq(avg(v).as("__graft_mu"), stddev_samp(v).as("__graft_sd")))
     joinBounds(df, moments, groupCols)
       .withColumn("z",
         when(col("__graft_sd").isNull || col("__graft_sd") === 0.0, 0.0)
@@ -142,31 +136,12 @@ object Stats {
     require(allowed.contains(strategy),
       s"imputeNulls: strategy '$strategy' not in ${allowed.mkString(", ")}")
     val v = col(valueCol).cast("double")
-    val out = s"${valueCol}_imputed"
-    if (groupCols.isEmpty) {
-      val fill =
-        if (strategy == "mean") df.agg(avg(v).as("__graft_fill"))
-        else Quantiles.exactInterpolatedQuantiles(df, valueCol, Seq(0.5))
-          .select(col("value").as("__graft_fill"))
-      // left-join on TRUE: an all-null column yields an EMPTY exact
-      // median frame, and a crossJoin would drop every input row
-      df.join(broadcast(fill), lit(true), "left")
-        .withColumn(out, round(coalesce(v, col("__graft_fill")), 6))
-        .drop("__graft_fill")
-    } else {
-      val fills =
-        if (strategy == "mean") df.groupBy(groupCols.map(col): _*)
-          .agg(avg(v).as("__graft_fill"))
-          .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-            col("__graft_fill")): _*)
-        else Quantiles.exactInterpolatedQuantilesPerGroup(
-            df, groupCols, valueCol, Seq(0.5))
-          .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-            col("value").as("__graft_fill")): _*)
-      joinBounds(df, fills, groupCols)
-        .withColumn(out, round(coalesce(v, col("__graft_fill")), 6))
-        .drop("__graft_fill")
-    }
+    val fills =
+      if (strategy == "mean") groupBounds(df, groupCols, Seq(avg(v).as("__graft_fill")))
+      else quantileBounds(df, groupCols, valueCol, Seq(0.5 -> "__graft_fill"))
+    joinBounds(df, fills, groupCols)
+      .withColumn(s"${valueCol}_imputed", round(coalesce(v, col("__graft_fill")), 6))
+      .drop("__graft_fill")
   }
 
   /** Equi-depth bucketing: adds `<valueCol>_bucket` in 0..numBuckets-1
@@ -178,9 +153,9 @@ object Stats {
     * (numBuckets-1)-element array per group, joined back (broadcast at
     * group cardinality) and applied as a narrow array fold — unlike
     * `ntile`, which sorts the whole corpus through one partition per
-    * group. `exact = true` uses interpolated exact percentiles
-    * (per-group sort state inside the agg); `exact = false` swaps the
-    * sketch (`percentile_approx`), the 100 TB default. */
+    * group. `exact = true` uses the exact interpolated quantiles of
+    * [[Quantiles.exactInterpolatedQuantiles]]; `exact = false` swaps
+    * the sketch (`percentile_approx`), the 100 TB default. */
   def quantileDiscretize(
       df: DataFrame,
       valueCol: String,
@@ -191,43 +166,20 @@ object Stats {
     require(numBuckets >= 2,
       s"quantileDiscretize: numBuckets must be >= 2, got $numBuckets")
     val v = col(valueCol).cast("double")
-    val qsList = (1 until numBuckets).map(i => i.toDouble / numBuckets)
-    val ps = array(qsList.map(lit): _*)
-    val out = s"${valueCol}_bucket"
-    val bucketOf = when(v.isNull, lit(null))
-      .otherwise(size(filter(col("__graft_bounds"), b => v > b)))
-    // the interior bounds come back one-row-per-q; reassemble the
-    // ascending array the bucket fold walks (sort by q, take values)
-    def toArray(long: DataFrame, keys: Seq[org.apache.spark.sql.Column]) =
-      long.groupBy(keys: _*)
-        .agg(transform(
-          array_sort(collect_list(struct(col("q"), col("value")))),
-          e => e("value")).as("__graft_bounds"))
-    if (groupCols.isEmpty) {
-      val bounds =
-        if (exact)
-          toArray(Quantiles.exactInterpolatedQuantiles(df, valueCol, qsList), Nil)
-        else df.agg(percentile_approx(v, ps, lit(accuracy)).as("__graft_bounds"))
-      // left-join on TRUE, not crossJoin: an all-null value column
-      // yields an EMPTY exact-bounds frame and a crossJoin would
-      // silently drop every input row
-      df.join(broadcast(bounds), lit(true), "left")
-        .withColumn(out, bucketOf.cast("int")).drop("__graft_bounds")
-    } else {
-      val bounds =
-        if (exact)
-          toArray(Quantiles.exactInterpolatedQuantilesPerGroup(
-              df, groupCols, valueCol, qsList),
-            groupCols.map(col))
-            .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-              col("__graft_bounds")): _*)
-        else df.groupBy(groupCols.map(col): _*)
-          .agg(percentile_approx(v, ps, lit(accuracy)).as("__graft_bounds"))
-          .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-            col("__graft_bounds")): _*)
-      joinBounds(df, bounds, groupCols)
-        .withColumn(out, bucketOf.cast("int")).drop("__graft_bounds")
-    }
+    val qs = (1 until numBuckets).map(i => i.toDouble / numBuckets)
+    val bounds =
+      // the exact interior bounds come back one row per q; reassemble
+      // the ascending array the bucket fold walks (sort by q, take values)
+      if (exact) groupBounds(
+        Quantiles.exactInterpolatedQuantiles(df, valueCol, qs, groupCols), groupCols,
+        Seq(transform(array_sort(collect_list(struct(col("q"), col("value")))),
+          e => e("value")).as("__graft_bounds")))
+      else groupBounds(df, groupCols, Seq(percentile_approx(
+        v, array(qs.map(lit): _*), lit(accuracy)).as("__graft_bounds")))
+    joinBounds(df, bounds, groupCols)
+      .withColumn(s"${valueCol}_bucket", when(v.isNull, lit(null))
+        .otherwise(size(filter(col("__graft_bounds"), b => v > b))).cast("int"))
+      .drop("__graft_bounds")
   }
 
   /** Min-max scale `valueCol` into [0, 1] per group (new column
@@ -242,10 +194,8 @@ object Stats {
       groupCols: Seq[String],
       valueCol: String): DataFrame = {
     val v = col(valueCol).cast("double")
-    val bounds = df.groupBy(groupCols.map(col): _*)
-      .agg(min(v).as("__graft_mn"), max(v).as("__graft_mx"))
-      .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-        col("__graft_mn") :+ col("__graft_mx")): _*)
+    val bounds = groupBounds(df, groupCols,
+      Seq(min(v).as("__graft_mn"), max(v).as("__graft_mx")))
     joinBounds(df, bounds, groupCols)
       .withColumn(s"${valueCol}_scaled",
         when(col("__graft_mx") === col("__graft_mn"), 0.0)
@@ -270,16 +220,9 @@ object Stats {
       exact: Boolean = true,
       accuracy: Int = 10000): DataFrame = {
     val v = col(valueCol).cast("double")
-    val qs =
-      if (exact)
-        wideQuantiles(df, groupCols, valueCol,
-          Seq(0.25 -> "__graft_q1", 0.5 -> "__graft_med", 0.75 -> "__graft_q3"))
-      else df.groupBy(groupCols.map(col): _*)
-        .agg(percentile_approx(v, lit(0.25), lit(accuracy)).as("__graft_q1"),
-          percentile_approx(v, lit(0.5), lit(accuracy)).as("__graft_med"),
-          percentile_approx(v, lit(0.75), lit(accuracy)).as("__graft_q3"))
-        .select((groupCols.map(g => col(g).as(s"__graft_g_$g")) :+
-          col("__graft_q1") :+ col("__graft_med") :+ col("__graft_q3")): _*)
+    val qs = quantileBounds(df, groupCols, valueCol,
+      Seq(0.25 -> "__graft_q1", 0.5 -> "__graft_med", 0.75 -> "__graft_q3"),
+      exact, accuracy)
     joinBounds(df, qs, groupCols)
       .withColumn(s"${valueCol}_robust",
         when(col("__graft_q3") === col("__graft_q1"), 0.0)

@@ -588,33 +588,12 @@ object Dedup {
   }
 
   /** 64-bit SimHash of a text column: per-token xxhash64, each bit votes
-    * ±1, fingerprint bit = sign of the vote sum. Single aggregate HOF
-    * expression — narrow. Shift amounts are data-dependent, so the
-    * bitwise ops go through `call_function` (still Catalyst, no UDF).
-    */
+    * ±1, fingerprint bit = sign of the vote sum — the native token-hash
+    * and SimHash kernels composed, narrow. */
   def simHash(text: Column): Column =
-    simHashFromTokenHashes(
-      transform(TextFunctions.tokens(TextFunctions.normalizeText(text)),
-        t => xxhash64(t)))
-
-  /** SimHash from pre-hashed tokens (one xxhash64 per token, computed
-    * as the HOF *argument* so it runs once — a `xxhash64(t)` inside the
-    * per-bit lambda would re-hash the token string for every bit). */
-  def simHashFromTokenHashes(tokenHashes: Column): Column = {
-    val bitIdx = sequence(lit(0), lit(63))
-    val votes = aggregate(
-      tokenHashes,
-      array_repeat(lit(0L), 64),
-      (acc, h) =>
-        zip_with(acc, bitIdx, (a, i) =>
-          a + when(call_function("shiftright", h, i)
-                     .bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)))
-    aggregate(
-      zip_with(votes, bitIdx, (v, i) =>
-        when(v > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L),
-      (acc, b) => acc.bitwiseOR(b))
-  }
+    graft.functions.HashFunctions.simHashNative(
+      graft.functions.HashFunctions.tokenHashesNative(
+        TextFunctions.tokens(TextFunctions.normalizeText(text))))
 
   /** SimHash near-duplicate pairs with a GUARANTEED recall contract:
     * every pair within Hamming distance `maxHamming` lands in at least

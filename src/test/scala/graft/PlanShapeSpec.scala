@@ -135,8 +135,8 @@ class PlanShapeSpec extends SparkTestBase {
         core.Quantiles.exactQuantiles(docs, "doc_id", Seq(0.1, 0.5)))),
       ("exactInterpolatedQuantiles", 2, Some(4), () => withConf(rankPath, "0")(
         core.Quantiles.exactInterpolatedQuantiles(docs, "doc_id", Seq(0.1, 0.5)))),
-      ("exactQuantilesPerGroup", 2, Some(4), () => withConf(rankPath, "0")(
-        core.Quantiles.exactQuantilesPerGroup(byGroup, Seq("g"), "doc_id", Seq(0.5)))),
+      ("exactQuantiles by group", 2, Some(4), () => withConf(rankPath, "0")(
+        core.Quantiles.exactQuantiles(byGroup, "doc_id", Seq(0.5), Seq("g")))),
       ("connectedComponentsAgainst", 11, Some(10), () => operators.Graph
         .connectedComponentsAgainst(artifact, batchEdges, "a", "b")),
       ("connectedComponentsStringIds", 3, None,

@@ -767,19 +767,19 @@ class PropertySpec extends SparkTestBase {
 
   test("per-group exact quantiles: both routes, null group keys, local reference") {
     import spark.implicits._
-    val gen = Gen.listOf(Gen.zip(
-      Gen.oneOf(Option.empty[String], Some("a"), Some("b")),
-      Gen.choose(-60, 60).map(_ / 3.0)))
     val qs = Seq(0.25, 0.5, 0.9)
-    for (rows <- samples(gen, 6) if rows.nonEmpty) {
-      val df = rows.toDF("g", "v").repartition(4)
+    // `rows` are (group key values, value); the group keys of a result
+    // row are its first `keys.size` fields, nulls included
+    def check(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
+        rows: Seq[(Seq[Any], Double)]): Unit = {
+      val k = keys.size
       def both() = (
-        graft.core.Quantiles.exactQuantilesPerGroup(df, Seq("g"), "v", qs)
-          .collect().map(r => (Option(r.getString(0)), r.getDouble(1)) ->
-            r.getDouble(2)).toMap,
-        graft.core.Quantiles.exactInterpolatedQuantilesPerGroup(df, Seq("g"), "v", qs)
-          .collect().map(r => (Option(r.getString(0)), r.getDouble(1)) ->
-            java.lang.Double.doubleToLongBits(r.getDouble(2))).toMap)
+        graft.core.Quantiles.exactQuantiles(df, "v", qs, keys)
+          .collect().map(r => (Seq.tabulate(k)(r.get), r.getDouble(k)) ->
+            r.getDouble(k + 1)).toMap,
+        graft.core.Quantiles.exactInterpolatedQuantiles(df, "v", qs, keys)
+          .collect().map(r => (Seq.tabulate(k)(r.get), r.getDouble(k)) ->
+            java.lang.Double.doubleToLongBits(r.getDouble(k + 1))).toMap)
       val viaAggregate = both()
       spark.conf.set(graft.core.Quantiles.SmallInputRowsConf, "0")
       val viaRanks = try both()
@@ -793,6 +793,19 @@ class PropertySpec extends SparkTestBase {
           s"type-1 ($g,$q): got ${viaAggregate._1((g, q))} want $want")
       }
     }
+    val value = Gen.choose(-60, 60).map(_ / 3.0)
+    val gen = Gen.listOf(Gen.zip(
+      Gen.oneOf(Option.empty[String], Some("a"), Some("b")), value))
+    for (rows <- samples(gen, 6) if rows.nonEmpty)
+      check(rows.toDF("g", "v").repartition(4), Seq("g"),
+        rows.map { case (g, v) => (Seq(g.orNull), v) })
+    // two keys, nulls in each: the null-safe match must hold per key
+    val gen2 = Gen.listOf(Gen.zip(
+      Gen.oneOf(Option.empty[String], Some("a"), Some("b")),
+      Gen.oneOf(Option.empty[Int], Some(1), Some(2)), value))
+    for (rows <- samples(gen2, 6) if rows.nonEmpty)
+      check(rows.toDF("g", "h", "v").repartition(4), Seq("g", "h"),
+        rows.map { case (g, h, v) => (Seq(g.orNull, h.map(Int.box).orNull), v) })
   }
 
   test("assignContiguousIds / assignGroupRanks: contiguous, order-consistent, null groups kept") {

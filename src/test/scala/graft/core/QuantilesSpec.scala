@@ -64,7 +64,7 @@ class QuantilesSpec extends SparkTestBase {
     val df = rows.toDF("g", "v").repartition(11)
     val byG = rows.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
     bothPaths { path =>
-      val got = Quantiles.exactQuantilesPerGroup(df, Seq("g"), "v", Seq(0.1, 0.5, 0.9))
+      val got = Quantiles.exactQuantiles(df, "v", Seq(0.1, 0.5, 0.9), Seq("g"))
         .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
       for (g <- byG.keys; q <- Seq(0.1, 0.5, 0.9)) {
         val s = byG(g)
@@ -78,7 +78,7 @@ class QuantilesSpec extends SparkTestBase {
     val df = Seq((Some("a"), 1.0), (Some("a"), 3.0), (None, 10.0), (None, 30.0))
       .toDF("g", "v")
     bothPaths { path =>
-      val got = Quantiles.exactQuantilesPerGroup(df, Seq("g"), "v", Seq(0.5))
+      val got = Quantiles.exactQuantiles(df, "v", Seq(0.5), Seq("g"))
         .collect().map(r => Option(r.getString(0)) -> r.getDouble(2)).toMap
       assert(got == Map(Some("a") -> 1.0, None -> 10.0), s"$path: $got")
     }
@@ -89,7 +89,7 @@ class QuantilesSpec extends SparkTestBase {
       (1 to 10).map(i => ("b", 100L + i, 1000.0 + i)))
       .toDF("g", "id", "score").repartition(6)
     bothPaths { path =>
-      val kept = Quantiles.quantileGatePerGroup(df, Seq("g"), "score", 0.9)
+      val kept = Quantiles.quantileGate(df, "score", 0.9, Seq("g"))
         .select("g", "id").as[(String, Long)].collect().toSet
       // group a: threshold = value at rank 89 = 90 -> ids 90..100
       // group b: threshold = value at rank floor(0.9*9)=8 -> 1009 -> ids 109,110
@@ -124,14 +124,14 @@ class QuantilesSpec extends SparkTestBase {
       .select($"g", posexplode($"e"))
       .collect().map(r => (r.getString(0), qs(r.getInt(1))) -> r.getDouble(2)).toMap
     bothPaths { path =>
-      val got = Quantiles.exactInterpolatedQuantilesPerGroup(df, Seq("g"), "v", qs)
+      val got = Quantiles.exactInterpolatedQuantiles(df, "v", qs, Seq("g"))
         .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
       assert(got == expect,
         s"$path: interpolation must replicate percentile bit-for-bit\n$got\n$expect")
     }
     // duplicate quantiles fail loudly instead of silently merging
     assertThrows[IllegalArgumentException](
-      Quantiles.exactInterpolatedQuantilesPerGroup(df, Seq("g"), "v", Seq(0.5, 0.5)))
+      Quantiles.exactInterpolatedQuantiles(df, "v", Seq(0.5, 0.5), Seq("g")))
     assertThrows[IllegalArgumentException](
       Quantiles.exactInterpolatedQuantiles(df, "v", Seq(0.5, 0.5)))
   }

@@ -62,7 +62,8 @@ class StatsSpec extends SparkTestBase {
           Stats.robustScale(df, Seq("g"), "v"),
           Stats.quantileDiscretize(df, "v", 4),
           Stats.quantileDiscretize(df, "v", 4, Seq("g")),
-          Stats.imputeNulls(df, Seq("g"), "v", "median"))) {
+          Stats.imputeNulls(df, Seq("g"), "v", "median"),
+          Stats.imputeNulls(df, Nil, "v", "median"))) {
         val plan = out.queryExecution.optimizedPlan.toString
         assert(!plan.contains("percentile("),
           s"exact path plans a value-buffering percentile aggregate:\n$plan")

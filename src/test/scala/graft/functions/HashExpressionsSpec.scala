@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.dedup.Dedup
+import graft.dedup.SimHashHof
 
 class HashExpressionsSpec extends SparkTestBase {
   import spark.implicits._
@@ -56,7 +56,7 @@ class HashExpressionsSpec extends SparkTestBase {
   test("native SimHash equals the HOF formulation bit-for-bit") {
     val both = hashed
       .withColumn("native", HashFunctions.simHashNative($"th"))
-      .withColumn("hof", Dedup.simHashFromTokenHashes($"th"))
+      .withColumn("hof", SimHashHof.simHashFromTokenHashes($"th"))
     both.select("id", "native", "hof").collect().foreach { r =>
       assert(r.getLong(1) == r.getLong(2), s"mismatch for id ${r.getLong(0)}")
     }

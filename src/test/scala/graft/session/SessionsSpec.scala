@@ -1,8 +1,25 @@
 package graft.session
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 
-class SessionsSpec extends AnyFunSuite {
+class SessionsSpec extends SparkTestBase {
+
+  /** `getOrCreate` applies a builder's confs to the running session —
+    * the suite-wide one here. Run `body` against it, then put back every
+    * conf it set or changed, so later specs see the session as it was:
+    * a leaked 12 or 18 shuffle partitions moves their job counts. */
+  private def restoringConfs(body: => Unit): Unit = {
+    val conf = spark.sessionState.conf
+    val before = conf.getAllConfs
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try body
+    finally {
+      val after = conf.getAllConfs
+      (after.keySet -- before.keySet).foreach(conf.unsetConf)
+      before.foreach { case (k, v) => if (!after.get(k).contains(v)) conf.setConfString(k, v) }
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
+  }
 
   test("size matrix matches the reference presets") {
     assert(Sessions.Small.executorMemory == "1g" && Sessions.Small.shufflePartitions == 12)
@@ -25,27 +42,27 @@ class SessionsSpec extends AnyFunSuite {
   test("createSparkSession applies preset + extra configs (against running session)") {
     // getOrCreate reuses the shared test session; config application is
     // verified through the builder path on the existing session conf
-    val s = Sessions.createSparkSession(
-      appName = "graft-test-session",
-      size = Sessions.Small,
-      master = Some("local[2]"),
-      extraConfigs = Map("spark.graft.marker" -> "on"))
-    assert(s.conf.get("spark.graft.marker") == "on")
+    restoringConfs {
+      val s = Sessions.createSparkSession(
+        appName = "graft-test-session",
+        size = Sessions.Small,
+        master = Some("local[2]"),
+        extraConfigs = Map("spark.graft.marker" -> "on"))
+      assert(s.conf.get("spark.graft.marker") == "on")
+    }
+    assert(!spark.conf.getAll.contains("spark.graft.marker"))
   }
 
   test("stateStore knob pins the RocksDB provider conf (and rejects unknown values)") {
-    val s = Sessions.createSparkSession(
-      appName = "graft-test-session",
-      master = Some("local[2]"),
-      stateStore = "rocksdb")
-    try
+    restoringConfs {
+      val s = Sessions.createSparkSession(
+        appName = "graft-test-session",
+        master = Some("local[2]"),
+        stateStore = "rocksdb")
       assert(s.conf.get("spark.sql.streaming.stateStore.providerClass") ==
         Sessions.RocksDbProviderClass)
-    finally
-      // getOrCreate shares the suite-wide session: restore the default
-      // provider so later streaming suites choose it deliberately
-      s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assertThrows[IllegalArgumentException](
-      Sessions.createSparkSession(stateStore = "hdfs"))
+      assertThrows[IllegalArgumentException](
+        Sessions.createSparkSession(stateStore = "hdfs"))
+    }
   }
 }
