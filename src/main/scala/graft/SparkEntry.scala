@@ -2454,7 +2454,7 @@ object SparkEntry {
       val fps = corpus.select(col("doc_id").as("id"),
           graft.functions.HashFunctions.simHash128Native(
             graft.functions.HashFunctions.tokenHashesNative(
-              TextFunctions.tokens(TextFunctions.normalizeText(col("text")))))
+              TextFunctions.normalizedTokens(col("text"))))
             .as("sim"))
         // real materialisation, not a repartition "fence": each
         // consumer's pushed-down filters (near's id<50, banding's
@@ -2637,7 +2637,7 @@ object SparkEntry {
       t(s, d, "documents")
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
         .withColumn("toks",
-          TextFunctions.tokens(TextFunctions.normalizeText(col("text"))))
+          TextFunctions.normalizedTokens(col("text")))
         .select(col("doc_id"),
           round(TextFunctions.dupNgramFrac(col("toks"), 3), 6).as("dup_ngram_frac"),
           round(TextFunctions.topTokenFrac(col("toks")), 6).as("top_token_frac"))),

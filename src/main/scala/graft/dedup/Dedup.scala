@@ -268,48 +268,51 @@ object Dedup {
           col(s"${payloadCol}_a"), col(s"${payloadCol}_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
 
-  /** Staged signature pipeline shared by the MinHash operators:
-    * tokens → shingle hashes `hs` → signature `sig`, each landed as a
-    * real column so no regex split / string hash is re-evaluated
-    * inside a downstream lambda. repartition() spreads the CPU-heavy
-    * narrow pass across all cores even when the source is a single
-    * small file. UNFENCED — for a single consumer ([[saveMinHashRef]]'s
-    * write); pairings read it through [[minHashBase]]. */
-  private def minHashKernels(
-      df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int, shingleSize: Int): DataFrame =
-    signed(df.select(col(idCol).as("id"), col(textCol).as("text")), numHashes,
-      shingled(shingleSize))
-
   private def shingled(shingleSize: Int)(text: Column): Column =
     graft.functions.HashFunctions.shingleHashesNative(
-      TextFunctions.tokens(TextFunctions.normalizeText(text)), shingleSize)
+      TextFunctions.normalizedTokens(text), shingleSize)
 
-  /** A frame of `text` plus key columns signed: the keys, the
-    * non-empty hash set `hs = hashes(text)` and its signature `sig`. */
-  private def signed(keyed: DataFrame, numHashes: Int, hashes: Column => Column): DataFrame =
+  /** Staged signature pipeline shared by the MinHash operators: a
+    * frame of `text` plus key columns signed — the keys, the hash set
+    * `hs = hashes(text)` (empty or null for a document with no hash)
+    * and its signature `sig`, each landed as a real column so no regex
+    * split / string hash is re-evaluated inside a downstream lambda.
+    * repartition() spreads the CPU-heavy narrow pass across all cores
+    * even when the source is a single small file. UNFENCED — for a
+    * single consumer ([[saveMinHashRef]]'s write); pairings read it
+    * through [[signed]]. */
+  private def signedKernels(
+      keyed: DataFrame, numHashes: Int, hashes: Column => Column): DataFrame =
     keyed
       .repartition(keyed.sparkSession.sparkContext.defaultParallelism)
       .withColumn("hs", hashes(col("text")))
-      .filter(size(col("hs")) > 0)
       .withColumn("sig",
         graft.functions.HashFunctions.minHashSignatureNative(col("hs"), numHashes))
       .select(keyed.columns.filter(_ != "text").map(col) :+ col("hs") :+ col("sig"): _*)
 
-  /** [[minHashKernels]] behind the materialisation fence every
-    * text-computed LSH base shares, a [[graft.core.Fence]]: ONE eager
-    * action (under AQE two Spark jobs: the repartition's shuffle
-    * stage, then the fence itself) that runs the kernels once per
-    * document. Each pairing reads a base many times — banding, the
-    * hot-bucket count and anti-join on both self-join sides, both
-    * payload joins — and an exchange is no fence: column pruning hands
-    * banding (id, sig) and the payload joins (id, hs), so no exchange
-    * is reused, and `size(hs) > 0` is pushed below the repartition —
-    * an exchange-fenced plan re-runs tokenise → shingle-hash in every
-    * consumer. */
+  /** [[signedKernels]] behind the materialisation fence every
+    * text-computed LSH base shares, a [[graft.core.Fence]] named
+    * `name`: ONE eager action (under AQE two Spark jobs: the
+    * repartition's shuffle stage, then the fence itself) that runs the
+    * kernels once per document. Each pairing reads a base many times —
+    * banding, the hot-bucket count and anti-join on both self-join
+    * sides, both payload joins — and an exchange is no fence: column
+    * pruning hands banding (id, sig) and the payload joins (id, hs), so
+    * no exchange is reused, and an exchange-fenced plan re-runs
+    * tokenise → shingle-hash in every consumer. Documents with no hash
+    * are dropped ABOVE the fence: a `size(hs) > 0` below it is pushed
+    * under the repartition, and the map stage runs the kernel chain a
+    * second time to evaluate it. */
+  private def signed(
+      keyed: DataFrame, numHashes: Int, hashes: Column => Column, name: String): DataFrame =
+    Fence(signedKernels(keyed, numHashes, hashes), name).df.filter(size(col("hs")) > 0)
+
+  /** The MinHash base of a text corpus: `(id, hs, sig)` behind the
+    * fence of [[signed]]. */
   private def minHashBase(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int, shingleSize: Int): DataFrame =
-    Fence(minHashKernels(df, textCol, idCol, numHashes, shingleSize), "minHashBase").df
+    signed(df.select(col(idCol).as("id"), col(textCol).as("text")), numHashes,
+      shingled(shingleSize), "minHashBase")
 
   /** MinHash-LSH near-duplicate pairs.
     *
@@ -380,16 +383,19 @@ object Dedup {
     df.join(pairs.select(col("id_a").as(idCol)).distinct(), Seq(idCol), "left_anti")
 
   /** Load + validate a [[saveMinHashRef]] artifact: schema and
-    * signature width checked loudly before any work. */
+    * signature width checked loudly before any work. Documents with no
+    * shingle are dropped here, as [[signed]] drops them above its
+    * fence. */
   private def loadMinHashRefBase(
       spark: org.apache.spark.sql.SparkSession,
       refPath: String,
       numHashes: Int,
       op: String): DataFrame = {
-    val refBase = spark.read.parquet(refPath)
-    require(refBase.columns.toSet == Set("id", "hs", "sig"),
+    val artifact = spark.read.parquet(refPath)
+    require(artifact.columns.toSet == Set("id", "hs", "sig"),
       s"$op: $refPath is not a saveMinHashRef artifact " +
-        s"(columns ${refBase.columns.mkString(", ")})")
+        s"(columns ${artifact.columns.mkString(", ")})")
+    val refBase = artifact.filter(size(col("hs")) > 0)
     refBase.select(size(col("sig")).as("w")).limit(1).collect()
       .foreach(r => require(r.getInt(0) == numHashes,
         s"$op: artifact signature width ${r.getInt(0)} != numHashes " +
@@ -509,8 +515,8 @@ object Dedup {
       (if (isRef) lit(null).cast(idType(df)) else col(idCol)).as("id_n"),
       (if (isRef) col(idCol) else lit(null).cast(idType(ref))).as("id_r"),
       lit(isRef).as("is_ref"), col(textCol).as("text"))
-    val both = Fence(signed(tagged(df, isRef = false).unionByName(tagged(ref, isRef = true)),
-      numHashes, shingled(shingleSize)), "minHashCrossPairs").df
+    val both = signed(tagged(df, isRef = false).unionByName(tagged(ref, isRef = true)),
+      numHashes, shingled(shingleSize), "minHashCrossPairs")
     def side(isRef: Boolean, id: String) = both.filter(col("is_ref") === isRef)
       .select(col(id).as("id"), col("hs"), col("sig"))
     crossVerifiedPairs(side(isRef = false, "id_n"), side(isRef = true, "id_r"),
@@ -528,7 +534,10 @@ object Dedup {
     * ingest keeps its dedup guarantee. Parameters are part of the
     * artifact contract: serve with the same numHashes/shingleSize.
     * One job, unfenced: the write is the base's only consumer, and
-    * the artifact read back needs no fence (it holds no kernel). */
+    * the artifact read back needs no fence (it holds no kernel). The
+    * write keeps documents with no shingle (an empty or null `hs`):
+    * a filter on `hs` here would be pushed under the repartition and
+    * run the kernel chain twice; the readers drop them. */
   def saveMinHashRef(
       ref: DataFrame,
       textCol: String,
@@ -536,8 +545,8 @@ object Dedup {
       path: String,
       numHashes: Int = 64,
       shingleSize: Int = 3): Unit =
-    minHashKernels(ref, textCol, idCol, numHashes, shingleSize)
-      .write.mode("overwrite").parquet(path)
+    signedKernels(ref.select(col(idCol).as("id"), col(textCol).as("text")), numHashes,
+      shingled(shingleSize)).write.mode("overwrite").parquet(path)
 
   /** [[minHashDedupAgainst]] where the reference side is a persisted
     * [[saveMinHashRef]] artifact: identical semantics (banded LSH
@@ -593,7 +602,7 @@ object Dedup {
   def simHash(text: Column): Column =
     graft.functions.HashFunctions.simHashNative(
       graft.functions.HashFunctions.tokenHashesNative(
-        TextFunctions.tokens(TextFunctions.normalizeText(text))))
+        TextFunctions.normalizedTokens(text)))
 
   /** SimHash near-duplicate pairs with a GUARANTEED recall contract:
     * every pair within Hamming distance `maxHamming` lands in at least
@@ -648,7 +657,7 @@ object Dedup {
       fingerprint: Column => Column): DataFrame = df
     .select(col(idCol).as("id"), col(textCol).as("text"))
     .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    .withColumn("toks", TextFunctions.tokens(TextFunctions.normalizeText(col("text"))))
+    .withColumn("toks", TextFunctions.normalizedTokens(col("text")))
     .withColumn("th", graft.functions.HashFunctions.tokenHashesNative(col("toks")))
     .withColumn("sim", fingerprint(col("th")))
     .select("id", "sim")
@@ -714,7 +723,7 @@ object Dedup {
   def simHash128(text: Column): Column =
     graft.functions.HashFunctions.simHash128Native(
       graft.functions.HashFunctions.tokenHashesNative(
-        TextFunctions.tokens(TextFunctions.normalizeText(text))))
+        TextFunctions.normalizedTokens(text)))
 
   /** 128-bit SimHash near-duplicate pairs — same guaranteed-recall
     * contract as [[simHashNearDuplicates]] (every pair within
@@ -881,7 +890,7 @@ object Dedup {
     * set; recall follows the (bands, rows) S-curve.
     *
     * Construction runs ONE eager action: the n-gram hashes and
-    * signatures behind the [[minHashBase]] fence.
+    * signatures behind the fence of [[signed]].
     */
   def ngramJaccardNearDuplicates(
       df: DataFrame,
@@ -897,9 +906,9 @@ object Dedup {
       bands: Int = 12,
       maxBucketSize: Int = 1000): DataFrame = {
     val rows = rowsPerBand(numHashes, bands)
-    val base = Fence(signed(df.select(col(idCol).as("id"), col(textCol).as("text")),
+    val base = signed(df.select(col(idCol).as("id"), col(textCol).as("text")),
       numHashes, t => graft.functions.HashFunctions.ngramHashesNative(
-        TextFunctions.normalizeText(t), n)), "ngramJaccardNearDuplicates").df // see minHashBase
+        TextFunctions.normalizeText(t), n), "ngramJaccardNearDuplicates")
     // hash-set Jaccard == n-gram-set Jaccard up to 64-bit collisions
     verifiedPairsFromBase(base, bands, rows, threshold, maxBucketSize)
   }
@@ -942,7 +951,7 @@ object Dedup {
     def gramRows(df: DataFrame): DataFrame = df
       .select(col(idCol).as("__graft_id"), col(textCol).as("__graft_text"))
       .withColumn("__graft_toks",
-        TextFunctions.tokens(TextFunctions.normalizeText(col("__graft_text"))))
+        TextFunctions.normalizedTokens(col("__graft_text")))
       .select(col("__graft_id"),
         explode(graft.functions.HashFunctions.shingleHashesNative(col("__graft_toks"), n))
           .as("__graft_g"))
@@ -1000,7 +1009,7 @@ object Dedup {
     def gramRows(df: DataFrame): DataFrame = df
       .select(col(idCol).as("__graft_id"), col(textCol).as("__graft_text"))
       .withColumn("__graft_toks",
-        TextFunctions.tokens(TextFunctions.normalizeText(col("__graft_text"))))
+        TextFunctions.normalizedTokens(col("__graft_text")))
       .select(col("__graft_id"),
         explode(graft.functions.HashFunctions.shingleHashesNative(col("__graft_toks"), n))
           .as("__graft_g"))
@@ -1160,7 +1169,7 @@ object Dedup {
     if (smallEvalDocs > 0 && evalDf.count() <= smallEvalDocs)
       return decontaminate(train, evalDf, textCol, idCol, n, minHits)
     def gramArray: Column = graft.functions.HashFunctions.shingleHashesNative(
-      TextFunctions.tokens(TextFunctions.normalizeText(col("__graft_text"))), n)
+      TextFunctions.normalizedTokens(col("__graft_text")), n)
     val evalGramsDist = evalDf
       .select(col(textCol).as("__graft_text"))
       .select(explode(gramArray).as("__graft_g"))

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -105,27 +105,65 @@ object GopherKernels {
       nLines, nBullet, nEllLines, nHash, nEllText))
   }
 
-  /** Stopword OCCURRENCE count over a token array — exactly
-    * `size(filter(toks, t => array_contains(stopArr, t)))`: null
-    * tokens never match (array_contains yields null → dropped). */
-  def stopwordCount(toks: ArrayData, stopwords: Array[UTF8String]): Int = {
-    val n = toks.numElements()
-    var c = 0
+  /** Java regex `\s` (no UNICODE_CHARACTER_CLASS): [ \t\n\x0B\f\r]. */
+  private def isRegexSpace(c: Int): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Java regex `\p{L}` or `\p{N}`: the general-category test the
+    * regex engine applies per code point. */
+  private val LetterOrNumber: Int =
+    (1 << Character.UPPERCASE_LETTER) | (1 << Character.LOWERCASE_LETTER) |
+      (1 << Character.TITLECASE_LETTER) | (1 << Character.MODIFIER_LETTER) |
+      (1 << Character.OTHER_LETTER) | (1 << Character.DECIMAL_DIGIT_NUMBER) |
+      (1 << Character.LETTER_NUMBER) | (1 << Character.OTHER_NUMBER)
+
+  /** `TextFunctions.qualityScore` before its `round(_, 6)`, from one
+    * decode of the document: one character walk, one token split. The
+    * counts are the SQL formulation's:
+    * `length(text)` is the UTF-8 char count of the raw bytes; the
+    * punctuation and non-whitespace counts are the code points that
+    * `regexp_replace(text, [\p{L}\p{N}\s] | \s+, "")` keeps of the
+    * decoded text; tokens are `TextFunctions.tokens` (space-trim, then
+    * `split(_, "\\s+", -1)` unless empty), and a token counts as a
+    * stopword when its UTF-8 bytes equal a stopword's. The arithmetic
+    * is the SQL's, in its order. Null text takes the SQL's null path,
+    * where `least`/`greatest` skip the null operands: 0.625.
+    * `stopwords` must be UTF-8 round-tripped (`UTF8String.fromString(w)
+    * .toString`), as bytes compare. */
+  def qualityScore(text: UTF8String, stopwords: Array[String]): Double = {
+    if (text == null) return (1.0 + 0.0 + 1.0 + 0.5) / 4.0
+    val len = text.numChars().toDouble
+    val s = text.toString
+    var punct = 0L
+    var nonSpace = 0L
     var i = 0
-    while (i < n) {
-      if (!toks.isNullAt(i)) {
-        val t = toks.getUTF8String(i)
-        var j = 0
-        var hit = false
-        while (!hit && j < stopwords.length) {
-          if (stopwords(j).equals(t)) hit = true
-          j += 1
-        }
-        if (hit) c += 1
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      if (!isRegexSpace(cp)) {
+        nonSpace += 1
+        if (((1 << Character.getType(cp)) & LetterOrNumber) == 0) punct += 1
       }
-      i += 1
+      i += Character.charCount(cp)
     }
-    c
+    val t = sparkTrim(s)
+    var nTok = 0L
+    var nStop = 0L
+    if (!t.isEmpty) {
+      val toks = WS.split(t, -1)
+      nTok = toks.length.toLong
+      var i = 0
+      while (i < toks.length) {
+        if (stopwords.contains(toks(i))) nStop += 1
+        i += 1
+      }
+    }
+    val safeNTok = math.max(nTok.toDouble, 1.0)
+    val lenScore = math.min(len / 500.0, 1.0)
+    val punctScore = 1.0 - math.min(punct.toDouble / math.max(len, 1.0) * 4.0, 1.0)
+    val stopScore = math.min(nStop.toDouble / safeNTok * 4.0, 1.0)
+    val meanTokLen = nonSpace.toDouble / safeNTok
+    val tokLenScore = if (meanTokLen >= 3.0 && meanTokLen <= 10.0) 1.0 else 0.5
+    (lenScore + punctScore + stopScore + tokLenScore) / 4.0
   }
 }
 
@@ -168,33 +206,36 @@ case class GopherSignalsExpr(child: Expression, stopwords: Seq[String])
     copy(child = newChild)
 }
 
-/** array&lt;string&gt; tokens → int stopword occurrence count (see
-  * [[GopherKernels.stopwordCount]]). */
-case class StopwordCountExpr(child: Expression, stopwords: Seq[String])
+/** string → double, [[GopherKernels.qualityScore]]: the quality score
+  * before its rounding. Never null — null text scores as the SQL
+  * formulation scores it. */
+case class QualityScoreExpr(child: Expression, stopwords: Seq[String])
     extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a string column, got ${child.dataType.sql}")
 
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "stopword_count"
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def prettyName: String = "quality_score"
 
-  @transient private lazy val stopU8: Array[UTF8String] =
-    stopwords.map(UTF8String.fromString).toArray
+  @transient private lazy val stopArr: Array[String] =
+    stopwords.map(w => UTF8String.fromString(w).toString).toArray
 
-  override def nullSafeEval(input: Any): Any =
-    GopherKernels.stopwordCount(input.asInstanceOf[ArrayData], stopU8)
+  override def eval(input: InternalRow): Any =
+    GopherKernels.qualityScore(child.eval(input).asInstanceOf[UTF8String], stopArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("stopwords", stopU8,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.GopherKernels.stopwordCount($c, $ref)")
+    val ref = ctx.addReferenceObj("qualityStopwords", stopArr, "java.lang.String[]")
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      double ${ev.value} = graft.functions.GopherKernels.qualityScore(
+        ${c.isNull} ? null : ${c.value}, $ref);""", isNull = FalseLiteral)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): StopwordCountExpr =
+  override protected def withNewChildInternal(newChild: Expression): QualityScoreExpr =
     copy(child = newChild)
 }

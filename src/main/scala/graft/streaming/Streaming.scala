@@ -329,7 +329,7 @@ object Streaming {
     require(n >= 1, s"decontaminateStream: n must be >= 1, got $n")
     require(minHits >= 1, s"decontaminateStream: minHits must be >= 1, got $minHits")
     def grams(c: Column): Column = graft.functions.HashFunctions.shingleHashesNative(
-      graft.text.TextFunctions.tokens(graft.text.TextFunctions.normalizeText(c)), n)
+      graft.text.TextFunctions.normalizedTokens(c), n)
     val evalKeys = evalDf
       .select(explode(grams(col(textCol))).as("__graft_g"))
       .distinct()
@@ -461,8 +461,7 @@ object Streaming {
     df.select(col(idCol).as("id"),
         graft.functions.HashFunctions.simHashNative(
           graft.functions.HashFunctions.tokenHashesNative(
-            graft.text.TextFunctions.tokens(
-              graft.text.TextFunctions.normalizeText(col(textCol))))).as("sim"))
+            graft.text.TextFunctions.normalizedTokens(col(textCol)))).as("sim"))
       .select(shiftrightunsigned(col("sim"), 48).cast("string").as("key"),
         col("id"), col("sim"), lit("").as("payload"))
       .as[SimDoc]

@@ -70,11 +70,22 @@ object TextFunctions {
   def normalizeText(text: Column): Column =
     lower(regexp_replace(trim(text), "\\s+", " "))
 
-  /** Tokens of the NORMALISED text — the composition
-    * `tokens(normalizeText(_))` without the redundant second trim
-    * (normalizeText already trims, and the extra trim shows up twice
-    * per row in the codegen'd CASE WHEN). Use this form whenever the
-    * input is raw text headed for normalised tokenisation. */
+  /** Tokens of the normalised text, exactly `tokens(normalizeText(_))`,
+    * with the regex of [[normalizeText]] run once per row (inside the
+    * CASE WHEN of [[tokens]] it runs twice). Exact because
+    * [[normalizeText]] leaves isolated single spaces as its only
+    * whitespace, so `split` yields empty pieces only at a leading or
+    * trailing space (text with tab/LF/CR at an edge), and those go. */
+  def normalizedTokens(text: Column): Column =
+    array_remove(split(normalizeText(text), "\\s+"), "")
+
+  /** Normalised text split on whitespace, empty text → empty array —
+    * the tokeniser the word-frequency, DSIR, subword and substring
+    * operators (and their oracle SQL) share. Not
+    * `tokens(normalizeText(_))` (that is [[normalizedTokens]]):
+    * [[normalizeText]] trims spaces only, so text with tab/LF/CR at an
+    * edge keeps an empty edge token here — `"\tabc def\n"` gives
+    * `["", "abc", "def", ""]` and `"\t"` gives `["", ""]`. */
   def normTokens(text: Column): Column = {
     val n = normalizeText(text)
     when(length(n) === 0, array().cast("array<string>"))
@@ -128,32 +139,26 @@ object TextFunctions {
 
   /** Quality score in [0,1]: blends length, punctuation density,
     * stopword ratio and mean token length — the standard cheap quality
-    * heuristics applied before LLM training. Deterministic arithmetic.
+    * heuristics applied before LLM training. Deterministic arithmetic,
+    * rounded to 6 places:
+    *   - length: `min(length / 500, 1)`
+    *   - punctuation: `1 − min(4 · non-(letter/digit/space) chars /
+    *     max(length, 1), 1)`
+    *   - stopwords: `min(4 · stopword tokens / max(tokens, 1), 1)` over
+    *     [[tokens]]
+    *   - token length: 1 when non-space chars / max(tokens, 1) is in
+    *     [3, 10], else 0.5
+    * One codegen'd kernel scores each document from one decode
+    * ([[graft.functions.GopherKernels.qualityScore]]); a `filter` on
+    * the score runs no SQL regex or split. Null text scores 0.625 — the
+    * length and stopword parts read 1, punctuation 0, token length 0.5,
+    * as SQL `least`/`greatest` skip nulls — so it passes a 0.5 gate.
     */
   def qualityScore(
       text: Column,
-      stopwords: Seq[String] = defaultStopwords): Column = {
-    val toks = tokens(text)
-    val nTok = size(toks).cast("double")
-    val safeNTok = greatest(nTok, lit(1.0))
-    // length component: saturates at 500 chars
-    val lenScore = least(length(text).cast("double") / 500.0, lit(1.0))
-    // punctuation density: fraction of non-alnum/space chars, lower is better
-    val punct = length(regexp_replace(text, "[\\p{L}\\p{N}\\s]", "")).cast("double")
-    val punctScore = lit(1.0) - least(punct / greatest(length(text).cast("double"), lit(1.0)) * 4.0, lit(1.0))
-    // stopword ratio: healthy natural text has some function words.
-    // One codegen'd kernel count (StopwordCountExpr) — the HOF form
-    // size(filter(toks, t => array_contains(stopArr, t))) dispatched
-    // an interpreted ArrayFilter per row; byte-identical counts
-    // (TextFunctionsSpec pins kernel ≡ HOF)
-    val nStop = ColumnBridge(graft.functions.StopwordCountExpr(
-      ColumnBridge.expression(toks), stopwords)).cast("double")
-    val stopScore = least(nStop / safeNTok * 4.0, lit(1.0))
-    // mean token length: 3–10 chars is "wordlike"
-    val meanTokLen = length(regexp_replace(text, "\\s+", "")).cast("double") / safeNTok
-    val tokLenScore = when(meanTokLen.between(3.0, 10.0), 1.0).otherwise(0.5)
-    round((lenScore + punctScore + stopScore + tokLenScore) / 4.0, 6)
-  }
+      stopwords: Seq[String] = defaultStopwords): Column =
+    round(ColumnBridge(graft.functions.QualityScoreExpr(
+      ColumnBridge.expression(text), stopwords)), 6)
 
   val defaultStopwords: Seq[String] =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "for", "on")

@@ -53,6 +53,59 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  /** The physical plans `build` runs behind fences, by fence name: the
+    * initial plan of each `graft.fence:<name>` SQL execution. */
+  private def fencePlans(build: => Any): Map[String, org.apache.spark.sql.execution.SparkPlanInfo] = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentHashMap[String,
+      org.apache.spark.sql.execution.SparkPlanInfo]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(ev: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        ev match {
+          case e: SparkListenerSQLExecutionStart if e.description.startsWith("graft.fence:") =>
+            plans.put(e.description.stripPrefix("graft.fence:"), e.sparkPlanInfo)
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try { build; org.apache.spark.sql.graft.ListenerBridge.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    scala.jdk.CollectionConverters.MapHasAsScala(plans).asScala.toMap
+  }
+
+  test("an LSH fence runs each text kernel once, above its exchange") {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    def count(p: SparkPlanInfo, kernel: String) =
+      nodes(p).map(_.simpleString.split(java.util.regex.Pattern.quote(kernel + "("), -1).length - 1).sum
+    for ((fence, kernel, build) <- Seq[(String, String, () => Any)](
+        ("minHashBase", "shingle_hashes",
+          () => dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id")),
+        ("minHashCrossPairs", "shingle_hashes", () => dedup.Dedup.minHashCrossPairs(
+          docs.filter(col("doc_id") >= 100), docs.filter(col("doc_id") < 100),
+          "text", "doc_id")),
+        ("ngramJaccardNearDuplicates", "ngram_hashes",
+          () => dedup.Dedup.ngramJaccardNearDuplicates(docs, "text", "doc_id")))) {
+      val plan = fencePlans(build()).getOrElse(fence, fail(s"no fence named $fence"))
+      val all = nodes(plan)
+      val shown = all.map(_.simpleString).mkString("\n")
+      for (k <- Seq(kernel, "regexp_replace"))
+        assert(count(plan, k) == 1, s"$fence evaluates $k ${count(plan, k)} times:\n$shown")
+      val above = all.filter(_.simpleString.contains(kernel + "("))
+      assert(above.forall(n => nodes(n).exists(_.nodeName == "Exchange")),
+        s"$fence evaluates $kernel below its exchange:\n$shown")
+    }
+  }
+
+  test("the quality gate's filter runs no split or regex") {
+    val plan = docs.filter(text.TextFunctions.qualityScore(col("text")) >= 0.5)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("quality_score("), plan)
+    assert(!plan.contains("split(") && !plan.contains("regexp_replace("), plan)
+  }
+
   test("building an LSH pair operator runs one checkpoint action per text corpus") {
     // one eager localCheckpoint per corpus; under AQE it is two jobs —
     // the leading repartition's shuffle stage, then the checkpoint

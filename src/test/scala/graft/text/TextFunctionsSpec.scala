@@ -42,6 +42,25 @@ class TextFunctionsSpec extends SparkTestBase {
     assert(a.matches("[0-9a-f]{32}"))
   }
 
+  test("normTokens keeps empty edge tokens; normalizedTokens is tokens(normalizeText(_))") {
+    // normalizeText trims spaces only: a tab/LF/CR edge becomes a space
+    for ((text, edged, clean) <- Seq(
+        ("\tabc def\n", List("", "abc", "def", ""), List("abc", "def")),
+        ("\t", List("", ""), Nil))) {
+      assert(oneSeq(TextFunctions.normTokens($"t"), text) == edged)
+      assert(oneSeq(TextFunctions.normalizedTokens($"t"), text) == clean)
+      assert(oneSeq(TextFunctions.tokens(TextFunctions.normalizeText($"t")), text) == clean)
+    }
+  }
+
+  test("qualityScore of null text is 0.625 and passes the 0.5 gate") {
+    val docs = Seq((1L, null.asInstanceOf[String]), (2L, "@@@ ### !!! %%%")).toDF("id", "t")
+    for (q <- Seq(TextFunctions.qualityScore($"t"), QualityScoreReference.qualityScore($"t"))) {
+      assert(docs.filter($"id" === 1L).select(q).head().getDouble(0) == 0.625)
+      assert(docs.filter(q >= 0.5).select("id").as[Long].collect().toSeq == Seq(1L))
+    }
+  }
+
   test("qualityScore is in [0,1]; natural text beats noise") {
     val good = one[Double](TextFunctions.qualityScore($"t"),
       "the quick brown fox jumps over the lazy dog and it keeps on running for a while")
