@@ -15,7 +15,7 @@ object Plans {
     "q_pushdown_read" ->
       "Filters + projection reach the scan: PushedFilters carries the date range and value filter; ReadSchema holds only the 4 selected columns.",
     "q_minhash_dedup" ->
-      "LSH shape: banded Exchange carries (id, band, bucket) only; hash-set payloads re-join by id after candidate generation; AQE may broadcast the capped bucket list.",
+      "LSH pairs within the broadcast budget (this corpus): the fenced base is collected once under a byte bound and paired on the driver, so the plan is one LocalTableScan (the rounding Project folds into it) — no exchange, no join. The distributed route a larger base takes is dumped below under autoBroadcastJoinThreshold = -1.",
     "q_simhash_dedup" ->
       "SimHash with the maxHamming-derived C(8,2) block-pair index: fingerprints from native codegen kernels in one narrow pass; the 28-bucket explode carries (id, band, bucket) only; verification re-joins the 8-byte fingerprints by id and filters on bit_count(XOR).",
     "q_cosine_topk_scalable" ->
@@ -141,7 +141,7 @@ object Plans {
     "q_connected_components" ->
       "Distributed connected components (localMaxEdges=0): large-star/small-star rounds are (node, min-neighbour) aggregates + edge-grain joins — every exchange keys on node ids, nothing corpus-wide, convergence in O(log n) rounds with the edge set SHRINKING monotonically.",
     "q_pipeline_incremental" ->
-      "Composed incremental ingest: both pair feeds are the id-only banded LSH exchanges (ref state and batch edges — hash-set payloads re-join per candidate only), the batch contracts at LABEL grain, and the historical labeling flows through exactly ONE BroadcastHashJoin relabel. Nothing downstream of the two banded exchanges is corpus-sized, and no historical pair is recomputed.",
+      "Composed incremental ingest: the within-corpus pair feeds (the ref state from the artifact, the batch↔batch half of the batch edges) fit the broadcast budget here and arrive as local frames paired on the driver; the batch↔artifact half is the id-only banded LSH exchange (hash-set payloads re-join per candidate only); the batch contracts at LABEL grain, and the historical labeling flows through exactly ONE BroadcastHashJoin relabel. Nothing downstream of the two banded exchanges is corpus-sized, and no historical pair is recomputed.",
     "q_cc_incremental" ->
       "Incremental connected components: the artifact is SCANNED twice and EXCHANGED never — the touched-slice lookup is a map-side BroadcastHashJoin LeftSemi against the batch endpoints (r17 fix: the old endpoints LEFT JOIN artifact shuffled the full artifact on id every ingest, as did the new-node anti join), and the relabel is ONE BroadcastHashJoin against the touched-component mapping (batch-bounded, checkpointed and counted, shuffle-join fallback above graft.graph.smallMappingRows). The canonicality guard is a raise_error expression fused into the artifact projection — zero extra jobs. No historical edge is rescanned anywhere in the plan.",
     "q_mmr_rerank" ->
@@ -149,6 +149,14 @@ object Plans {
     "q_script_profile" ->
       "Unicode script profile: ONE codegen'd kernel call (ScriptCountsExpr — a single code-point loop classifying all eight script classes) in a narrow Project, ZERO exchanges; the frac columns and the dominant-script argmax live in chained selects referencing plain attributes — folding the argmax into one expression embeds each frac subtree in both branches of every CaseWhen step (~2^8 copies, conditionally evaluated so CSE cannot dedupe: the r14 57s hazard, now 0.4s).",
   )
+
+  /** Headline queries dumped a second time with broadcasts off
+    * (`spark.sql.autoBroadcastJoinThreshold = -1`): within the budget
+    * their within-corpus LSH pairing runs on the driver, and this shows
+    * the distributed route instead. */
+  private val distributedRoute = Seq(
+    "q_minhash_dedup" ->
+      "LSH shape, distributed route: banded Exchange carries (id, band, bucket) only; the hot-bucket cap is a left-anti join against the over-cap bucket count; hash-set payloads re-join by id after candidate generation.")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -174,7 +182,7 @@ object Plans {
       .append("`. Each section: the scale property the plan must show, then\n")
       .append("`explain(\"formatted\")` output (truncated to the operator tree + scan details).\n")
 
-    headline.foreach { case (name, note) =>
+    def section(title: String, name: String, note: String): Unit = {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -185,10 +193,15 @@ object Plans {
         val keep = if (treeEnd < 0) lines else lines.take(math.min(lines.length, treeEnd + 60))
         keep.mkString("\n")
       }
-      sb.append(s"\n## $name\n\n$note\n\n```\n$cut\n```\n")
+      sb.append(s"\n## $title\n\n$note\n\n```\n$cut\n```\n")
+    }
+    headline.foreach { case (name, note) => section(name, name, note) }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    distributedRoute.foreach { case (name, note) =>
+      section(s"$name (autoBroadcastJoinThreshold = -1)", name, note)
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${headline.size} queries)")
+    println(s"wrote PLANS.md (${headline.size + distributedRoute.size} sections)")
     spark.stop()
   }
 }

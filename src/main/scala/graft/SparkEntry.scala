@@ -378,7 +378,7 @@ object SparkEntry {
 
   /** documents ∪ near-duplicate copies (ids offset by 1,000,000) — makes
     * near-dup detection queries produce guaranteed non-empty output. */
-  private def augmentedDocs(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def augmentedDocs(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val dups = d.filter(col("doc_id") < 50)

@@ -68,6 +68,23 @@ object SpotBench {
     }.reduce(_ unionByName _)
   }
 
+  /** The staged documents table: [[scaledDocs]] without replica 0's
+    * planted copies (ids 1,000,000–1,000,049). The declared near-dup
+    * queries plant them again from `doc_id < 50`
+    * (`SparkEntry.augmentedDocs`), so staging them too would hand those
+    * queries 50 duplicated ids; the other replicas' copies stay staged,
+    * as nothing re-plants them. */
+  private[graft] def stagedDocs(s: SparkSession, dir: String, k: Int): DataFrame =
+    scaledDocs(s, dir, k).filter(col("doc_id") < 1000000L || col("doc_id") >= 10000000L)
+
+  /** Throws unless `doc_id` is unique in `docs`: one aggregate job. */
+  private[graft] def requireUniqueIds(docs: DataFrame, what: String): Unit = {
+    val dup = docs.groupBy(col("doc_id")).count().filter(col("count") > 1)
+      .select(col("doc_id")).limit(5).collect().map(_.get(0))
+    if (dup.nonEmpty) throw new IllegalStateException(
+      s"SpotBench: $what repeats doc_id ${dup.mkString(", ")}")
+  }
+
   /** Document-only declared queries among the suite's slowest — every
     * operator family this optimization round touched, plus the two
     * heaviest untouched document-grain queries for context. */
@@ -94,9 +111,11 @@ object SpotBench {
     // ---- stage the scaled corpus (untimed; rebuilt every invocation)
     val stageDir = s"target/spotbench/x$k"
     val t0s = System.nanoTime()
-    scaledDocs(spark, sfDir, k)
+    stagedDocs(spark, sfDir, k)
       .repartition(spark.sparkContext.defaultParallelism)
       .write.mode("overwrite").parquet(s"$stageDir/documents.parquet")
+    requireUniqueIds(SparkEntry.augmentedDocs(spark, stageDir),
+      "the augmented staged corpus")
     // symlink every other input so any declared query resolves; links
     // are recreated each run so a changed SPARK_GRAFT_SF_DIR never
     // leaves stale (or dangling) links beside the rebuilt documents

@@ -505,17 +505,21 @@ object DataFrameOps {
       .first().getSeq[Any](0).filter(_ != null).toSeq
   }
 
+  /** The session's broadcast budget in bytes,
+    * `spark.sql.autoBroadcastJoinThreshold`; `<= 0` (broadcasts off, or
+    * an unreadable value) means no budget. */
+  private[graft] def broadcastBudget(spark: org.apache.spark.sql.SparkSession): Long =
+    try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim)
+    catch { case _: Exception => -1L }
+
   /** True when Catalyst would broadcast `right` in a plain equi-join:
     * its estimated size fits the session's autoBroadcastJoinThreshold
     * and no user hint pins a shuffle strategy on it. Stats come from
     * the optimized logical plan — no job is run. */
   private def broadcastWouldWin(right: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    val thresholdStr =
-      right.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val threshold =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(thresholdStr.trim)
-      catch { case _: Exception => -1L }
+    val threshold = broadcastBudget(right.sparkSession)
     if (threshold <= 0) return false
     val shuffleHinted = right.queryExecution.analyzed.collectFirst {
       case h: ResolvedHint if h.hints.strategy.exists(_ !=

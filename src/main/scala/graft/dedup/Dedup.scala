@@ -1,10 +1,15 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Fence
+import graft.core.{BoundedCollect, DataFrameOps, Fence}
+import graft.functions.HashKernels
 import graft.text.TextFunctions
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -18,15 +23,22 @@ import graft.text.TextFunctions
   * expressions (xxhash64-based), no UDFs, so signature generation is a
   * single narrow pass over the corpus.
   *
-  * Shuffle-payload discipline: the banded exchange and the bucket
-  * self-join carry ONLY (id, band, bucket) — never the shingle arrays
-  * or text. Payloads needed for verification (shingle/ngram sets) are
-  * re-joined by id AFTER candidate pairs are known, so the wide
-  * exchange is a few dozen bytes per row regardless of document size.
-  * Hot buckets (boilerplate / empty docs) are capped at
-  * `maxBucketSize` members to bound the worst-case pair blowup — a
-  * bucket over the cap is dropped (its members overwhelmingly re-pair
-  * in other bands).
+  * Within-corpus pairing ([[verifiedPairsFromBase]]) takes one of two
+  * routes over the same fenced base, with the same result. A base
+  * that fits the session's broadcast budget
+  * (`spark.sql.autoBroadcastJoinThreshold`) is paired on the driver:
+  * one bounded collect of (id, hash set, band buckets), then the cap,
+  * the candidates and their verification in driver memory, returned
+  * as a local frame. A larger base takes the distributed route, where
+  * the banded exchange and the bucket self-join carry ONLY (id, band,
+  * bucket) — never the shingle arrays or text — and the verification
+  * payloads (shingle/ngram sets) are re-joined by id AFTER candidate
+  * pairs are known, so the wide exchange is a few dozen bytes per row
+  * regardless of document size. Cross-corpus pairing always takes the
+  * distributed route. Hot buckets (boilerplate / empty docs) are
+  * capped at `maxBucketSize` members to bound the worst-case pair
+  * blowup — a bucket over the cap is dropped (its members
+  * overwhelmingly re-pair in other bands).
   */
 object Dedup {
 
@@ -319,13 +331,17 @@ object Dedup {
     * Pipeline: shingle → signature (narrow) → explode ids into `bands`
     * buckets → shuffle once on (band, bucket) with id-only payload →
     * same-bucket id pairs → distinct → re-join shingle sets by id →
-    * exact Jaccard verification. With b bands of r rows the effective
-    * candidate threshold is ≈ (1/b)^(1/r); [[bandingFor]] solves
-    * `bands` from a recall target at `threshold`.
+    * exact Jaccard verification; a base within the broadcast budget is
+    * paired on the driver instead ([[verifiedPairsFromBase]]). With b
+    * bands of r rows the effective candidate threshold is
+    * ≈ (1/b)^(1/r); [[bandingFor]] solves `bands` from a recall target
+    * at `threshold`.
     *
-    * Construction runs ONE eager action, the kernel fence of
-    * [[minHashBase]]; the returned frame's plan evaluates no text or
-    * hash kernel.
+    * Construction runs the kernel fence of [[minHashBase]] and, when
+    * the fenced base fits the broadcast budget, the driver route's
+    * bounded collect: two eager actions (three jobs under AQE), and the
+    * returned frame is local. Over the budget only the fence runs. The
+    * returned frame's plan evaluates no text or hash kernel.
     *
     * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
     */
@@ -346,15 +362,91 @@ object Dedup {
 
   /** Within-corpus verified pairs from a minhash base (`id`, hash set
     * `hs`, `sig`): banded candidates (hot-bucket capped), exact
-    * hash-set Jaccard verification. `(id_a < id_b, jaccard)`. */
+    * hash-set Jaccard verification. `(id_a < id_b, jaccard)`, ids
+    * compared by Catalyst's `<`; a duplicated id verifies every one of
+    * its rows against every row of its partner id.
+    *
+    * The driver route runs when the base's size statistic (exact for a
+    * fenced base) fits the session's broadcast budget,
+    * `spark.sql.autoBroadcastJoinThreshold`: ONE bounded collect
+    * ([[driverVerifiedPairs]]), and the pairs come back as a local
+    * frame whose plan has no exchange and no join. The collect is
+    * bounded in bytes at run time, so a base whose statistic
+    * under-estimates it (a parquet artifact's file size) cannot bring
+    * more than the budget to the driver. Otherwise — a budget `<= 0`,
+    * a base over it, a collect over it, or more candidate pairs than
+    * it holds at 16 bytes each — the distributed route pairs the same
+    * base: an id-only banded self-join, distinct candidates, payloads
+    * re-joined by id. Both routes return the same multiset of rows. */
   private[graft] def verifiedPairsFromBase(
       base: DataFrame,
       bands: Int,
       rows: Int,
       threshold: Double,
-      maxBucketSize: Int): DataFrame =
-    jaccardVerified(candidatePairs(banded(base, bands, rows), maxBucketSize),
-      base, base, "hs", threshold)
+      maxBucketSize: Int): DataFrame = {
+    val distributed = jaccardVerified(
+      candidatePairs(banded(base, bands, rows), maxBucketSize), base, base, "hs", threshold)
+    val budget = DataFrameOps.broadcastBudget(base.sparkSession)
+    if (budget <= 0 || base.queryExecution.optimizedPlan.stats.sizeInBytes > budget) distributed
+    else driverVerifiedPairs(base, bands, rows, threshold, maxBucketSize, budget)
+      .fold(distributed)(pairs => base.sparkSession.createDataFrame(
+        java.util.Arrays.asList(pairs: _*), distributed.schema))
+  }
+
+  /** The driver route of [[verifiedPairsFromBase]]: ONE
+    * [[graft.core.BoundedCollect]] of `(id, hs, band buckets)` weighed
+    * in bytes, then on the driver the cap (a bucket of more than
+    * `maxBucketSize` rows, null ids counted, is dropped), the distinct
+    * `id_a < id_b` candidates of the kept buckets, and their
+    * verification by [[HashKernels.hashJaccard]]. `None` when the
+    * collect outweighs `budget`, or when the kept buckets' pairs,
+    * Σ C(k, 2) at 16 bytes each, do. */
+  private def driverVerifiedPairs(
+      base: DataFrame, bands: Int, rows: Int, threshold: Double,
+      maxBucketSize: Int, budget: Long): Option[Array[Row]] = {
+    val idType = base.schema("id").dataType
+    BoundedCollect(base.select(col("id"), col("hs"), bandBuckets(col("sig"), bands, rows)),
+        budget, _.getSizeInBytes.toLong)(_.toArray).toOption.map(_.flatten).flatMap { docs =>
+      val members = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[Int]]
+      for (i <- docs.indices if !docs(i).isNullAt(2)) {
+        val buckets = docs(i).getArray(2)
+        for (band <- 0 until buckets.numElements())
+          members.getOrElseUpdate((band, buckets.getLong(band)), mutable.ArrayBuffer.empty) += i
+      }
+      val kept = members.valuesIterator
+        .filter(m => m.size > 1 && (maxBucketSize <= 0 || m.size <= maxBucketSize)).toArray
+      if (kept.iterator.map(m => m.size.toLong * (m.size - 1) / 2).sum > budget / 16) None
+      else {
+        // equal ids share a rank, ranks ascend with Catalyst's `<`, and
+        // a null id has none: pairs of ranks are pairs of ids
+        val ids = docs.map(d => if (d.isNullAt(0)) null else d.get(0, idType))
+        val ord = TypeUtils.getInterpretedOrdering(idType)
+        val rank = Array.fill(docs.length)(-1)
+        val rowsOf = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[Int]]
+        docs.indices.filter(ids(_) != null).sortBy(ids(_))(ord).foreach { i =>
+          if (rowsOf.isEmpty || ord.gt(ids(i), ids(rowsOf.last.head)))
+            rowsOf += mutable.ArrayBuffer.empty[Int]
+          rowsOf.last += i
+          rank(i) = rowsOf.length - 1
+        }
+        val candidates = mutable.HashSet.empty[Long]
+        for (m <- kept; x <- m.indices; y <- x + 1 until m.length) {
+          val (a, b) = (rank(m(x)), rank(m(y)))
+          if (a >= 0 && b >= 0 && a != b)
+            candidates += (math.min(a, b).toLong << 32) | math.max(a, b)
+        }
+        val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+        Some(for {
+          c <- candidates.toArray
+          i <- rowsOf((c >>> 32).toInt)
+          j <- rowsOf(c.toInt)
+          if !docs(i).isNullAt(1) && !docs(j).isNullAt(1)
+          jaccard = HashKernels.hashJaccard(docs(i).getArray(1), docs(j).getArray(1))
+          if jaccard >= threshold
+        } yield Row(toScala(ids(i)), toScala(ids(j)), jaccard))
+      }
+    }
+  }
 
   /** Verified cross-corpus pairs from two minhash bases: band both
     * sides to (id, band, bucket), hot-bucket-cap the REFERENCE side
@@ -407,7 +499,10 @@ object Dedup {
     * [[saveMinHashRef]] corpus — [[minHashNearDuplicates]] served
     * entirely from the text-free artifact (`(id_a < id_b, jaccard)`):
     * the whole pair graph, and from it the cluster state, is derivable
-    * without ever rescanning or storing the reference text. */
+    * without ever rescanning or storing the reference text.
+    * Construction runs the artifact's width check and, when the
+    * artifact's size statistic fits the broadcast budget, the bounded
+    * collect of [[verifiedPairsFromBase]]'s driver route. */
   def minHashPairsFromRef(
       spark: org.apache.spark.sql.SparkSession,
       refPath: String,
@@ -429,7 +524,9 @@ object Dedup {
     * fence serves both pair passes) and the reference side served from
     * the [[saveMinHashRef]] artifact, its text never touched and its
     * kernels never recomputed. Construction runs the artifact's width
-    * check and ONE kernel fence. Feed the result (with the prior
+    * check, ONE kernel fence and, when the fenced batch base fits the
+    * broadcast budget, the bounded collect that pairs it on the driver
+    * ([[verifiedPairsFromBase]]). Feed the result (with the prior
     * labeling) to [[graft.operators.Graph.connectedComponentsAgainst]].
     * `(id_a, id_b, jaccard)`; batch↔batch pairs have id_a < id_b,
     * cross pairs have id_a from the batch. */
@@ -885,12 +982,16 @@ object Dedup {
     * banding machinery as token MinHash — length-based blocking is NOT
     * a sufficient blocker: at t=0.8 a log-length band spans a 1.25×
     * ratio, putting most of a natural corpus in one band, i.e. an
-    * all-pairs join). Verification re-joins the n-gram sets by id and
-    * computes exact Jaccard, so the output is exact over the candidate
+    * all-pairs join). Verification computes exact Jaccard over the
+    * n-gram sets (re-joined by id, or held on the driver when the base
+    * fits the broadcast budget), so the output is exact over the candidate
     * set; recall follows the (bands, rows) S-curve.
     *
-    * Construction runs ONE eager action: the n-gram hashes and
-    * signatures behind the fence of [[signed]].
+    * Construction runs the n-gram hashes and signatures behind the
+    * fence of [[signed]] and, when the fenced base fits the broadcast
+    * budget, the bounded collect of [[verifiedPairsFromBase]]'s driver
+    * route: two eager actions (three jobs under AQE). Over the budget
+    * only the fence runs.
     */
   def ngramJaccardNearDuplicates(
       df: DataFrame,

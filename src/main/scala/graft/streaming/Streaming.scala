@@ -2,14 +2,13 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
-import graft.core.Fence
+import graft.core.{BoundedCollect, Fence}
 
 /** Structured Streaming surface (SURVEY.md §2.11 — an extension beyond
   * the reference, which has no streaming).
@@ -920,35 +919,18 @@ object Streaming {
   /** ONE job over `banded` (`bandedFingerprints` output): `Right` of
     * all its rows when it holds at most `maxRows` and no partition
     * holds more than `ceil(maxRows / partitions)`, else `Left` of its
-    * row count. A partition past its share ships its count alone, so
-    * the driver never takes in more than `maxRows` rows. */
+    * row count — a [[graft.core.BoundedCollect]] that weighs each row
+    * as 1, so the driver never takes in more than `maxRows` rows. */
   private[graft] def collectBanded(
-      banded: DataFrame, maxRows: Long): Either[Long, BandedRows] = {
-    val rdd = banded.queryExecution.toRdd
-    val parts = math.max(rdd.getNumPartitions, 1)
-    val share = maxRows / parts + (if (maxRows % parts > 0) 1 else 0)
-    val counted = rdd.mapPartitions { it =>
-      val kept = mutable.ArrayBuffer.empty[InternalRow]
-      var n = 0L
-      it.foreach { r =>
-        n += 1
-        if (n <= share) kept += r.copy() else kept.clear()
-      }
-      Iterator.single((n, if (n <= share) Some(new BandedRows(
+      banded: DataFrame, maxRows: Long): Either[Long, BandedRows] =
+    BoundedCollect(banded, maxRows, _ => 1L) { kept =>
+      new BandedRows(
         kept.map(_.getLong(0)).toArray, kept.map(_.isNullAt(0)).toArray,
         kept.map(_.getLong(1)).toArray, kept.map(_.isNullAt(1)).toArray,
-        kept.map(_.getInt(2)).toArray, kept.map(_.getLong(3)).toArray))
-        else None))
-    }.collect()
-    val total = counted.map(_._1).sum
-    if (total > maxRows || counted.exists(_._2.isEmpty)) Left(total)
-    else {
-      val all = counted.flatMap(_._2)
-      Right(new BandedRows(
-        all.flatMap(_.id), all.flatMap(_.idNull), all.flatMap(_.sim),
-        all.flatMap(_.simNull), all.flatMap(_.band), all.flatMap(_.bucket)))
-    }
-  }
+        kept.map(_.getInt(2)).toArray, kept.map(_.getLong(3)).toArray)
+    }.map(all => new BandedRows(
+      all.flatMap(_.id), all.flatMap(_.idNull), all.flatMap(_.sim),
+      all.flatMap(_.simNull), all.flatMap(_.band), all.flatMap(_.bucket)))
 
   /** Within-batch pairing on the driver: the ids that lose, and the
     * number of fingerprint pairs compared. Rows sharing a

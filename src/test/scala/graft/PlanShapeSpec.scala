@@ -13,9 +13,15 @@ class PlanShapeSpec extends SparkTestBase {
     .withColumn("text",
       concat_ws(" ", lit("alpha beta gamma delta"), col("doc_id").cast("string")))
 
+  /** `body` under `spark.sql.autoBroadcastJoinThreshold = v`, the prior
+    * setting restored. Threshold −1 sends the within-corpus LSH pairings
+    * to their distributed route. */
+  private def withBroadcastBudget[T](v: String)(body: => T): T =
+    withSessionConf("spark.sql.autoBroadcastJoinThreshold", v)(body)
+
   test("MinHash LSH exchange carries only id/band/bucket — no text or shingle payload") {
-    val plan = dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id")
-      .queryExecution.executedPlan.toString
+    val plan = withBroadcastBudget("-1")(dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id")
+      .queryExecution.executedPlan.toString)
     // every Exchange's output must not include the text or hash-set cols
     val exchanges = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
     val bandExchanges = exchanges.filter(_.contains("band"))
@@ -27,29 +33,58 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   /** Each LSH pair operator with the number of checkpoint actions it
-    * runs: one per text corpus, except cross pairs, which fence both
-    * corpora in one action (a side-tagged union) — 2 before the fence
-    * dropped origin constraints. */
-  private def lshOperators: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
-    ("minHashNearDuplicates", 1,
+    * runs — one per text corpus, except cross pairs, which fence both
+    * corpora in one action (a side-tagged union), 2 before the fence
+    * dropped origin constraints — and the bounded collects that pair a
+    * base within the broadcast budget on the driver. */
+  private def lshOperators: Seq[(String, Int, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
+    ("minHashNearDuplicates", 1, 1,
       () => dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id")),
-    ("ngramJaccardNearDuplicates", 1,
+    ("ngramJaccardNearDuplicates", 1, 1,
       () => dedup.Dedup.ngramJaccardNearDuplicates(docs, "text", "doc_id")),
-    ("simHashNearDuplicates", 1,
+    ("simHashNearDuplicates", 1, 0,
       () => dedup.Dedup.simHashNearDuplicates(docs, "text", "doc_id", maxHamming = 6)),
-    ("simHash128NearDuplicates", 1,
+    ("simHash128NearDuplicates", 1, 0,
       () => dedup.Dedup.simHash128NearDuplicates(docs, "text", "doc_id")),
-    ("minHashCrossPairs", 1, () => dedup.Dedup.minHashCrossPairs(
+    ("minHashCrossPairs", 1, 0, () => dedup.Dedup.minHashCrossPairs(
       docs.filter(col("doc_id") >= 100), docs.filter(col("doc_id") < 100),
       "text", "doc_id")))
 
   test("LSH pair plans evaluate no text or hash kernel: the base is fenced") {
     val kernels = Seq("shingle_hashes", "ngram_hashes", "token_hashes",
       "minhash_signature", "simhash64", "simhash128")
-    for ((name, _, build) <- lshOperators) {
-      val plan = build().queryExecution.executedPlan.toString
+    // both routes: the distributed plan, and the driver route's local frame
+    for (budget <- Seq("-1", "10485760"); (name, _, _, build) <- lshOperators) {
+      val plan = withBroadcastBudget(budget)(build().queryExecution.executedPlan.toString)
       val found = kernels.filter(plan.contains)
       assert(found.isEmpty, s"$name: plan evaluates ${found.mkString(", ")}:\n$plan")
+    }
+  }
+
+  test("within the broadcast budget the within-corpus LSH pairs are a local frame") {
+    // the driver route: one bounded collect at construction, and a
+    // returned plan with no exchange and no join
+    val refPath = java.nio.file.Files.createTempDirectory("graft_plan_lshref").toString + "/ref"
+    dedup.Dedup.saveMinHashRef(docs.filter(col("doc_id") < 100), "text", "doc_id", refPath)
+    withBroadcastBudget("10485760") {
+      for ((name, out) <- Seq(
+          "minHashNearDuplicates" -> dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id"),
+          "ngramJaccardNearDuplicates" ->
+            dedup.Dedup.ngramJaccardNearDuplicates(docs, "text", "doc_id"),
+          "minHashPairsFromRef" -> dedup.Dedup.minHashPairsFromRef(spark, refPath))) {
+        val plan = out.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange") && !plan.contains("Join"),
+          s"$name: under the budget the pairs must be local:\n$plan")
+        assert(plan.contains("LocalTableScan"), s"$name: expected a local frame:\n$plan")
+      }
+      // the batch↔batch half of the incremental edges, beside the
+      // cross pairs' distributed join
+      import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+      val edges = dedup.Dedup.minHashIncrementalEdges(
+        docs.filter(col("doc_id") >= 100), refPath, "text", "doc_id").queryExecution.analyzed
+      val batchHalf = edges.collectFirst { case u: Union => u.children.head }
+      assert(batchHalf.exists(_.isInstanceOf[LocalRelation]),
+        s"minHashIncrementalEdges: the batch half must be local:\n$edges")
     }
   }
 
@@ -108,10 +143,11 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("building an LSH pair operator runs one checkpoint action per text corpus") {
     // one eager localCheckpoint per corpus; under AQE it is two jobs —
-    // the leading repartition's shuffle stage, then the checkpoint
-    for ((name, actions, build) <- lshOperators) {
+    // the leading repartition's shuffle stage, then the checkpoint —
+    // and a driver-route collect is one
+    for ((name, actions, collects, build) <- lshOperators) {
       val m = observability.RunMetricsProbe.measureEager(spark)(build())
-      assert(m.jobs == 2 * actions, s"$name: construction ran ${m.jobs} jobs")
+      assert(m.jobs == 2 * actions + collects, s"$name: construction ran ${m.jobs} jobs")
     }
   }
 
@@ -156,14 +192,24 @@ class PlanShapeSpec extends SparkTestBase {
     val baseKeys = dedup.SubstringDedup.windowKeys(docs.filter(col("doc_id") < 100),
       "doc_id", "text", k = 3)
     val rankPath = core.Quantiles.SmallInputRowsConf
-    // (operator, jobs, jobs before the one fence where it changed them,
-    // body), measured with AQE off: under AQE each shuffle stage is a
-    // job of its own and a join re-planned when a stage completes can
-    // drop a sibling stage, so counts move with stage timing
-    // (duplicateClusters read 87 and 75 jobs on one tree)
+    val refPath = java.nio.file.Files.createTempDirectory("graft_jobs_lshref").toString + "/ref"
+    dedup.Dedup.saveMinHashRef(docs.filter(col("doc_id") < 100), "text", "doc_id", refPath)
+    // (operator, jobs, jobs before the change that last moved them —
+    // the one fence, or the driver route of the within-corpus LSH
+    // pairing, whose bounded collect is one more job — body), measured
+    // with AQE off: under AQE each shuffle stage is a job of its own and
+    // a join re-planned when a stage completes can drop a sibling stage,
+    // so counts move with stage timing (duplicateClusters read 87 and
+    // 75 jobs on one tree)
     val table: Seq[(String, Int, Option[Int], () => Any)] = Seq(
-      ("minHashNearDuplicates", 1, None,
+      ("minHashNearDuplicates", 2, Some(1),
         () => dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id")),
+      ("ngramJaccardNearDuplicates", 2, Some(1),
+        () => dedup.Dedup.ngramJaccardNearDuplicates(docs, "text", "doc_id")),
+      ("minHashPairsFromRef", 3, Some(2),
+        () => dedup.Dedup.minHashPairsFromRef(s, refPath)),
+      ("minHashIncrementalEdges", 4, Some(3), () => dedup.Dedup.minHashIncrementalEdges(
+        docs.filter(col("doc_id") >= 100), refPath, "text", "doc_id")),
       ("minHashCrossPairs", 1, Some(2), () => dedup.Dedup.minHashCrossPairs(
         docs.filter(col("doc_id") >= 100), docs.filter(col("doc_id") < 100),
         "text", "doc_id")),
@@ -208,7 +254,7 @@ class PlanShapeSpec extends SparkTestBase {
     info(measured.map { case (n, j) => s"$n=$j" }.mkString(", "))
     val off = table.zip(measured).collect {
       case ((name, want, parent, _), (_, got)) if got != want =>
-        s"$name: $got jobs, pinned $want" + parent.fold("")(p => s" (before the fence: $p)")
+        s"$name: $got jobs, pinned $want" + parent.fold("")(p => s" (before its last change: $p)")
     }
     assert(off.isEmpty, off.mkString("\n"))
   }
@@ -217,8 +263,7 @@ class PlanShapeSpec extends SparkTestBase {
     // with automatic broadcasts off, a BroadcastHashJoin LeftAnti could
     // only come from a hint — the over-cap bucket set grows as
     // bandedRows / maxBucketSize, so it must never be forced to broadcast
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withBroadcastBudget("-1") {
       val ref = docs.filter(col("doc_id") < 100)
       for ((name, out) <- Seq(
           "minHashNearDuplicates" -> dedup.Dedup.minHashNearDuplicates(docs, "text", "doc_id"),
@@ -231,7 +276,7 @@ class PlanShapeSpec extends SparkTestBase {
           s"$name: hot-bucket cap forced a broadcast:\n$plan")
         out.collect() // the planner-chosen shape still runs
       }
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("SimHash C(8,2) banding exchange carries only id/band/bucket — no text/fingerprint payload") {

@@ -971,4 +971,135 @@ class PropertySpec extends SparkTestBase {
       }
     }
   }
+
+  /** A random minhash base's `(id, hs)` rows: ids drawn with replacement
+    * from a small range (duplicates) and sometimes null; hash sets
+    * perturbed from four families over a small universe, so many pairs
+    * pass a 0.5 threshold, and sometimes empty or null; plus six rows
+    * with one hash set, whose buckets hold more than a cap of 4. */
+  private val lshBaseRows: Gen[Seq[(Option[Int], Option[Seq[Long]])]] = {
+    val hs = for {
+      fam <- Gen.choose(0, 3)
+      drop <- Gen.listOfN(3, Gen.choose(0, 11))
+      add <- Gen.listOfN(3, Gen.choose(0, 20))
+      kind <- Gen.frequency(18 -> 0, 1 -> 1, 1 -> 2)
+    } yield kind match {
+      case 0 => Some(((0 until 12).filterNot(drop.contains) ++ add.map(_ + 100))
+        .map(fam * 1000L + _).distinct.sorted)
+      case 1 => Some(Seq.empty[Long])
+      case _ => None
+    }
+    for {
+      n <- Gen.choose(10, 28)
+      ids <- Gen.listOfN(n, Gen.frequency(9 -> Gen.choose(0, n).map(Option(_)),
+        1 -> Gen.const(Option.empty[Int])))
+      sets <- Gen.listOfN(n, hs)
+    } yield ids.zip(sets) ++ (0 until 6).map(k => (Option(200 + k), Option((500L until 512L).toSeq)))
+  }
+
+  /** `rows` as a 16-hash minhash base with ids of `idType`. */
+  private def lshBase(rows: Seq[(Option[Int], Option[Seq[Long]])], idType: String) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val (dt, id): (DataType, Int => Any) = idType match {
+      case "int" => (IntegerType, i => i)
+      case "long" => (LongType, i => i * 3000000000L)
+      case "string" => (StringType, i => s"d$i") // "d10" < "d9": byte order, not numeric
+    }
+    val schema = StructType(Seq(StructField("id", dt), StructField("hs", ArrayType(LongType))))
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (i, h) => Row(i.map(id).orNull, h.orNull) }: _*),
+      schema)
+      .withColumn("sig", graft.functions.HashFunctions.minHashSignatureNative(col("hs"), 16))
+  }
+
+  /** The LSH pairing of a collected 4 × 4-banded base, over all pairs
+    * of rows: a candidate is an id pair `a < b` (`lt`) with some rows
+    * sharing a bucket of at most `cap` rows (`cap <= 0`: any), and every
+    * row of `a` is verified against every row of `b`. */
+  private def allPairsReference(base: org.apache.spark.sql.DataFrame, cap: Int,
+      threshold: Double, lt: (Any, Any) => Boolean): Seq[(Any, Any, Double)] = {
+    val rows = base.collect()
+    def arr(i: Int, c: Int) =
+      if (rows(i).isNullAt(c)) None else Some(new GenericArrayData(rows(i).getSeq[Long](c).toArray))
+    val buckets = rows.indices.map(i => arr(i, 2).map { sig =>
+      val b = HashKernels.bandBuckets(sig, 4, 4); (0 until 4).map(b.getLong) })
+    val size = buckets.flatten.flatMap(_.zipWithIndex).groupBy(identity).view.mapValues(_.size).toMap
+    def id(i: Int) = rows(i).get(0)
+    val candidates = (for {
+      i <- rows.indices; j <- rows.indices
+      if id(i) != null && id(j) != null && lt(id(i), id(j))
+      bi <- buckets(i); bj <- buckets(j)
+      if (0 until 4).exists(b => bi(b) == bj(b) && (cap <= 0 || size((bi(b), b)) <= cap))
+    } yield (id(i), id(j))).distinct
+    for {
+      (a, b) <- candidates
+      i <- rows.indices if id(i) == a
+      j <- rows.indices if id(j) == b
+      hi <- arr(i, 1); hj <- arr(j, 1)
+      jaccard = HashKernels.hashJaccard(hi, hj)
+      if jaccard >= threshold
+    } yield (a, b, jaccard)
+  }
+
+  private def pairRows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+    d.collect().map(r => (r.get(0), r.get(1), r.getDouble(2)).toString).toSeq.sorted
+
+  private def plansJoin(d: org.apache.spark.sql.DataFrame): Boolean =
+    d.queryExecution.executedPlan.toString.contains("Join")
+
+  test("verifiedPairsFromBase: driver and distributed routes equal the all-pairs reference") {
+    val lt: Map[String, (Any, Any) => Boolean] = Map(
+      "int" -> ((a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int]),
+      "long" -> ((a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]),
+      "string" -> ((a, b) => a.asInstanceOf[String] < b.asInstanceOf[String])) // ASCII ids
+    var pairsSeen = 0
+    for (((rows, idType), i) <- samples(lshBaseRows, 6)
+        .zip(Iterator.continually(Seq("int", "long", "string")).flatten).zipWithIndex;
+        cap <- Seq(0, 4, 1000)) {
+      val base = lshBase(rows, idType)
+      val want = allPairsReference(base, cap, 0.5, lt(idType)).map(_.toString).sorted
+      // the default budget pairs on the driver; -1 and a 1-byte budget
+      // (under the base's size statistic) take the distributed route
+      for ((budget, distributed) <- Seq(("10485760", false), ("-1", true), ("1", true))) {
+        withSessionConf("spark.sql.autoBroadcastJoinThreshold", budget) {
+          val out = graft.dedup.Dedup.verifiedPairsFromBase(base, 4, 4, 0.5, cap)
+          assert(plansJoin(out) == distributed,
+            s"i=$i $idType cap=$cap budget=$budget: wrong route")
+          assert(pairRows(out) == want, s"i=$i $idType cap=$cap budget=$budget:\n" +
+            s"${pairRows(out).take(10)}\nvs reference\n${want.take(10)}")
+        }
+      }
+      pairsSeen += want.size
+    }
+    assert(pairsSeen > 0, "every corpus paired nothing — the comparison is vacuous")
+  }
+
+  test("verifiedPairsFromBase: a collect or pair set over the budget falls back to the distributed route") {
+    import org.apache.spark.sql.functions.col
+    // 60 rows of one hash set: every band holds one bucket of 60 rows
+    val rows = (0 until 60).map(i => (Option(i), Option((0L until 12L).toSeq))) ++
+      (0 until 8).map(i => (Option(100 + i), Option((0L until 12L).map(_ + i).toSeq)))
+    val base = lshBase(rows, "long")
+    val want = allPairsReference(base, 0, 0.5, (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long])
+      .map(_.toString).sorted
+    val estimate = base.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val bytes = base.select(col("id"), col("hs"),
+        graft.functions.HashFunctions.bandBucketsNative(col("sig"), 4, 4))
+      .queryExecution.toRdd
+      .map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow].getSizeInBytes.toLong)
+      .sum().toLong
+    val pairBytes = 4 * (60L * 59 / 2) * 16
+    assert(estimate < bytes && 2 * bytes < pairBytes, s"estimate $estimate, bytes $bytes")
+    // over the statistic, under the collect: the runtime byte bound;
+    // under the collect, over the pairs: the pair bound; then room for both
+    for ((budget, distributed) <- Seq((estimate + 1, true), (2 * bytes, true), (2 * pairBytes, false))) {
+      withSessionConf("spark.sql.autoBroadcastJoinThreshold", budget.toString) {
+        val out = graft.dedup.Dedup.verifiedPairsFromBase(base, 4, 4, 0.5, 0)
+        assert(plansJoin(out) == distributed, s"budget=$budget: wrong route")
+        assert(pairRows(out) == want, s"budget=$budget: output differs from the reference")
+      }
+    }
+  }
 }

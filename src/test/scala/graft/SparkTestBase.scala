@@ -69,6 +69,14 @@ trait SparkTestBase extends AnyFunSuite {
       s"message '${e.getMessage}' does not contain '$substring'")
   }
 
+  /** `body` with the session conf `key` set to `value`, the prior
+    * setting restored afterwards (set or unset). */
+  def withSessionConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Labeled test case for [[parametrizeCases]] — the Scala analogue of
     * the reference's `Case` container (test_utils.py:40-90): `label` is
     * the test ID shown per case in the runner output; `params` carries
