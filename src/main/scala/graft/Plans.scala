@@ -46,10 +46,6 @@ object Plans {
       "Streaming SimHash near-dup dedup (batch-equivalence path): ONE kernel fingerprint pass (the fingerprint frame is checkpoint-fenced, so the dedup and every invariant join read the materialised fingerprints, never re-running the kernel over the corpus), ONE exchange on the shard key into FlatMapGroupsWithState — no payload re-shuffle (PlanShapeSpec pins the single-exchange shape); the survivor set is checkpointed separately to pin the order-dependent survivor choice across the invariant joins. Since r10 the frame (and its evtime sibling) also cross-joins the late-drop probe's 1-row literal (`n_late_emitted`, cached per session — SparkEntry.evtimeLateProbe), adding one more 1-row BroadcastNestedLoopJoin Cross of the same invariant-aggregate shape as the existing ones.",
     "q_stream_dedup_fullrecall" ->
       "Full-recall streaming near-dup dedup: the plan below is the invariant-oracle frame over the survivors store the two micro-batch runs wrote; the operator's own per-batch shape is pinned by PlanShapeSpec — the banded micro-batch BROADCASTS into a BroadcastHashJoin on (band, bucket) while the survivors store streams map-side with no exchange (no banded hashpartitioning anywhere: within-batch banding is checkpoint-fenced, the store never shuffles — the property that keeps per-batch cost a columnar scan, not a shuffle, as the store grows to corpus scale).",
-    "q_bloom_decontaminate" ->
-      "ADAPTIVE (r16): the sizing collect routes eval gram sets within maxDriverGrams — this corpus — to the exact broadcast pass shown here (train gram explode + LocalTableScan gram join + anti join: the plan that BEATS the prefilter while the eval side broadcasts, SCALE.md r12). Past the bound, the distributed regime builds the bloom and scans train with the codegen'd bloom_any_contain Filter over the gram-kernel Project, no explode before the probe — 94x join-volume cut at 8x corpus (SCALE.md r11), pinned by the maxDriverGrams=1 scale row.",
-    "q_bloom_semi" ->
-      "Bloom-prefiltered EXACT semi join, SCALE regime pinned for this audit (the adaptive router sends right sides <= graft.bloom.smallRightRows — judged by the ACTUAL right row count since r17, never the expectedItems hint — to a plain broadcast join of the KEY PROJECTION only, which is what sf0.01 would take): bloom_might_contain(xxhash64(key)) is a Filter on the left SCAN — candidates are pruned before any exchange; the exact semi join then removes false positives. The operator's case is a right side too big to broadcast, where the left exchange carries only the candidate fraction.",
     "q_pack_greedy" ->
       "Exact greedy packing: Exchange hashpartitioning(source) + Sort(source, doc_id) + MapPartitions — the secondary-sort pattern; one shuffle of the corpus, O(1) state in the partition walk, no window buffering.",
     "q_dedup_against" ->
@@ -64,8 +60,6 @@ object Plans {
       "Entropy quality signals: both Shannon entropies from stateless codegen'd kernels in ONE narrow Project over the scan, ZERO exchanges — the hand-rolled formulation (Bench raw pair) pays two corpus explodes and two doc-grain shuffles for the same numbers.",
     "q_semantic_decontaminate" ->
       "Embedding-grain decontamination: BroadcastNestedLoopJoin LeftAnti with the codegen'd cosine kernel in the join condition — the corpus side is scan -> join with NO exchange anywhere (DedupSpec pins BNLJ-no-SMJ); each row short-circuits on its first contaminated hit.",
-    "q_exact_quantile" ->
-      "Exact global quantiles, SCALE regime pinned for this audit (the adaptive router sends inputs <= graft.quantiles.smallInputRows through one sorted-array aggregate — bit-identical values, which is what sf0.01 would take): only the VALUE column is range-partitioned and sorted, inside the one fence job (the Scan ExistingRDD leaf); ids are partition offsets + position in a narrow Project. Each q's two lookup ranks (floor and ceil of q*(n-1), n read off the fence) are a LocalTableScan + Generate subplan that BROADCASTS into a BroadcastHashJoin on the rank, so the corpus side has no exchange; the only exchange above the fence is the q-grain aggregate that takes the lower value. The same body, grouped, serves q_group_quantile; the naive raw pair sorts the corpus through a single-partition Window.",
     "q_chunk" ->
       "Document chunking: scan -> one narrow Project (sequence + slice inside transform) -> Generate(posexplode) -> Project, ZERO exchanges — chunking pipelines with the parquet scan at any corpus size.",
     "q_scd2" ->
@@ -90,8 +84,6 @@ object Plans {
       "Two-stage drift monitor: stage 1 is the same partial/final windowed HashAggregate the streaming path runs (corpus reduces to window x category before anything else); stage 2 joins that against a BROADCAST reference-proportions frame and reduces per window — every post-stage-1 exchange is window-count-sized.",
     "q_join_cardinality" ->
       "Join pre-flight: both corpora reduce to per-key counts (partial/final HashAggregate) BEFORE the diagnosis join — the join operates at key cardinality, and TakeOrderedAndProject bounds the answer; the quadratic join being diagnosed never runs.",
-    "q_qcut" ->
-      "Equi-depth bucketing, SCALE regime pinned for this audit (below graft.quantiles.smallInputRows the router swaps the bounds subplan for one Percentile aggregate per group — safe there because the total row count caps every group's buffer): the exact interior bounds come from the same rank body as q_exact_quantile — range-partitioned sorted values behind the fence (Scan ExistingRDD), the broadcast lookup ranks in a BroadcastHashJoin, a q-grain aggregate interpolating the two values — with no value-buffering percentile aggregate in the plan (a billion-row group would OOM its one buffer). The bounds reassemble to one (numBuckets-1)-element array (ObjectHashAggregate; no group keys here, so one row) that BROADCASTS back over the corpus scan in a BroadcastNestedLoopJoin LeftOuter; bucket assignment is a narrow array-fold Project. No Window over the corpus — the ntile formulation would sort it through one partition per group.",
     "q_topk_group" ->
       "Per-group top-k rows: a per-partition bounded-heap prune (MapPartitions, O(k x groups) memory) feeds the exact rank window, so the window sorts <= k x partitions x groups rows instead of the corpus — the bare-window formulation serialises each whole group through one task.",
     "q_argmax_group" ->
@@ -143,20 +135,30 @@ object Plans {
     "q_pipeline_incremental" ->
       "Composed incremental ingest: the within-corpus pair feeds (the ref state from the artifact, the batch↔batch half of the batch edges) fit the broadcast budget here and arrive as local frames paired on the driver; the batch↔artifact half is the id-only banded LSH exchange (hash-set payloads re-join per candidate only); the batch contracts at LABEL grain, and the historical labeling flows through exactly ONE BroadcastHashJoin relabel. Nothing downstream of the two banded exchanges is corpus-sized, and no historical pair is recomputed.",
     "q_cc_incremental" ->
-      "Incremental connected components: the artifact is SCANNED twice and EXCHANGED never — the touched-slice lookup is a map-side BroadcastHashJoin LeftSemi against the batch endpoints (r17 fix: the old endpoints LEFT JOIN artifact shuffled the full artifact on id every ingest, as did the new-node anti join), and the relabel is ONE BroadcastHashJoin against the touched-component mapping (batch-bounded, checkpointed and counted, shuffle-join fallback above graft.graph.smallMappingRows). The canonicality guard is a raise_error expression fused into the artifact projection — zero extra jobs. No historical edge is rescanned anywhere in the plan.",
+      "Incremental connected components: the artifact is SCANNED twice and EXCHANGED never — the touched-slice lookup is a map-side BroadcastHashJoin LeftSemi against the batch endpoints (r17 fix: the old endpoints LEFT JOIN artifact shuffled the full artifact on id every ingest, as did the new-node anti join), and the relabel is ONE BroadcastHashJoin against the touched-component mapping (batch-bounded and fenced; each of the two broadcasts needs its fence's exact size within autoBroadcastJoinThreshold, else a shuffle join). The canonicality guard is a raise_error expression fused into the artifact projection — zero extra jobs. No historical edge is rescanned anywhere in the plan.",
     "q_mmr_rerank" ->
       "MMR diversified re-ranking: ONE corpus join fetches candidate vectors; the pairwise-cosine table is id-grain and checkpoint-fenced; each of the k greedy steps is a broadcast-sized equi-join + argmax window over (queries x candidates) rows — iteration count = k, no frame is ever corpus-sized past the candidate fetch, and every argmax orders on 6-dp-rounded scores with id tie-break (engine-portable pick sequence).",
     "q_script_profile" ->
       "Unicode script profile: ONE codegen'd kernel call (ScriptCountsExpr — a single code-point loop classifying all eight script classes) in a narrow Project, ZERO exchanges; the frac columns and the dominant-script argmax live in chained selects referencing plain attributes — folding the argmax into one expression embeds each frac subtree in both branches of every CaseWhen step (~2^8 copies, conditionally evaluated so CSE cannot dedupe: the r14 57s hazard, now 0.4s).",
   )
 
-  /** Headline queries dumped a second time with broadcasts off
-    * (`spark.sql.autoBroadcastJoinThreshold = -1`): within the budget
-    * their within-corpus LSH pairing runs on the driver, and this shows
-    * the distributed route instead. */
+  /** Queries dumped with broadcasts off
+    * (`spark.sql.autoBroadcastJoinThreshold = -1`): at this scale
+    * factor their inputs fit the budget and take a small-input route
+    * (the within-corpus LSH pairing on the driver, the quantile
+    * aggregate, the broadcast bloom joins), so this shows the scale
+    * route a larger input takes instead. */
   private val distributedRoute = Seq(
     "q_minhash_dedup" ->
-      "LSH shape, distributed route: banded Exchange carries (id, band, bucket) only; the hot-bucket cap is a left-anti join against the over-cap bucket count; hash-set payloads re-join by id after candidate generation.")
+      "LSH shape, distributed route: banded Exchange carries (id, band, bucket) only; the hot-bucket cap is a left-anti join against the over-cap bucket count; hash-set payloads re-join by id after candidate generation.",
+    "q_bloom_decontaminate" ->
+      "Driver-collect rung (an eval side of at most threshold / 1 KiB docs — this corpus at the default budget — delegates to the exact decontaminate pass instead): one sizing collect lands the eval gram set, within maxDriverGrams, on the driver, which builds the bloom and ships the grams as the broadcast LocalTableScan of the verify join. Train docs pass the codegen'd bloom_any_contain Filter before the gram explode, so only candidates explode and join; the anti join then drops them from train (sort-merge here only because broadcasts are off). Past maxDriverGrams the distributed regime builds the bloom from a fence of the eval grams — 94x join-volume cut at 8x corpus (SCALE.md r11), pinned by the maxDriverGrams=1 scale row.",
+    "q_bloom_semi" ->
+      "Bloom-prefiltered EXACT semi join, bloom route (a right key column of at most threshold / 8 rows — judged by the ACTUAL right row count, never the expectedItems hint — takes a plain broadcast join of the KEY PROJECTION only, which is what sf0.01 takes at the default budget): bloom_might_contain(xxhash64(key)) is a Filter on the left SCAN — candidates are pruned before any exchange; the exact semi join then removes false positives. The operator's case is a right side too big to broadcast, where the left exchange carries only the candidate fraction.",
+    "q_exact_quantile" ->
+      "Exact global quantiles, rank route (an input of at most threshold / 8 rows takes one sorted-array aggregate — bit-identical values, which is what sf0.01 takes at the default budget): only the VALUE column is range-partitioned and sorted, inside the one fence job (the Scan ExistingRDD leaf); ids are partition offsets + position in a narrow Project. Each q's two lookup ranks (floor and ceil of q*(n-1), n read off the fence) are a LocalTableScan + Generate subplan that BROADCASTS into a BroadcastHashJoin on the rank, so the corpus side has no exchange; the only exchange above the fence is the q-grain aggregate that takes the lower value. The same body, grouped, serves q_group_quantile; the naive raw pair sorts the corpus through a single-partition Window.",
+    "q_qcut" ->
+      "Equi-depth bucketing, rank route (within threshold / 8 rows the router swaps the bounds subplan for one Percentile aggregate per group — safe there because the total row count caps every group's buffer): the exact interior bounds come from the same rank body as q_exact_quantile — range-partitioned sorted values behind the fence (Scan ExistingRDD), the broadcast lookup ranks in a BroadcastHashJoin, a q-grain aggregate interpolating the two values — with no value-buffering percentile aggregate in the plan (a billion-row group would OOM its one buffer). The bounds reassemble to one (numBuckets-1)-element array (ObjectHashAggregate; no group keys here, so one row) that BROADCASTS back over the corpus scan in a BroadcastNestedLoopJoin LeftOuter; bucket assignment is a narrow array-fold Project. No Window over the corpus — the ntile formulation would sort it through one partition per group.")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -167,12 +169,6 @@ object Plans {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "target/plans_warehouse")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // pin the adaptive-crossover operators to their SCALE regime:
-      // this audit documents the plans that must survive 100x, not the
-      // (measured-optimal) small-regime aggregate/broadcast routes the
-      // sf0.01 row counts would select
-      .config(graft.core.Quantiles.SmallInputRowsConf, "0")
-      .config(graft.core.DataFrameOps.BloomSmallRightRowsConf, "0")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -513,20 +513,39 @@ object DataFrameOps {
       spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim)
     catch { case _: Exception => -1L }
 
+  /** Whether `df` may be held in one place — a broadcast, a driver
+    * collect or one aggregation buffer — within the session's
+    * [[broadcastBudget]]: the one rule behind every small-input route.
+    * With `rowBytes <= 0` the optimized plan's size statistic decides
+    * (exact on a fenced frame) and no job runs. With `rowBytes > 0`
+    * each row weighs `rowBytes` and a LIMIT-bounded count decides:
+    * `limit(max + 1)` caps every task at max + 1 rows, so a 100 TB
+    * frame stops each scan task after its first row groups instead of
+    * paying a full pass to pick a route (min(n, max + 1) <= max iff
+    * n <= max). A row bound at or above Int.MaxValue cannot be a limit
+    * and takes the exact count instead of a clipped one that could
+    * route a 2B+-row frame into one place. A budget `<= 0` answers
+    * false and runs no job. */
+  private[graft] def fitsBroadcastBudget(df: DataFrame, rowBytes: Long = 0L): Boolean = {
+    val budget = broadcastBudget(df.sparkSession)
+    if (budget <= 0) false
+    else if (rowBytes <= 0) df.queryExecution.optimizedPlan.stats.sizeInBytes <= budget
+    else {
+      val maxRows = budget / rowBytes
+      val n = if (maxRows >= Int.MaxValue) df.count() else df.limit(maxRows.toInt + 1).count()
+      n <= maxRows
+    }
+  }
+
   /** True when Catalyst would broadcast `right` in a plain equi-join:
-    * its estimated size fits the session's autoBroadcastJoinThreshold
-    * and no user hint pins a shuffle strategy on it. Stats come from
-    * the optimized logical plan — no job is run. */
+    * its estimated size fits the session's broadcast budget and no user
+    * hint pins a shuffle strategy on it. No job is run. */
   private def broadcastWouldWin(right: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    val threshold = broadcastBudget(right.sparkSession)
-    if (threshold <= 0) return false
-    val shuffleHinted = right.queryExecution.analyzed.collectFirst {
-      case h: ResolvedHint if h.hints.strategy.exists(_ !=
-        org.apache.spark.sql.catalyst.plans.logical.BROADCAST) => h
-    }.isDefined
-    !shuffleHinted &&
-      right.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold)
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    fitsBroadcastBudget(right) && !right.queryExecution.analyzed.exists {
+      case h: ResolvedHint => h.hints.strategy.exists(_ != BROADCAST)
+      case _ => false
+    }
   }
 
   /** #34 Dictionary recode with passthrough for unmapped keys — a literal
@@ -647,11 +666,13 @@ object DataFrameOps {
   // ADAPTIVE CROSSOVER (measured, SCALE.md r11/r12 bloom rows): when
   // the right side is broadcast-sized, the plain broadcast semi/anti
   // join is already map-side and the bloom only adds its build job —
-  // so both operators COUNT the right key (a narrow pass, cheaper
-  // than the bloom build it replaces or sizes) and route small right
-  // sides straight to the exact broadcast join. The bloom path is the
-  // non-broadcastable regime, where the candidate cut applies to real
-  // exchange bytes (16.7× exchange-volume cut at 20M×5%).
+  // so both operators route a right key column that fits the session's
+  // broadcast budget at 8 bytes a key (one limit-bounded count, cheaper
+  // than the bloom build it replaces or sizes) straight to the exact
+  // broadcast join. The bloom path is the non-broadcastable regime,
+  // where the candidate cut applies to real exchange bytes (16.7×
+  // exchange-volume cut at 20M×5%). A budget of −1 takes the bloom
+  // path with no routing count.
   //
   // The routing figure is always the ACTUAL right-key row count —
   // never the caller's `expectedItems`, which is a DISTINCT-key bloom
@@ -664,54 +685,16 @@ object DataFrameOps {
   private def bloomOverKey(
       right: DataFrame, rightKey: String,
       fpp: Double, expectedItems: Long): Array[Byte] = {
-    requireColumns(right, Seq(rightKey), "bloomJoin")
     val hashed = right.select(xxhash64(col(rightKey)).as("__graft_bk"))
     // sizing: the caller's figure, or one narrow single-column count
-    // (the limit-bounded router probe cannot size — its count is
-    // clipped at the crossover). Oversizing is benign (a bigger
-    // filter, same exactness); undersizing just raises the
-    // false-positive rate the exact join absorbs anyway.
+    // (the limit-bounded router count cannot size — it is clipped at
+    // the crossover). Oversizing is benign (a bigger filter, same
+    // exactness); undersizing just raises the false-positive rate the
+    // exact join absorbs anyway.
     val expected: Long = math.max(
       if (expectedItems > 0) expectedItems else hashed.count(), 1L)
     graft.functions.BloomFunctions.buildBloomBytes(hashed, "__graft_bk", expected, fpp)
   }
-
-  /** Router probe for the bloom-vs-broadcast crossover: whether the
-    * right side has at most `thr` rows, decided from a LIMIT-bounded
-    * count — `limit(thr + 1)` caps every task at thr+1 rows, so a
-    * 100 TB right side stops each scan task after its first row
-    * groups instead of paying a full pass just to pick a route
-    * (min(n, thr+1) <= thr iff n <= thr). Returns the bounded count;
-    * callers must treat a value > thr as "big side, size unknown" —
-    * bloom sizing then comes from the caller's expectedItems hint or
-    * [[bloomOverKey]]'s own count, exactly one full pass either way.
-    * `expectedItems` deliberately does NOT route: it estimates
-    * DISTINCT keys for bloom sizing, and a right side with few
-    * distinct keys but many rows must not be force-broadcast on a
-    * hint (ADVICE r16). */
-  private def boundedRightKeyCount(
-      right: DataFrame, rightKey: String, thr: Long): Long = {
-    requireColumns(right, Seq(rightKey), "bloomJoin")
-    // a conf above Int.MaxValue cannot express its limit — use the
-    // exact count rather than a silently clipped one that could route
-    // a 2B+-key side into the broadcast regime
-    if (thr >= Int.MaxValue.toLong) right.select(col(rightKey)).count()
-    else right.select(col(rightKey)).limit(thr.toInt + 1).count()
-  }
-
-  /** Session conf key for the bloom-vs-broadcast crossover: right
-    * sides with at most this many rows skip the bloom build and run
-    * the plain broadcast semi/anti join (already map-side — the bloom
-    * would only add its build job). 0 forces the bloom path, e.g. for
-    * scale measurements. Default sized to the broadcast regime:
-    * ~1 M 8-byte keys ≈ Spark's default autoBroadcast budget. */
-  val BloomSmallRightRowsConf = "graft.bloom.smallRightRows"
-
-  private[graft] val DefaultBloomSmallRightRows = 1000000L
-
-  private def bloomSmallRightRows(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get(BloomSmallRightRowsConf, DefaultBloomSmallRightRows.toString).toLong
 
   /** EXACT semi join, bloom-accelerated: rows of `left` whose
     * `leftKey` appears in `right`'s `rightKey`. Plan shape: build a
@@ -732,33 +715,30 @@ object DataFrameOps {
     * through the left exchange — a 16.7× exchange-volume cut — and
     * 1.49 s → 1.08 s warm wall time vs the plain semi join. Against a
     * BROADCASTABLE right side the plain join is already optimal and
-    * this operator only adds the build job (bench sub-0.5 s band). */
+    * the bloom would only add its build job (bench sub-0.5 s band).
+    *
+    * Route: a right side of at most budget / 8 rows, the session's
+    * `spark.sql.autoBroadcastJoinThreshold` at 8 bytes a key, decided
+    * by one limit-bounded count, takes the plain semi join against a
+    * broadcast of the key projection; a larger one takes the bloom. A
+    * budget of −1 takes the bloom with no count. */
   def bloomSemiJoin(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       fpp: Double = 0.01, expectedItems: Long = -1L): DataFrame = {
     requireColumns(left, Seq(leftKey), "bloomSemiJoin")
-    // conf 0 pins the bloom route with NO router count at all (the
-    // Quantiles.SmallInputRowsConf escape hatch: on a derived right
-    // side the count executes the whole upstream plan) — sizing then
-    // comes from the caller's hint or bloomOverKey's own count
-    val thr = bloomSmallRightRows(left)
-    val n = if (thr > 0) boundedRightKeyCount(right, rightKey, thr) else -1L
-    if (thr > 0 && n <= thr) {
-      // broadcast regime: the plain semi join is already one map-side
-      // hash probe per left row — a bloom can only add its build job.
-      // Only the KEY projection broadcasts: a semi join reads nothing
-      // else from the right, so wide right rows can't blow the build.
-      val rightKeys = right.select(col(rightKey))
-      return left.join(broadcast(rightKeys),
-        left(leftKey) === rightKeys(rightKey), "left_semi")
+    requireColumns(right, Seq(rightKey), "bloomSemiJoin")
+    val rightKeys = right.select(col(rightKey))
+    // broadcast regime: the plain semi join is already one map-side
+    // hash probe per left row — a bloom can only add its build job
+    if (fitsBroadcastBudget(rightKeys, rowBytes = 8L))
+      left.join(broadcast(rightKeys), left(leftKey) === rightKeys(rightKey), "left_semi")
+    else {
+      val bytes = bloomOverKey(right, rightKey, fpp, expectedItems)
+      val candidates = left.filter(
+        graft.functions.BloomFunctions.bloomMightContain(xxhash64(col(leftKey)), bytes))
+      candidates.join(right, candidates(leftKey) === right(rightKey), "left_semi")
     }
-    // n is limit-clipped above the crossover — never a bloom size;
-    // sizing comes from the caller's hint or bloomOverKey's own count
-    val bytes = bloomOverKey(right, rightKey, fpp, expectedItems)
-    val candidates = left.filter(
-      graft.functions.BloomFunctions.bloomMightContain(xxhash64(col(leftKey)), bytes))
-    candidates.join(right, candidates(leftKey) === right(rightKey), "left_semi")
   }
 
   /** EXACT anti join, bloom-accelerated: rows of `left` whose
@@ -769,30 +749,28 @@ object DataFrameOps {
     * cheap; the wide exchange the plain anti join would pay on all of
     * `left` is not), and their union is exactly `left ANTI JOIN
     * right`. NULL left keys never match an equi-join, so they are
-    * routed straight to the output like the plain anti join does. */
+    * routed straight to the output like the plain anti join does.
+    * Routed as [[bloomSemiJoin]]: at most budget / 8 right rows take
+    * the plain anti join against a broadcast of the key projection. */
   def bloomAntiJoin(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       fpp: Double = 0.01, expectedItems: Long = -1L): DataFrame = {
     requireColumns(left, Seq(leftKey), "bloomAntiJoin")
-    // conf-0 count short-circuit as in bloomSemiJoin
-    val thr = bloomSmallRightRows(left)
-    val n = if (thr > 0) boundedRightKeyCount(right, rightKey, thr) else -1L
-    if (thr > 0 && n <= thr) {
-      // broadcast regime: the plain anti join is already map-side;
-      // key-only broadcast for the same reason as bloomSemiJoin
-      val rightKeys = right.select(col(rightKey))
-      return left.join(broadcast(rightKeys),
-        left(leftKey) === rightKeys(rightKey), "left_anti")
+    requireColumns(right, Seq(rightKey), "bloomAntiJoin")
+    val rightKeys = right.select(col(rightKey))
+    // broadcast regime: the plain anti join is already map-side
+    if (fitsBroadcastBudget(rightKeys, rowBytes = 8L))
+      left.join(broadcast(rightKeys), left(leftKey) === rightKeys(rightKey), "left_anti")
+    else {
+      val bytes = bloomOverKey(right, rightKey, fpp, expectedItems)
+      val probe = graft.functions.BloomFunctions
+        .bloomMightContain(xxhash64(col(leftKey)), bytes)
+      val misses = left.filter(col(leftKey).isNull || !probe)
+      val hits = left.filter(col(leftKey).isNotNull && probe)
+      misses.unionByName(
+        hits.join(right, hits(leftKey) === right(rightKey), "left_anti"))
     }
-    // clipped-count rule as in bloomSemiJoin: never size from n here
-    val bytes = bloomOverKey(right, rightKey, fpp, expectedItems)
-    val probe = graft.functions.BloomFunctions
-      .bloomMightContain(xxhash64(col(leftKey)), bytes)
-    val misses = left.filter(col(leftKey).isNull || !probe)
-    val hits = left.filter(col(leftKey).isNotNull && probe)
-    misses.unionByName(
-      hits.join(right, hits(leftKey) === right(rightKey), "left_anti"))
   }
 
 }

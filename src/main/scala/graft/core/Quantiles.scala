@@ -45,65 +45,31 @@ import graft.operators.Ids
   * `percentile` aggregate per group) beat the rank machinery's fixed
   * costs (range-exchange sampling job + fence) — the aggregate wins at
   * 600 k (~1.1×), the ranks win at 4.8 M (1.9×) and 20 M (2.3×), and
-  * only the ranks survive 10^8-value groups at all. Every call
-  * therefore counts its input (a narrow metadata-cheap pass, the
-  * [[Drift.ksStatistic]] pattern) and routes small inputs through the
-  * aggregate — bit-for-bit the same results, pinned by parity specs,
+  * only the ranks survive 10^8-value groups at all. The route: an
+  * input of at most budget / 8 rows — the session's
+  * `spark.sql.autoBroadcastJoinThreshold` at one 8-byte double per
+  * value, 1,310,720 rows at the default 10 MiB — takes the aggregate,
+  * decided by one limit-bounded count
+  * ([[DataFrameOps.fitsBroadcastBudget]]); a larger input, or any
+  * input under a budget of −1 (no count then), takes the ranks. Both
+  * routes give bit-for-bit the same results, pinned by parity specs,
   * because the rank path deliberately implements the aggregate's
-  * interpolation convention. The crossover row count is the session
-  * conf `graft.quantiles.smallInputRows` (default 2,000,000; set 0 to
-  * force the rank path, e.g. for scale measurements). Total row count
-  * bounds every group's size, so grouped calls are safe under the same
-  * threshold.
+  * interpolation convention. Total row count bounds every group's
+  * size, so grouped calls are safe under the same bound.
+  *
+  * ROUTER COST ON DERIVED INPUTS (ADVICE r16): the count reads a scan
+  * cheaply, but a `df` with joins/shuffles upstream executes its upstream
+  * plan up to the limit for it, and the rank path then computes it
+  * again. Callers feeding an expensive derived frame should fence or
+  * cache it first, or run under a budget of −1, which takes the rank
+  * path with no count.
   */
 object Quantiles {
-
-  /** Session conf key for the aggregate-vs-ranks crossover row count;
-    * inputs with `count() <= value` use the value-buffering aggregate
-    * path, larger ones the range-exchange rank path. 0 disables the
-    * small path entirely. */
-  val SmallInputRowsConf = "graft.quantiles.smallInputRows"
-
-  /** Default crossover: between the measured 600 k (aggregate ~1.1×
-    * ahead) and 4.8 M (ranks 1.9× ahead) points, biased low so the
-    * rank path owns everything with real scale risk. */
-  val DefaultSmallInputRows = 2000000L
-
-  /** True when `df` is small enough (by the session's crossover conf)
-    * that the value-buffering aggregate path is both safe and faster.
-    * The count is one narrow job — zero columns decode on a parquet
-    * scan — and the input row count bounds every group's size.
-    *
-    * ROUTER COST ON DERIVED INPUTS (ADVICE r16): "metadata-cheap" holds
-    * for scans; a `df` with joins/shuffles upstream executes its whole
-    * upstream plan for this count, and above the crossover the rank
-    * path then computes it again. Callers feeding an expensive derived
-    * frame should either cache/localCheckpoint it first (the count then
-    * reads the materialised form and the routed path reuses it) or pin
-    * the route and skip the count entirely: conf 0 forces the rank
-    * path with NO count job; a huge conf value forces the aggregate
-    * path (the count still runs — it is the safety bound on the
-    * aggregation buffer, never skipped on that path).
-    *
-    * r19: the count is LIMIT-bounded at thr+1 (the bloom router
-    * pattern — `min(n, thr+1) <= thr iff n <= thr`): the routing
-    * decision and the buffer safety bound are unchanged, but above
-    * the crossover every scan task stops after thr+1 rows instead of
-    * counting a corpus just to learn it is big. Confs at or above
-    * Int.MaxValue keep the exact count (a clipped probe there could
-    * misroute a 2B+-row frame into the buffering path). */
-  private def useAggregatePath(df: DataFrame): Boolean = {
-    val thr = df.sparkSession.conf
-      .get(SmallInputRowsConf, DefaultSmallInputRows.toString).toLong
-    if (thr <= 0) false
-    else if (thr >= Int.MaxValue.toLong) df.count() <= thr
-    else df.limit(thr.toInt + 1).count() <= thr
-  }
 
   /** `(groupCols…, q, value)` — exact type-1 (lower-value, no
     * interpolation) quantiles of `valueCol` per group: the value at
     * rank ⌊q·(n−1)⌋; `value` is double. Eager work: the router's
-    * bounded count, then the jobs of
+    * bounded count, then on the rank route the jobs of
     * [[graft.operators.Ids.assignContiguousIds]] (its fence counts). */
   def exactQuantiles(
       df: DataFrame,
@@ -150,9 +116,9 @@ object Quantiles {
     val values = df.select(keys :+ col(valueCol).cast("double").as("__graft_qv"): _*)
       .filter(col("__graft_qv").isNotNull)
     val qArr = array(qs.map(lit): _*)
-    if (useAggregatePath(df)) {
+    if (DataFrameOps.fitsBroadcastBudget(df, rowBytes = 8L)) {
       // small regime: ONE value-buffering aggregate per group (the
-      // crossover bounds the input, so every buffer). Spark's own
+      // budget bounds the input, so every buffer). Spark's own
       // Percentile IS the convention the rank route implements; type-1
       // indexes the sorted values at ⌊q·(n−1)⌋. The zero-key group of
       // an empty input has no values: a null array, so no rows.

@@ -42,16 +42,6 @@ import graft.text.TextFunctions
   */
 object Dedup {
 
-  /** Session conf key for [[bloomDecontaminate]]'s small-eval
-    * crossover: eval frames with at most this many ROWS (one narrow
-    * count, metadata-only on a scan) delegate to [[decontaminate]]'s
-    * single-job exact pass — at that size even the bloom path's own
-    * sizing collect is a whole extra job the exact pass doesn't need.
-    * 0 forces the bloom machinery (the scale-measurement hook). */
-  val BloomSmallEvalDocsConf = "graft.bloom.smallEvalDocs"
-
-  private[graft] val DefaultBloomSmallEvalDocs = 10000L
-
   /** MinHash-LSH S-curve: the probability that a pair with TRUE
     * Jaccard `j` shares at least one of `bands` buckets when each band
     * hashes `rows` signature values — 1 − (1 − j^rows)^bands. The
@@ -386,9 +376,9 @@ object Dedup {
       maxBucketSize: Int): DataFrame = {
     val distributed = jaccardVerified(
       candidatePairs(banded(base, bands, rows), maxBucketSize), base, base, "hs", threshold)
-    val budget = DataFrameOps.broadcastBudget(base.sparkSession)
-    if (budget <= 0 || base.queryExecution.optimizedPlan.stats.sizeInBytes > budget) distributed
-    else driverVerifiedPairs(base, bands, rows, threshold, maxBucketSize, budget)
+    if (!DataFrameOps.fitsBroadcastBudget(base)) distributed
+    else driverVerifiedPairs(base, bands, rows, threshold, maxBucketSize,
+        DataFrameOps.broadcastBudget(base.sparkSession))
       .fold(distributed)(pairs => base.sparkSession.createDataFrame(
         java.util.Arrays.asList(pairs: _*), distributed.schema))
   }
@@ -1014,6 +1004,25 @@ object Dedup {
     verifiedPairsFromBase(base, bands, rows, threshold, maxBucketSize)
   }
 
+  /** The grams of the decontamination family: each document's id, in
+    * its own type, with its distinct token `n`-gram hashes over the
+    * normalised text (a doc shorter than `n` tokens is one whole-doc
+    * gram, see [[graft.functions.HashKernels.shingleHashes]]) — one
+    * `(__graft_id, __graft_g)` row per gram when `exploded`, else one
+    * `(__graft_id, __graft_gs)` row per document. The tokens are
+    * projected first and the exploded kernel is an expression, not a
+    * projected column: Catalyst infers a `size(_) > 0` filter for an
+    * exploded column and pushes it below the projection, which runs the
+    * kernel twice per document. */
+  private def gramRows(
+      df: DataFrame, idCol: String, textCol: String, n: Int, exploded: Boolean): DataFrame = {
+    val grams = graft.functions.HashFunctions.shingleHashesNative(col("__graft_toks"), n)
+    df.select(col(idCol).as("__graft_id"),
+        TextFunctions.normalizedTokens(col(textCol)).as("__graft_toks"))
+      .select(col("__graft_id"),
+        if (exploded) explode(grams).as("__graft_g") else grams.as("__graft_gs"))
+  }
+
   /** Train/eval decontamination: remove from `train` every document
     * that shares at least `minHits` distinct token `n`-grams with the
     * `eval` corpus. This is the standard benchmark-leakage guard a
@@ -1049,16 +1058,10 @@ object Dedup {
       broadcastEval: Boolean = true): DataFrame = {
     require(n >= 1, s"decontaminate: n must be >= 1, got $n")
     require(minHits >= 1, s"decontaminate: minHits must be >= 1, got $minHits")
-    def gramRows(df: DataFrame): DataFrame = df
-      .select(col(idCol).as("__graft_id"), col(textCol).as("__graft_text"))
-      .withColumn("__graft_toks",
-        TextFunctions.normalizedTokens(col("__graft_text")))
-      .select(col("__graft_id"),
-        explode(graft.functions.HashFunctions.shingleHashesNative(col("__graft_toks"), n))
-          .as("__graft_g"))
-    val evalGrams = gramRows(evalDf).select("__graft_g").distinct()
+    val evalGrams = gramRows(evalDf, idCol, textCol, n, exploded = true)
+      .select("__graft_g").distinct()
     val evalSide = if (broadcastEval) broadcast(evalGrams) else evalGrams
-    val contaminated = gramRows(train)
+    val contaminated = gramRows(train, idCol, textCol, n, exploded = true)
       .join(evalSide, "__graft_g")
       .groupBy("__graft_id")
       .agg(count(lit(1)).as("__graft_hits"))
@@ -1105,19 +1108,10 @@ object Dedup {
       broadcastEval: Boolean = true): DataFrame = {
     require(n >= 1, s"contaminationReport: n must be >= 1, got $n")
     require(minHits >= 1, s"contaminationReport: minHits must be >= 1, got $minHits")
-    // id columns keep their original type (as decontaminate does) — a
-    // lossy cast here would silently collapse non-numeric ids onto null
-    def gramRows(df: DataFrame): DataFrame = df
-      .select(col(idCol).as("__graft_id"), col(textCol).as("__graft_text"))
-      .withColumn("__graft_toks",
-        TextFunctions.normalizedTokens(col("__graft_text")))
-      .select(col("__graft_id"),
-        explode(graft.functions.HashFunctions.shingleHashesNative(col("__graft_toks"), n))
-          .as("__graft_g"))
-    val evalGrams = gramRows(evalDf)
+    val evalGrams = gramRows(evalDf, idCol, textCol, n, exploded = true)
       .select(col("__graft_id").as("eval_id"), col("__graft_g"))
     val evalSide = if (broadcastEval) broadcast(evalGrams) else evalGrams
-    gramRows(train)
+    gramRows(train, idCol, textCol, n, exploded = true)
       .join(evalSide, "__graft_g")
       .groupBy(col("__graft_id"), col("eval_id"))
       .agg(count(lit(1)).as("n_shared_grams"))
@@ -1218,14 +1212,18 @@ object Dedup {
     * (bits/key ∝ log(1/fpp)); budget fpp ≈ targetDocRate / L for other
     * corpora.
     *
-    * Eager work: the eval count, the sizing collect; past
-    * `maxDriverGrams` a fence of the eval grams (its rows size the
-    * bloom) and the bloom build. Nothing is left cached.
+    * Eager work: the eval side's limit-bounded count, the sizing
+    * collect; past `maxDriverGrams` a fence of the eval grams (its rows
+    * size the bloom) and the bloom build. Nothing is left cached.
     *
     * REGIME RULE — applied AUTOMATICALLY (r16, three rungs; output
     * identical on every route):
-    *  1. eval rows ≤ `graft.bloom.smallEvalDocs` (one narrow count):
-    *     delegate to [[decontaminate]]'s single-job exact pass — for a
+    *  1. eval rows ≤ budget / 1 KiB — the session's
+    *     `spark.sql.autoBroadcastJoinThreshold` at 128 eight-byte grams
+    *     per eval doc, 10,240 docs at the default 10 MiB — by one
+    *     limit-bounded count (none under a budget of −1, which skips
+    *     this rung): delegate to [[decontaminate]]'s single-job exact
+    *     pass, whose eval gram set broadcasts — for a
     *     tiny eval side even this op's sizing collect is a whole extra
     *     job the exact pass doesn't need (measured r16 at sf0.1's
     *     100-doc eval: exact 0.48 s, collect+prefilter 0.59 s,
@@ -1253,28 +1251,11 @@ object Dedup {
     require(minHits >= 1, s"bloomDecontaminate: minHits must be >= 1, got $minHits")
     require(maxDriverGrams >= 1,
       s"bloomDecontaminate: maxDriverGrams must be >= 1, got $maxDriverGrams")
-    // ADAPTIVE CROSSOVER (r16, routed on the CHEAP signal): below
-    // `graft.bloom.smallEvalDocs` eval rows (one narrow count —
-    // metadata-only on a scan), delegate to [[decontaminate]]'s
-    // single-job exact pass (distributed broadcast gram subplan, no
-    // driver collect at all): at that size even this op's own sizing
-    // collect is a whole extra job the exact pass doesn't need
-    // (measured r16: exact 0.48 s vs collect+prefilter 0.59 s vs
-    // collect+exact-over-local-relation 0.92 s at sf0.1's 100-doc
-    // eval). The bloom machinery below serves eval sides big enough
-    // that the collect it pays is amortised but the eval grams still
-    // fit the driver — and the fully distributed build past
-    // maxDriverGrams. Output identical on every route.
-    val smallEvalDocs = train.sparkSession.conf
-      .get(BloomSmallEvalDocsConf, DefaultBloomSmallEvalDocs.toString).toLong
-    if (smallEvalDocs > 0 && evalDf.count() <= smallEvalDocs)
+    // rung 1: the exact pass, with no sizing collect (REGIME RULE)
+    if (DataFrameOps.fitsBroadcastBudget(evalDf, rowBytes = 1024L))
       return decontaminate(train, evalDf, textCol, idCol, n, minHits)
-    def gramArray: Column = graft.functions.HashFunctions.shingleHashesNative(
-      TextFunctions.normalizedTokens(col("__graft_text")), n)
-    val evalGramsDist = evalDf
-      .select(col(textCol).as("__graft_text"))
-      .select(explode(gramArray).as("__graft_g"))
-      .distinct()
+    val evalGramsDist = gramRows(evalDf, idCol, textCol, n, exploded = true)
+      .select("__graft_g").distinct()
     // The eval gram set is consumed three times (filter sizing, bloom
     // build, exact-verify join); by decontaminate's BROADCAST CONTRACT
     // it fits in executor memory, so the cheapest plan is ONE job that
@@ -1300,9 +1281,7 @@ object Dedup {
         .select(col("__graft_id").as(idCol))
       train.join(contaminated, Seq(idCol), "left_anti")
     }
-    val grams = train
-      .select(col(idCol).as("__graft_id"), col(textCol).as("__graft_text"))
-      .select(col("__graft_id"), gramArray.as("__graft_gs"))
+    val grams = gramRows(train, idCol, textCol, n, exploded = false)
     if (probeCollect.length <= maxDriverGrams) {
       // driver-collectable regime: the collect just paid for the gram
       // set, so the bloom is free to build from the keys and the

@@ -707,17 +707,29 @@ case class HyperplaneBucketExpr(
 /** (array<float|double>, array<float|double>) → double cosine
   * similarity, single pass computing dot and both norms together —
   * the HOF formulation walks each array three times through the
-  * interpreted evaluator. Arithmetic order matches the sequential HOF
-  * fold bit-for-bit; mismatched-length inputs return NULL, exactly as
-  * the HOF's zip_with null-padding poisons its fold. */
+  * interpreted evaluator. Any other numeric array is implicitly cast to
+  * array<double>, the element cast the HOF applies. Arithmetic order
+  * matches the sequential HOF fold bit-for-bit; mismatched-length
+  * inputs return NULL, exactly as the HOF's zip_with null-padding
+  * poisons its fold. */
 case class CosineSimExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
 
   private def vecType(dt: DataType): Option[Boolean] = dt match {
     case ArrayType(org.apache.spark.sql.types.FloatType, _) => Some(true)
     case ArrayType(org.apache.spark.sql.types.DoubleType, _) => Some(false)
     case _ => None
   }
+
+  override def inputTypes: Seq[DataType] =
+    children.map(_.dataType).map {
+      case t if vecType(t).isDefined => t
+      case ArrayType(_: org.apache.spark.sql.types.NumericType, _) =>
+        ArrayType(org.apache.spark.sql.types.DoubleType)
+      case t => t
+    }
+
   private lazy val leftFloat = vecType(left.dataType).get
   private lazy val rightFloat = vecType(right.dataType).get
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Fence
+import graft.core.{DataFrameOps, Fence}
 
 /** General graph operators over edge-list DataFrames — the public
   * facade over the large-star/small-star connected-components
@@ -29,22 +29,6 @@ import graft.core.Fence
   * translate components back).
   */
 object Graph {
-
-  /** Session conf key for [[connectedComponentsAgainst]]'s batch-size
-    * broadcast crossovers — BOTH of them: the batch-endpoint set in
-    * the touched-slice lookup (ADVICE r17: endpoints bound the mapping
-    * from above, so gating only the relabel left the bigger broadcast
-    * ungated) and the touched-component mapping in the artifact
-    * relabel (ADVICE r16). Each frame with at most this many rows is
-    * BROADCAST (the batch-bounded fast path); above it the join falls
-    * back to a keyed shuffle instead of blowing the driver with a
-    * forced broadcast. Both frames are checkpointed before the
-    * decision, so each count is a cheap metadata pass and no subtree
-    * runs twice. Default ≈ 4M (id, component) longs ≈ 64 MB broadcast;
-    * 0 forces the shuffle joins (the scale-measurement hook). */
-  val SmallMappingRowsConf = "graft.graph.smallMappingRows"
-
-  private[graft] val DefaultSmallMappingRows = 4000000L
 
   /** Session conf key: when `true`, [[connectedComponentsAgainst]]
     * FULLY validates that the artifact labeling is canonical —
@@ -271,14 +255,17 @@ object Graph {
     * into the result (scan-only, pushed filter, evaluated in the
     * caller's own actions; set 0 to hold the two-scan floor), and
     * EXCHANGED never: both
-    * batch-sized broadcasts (endpoints and the touched-component
-    * mapping) share the [[SmallMappingRowsConf]] bound and fall back
-    * to a keyed shuffle join above it (a pathological batch degrades
-    * to at most two keyed artifact exchanges instead of an over-budget
-    * broadcast) — no historical-edge rescan either way. Returns the
+    * batch-sized frames (endpoints and the touched-component mapping)
+    * broadcast when their fence's exact size in bytes fits the
+    * session's `spark.sql.autoBroadcastJoinThreshold` (no count job:
+    * 16 bytes an endpoint row, 24 a mapping row) and fall back to a
+    * keyed shuffle join otherwise, including under a budget of −1 (a
+    * pathological batch degrades to at most two keyed artifact
+    * exchanges instead of an over-budget broadcast) — no
+    * historical-edge rescan either way. Returns the
     * UPDATED full (id, component) labeling, ready to persist as the
     * next artifact. Eager work: five fences (both broadcast gates read
-    * a fence's rows), the probe collect and
+    * a fence's size), the probe collect and
     * [[graft.dedup.Dedup.duplicateClusters]] on the label graph. */
   def connectedComponentsAgainst(
       artifact: DataFrame,
@@ -340,17 +327,13 @@ object Graph {
       .filter(col("u") =!= col("v"))
       .distinct()
       .transform(Fence(_, "connectedComponentsAgainst.edges").df) // node set + 2 label joins
-    val fencedEndpoints = Fence(newE.select(col("u").as("id"))
+    val endpoints = Fence(newE.select(col("u").as("id"))
       .unionAll(newE.select(col("v").as("id")))
-      .distinct(), "connectedComponentsAgainst.endpoints") // touched-slice join + lab
-    val endpoints = fencedEndpoints.df
+      .distinct(), "connectedComponentsAgainst.endpoints").df // touched-slice join + lab
     // BOTH batch-sized broadcasts (the touched-slice lookup here, the
-    // relabel mapping below) share one crossover bound, each gated on
-    // its own fence's row count (ADVICE r17: gating only the relabel
-    // left a big batch paying an over-budget endpoints broadcast here)
-    val smallMapping = newEdges.sparkSession.conf
-      .get(SmallMappingRowsConf, DefaultSmallMappingRows.toString).toLong
-    val endpointRows = fencedEndpoints.rows
+    // relabel mapping below) are gated, each on its own fence's size
+    // (ADVICE r17: gating only the relabel left a big batch paying an
+    // over-budget endpoints broadcast here)
     // the TOUCHED slice of the artifact: a broadcast LEFT SEMI join
     // (endpoints are batch-bounded) — the artifact streams map-side
     // with NO exchange, and the output is batch-bounded. r17 fix: the
@@ -363,7 +346,7 @@ object Graph {
     // exchange, same contract as the relabel fallback — instead of
     // forcing an over-budget broadcast.
     val artTouched = art.join(
-        if (endpointRows <= smallMapping) broadcast(endpoints) else endpoints,
+        if (DataFrameOps.fitsBroadcastBudget(endpoints)) broadcast(endpoints) else endpoints,
         Seq("id"), "left_semi")
       .transform(Fence(_, "connectedComponentsAgainst.touched").df) // lab + anti join
     // DEFAULT-ON self-row probe (r17 verdict): catches below-every-id
@@ -466,19 +449,17 @@ object Graph {
       .join(lab.select(col("id").as("u"), col("__graft_lab").as("id_a")), Seq("u"))
       .join(lab.select(col("id").as("v"), col("__graft_lab").as("id_b")), Seq("v"))
       .select(col("id_a"), col("id_b"))
-    val fencedMapping = Fence(graft.dedup.Dedup
+    val mapping = Fence(graft.dedup.Dedup
       .duplicateClusters(labEdges, maxIter, localMaxEdges)
       .select(col("id").as("component"), col("cluster_id").as("__graft_newc")),
-      "connectedComponentsAgainst.mapping") // both relabels
-    val mapping = fencedMapping.df
+      "connectedComponentsAgainst.mapping").df // both relabels
     // relabel-join crossover (ADVICE r16: the broadcast was unbounded
     // in principle): the mapping is batch-bounded for normal ingests —
     // broadcast it — but a batch touching more components than the
-    // conf'd bound falls back to a shuffle join on `component` instead
-    // of forcing an over-budget broadcast. conf=0 still forces both
-    // shuffle fallbacks.
+    // budget holds falls back to a shuffle join on `component` instead
+    // of forcing an over-budget broadcast
     val joinMapping =
-      if (fencedMapping.rows <= smallMapping) broadcast(mapping) else mapping
+      if (DataFrameOps.fitsBroadcastBudget(mapping)) broadcast(mapping) else mapping
     // ONE relabel pass over the artifact: untouched components miss
     // the batch-bounded mapping and keep their label
     val updatedOld = art.join(joinMapping, Seq("component"), "left")

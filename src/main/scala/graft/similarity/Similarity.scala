@@ -65,15 +65,13 @@ object Similarity {
       when(n === 0.0, sliced).otherwise(transform(sliced, x => x / n)))
   }
 
-  /** Cosine similarity of two vector columns — native single-pass
-    * kernel (array<float|double> inputs); FP-order-identical to the
-    * HOF form [[cosineHof]], which is kept for generic numeric arrays
-    * and as the equivalence reference. */
+  /** Cosine similarity of two numeric-array columns — the native
+    * single-pass kernel, FP-order-identical to `dot(a, b) / (norm(a) *
+    * norm(b))`. array<float|double> inputs are read as they are; any
+    * other numeric array is cast to array<double> first, as [[dot]]
+    * casts each element. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.HashFunctions.cosineSimNative(a, b)
-
-  /** Interpreted reference formulation of [[cosine]]. */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Brute-force cosine top-k: for every query vector, the k most
     * similar corpus vectors. The query side is broadcast (it is small by

@@ -191,7 +191,7 @@ class PlanShapeSpec extends SparkTestBase {
     val encoded = similarity.Pq.encode(vecs, "id", "vec", codebooks)
     val baseKeys = dedup.SubstringDedup.windowKeys(docs.filter(col("doc_id") < 100),
       "doc_id", "text", k = 3)
-    val rankPath = core.Quantiles.SmallInputRowsConf
+    val budget = "spark.sql.autoBroadcastJoinThreshold"
     val refPath = java.nio.file.Files.createTempDirectory("graft_jobs_lshref").toString + "/ref"
     dedup.Dedup.saveMinHashRef(docs.filter(col("doc_id") < 100), "text", "doc_id", refPath)
     // (operator, jobs, jobs before the change that last moved them —
@@ -220,7 +220,7 @@ class PlanShapeSpec extends SparkTestBase {
         () => dedup.Dedup.duplicateClusters(chain, localMaxEdges = 0)),
       ("pairQuality", 7, Some(9),
         () => dedup.Dedup.pairQuality(docs, chainCandidates, "text", "doc_id")),
-      ("bloomDecontaminate", 3, None, () => withConf(dedup.Dedup.BloomSmallEvalDocsConf, "0")(
+      ("bloomDecontaminate", 3, None, () => withConf(budget, "-1")(
         dedup.Dedup.bloomDecontaminate(docs, evalDocs, "text", "doc_id", n = 3,
           maxDriverGrams = 1))),
       ("dedupSubstringsAgainstKeys", 2, None, () => dedup.SubstringDedup
@@ -230,11 +230,11 @@ class PlanShapeSpec extends SparkTestBase {
         () => operators.Ids.assignContiguousIds(docs, Seq("doc_id"))),
       ("assignGroupRanks", 2, None,
         () => operators.Ids.assignGroupRanks(byGroup, Seq("g"), Seq("doc_id"))),
-      ("exactQuantiles", 2, Some(4), () => withConf(rankPath, "0")(
+      ("exactQuantiles", 2, Some(4), () => withConf(budget, "-1")(
         core.Quantiles.exactQuantiles(docs, "doc_id", Seq(0.1, 0.5)))),
-      ("exactInterpolatedQuantiles", 2, Some(4), () => withConf(rankPath, "0")(
+      ("exactInterpolatedQuantiles", 2, Some(4), () => withConf(budget, "-1")(
         core.Quantiles.exactInterpolatedQuantiles(docs, "doc_id", Seq(0.1, 0.5)))),
-      ("exactQuantiles by group", 2, Some(4), () => withConf(rankPath, "0")(
+      ("exactQuantiles by group", 2, Some(4), () => withConf(budget, "-1")(
         core.Quantiles.exactQuantiles(byGroup, "doc_id", Seq(0.5), Seq("g")))),
       ("connectedComponentsAgainst", 11, Some(10), () => operators.Graph
         .connectedComponentsAgainst(artifact, batchEdges, "a", "b")),
@@ -482,10 +482,9 @@ class PlanShapeSpec extends SparkTestBase {
     spark.range(0, 2000, 40).toDF("rk").write.mode("overwrite").parquet(s"$dir/right")
     val left = spark.read.parquet(s"$dir/left")
     val right = spark.read.parquet(s"$dir/right")
-    // pin the bloom path: this fixture's right side is below the
-    // adaptive crossover, and this test asserts the bloom plan shape
-    spark.conf.set(core.DataFrameOps.BloomSmallRightRowsConf, "0")
-    try {
+    // pin the bloom path: this fixture's right side fits the broadcast
+    // budget, and this test asserts the bloom plan shape
+    withBroadcastBudget("-1") {
       val out = core.DataFrameOps.bloomSemiJoin(left, right, "k", "rk")
       // force a shuffled join so the probe-vs-exchange ordering is visible
       val plan = out.hint("shuffle_hash")
@@ -496,7 +495,7 @@ class PlanShapeSpec extends SparkTestBase {
       val probeLine = plan.linesIterator.indexWhere(l =>
         l.contains("Filter") && l.contains("bloom_might_contain"))
       assert(probeLine >= 0, s"probe is not a scan-side Filter:\n$plan")
-    } finally spark.conf.unset(core.DataFrameOps.BloomSmallRightRowsConf)
+    }
   }
 
   test("bloom joins route small right sides to the plain broadcast join (no bloom build)") {

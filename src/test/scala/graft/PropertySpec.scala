@@ -257,9 +257,7 @@ class PropertySpec extends SparkTestBase {
             .collect().map(r => r.getDouble(0) ->
               java.lang.Double.doubleToLongBits(r.getDouble(1))).toMap)
         val viaAggregate = both()
-        spark.conf.set(graft.core.Quantiles.SmallInputRowsConf, "0")
-        val viaRanks = try both()
-          finally spark.conf.unset(graft.core.Quantiles.SmallInputRowsConf)
+        val viaRanks = withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1")(both())
         assert(viaAggregate == viaRanks,
           s"routes diverged on ${vals.size} values, qs=$qs:\n$viaAggregate\n$viaRanks")
         if (vals.nonEmpty) {
@@ -540,20 +538,14 @@ class PropertySpec extends SparkTestBase {
       val right = r.map(k => Tuple1(k.map(Long.box).orNull)).toDF("rk")
       def both(fn: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
           org.apache.spark.sql.DataFrame) = {
-        spark.conf.set(DataFrameOps.BloomSmallRightRowsConf, "0") // bloom
-        val viaBloom =
-          try fn(left, right).collect().map(_.toSeq).sortBy(_.toString)
-          finally spark.conf.unset(DataFrameOps.BloomSmallRightRowsConf)
-        // r19: a small NONZERO conf routes through the limit-bounded
-        // probe — right sides above it see a CLIPPED count (thr+1) and
+        def run() = fn(left, right).collect().map(_.toSeq).sortBy(_.toString)
+        val viaBloom = withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run()) // bloom
+        // r19: a small positive budget routes through the limit-bounded
+        // probe — right sides over 3 keys see a CLIPPED count (4) and
         // must take the bloom route with bloomOverKey's own sizing,
-        // never the clipped figure; below it, the broadcast fast path
-        spark.conf.set(DataFrameOps.BloomSmallRightRowsConf, "3")
-        val viaClipped =
-          try fn(left, right).collect().map(_.toSeq).sortBy(_.toString)
-          finally spark.conf.unset(DataFrameOps.BloomSmallRightRowsConf)
-        val viaBroadcast = // default conf: these sizes all broadcast
-          fn(left, right).collect().map(_.toSeq).sortBy(_.toString)
+        // never the clipped figure; within it, the broadcast fast path
+        val viaClipped = withSessionConf("spark.sql.autoBroadcastJoinThreshold", "24")(run()) // 3 keys
+        val viaBroadcast = run() // default budget: these sizes all broadcast
         (viaBloom, viaClipped, viaBroadcast)
       }
       val (semiB, semiC, semiS) = both(
@@ -592,8 +584,8 @@ class PropertySpec extends SparkTestBase {
     } yield (edges, mask)
     for (((edges, mask), i) <- samples(gen, 6).zipWithIndex) {
       val localMax = if (i % 2 == 0) 0L else 1000000L
-      if (i % 3 == 0)
-        spark.conf.set(graft.operators.Graph.SmallMappingRowsConf, "0")
+      // budget -1 forces both shuffle-join fallbacks
+      val budget = if (i % 3 == 0) "-1" else spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       // alternate a cap-1 canonicality probe: valid artifacts must
       // NEVER false-positive, even when only one touched label + a
       // per-partition head sample are checked (r18 touched-first
@@ -606,7 +598,7 @@ class PropertySpec extends SparkTestBase {
       if (i % 4 == 3)
         spark.conf.set(graft.operators.Graph.ValidateCanonicalArtifactConf,
           "true")
-      try {
+      try withSessionConf("spark.sql.autoBroadcastJoinThreshold", budget) {
         val parts = edges.zip(mask)
         def side(k: Int) = parts.collect { case (e, `k`) => e }
         def cc(e: Seq[(Long, Long)]) = graft.operators.Graph
@@ -624,7 +616,6 @@ class PropertySpec extends SparkTestBase {
         assert(got == expect,
           s"i=$i localMax=$localMax mask=$mask edges=$edges:\n$got\n$expect")
       } finally {
-        spark.conf.unset(graft.operators.Graph.SmallMappingRowsConf)
         spark.conf.unset(graft.operators.Graph.CanonicalProbeLabelsConf)
         spark.conf.unset(graft.operators.Graph.ValidateCanonicalArtifactConf)
       }
@@ -781,9 +772,7 @@ class PropertySpec extends SparkTestBase {
           .collect().map(r => (Seq.tabulate(k)(r.get), r.getDouble(k)) ->
             java.lang.Double.doubleToLongBits(r.getDouble(k + 1))).toMap)
       val viaAggregate = both()
-      spark.conf.set(graft.core.Quantiles.SmallInputRowsConf, "0")
-      val viaRanks = try both()
-        finally spark.conf.unset(graft.core.Quantiles.SmallInputRowsConf)
+      val viaRanks = withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1")(both())
       assert(viaAggregate == viaRanks,
         s"routes diverged on $rows:\n$viaAggregate\n$viaRanks")
       val byG = rows.groupBy(_._1).view.mapValues(_.map(_._2).sorted)
@@ -882,9 +871,7 @@ class PropertySpec extends SparkTestBase {
         .select("uid", "v_bucket").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       val viaAggregate = run()
-      spark.conf.set(graft.core.Quantiles.SmallInputRowsConf, "0")
-      val viaRanks = try run()
-        finally spark.conf.unset(graft.core.Quantiles.SmallInputRowsConf)
+      val viaRanks = withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run())
       assert(viaAggregate == viaRanks,
         s"routes diverged on $vals nb=$nb:\n$viaAggregate\n$viaRanks")
       // reference: bucket = count of interior bounds STRICTLY below v
@@ -957,11 +944,10 @@ class PropertySpec extends SparkTestBase {
           "text", "id", n = 3, minHits = minHits)
         .select("id").as[Long].collect().toSet
       def bloom(pin: Boolean, maxGrams: Int): Set[Long] = {
-        if (pin) spark.conf.set(graft.dedup.Dedup.BloomSmallEvalDocsConf, "0")
-        try graft.dedup.Dedup.bloomDecontaminate(trainDf, evalDf, "text", "id",
+        def go = graft.dedup.Dedup.bloomDecontaminate(trainDf, evalDf, "text", "id",
             n = 3, minHits = minHits, maxDriverGrams = maxGrams)
           .select("id").as[Long].collect().toSet
-        finally if (pin) spark.conf.unset(graft.dedup.Dedup.BloomSmallEvalDocsConf)
+        if (pin) withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1")(go) else go
       }
       for ((pin, maxGrams) <- Seq((false, 4 << 20), (true, 4 << 20), (true, 1))) {
         val got = bloom(pin, maxGrams)

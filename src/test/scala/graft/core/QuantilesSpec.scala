@@ -8,14 +8,13 @@ class QuantilesSpec extends SparkTestBase {
   import spark.implicits._
 
   /** Every semantic test runs under BOTH adaptive routes: the default
-    * conf (these fixtures are all below the crossover → aggregate
-    * path) and `smallInputRows = 0` (rank path pinned). The router
-    * must be invisible to results. */
+    * broadcast budget (these fixtures all fit it → aggregate path) and
+    * a budget of −1 (rank path). The router must be invisible to
+    * results. */
   private def bothPaths(body: String => Unit): Unit = {
-    body("aggregate path (default conf)")
-    spark.conf.set(Quantiles.SmallInputRowsConf, "0")
-    try body("rank path (crossover pinned to 0)")
-    finally spark.conf.unset(Quantiles.SmallInputRowsConf)
+    body("aggregate path (default budget)")
+    withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1")(
+      body("rank path (budget -1)"))
   }
 
   test("exactQuantiles: type-1 values on known data, endpoints included") {
@@ -173,17 +172,16 @@ class QuantilesSpec extends SparkTestBase {
 
   test("adaptive router: small inputs take the aggregate plan, pinned-0 takes ranks") {
     val df = (1 to 50).map(_.toDouble).toDF("v")
-    // default conf: 50 rows << crossover → the Percentile aggregate is
-    // IN the plan and the range-exchange machinery is not
+    // default budget: 50 rows fit it → the Percentile aggregate is IN
+    // the plan and the range-exchange machinery is not
     val small = Quantiles.exactInterpolatedQuantiles(df, "v", Seq(0.5))
     assert(small.queryExecution.analyzed.toString.contains("percentile"),
       "small regime must route through the Percentile aggregate")
-    // crossover 0: the aggregate must NOT appear (rank machinery only)
-    spark.conf.set(Quantiles.SmallInputRowsConf, "0")
-    try {
+    // budget -1: the aggregate must NOT appear (rank machinery only)
+    withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
       val ranked = Quantiles.exactInterpolatedQuantiles(df, "v", Seq(0.5))
       assert(!ranked.queryExecution.analyzed.toString.contains("percentile("),
-        "pinned-0 must route through the rank machinery")
-    } finally spark.conf.unset(Quantiles.SmallInputRowsConf)
+        "budget -1 must route through the rank machinery")
+    }
   }
 }

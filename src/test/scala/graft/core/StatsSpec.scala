@@ -49,14 +49,13 @@ class StatsSpec extends SparkTestBase {
 
   test("exact paths plan NO value-buffering percentile aggregate above the crossover") {
     // the exact Percentile aggregate buffers every group value in one
-    // aggregation buffer — a billion-row group OOMs one task. Above
-    // the adaptive crossover (pinned to 0 here: everything is above),
-    // exact = true must route through the range-exchange rank
-    // machinery. Below it the aggregate is both safe and faster, and
-    // the router choosing it is the intended behavior.
+    // aggregation buffer — a billion-row group OOMs one task. Over
+    // the broadcast budget (−1 here: everything is over), exact = true
+    // must route through the range-exchange rank machinery. Within it
+    // the aggregate is both safe and faster, and the router choosing
+    // it is the intended behavior.
     val df = (1 to 100).map(i => (s"g${i % 3}", i.toDouble)).toDF("g", "v")
-    spark.conf.set(graft.core.Quantiles.SmallInputRowsConf, "0")
-    try {
+    withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
       for (out <- Seq(
           Stats.winsorize(df, Seq("g"), "v"),
           Stats.robustScale(df, Seq("g"), "v"),
@@ -68,8 +67,8 @@ class StatsSpec extends SparkTestBase {
         assert(!plan.contains("percentile("),
           s"exact path plans a value-buffering percentile aggregate:\n$plan")
       }
-    } finally spark.conf.unset(graft.core.Quantiles.SmallInputRowsConf)
-    // below the crossover the router picks the aggregate (the fast
+    }
+    // within the budget the router picks the aggregate (the fast
     // small-regime plan) — pin that too so the routing stays live
     val small = Stats.winsorize(df, Seq("g"), "v")
     assert(small.queryExecution.optimizedPlan.toString.contains("percentile("),

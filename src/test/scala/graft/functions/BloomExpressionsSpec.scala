@@ -72,12 +72,14 @@ class BloomExpressionsSpec extends SparkTestBase {
     assert(n >= 100, s"all 100 members must pass the probe, got $n")
   }
 
+  /** `body` under `spark.sql.autoBroadcastJoinThreshold = v`, the prior
+    * setting restored. */
+  private def withBroadcastBudget[T](v: String)(body: => T): T =
+    withSessionConf("spark.sql.autoBroadcastJoinThreshold", v)(body)
+
   /** Pin the bloom route for tests of the bloom machinery itself —
-    * these fixtures are all below the adaptive broadcast crossover. */
-  private def forcingBloomPath[T](body: => T): T = {
-    spark.conf.set(DataFrameOps.BloomSmallRightRowsConf, "0")
-    try body finally spark.conf.unset(DataFrameOps.BloomSmallRightRowsConf)
-  }
+    * these fixtures all fit the default broadcast budget. */
+  private def forcingBloomPath[T](body: => T): T = withBroadcastBudget("-1")(body)
 
   test("bloomSemiJoin equals the plain semi join exactly") {
     val left = spark.range(0, 5000).toDF("k")
@@ -125,8 +127,7 @@ class BloomExpressionsSpec extends SparkTestBase {
       .select((col("rk") % 2).as("rk")) // 200 rows, 2 distinct keys
     val expected = left.join(manyRows.distinct(),
       left("k") === col("rk"), "left_semi")
-    spark.conf.set(DataFrameOps.BloomSmallRightRowsConf, "100")
-    try {
+    withBroadcastBudget("800") { // 100 eight-byte keys
       val viaBloom = DataFrameOps.bloomSemiJoin(left, manyRows, "k", "rk",
         expectedItems = 2) // tiny hint; 200 rows > 100 crossover → bloom
       assert(viaBloom.queryExecution.executedPlan.toString
@@ -138,13 +139,13 @@ class BloomExpressionsSpec extends SparkTestBase {
       // a huge hint — the hint sizes the bloom, it never routes
       val small = spark.range(0, 50).toDF("rk")
       val viaBroadcast = DataFrameOps.bloomSemiJoin(left, small, "k", "rk",
-        expectedItems = DataFrameOps.DefaultBloomSmallRightRows + 1)
+        expectedItems = 1000001L)
       assert(!viaBroadcast.queryExecution.executedPlan.toString
         .contains("bloom_might_contain"),
         "50 rows under the crossover must take the broadcast route")
       assertDfEqual(viaBroadcast,
         left.join(small, left("k") === small("rk"), "left_semi"))
-    } finally spark.conf.unset(DataFrameOps.BloomSmallRightRowsConf)
+    }
   }
 
   test("small-right broadcast route ships only the key column") {
@@ -177,14 +178,13 @@ class BloomExpressionsSpec extends SparkTestBase {
       .select("id").as[Long].collect().toSet
     // ALL THREE adaptive rungs must match the exact pass: the default
     // route (tiny eval → delegate to decontaminate), the pinned
-    // driver-collect bloom-prefilter rung (smallEvalDocs = 0), and the
-    // pinned fully distributed rung (+ maxDriverGrams = 1)
+    // driver-collect bloom-prefilter rung (budget -1), and the pinned
+    // fully distributed rung (+ maxDriverGrams = 1)
     def run(pin: Boolean, maxGrams: Int): Set[Long] = {
-      if (pin) spark.conf.set(Dedup.BloomSmallEvalDocsConf, "0")
-      try Dedup.bloomDecontaminate(train, evalDf, "text", "id",
+      def go = Dedup.bloomDecontaminate(train, evalDf, "text", "id",
         n = 5, maxDriverGrams = maxGrams)
         .select("id").as[Long].collect().toSet
-      finally if (pin) spark.conf.unset(Dedup.BloomSmallEvalDocsConf)
+      if (pin) withBroadcastBudget("-1")(go) else go
     }
     for ((pin, maxGrams) <- Seq((false, 4 << 20), (true, 4 << 20), (true, 1))) {
       val bloomed = run(pin, maxGrams)
@@ -200,13 +200,12 @@ class BloomExpressionsSpec extends SparkTestBase {
       (i.toLong, s"clean text piece u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f")).toDF("id", "text")
     val evalDf = Seq((9000L, "totally disjoint eval words qq ww ee rr tt yy")).toDF("id", "text")
     // pin the bloom-prefilter regimes fpp matters in
-    spark.conf.set(Dedup.BloomSmallEvalDocsConf, "0")
-    try {
+    withBroadcastBudget("-1") {
       assert(Dedup.bloomDecontaminate(train, evalDf, "text", "id", n = 5, fpp = 0.5)
         .count() == 40)
       assert(Dedup.bloomDecontaminate(train, evalDf, "text", "id", n = 5, fpp = 0.5,
         maxDriverGrams = 1).count() == 40)
-    } finally spark.conf.unset(Dedup.BloomSmallEvalDocsConf)
+    }
   }
 
   test("bloomDecontaminate's distributed route leaves no cache entry behind") {
@@ -219,12 +218,11 @@ class BloomExpressionsSpec extends SparkTestBase {
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
     spark.catalog.clearCache()
-    spark.conf.set(Dedup.BloomSmallEvalDocsConf, "0")
-    try {
+    withBroadcastBudget("-1") {
       val out = Dedup.bloomDecontaminate(train, evalDf, "text", "id", n = 5,
         maxDriverGrams = 1).select("id").as[Long].collect().toSet
       assert(out == exact && !out.contains(7L) && out.size == 39)
       assert(cache.isEmpty, "a later query with a matching plan would read a stale cache")
-    } finally spark.conf.unset(Dedup.BloomSmallEvalDocsConf)
+    }
   }
 }

@@ -317,14 +317,15 @@ class GraphSpec extends SparkTestBase {
     val batch = all.drop(5).toDF("a", "b")
     val expect = Graph.connectedComponentsAgainst(artifact, batch, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // conf=0 forces BOTH shuffle fallbacks: the touched-slice
+    // budget -1 forces BOTH shuffle fallbacks: the touched-slice
     // endpoints join (ADVICE r17) and the relabel mapping join
-    spark.conf.set(Graph.SmallMappingRowsConf, "0")
-    try {
-      val got = Graph.connectedComponentsAgainst(artifact, batch, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val out = Graph.connectedComponentsAgainst(artifact, batch, "a", "b")
+      val plan = out.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin"), s"budget -1 still broadcasts:\n$plan")
+      val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expect, "shuffle-join fallback diverged from broadcast")
-    } finally spark.conf.unset(Graph.SmallMappingRowsConf)
+    }
   }
 
   test("null edge endpoints: dropped identically by incremental and recompute") {

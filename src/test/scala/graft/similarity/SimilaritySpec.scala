@@ -7,6 +7,11 @@ import graft.SparkTestBase
 class SimilaritySpec extends SparkTestBase {
   import spark.implicits._
 
+  /** The interpreted reference formulation of [[Similarity.cosine]]:
+    * each element cast to double, three sequential folds. */
+  private def cosineHof(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+    Similarity.dot(a, b) / (Similarity.norm(a) * Similarity.norm(b))
+
   private def vecs = Seq(
     (1L, Seq(1.0f, 0.0f, 0.0f)),
     (2L, Seq(0.9f, 0.1f, 0.0f)),   // close to 1
@@ -72,8 +77,23 @@ class SimilaritySpec extends SparkTestBase {
       .select($"l.embedding".as("a"), $"r.embedding".as("b"))
     val both = pairs.select(
       Similarity.cosine($"a", $"b").as("native"),
-      Similarity.cosineHof($"a", $"b").as("hof")).collect()
+      cosineHof($"a", $"b").as("hof")).collect()
     both.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
+  }
+
+  test("cosine over integral and decimal arrays equals the HOF formulation bit-for-bit") {
+    val ints = Seq((Seq(3, -7, 11), Seq(5, 2, -13)), (Seq(1, 0), Seq(0, 4))).toDF("a", "b")
+    val longs = Seq((Seq(Long.MaxValue, 3L, -9L), Seq(7L, Long.MinValue, 1L))).toDF("a", "b")
+    val decimals = Seq((Seq(BigDecimal("0.1"), BigDecimal("2.7")),
+      Seq(BigDecimal("1.3"), BigDecimal("-0.4")))).toDF("a", "b")
+    for (df <- Seq(ints, longs, decimals)) {
+      val rows = df.select(Similarity.cosine($"a", $"b").as("native"),
+        cosineHof($"a", $"b").as("hof")).collect()
+      rows.foreach(r => assert(r.isNullAt(0) == r.isNullAt(1) &&
+        (r.isNullAt(0) || r.getDouble(0).equals(r.getDouble(1))), s"${df.schema}: $r"))
+      assert(df.select(Similarity.cosine($"a", $"b")).queryExecution.executedPlan
+        .toString.contains("cosine_sim"), "the native kernel serves the cast input")
+    }
   }
 
   test("native hyperplane bucket equals the HOF formulation bit-for-bit") {
@@ -119,7 +139,7 @@ class SimilaritySpec extends SparkTestBase {
     val mism = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
     val rows = mism.select(
       Similarity.cosine($"a", $"b").as("native"),
-      Similarity.cosineHof($"a", $"b").as("hof")).head()
+      cosineHof($"a", $"b").as("hof")).head()
     assert(rows.isNullAt(0) && rows.isNullAt(1))
   }
 
